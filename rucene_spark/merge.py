@@ -106,10 +106,6 @@ def delete_by_keys(index_dir: str, keys: list, gen: int | None = None) -> int:
 
 
 DV_UPDATES = "dv_updates"
-# overlay rows above this broadcast-join cap fall back to a shuffle join
-# (mirrors the searcher's RUCENE_TOMB_BCAST_CAP tombstone-broadcast cap;
-# see the sizing note there)
-DV_BROADCAST_CAP = int(os.environ.get("RUCENE_DV_BCAST_CAP", "4000000"))
 
 
 def update_doc_values(index_dir: str, col: str, updates: dict,
@@ -189,9 +185,12 @@ def apply_dv_overlay(spark: SparkSession, index_dir: str, df,
     # flooding every executor — same footer-metadata-count + cap rule as
     # the tombstone anti-join (round-3 VERDICT #3). The count is raw
     # overlay rows (pre max-seq dedup): free to read and conservative.
+    # The cap (RUCENE_DV_BCAST_CAP) mirrors the searcher's
+    # RUCENE_TOMB_BCAST_CAP (see the sizing note there) and is read per
+    # call, like it, so a process can retune it between searcher opens.
     n_ov = sum(storage.parquet_num_rows(os.path.join(dv_dir, f))
                for f in dv_files)
-    bcast = n_ov <= DV_BROADCAST_CAP
+    bcast = n_ov <= int(os.environ.get("RUCENE_DV_BCAST_CAP", "4000000"))
     from pyspark.sql import Window
     ov = spark.read.parquet(dv_dir)
     if "gen" not in ov.columns:
@@ -827,9 +826,9 @@ class SegmentMerger:
         # sharded layout (remap cuts blocks at shard boundaries, one file
         # per shard, each a self-contained mini-index for its doc range)
         # satisfies it too — the manifest's doc_sharded flag tells
-        # IndexSearcher._segs_single_file the multi-file layout is safe
-        # (legacy unflagged multi-file segments still fall back to the
-        # layout-independent JVM paths). Within each shard file rows stay
+        # IndexSearcher's open-time layout check the multi-file layout is
+        # safe (an unflagged multi-file segment is rejected there with a
+        # pointer to force_merge). Within each shard file rows stay
         # (field, term, block_id)-sorted for row-group term pruning.
         if n_shards > 1:
             (merged.repartitionByRange(n_shards, "shard")

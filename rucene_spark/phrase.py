@@ -373,37 +373,20 @@ def sloppy_phrase_freq_nslot_flat(
     return freq
 
 
-def sloppy_phrase_freq_nslot_batch(
-    pos_lists: list[list[np.ndarray]],
-    offs: list[int],
-    slop: int,
-) -> np.ndarray:
-    """List-of-arrays wrapper over :func:`sloppy_phrase_freq_nslot_flat`:
-    ``pos_lists[s][i]`` = positions of slot ``s`` in candidate doc ``i``."""
-    from itertools import chain
-
-    S = len(pos_lists)
-    n = len(pos_lists[0])
-    flats, lens = [], []
-    for s in range(S):
-        ln = np.fromiter((len(x) for x in pos_lists[s]), dtype=np.int64,
-                         count=n)
-        flats.append(np.fromiter(chain.from_iterable(pos_lists[s]),
-                                 dtype=np.int64, count=int(ln.sum())))
-        lens.append(ln)
-    return sloppy_phrase_freq_nslot_flat(flats, lens, offs, slop)
-
-
-def sloppy_phrase_freq_2term_batch(
-    lists_a: list,
-    lists_b: list,
+def sloppy_phrase_freq_2term_flat(
+    flat_a: np.ndarray,
+    la: np.ndarray,
+    flat_b: np.ndarray,
+    lb: np.ndarray,
     off_a: int,
     off_b: int,
     slop: int,
 ) -> np.ndarray:
     """Vectorized :func:`sloppy_phrase_freq` for the 2-DISTINCT-term case
     ("a b"~n — the adversarial stopword-pair shape) over a whole batch of
-    candidate docs at once.
+    candidate docs at once. ``flat_a`` is every candidate doc's positions
+    for the first term concatenated in doc order and ``la[i]`` the count
+    belonging to doc ``i`` (same for b).
 
     The reference's heap walk (phrase_scorer.rs:537-575) degenerates for
     two position lists into an alternating-leader chain: the leader is
@@ -415,43 +398,9 @@ def sloppy_phrase_freq_2term_batch(
     of the lagging list scores the final phase and stops. Each phase is
     one row-wise searchsorted, so the whole batch advances in lockstep:
     with tf capped at 10 per term, at most ~20 vectorized rounds replace
-    a per-doc Python heap walk (round-3 VERDICT 'What's wrong #1').
-    Accumulation is float32 in chain order — bit-identical to the scalar
-    kernel (fuzz-asserted in tests/test_phrase.py).
-
-    List-of-arrays wrapper around :func:`sloppy_phrase_freq_2term_flat`
-    (the flat core the collector kernels call directly — their gathered
-    positions are already flat, so per-doc slicing would be pure
-    overhead).
-    """
-    from itertools import chain
-
-    n = len(lists_a)
-    la = np.fromiter((len(x) for x in lists_a), dtype=np.int64, count=n)
-    lb = np.fromiter((len(x) for x in lists_b), dtype=np.int64, count=n)
-    flat_a = np.fromiter(chain.from_iterable(lists_a), dtype=np.int64,
-                         count=int(la.sum()))
-    flat_b = np.fromiter(chain.from_iterable(lists_b), dtype=np.int64,
-                         count=int(lb.sum()))
-    return sloppy_phrase_freq_2term_flat(flat_a, la, flat_b, lb,
-                                         off_a, off_b, slop)
-
-
-def sloppy_phrase_freq_2term_flat(
-    flat_a: np.ndarray,
-    la: np.ndarray,
-    flat_b: np.ndarray,
-    lb: np.ndarray,
-    off_a: int,
-    off_b: int,
-    slop: int,
-) -> np.ndarray:
-    """Flat-input core of :func:`sloppy_phrase_freq_2term_batch`:
-    ``flat_a`` is every candidate doc's positions for the first term
-    concatenated in doc order and ``la[i]`` the count belonging to doc
-    ``i`` (same for b). Identical arithmetic and accumulation order as
-    the list wrapper — the padded position matrices are built from the
-    same values, just without materializing per-doc slices."""
+    a per-doc Python heap walk. Accumulation is float32 in chain order —
+    bit-identical to the scalar kernel (fuzz-asserted in
+    tests/test_phrase.py)."""
     n = len(la)
     freq = np.zeros(n, dtype=np.float32)
     ok = (la > 0) & (lb > 0)

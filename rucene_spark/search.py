@@ -10,10 +10,13 @@ algebra on ``(seg, doc)``:
 * DisjunctionSumScorer → groupBy(seg,doc) sum + min_should_match count
   (disjunction_scorer.rs:24-104);
 * ReqNotScorer       → must_not count == 0 (req_not_scorer.rs:21);
-* Exact/SloppyPhraseScorer → conjunction join of position frames + the
-  shared phrase kernels on the candidate set (two-phase iteration:
-  cheap doc-level conjunction first, expensive position check after —
-  search/mod.rs:127-155);
+* Exact/SloppyPhraseScorer, span scorers → one per-segment leaf
+  (``_phrase_leaf`` / ``_span_leaf``): the doc-level conjunction runs in
+  numpy inside the scan task, then the shared phrase/span kernels verify
+  positions on the candidates only (two-phase iteration: cheap
+  conjunction first, expensive position check after —
+  search/mod.rs:127-155). A root leaf keeps its per-segment top-k; a
+  nested one emits every verified (seg, doc, score) row;
 * TopDocsCollector   → ``ORDER BY score DESC, seg, doc LIMIT k``
   (TakeOrderedAndProject = per-partition heap + merge, top_docs.rs:28-172).
 
@@ -58,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import storage
 from .bm25 import avgdl32, idf32, norm_cache32
-from .build import load_manifest, read_seg_table
+from .build import load_manifest, read_seg_table, seg_table_paths
 from .codec import (
     batch_delta_decode,
     batch_unpack,
@@ -70,9 +73,7 @@ from .codec import (
 from .phrase import (
     exact_phrase_freq,
     sloppy_phrase_freq,
-    sloppy_phrase_freq_2term_batch,
     sloppy_phrase_freq_2term_flat,
-    sloppy_phrase_freq_nslot_batch,
     sloppy_phrase_freq_nslot_flat,
 )
 from .query import (
@@ -94,6 +95,9 @@ from .query import SpanQuery as _SpanQueryT
 
 K1 = np.float32(1.2)
 B = np.float32(0.75)
+# first verify chunk (candidate docs) of the phrase/span leaf kernels; each
+# later chunk is 4x larger, up to 64x, so worker memory stays bounded
+_VERIFY_CHUNK = 4096
 
 
 def _kp1_64(k1: float) -> float:
@@ -101,6 +105,22 @@ def _kp1_64(k1: float) -> float:
     LITERAL 2.2 (not 1.2 + 1.0, which differs in the last f64 bit) so the
     SQL oracles' 2.2 constant stays bit-identical."""
     return 2.2 if k1 == 1.2 else k1 + 1.0
+
+
+def _freq_scores(freq, nbs, dls, lucene, wk32, cache, coef64, k1_, b_,
+                 avgdl64) -> np.ndarray:
+    """BM25 of per-doc positional freqs (phrase/span) as float64: the
+    float32 ``(wk*tf)/(tf+cache[norm])`` in "lucene" mode, else the f64
+    ``coef*tf/(tf + k1*((1-b) + b*dl/avgdl))``, in the term scorer's IEEE
+    op order. Used for both the impact upper bound (freq = a count
+    bound) and the verified score of the leaf kernels, and by explain."""
+    if lucene:
+        tf = freq.astype(np.float32)
+        return ((wk32 * tf) / (tf + cache[nbs])).astype(np.float64)
+    tf = freq.astype(np.float64)
+    return coef64 * tf / (
+        tf + k1_ * ((1.0 - b_) + b_ * dls.astype(np.float64) / avgdl64))
+
 
 def _collector_seg_reduce(doc, qid, gid, role, sc, g_role, g_nm, g_nf,
                           g_ms, r_nm, r_nf, r_ms, tomb, lucene, ftype, k):
@@ -258,7 +278,8 @@ class _LazyPositions:
 
 def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
                      cache, coef64, k1_, b_, avgdl64, slop=0, terms=None):
-    """Segment-local exact-phrase top-k with impact-ordered verification.
+    """Segment-local phrase top-k with impact-ordered verification; with
+    ``k=None`` every candidate is verified and every hit returned.
 
     ``tds[ti]`` holds one unique term's postings for THIS segment:
     sorted ``docs``, aligned ``tfs``/``nbs``/``dls``, per-block entry
@@ -273,7 +294,7 @@ def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
     in are never varint-decoded at all (the phrase analogue of
     search_blockmax's per-block bound; the reference has no phrase
     impacts — phrase_query.rs:223-270 bails only via two-phase
-    match_cost — so rank identity vs the exhaustive JVM path is
+    match_cost — so rank identity vs the exhaustive ``k=None`` run is
     test-asserted, tests/test_phrase_collector.py).
 
     Verification itself is whole-chunk vectorized: each slot's positions
@@ -316,14 +337,8 @@ def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
     t0 = uniq_tis[0]
     nbs_c = tds[t0]["nbs"][ent[t0]]
     dls_c = tds[t0]["dls"][ent[t0]]
-    if lucene:
-        mt = bound.astype(np.float32)
-        ub = (wk32 * mt) / (mt + cache[nbs_c])
-        ub64 = ub.astype(np.float64)
-    else:
-        mt = bound.astype(np.float64)
-        ub64 = coef64 * mt / (
-            mt + k1_ * ((1.0 - b_) + b_ * dls_c.astype(np.float64) / avgdl64))
+    bm = (lucene, wk32, cache, coef64, k1_, b_, avgdl64)
+    ub64 = _freq_scores(bound, nbs_c, dls_c, *bm)
     if slop == 0 and len(slots) == 1:
         # single slot — a 2-term phrase fully served by the bigram pair
         # channel (or a degenerate 1-term phrase): the stored tf IS the
@@ -349,7 +364,8 @@ def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
     theta = None
     n = len(order)
     i = 0
-    chunk = max(int(chunk0), 4 * k, 1)
+    chunk = max(int(chunk0), 4 * (k or 0), 1)
+    chunk_max = 64 * chunk
     while i < n:
         if theta is not None and ub64[order[i]] < theta:
             break
@@ -387,12 +403,11 @@ def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
                                    return_counts=True)
                 freq[hr] = hc
         else:
-            # sloppy verify on the chunk: per-doc position slices from
-            # the gathered flat arrays (every chunk doc holds every
-            # term), then the shared phrase kernels — batch-vectorized
-            # for two distinct terms, per-doc heap walk otherwise
-            # (candidate-capped upstream by the caller like the
-            # exhaustive path)
+            # sloppy verify on the chunk over the gathered flat arrays
+            # (every chunk doc holds every term): the shared phrase
+            # kernels, batch-vectorized for distinct terms, per-doc heap
+            # walk for repeated terms (candidate-capped upstream by the
+            # caller)
             two_term = (len(slots) == 2 and slots[0][0] != slots[1][0])
             distinct = len({ti for ti, _ in slots}) == len(slots)
             if two_term:
@@ -426,23 +441,15 @@ def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
                         pls, offsets, terms, slop))
         hit = freq > 0
         if hit.any():
-            fr = freq[hit].astype(np.float64)
-            if lucene:
-                tff = fr.astype(np.float32)
-                sc = (wk32 * tff) / (tff + cache[nbs_k[hit]])
-                sc = sc.astype(np.float64)
-            else:
-                denom = fr + k1_ * (
-                    (1.0 - b_) + b_ * dls_k[hit].astype(np.float64) / avgdl64)
-                sc = coef64 * fr / denom
             vd_parts.append(cd[hit])
-            vs_parts.append(sc)
+            vs_parts.append(_freq_scores(freq[hit], nbs_k[hit], dls_k[hit],
+                                         *bm))
             n_hits += int(hit.sum())
-            if n_hits >= k:
+            if k is not None and n_hits >= k:
                 allsc = np.concatenate(vs_parts)
                 theta = float(np.partition(allsc, len(allsc) - k)[len(allsc) - k])
         i += len(sel)
-        chunk *= 4
+        chunk = min(4 * chunk, chunk_max)
 
     if not vd_parts:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
@@ -479,18 +486,18 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
                    cache, coef64, k1_, b_, avgdl64, fast2, ta2, tb2,
                    slop2, fastn=False):
     """Segment-local span top-k with impact-ordered verification — the
-    span analogue of :func:`_phrase_seg_topk`.
+    span analogue of :func:`_phrase_seg_topk` (``k=None``: every hit).
 
     ``tds[ti]`` holds one term's postings for THIS segment. Candidates
-    are docs holding ≥1 term of EVERY required clause group (the same
-    bitmask conjunction the exhaustive frame runs JVM-side). The impact
+    are docs holding ≥1 term of EVERY required clause group. The impact
     bound is score(_span_count_bound), so docs are verified in
     ub-descending chunks and verification stops once the k-th verified
     score exceeds every remaining bound; pos_bin blocks no surviving
     chunk doc lands in are never decoded. Verification is the shared
-    span kernel — vectorized for the 2-term ordered shape (``fast2``),
-    per-doc :func:`spans.span_freq` otherwise (candidate-capped
-    upstream by the caller, like the exhaustive path)."""
+    span kernel — vectorized for ordered nears over term/gap clauses
+    (``fast2`` for two terms, ``fastn`` otherwise), per-doc
+    :func:`spans.span_freq` for other shapes (candidate-capped upstream
+    by the caller)."""
     from .spans import (
         ordered_near_freq_2term_flat,
         ordered_near_freq_nclause_flat,
@@ -565,15 +572,8 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
             nbs_c[m] = td["nbs"][p[m]]
             dls_c[m] = td["dls"][p[m]]
             filled |= pm
-    bound = _span_count_bound(spec, tfm)
-    if lucene:
-        bt = bound.astype(np.float32)
-        ub64 = ((wk32 * bt) / (bt + cache[nbs_c])).astype(np.float64)
-    else:
-        bt = bound.astype(np.float64)
-        ub64 = coef64 * bt / (
-            bt + k1_ * ((1.0 - b_)
-                        + b_ * dls_c.astype(np.float64) / avgdl64))
+    bm = (lucene, wk32, cache, coef64, k1_, b_, avgdl64)
+    ub64 = _freq_scores(_span_count_bound(spec, tfm), nbs_c, dls_c, *bm)
     order = np.lexsort((conj, -ub64))
 
     stores = {ti: _LazyPositions(td) for ti, td in tds.items()}
@@ -589,7 +589,8 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
     theta = None
     n = len(order)
     i = 0
-    chunk = max(int(chunk0), 4 * k, 1)
+    chunk = max(int(chunk0), 4 * (k or 0), 1)
+    chunk_max = 64 * chunk
     while i < n:
         if theta is not None and ub64[order[i]] < theta:
             break
@@ -650,25 +651,16 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
                 freqs[r] = float(span_freq(spec, pos_map))
         hit = freqs > 0
         if hit.any():
-            fr = freqs[hit]
-            if lucene:
-                tff = fr.astype(np.float32)
-                sc = ((wk32 * tff) / (tff + cache[nbs_k[hit]])
-                      ).astype(np.float64)
-            else:
-                denom = fr + k1_ * (
-                    (1.0 - b_)
-                    + b_ * dls_k[hit].astype(np.float64) / avgdl64)
-                sc = coef64 * fr / denom
             vd_parts.append(cd[hit])
-            vs_parts.append(sc)
+            vs_parts.append(_freq_scores(freqs[hit], nbs_k[hit],
+                                         dls_k[hit], *bm))
             n_hits += int(hit.sum())
-            if n_hits >= k:
+            if k is not None and n_hits >= k:
                 allsc = np.concatenate(vs_parts)
                 theta = float(
                     np.partition(allsc, len(allsc) - k)[len(allsc) - k])
         i += len(sel)
-        chunk *= 4
+        chunk = min(4 * chunk, chunk_max)
 
     if not vd_parts:
         return e_i, np.empty(0, dtype=np.float64)
@@ -765,17 +757,24 @@ class IndexSearcher:
         searchers/generations; entries are generation-keyed.
 
         ``verify_candidate_cap`` bounds the PER-DOC Python verify paths
-        (sloppy phrases of 3+ positions or with repeated terms, and span
-        trees — the kernels that cannot be vectorized across docs). When
-        the metadata upper bound on candidate docs (min required-term df)
-        exceeds the cap, the query is rejected with guidance instead of
-        silently running a corpus-sized Python loop — the sloppy/span
-        analogue of block-max's degenerate-path degrade. Two-distinct-
-        term sloppy phrases and 2-term-clause ORDERED span nears are
-        exempt: their walks are batch-vectorized
-        (phrase.sloppy_phrase_freq_2term_batch,
-        spans.ordered_near_freq_2term_batch). Raise the cap explicitly
-        for deliberate heavy queries."""
+        (sloppy phrases with repeated terms, and span trees other than
+        ordered nears over term/gap clauses — the kernels that cannot be
+        vectorized across docs). When the metadata upper bound on
+        candidate docs (min required-term df) exceeds the cap, the query
+        is rejected with guidance instead of silently running a
+        corpus-sized Python loop — the sloppy/span analogue of
+        block-max's degenerate-path degrade. Distinct-term sloppy
+        phrases and ordered span nears over term/gap clauses are exempt:
+        their walks are batch-vectorized over flat position arrays
+        (phrase.sloppy_phrase_freq_2term_flat / _nslot_flat,
+        spans.ordered_near_freq_2term_flat / _nclause_flat). Raise the
+        cap explicitly for deliberate heavy queries.
+
+        Every postings file must hold whole docs — one file per segment,
+        or the doc-range-disjoint files of a ``doc_sharded`` merge —
+        because the per-segment kernels reduce inside one scan partition.
+        Any other multi-file segment raises ``ValueError``; run
+        ``merge.force_merge`` to rewrite it."""
         self.spark = spark
         self.index_dir = index_dir
         self.scoring = scoring
@@ -783,6 +782,17 @@ class IndexSearcher:
         self.similarity = dict(similarity or {})
         m = load_manifest(index_dir)
         self.manifest = m
+        for seg, path in zip(m["segments"],
+                             seg_table_paths(index_dir, m, "postings")):
+            n_files = sum(f.endswith(".parquet")
+                          for f in storage.listdir(path))
+            if n_files > 1 and not seg.get("doc_sharded"):
+                raise ValueError(
+                    f"segment {seg['segment_id']} holds"
+                    f" {n_files} postings files that are not doc-sharded;"
+                    " the per-segment kernels need each file to hold whole"
+                    " docs. Run rucene_spark.merge.force_merge on"
+                    f" {index_dir!r} to rewrite it.")
         self.key_col = m["key_col"]
         self.doc_count = m["doc_count"]
         # Scan partitions must equal SEGMENT FILES, for two reasons:
@@ -902,7 +912,6 @@ class IndexSearcher:
         self._stats_cache: dict[tuple[str, str], dict | None] = {}
         self._plan_cache: dict[tuple[str, int], DataFrame] = {}
         self._tomb_cache: dict[int, np.ndarray] | None = None
-        self._single_file: bool | None = None
         # hot-pair bigram channel (build.py _invert_pairs): frozen hot
         # vocabulary, loaded lazily from the sidecar on first exact-phrase
         # search (driver collect bounded by the hot-vocab size)
@@ -945,44 +954,11 @@ class IndexSearcher:
         the 10M-doc profile showed every query family converging to
         this per-segment fixed cost (BENCH_10M.json). 2× parallelism
         keeps all cores busy under skewed segment sizes."""
-        if os.environ.get("RUCENE_COALESCE", "1") == "0":
-            return scan
         n_segs = len(self.manifest["segments"])
         target = 2 * self.spark.sparkContext.defaultParallelism
         if n_segs > target:
             return scan.coalesce(target)
         return scan
-
-    def _segs_single_file(self) -> bool:
-        """True iff every committed postings segment dir holds exactly ONE
-        parquet file — the invariant the per-segment collector kernels
-        (search_many's _collector_topk_frame, _phrase_collector_topk)
-        require: their reduce is partition-local and the scan pins one
-        FILE per partition, so a segment split across files would split a
-        doc's clause rows across partitions and corrupt the boolean /
-        phrase arithmetic. Build and merge writers both emit single-file
-        postings; this memoized check (one listdir per segment, through
-        the storage seam, first collector use only) makes legacy
-        multi-file merged segments fall back to the layout-independent
-        JVM aggregation paths instead of returning wrong results.
-
-        Segments the manifest marks ``doc_sharded`` are exempt: the
-        merger wrote them as doc-range-DISJOINT files (blocks cut at
-        shard boundaries — SegmentMerger.merge), so each file holds its
-        docs' clause rows completely and is its own valid reduce unit;
-        the kernels' per-chunk arithmetic and top-k remain exact, the
-        combine is a top-k union either way."""
-        if self._single_file is None:
-            from .build import seg_table_paths
-            segs = self.manifest["segments"]
-            paths = seg_table_paths(self.index_dir, self.manifest,
-                                    "postings")
-            self._single_file = all(
-                s.get("doc_sharded")
-                or sum(f.endswith(".parquet")
-                       for f in storage.listdir(p)) <= 1
-                for s, p in zip(segs, paths))
-        return self._single_file
 
     def _bigram_hot(self, field: str):
         """Frozen hot vocabulary of the field's bigram channel, or None
@@ -1035,15 +1011,15 @@ class IndexSearcher:
         """Absorb the session's first-query fixed costs before serving
         traffic: spawn the Python worker pool on every scan slot, read
         each postings segment file's parquet footer, prime the
-        term-stats footer, and materialize the tombstone / layout
-        memos. The work is metadata-plus-one-int-column only — no
-        postings bytes are decoded — yet it fronts the cold-start the
-        first real query otherwise pays (measured 10.1s first vs 5.2s
-        steady at 10M docs, BENCH_10M.json). This is the
-        SearcherFactory warm hook of the reference's SearcherManager
-        (search_manager.rs:132 SearcherFactory; Lucene warms new NRT
-        searchers the same way); streaming.SearcherManager calls it
-        before swapping a refreshed searcher in."""
+        term-stats footer, and materialize the tombstone memo. The work
+        is metadata-plus-one-int-column only — no postings bytes are
+        decoded — yet it fronts the cold-start the first real query
+        otherwise pays (measured 10.1s first vs 5.2s steady at 10M docs,
+        BENCH_10M.json). This is the SearcherFactory warm hook of the
+        reference's SearcherManager (search_manager.rs:132
+        SearcherFactory; Lucene warms new NRT searchers the same way);
+        streaming.SearcherManager calls it before swapping a refreshed
+        searcher in."""
         def fn(it):
             n = 0
             for b in it:
@@ -1055,7 +1031,6 @@ class IndexSearcher:
         self._term_stats.select("term").limit(1).collect()
         if self._bcast_deleted:
             self._tomb_by_seg()
-        self._segs_single_file()
         return self
 
     def _check_field(self, field: str) -> None:
@@ -1090,7 +1065,7 @@ class IndexSearcher:
                 f"{what}: candidate bound {candidate_bound:,} exceeds"
                 f" verify_candidate_cap={self.verify_candidate_cap:,}."
                 " Narrow the query (FilterQuery / rarer required term),"
-                " use an exact phrase (slop=0, fully JVM-side), or"
+                " use an exact phrase (slop=0, never capped), or"
                 " construct IndexSearcher(verify_candidate_cap=...)"
                 " deliberately higher.")
 
@@ -1130,68 +1105,7 @@ class IndexSearcher:
         hit = self._plan_cache.get(ck)
         if hit is not None:
             return hit
-        q0, b0 = self._fold_boost(query, np.float32(1.0))
-        if (isinstance(q0, PhraseQuery)
-                and (self._deleted is None or self._bcast_deleted)
-                and os.environ.get("RUCENE_PHRASE_COLLECTOR", "1") != "0"
-                and self._segs_single_file()):
-            # root phrase (exact or sloppy): per-segment impact-pruned
-            # collector — live-masked and per-seg top-k'd in the worker
-            frame = self._phrase_collector_topk(q0, b0, k)
-        elif (isinstance(q0, DisjunctionMaxQuery)
-              and os.environ.get("RUCENE_TERM_COLLECTOR", "1") != "0"
-              and self.doc_count >= int(os.environ.get(
-                  "RUCENE_COLLECTOR_MIN_DOCS", "100000"))
-              and (self._deleted is None or self._bcast_deleted)
-              and self._segs_single_file()
-              and all(isinstance(self._fold_boost(d, b0)[0], TermQuery)
-                      for d in q0.disjuncts)
-              and len({(self._fold_boost(d, b0)[0].field,
-                        self._fold_boost(d, b0)[0].term)
-                       for d in q0.disjuncts}) == len(q0.disjuncts)):
-            # root dismax over unique term disjuncts: per-segment
-            # collector (max + tie fold in-worker, ≤k rows per segment)
-            frame = self._dismax_collector_topk(q0, b0, k)
-        elif (isinstance(q0, _SpanQueryT)
-              and os.environ.get("RUCENE_SPAN_COLLECTOR", "1") != "0"
-              and (self._deleted is None or self._bcast_deleted)
-              and self._segs_single_file()):
-            # root span query: per-segment collector with span-count
-            # impact bounds (conjunction + verify + top-k in-worker)
-            frame = self._span_collector_topk(q0, b0, k)
-        else:
-            fs = None
-            # Cost-based routing (the reference picks scorers by cost the
-            # same way, boolean_query.rs BooleanWeight): the collector
-            # kernel is zero-shuffle but pays a fixed mapInPandas setup
-            # (~0.5s measured), while the JVM frame path's shuffle grows
-            # with the corpus. Below the doc threshold the frame path
-            # wins (5k docs: 0.05s vs 0.6s); above it the kernel does
-            # (480k+: it is what closed the serving scaling axis).
-            min_docs = int(os.environ.get(
-                "RUCENE_COLLECTOR_MIN_DOCS", "100000"))
-            if (os.environ.get("RUCENE_TERM_COLLECTOR", "1") != "0"
-                    and self.doc_count >= min_docs
-                    and (self._deleted is None or self._bcast_deleted)
-                    and self._segs_single_file()):
-                fs = self._flat_specs(query, 0, [0])
-            if fs is not None:
-                # flattenable term/boolean query: the same zero-shuffle
-                # per-segment collector kernel a serving micro-batch uses
-                # (_collector_topk_frame), as a batch of one — one scan
-                # task per segment, k rows per segment out, no exchange
-                # before the final tiny merge.  Already live-masked and
-                # score-bit-identical to the _frame path
-                # (tests/test_search_many.py).
-                specs = fs[0]
-                stats = self._stats_for(
-                    [(f_, t) for f_, t, _, _, _ in specs])
-                frame = self._collector_topk_frame(
-                    specs, fs[2], {0: fs}, k, stats
-                ).select("seg", "doc", "score")
-            else:
-                frame = self._live(
-                    self._frame(query, np.float32(1.0), needs_scores=True))
+        frame = self._root_frame(query, k)
         topk = frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
         out = (
             self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
@@ -1200,6 +1114,50 @@ class IndexSearcher:
         if len(self._plan_cache) < self._PLAN_CACHE_MAX:
             self._plan_cache[ck] = out
         return out
+
+    def _root_frame(self, query: Query, k: int) -> DataFrame:
+        """Live ``(seg, doc, score)`` rows whose (score desc, seg, doc)
+        top-k is the query's top-k — the per-family routing shared by
+        search() and search_many()'s non-flat queries.
+
+        Phrase and span roots run their per-segment leaf with the top-k
+        (tombstones masked in the worker) whenever the tombstone
+        broadcast gate holds. Cost-based routing (the reference picks
+        scorers by cost the same way, boolean_query.rs BooleanWeight)
+        covers the term families: the collector kernel is zero-shuffle
+        but pays a fixed mapInPandas setup (~0.5s measured), while the
+        JVM frame path's shuffle grows with the corpus. Below
+        RUCENE_COLLECTOR_MIN_DOCS the frame path wins (5k docs: 0.05s vs
+        0.6s); above it the kernel does (480k+: it is what closed the
+        serving scaling axis). Root dismax over unique term disjuncts
+        and flattenable term/boolean queries take their per-segment
+        collectors there — the same zero-shuffle kernel a serving
+        micro-batch uses, as a batch of one, score-bit-identical to the
+        frame path (tests/test_search_many.py). Everything else, and
+        every root above the tombstone broadcast cap, is the live-masked
+        query frame."""
+        q0, b0 = self._fold_boost(query, np.float32(1.0))
+        if self._deleted is None or self._bcast_deleted:
+            if isinstance(q0, PhraseQuery):
+                return self._phrase_leaf(q0, b0, k)
+            if isinstance(q0, _SpanQueryT):
+                return self._span_leaf(q0, b0, k)
+            if self.doc_count >= int(os.environ.get(
+                    "RUCENE_COLLECTOR_MIN_DOCS", "100000")):
+                if isinstance(q0, DisjunctionMaxQuery):
+                    ds = [self._fold_boost(d, b0)[0] for d in q0.disjuncts]
+                    if (all(isinstance(d, TermQuery) for d in ds)
+                            and len({(d.field, d.term) for d in ds})
+                            == len(ds)):
+                        return self._dismax_collector_topk(q0, b0, k)
+                fs = self._flat_specs(query, 0, [0])
+                if fs is not None:
+                    stats = self._stats_for(
+                        [(f_, t) for f_, t, _, _, _ in fs[0]])
+                    return self._collector_topk_frame(
+                        fs[0], fs[2], {0: fs}, k, stats
+                    ).select("seg", "doc", "score")
+        return self._live(self._frame(query, np.float32(1.0), True))
 
     @staticmethod
     def _fold_boost(q: Query, boost: np.float32):
@@ -1325,8 +1283,7 @@ class IndexSearcher:
                 others.append(i)
 
         branches = []
-        if (flat and (self._deleted is None or self._bcast_deleted)
-                and self._segs_single_file()):
+        if flat and (self._deleted is None or self._bcast_deleted):
             # per-segment collector kernel: zero-shuffle scoring + boolean
             # arithmetic + per-(query, segment) top-k inside the worker;
             # only (n_q × n_seg × k) rows reach the final per-query merge
@@ -1439,38 +1396,7 @@ class IndexSearcher:
                 .withColumn("_rn", F.row_number().over(w2))
                 .filter(F.col("_rn") <= k).drop("_rn"))
         for i in others:
-            qi, bi = self._fold_boost(queries[i], np.float32(1.0))
-            if (isinstance(qi, PhraseQuery)
-                    and (self._deleted is None or self._bcast_deleted)
-                    and os.environ.get(
-                        "RUCENE_PHRASE_COLLECTOR", "1") != "0"
-                    and self._segs_single_file()):
-                # phrases ride the zero-shuffle per-segment collector
-                # (already live-masked + per-seg top-k'd)
-                frame = self._phrase_collector_topk(qi, bi, k)
-            elif (isinstance(qi, _SpanQueryT)
-                    and (self._deleted is None or self._bcast_deleted)
-                    and os.environ.get(
-                        "RUCENE_SPAN_COLLECTOR", "1") != "0"
-                    and self._segs_single_file()):
-                frame = self._span_collector_topk(qi, bi, k)
-            elif (isinstance(qi, DisjunctionMaxQuery)
-                    and (self._deleted is None or self._bcast_deleted)
-                    and os.environ.get(
-                        "RUCENE_TERM_COLLECTOR", "1") != "0"
-                    and self.doc_count >= int(os.environ.get(
-                        "RUCENE_COLLECTOR_MIN_DOCS", "100000"))
-                    and self._segs_single_file()
-                    and all(isinstance(self._fold_boost(d, bi)[0],
-                                       TermQuery) for d in qi.disjuncts)
-                    and len({(self._fold_boost(d, bi)[0].field,
-                              self._fold_boost(d, bi)[0].term)
-                             for d in qi.disjuncts})
-                    == len(qi.disjuncts)):
-                frame = self._dismax_collector_topk(qi, bi, k)
-            else:
-                frame = self._live(self._frame(
-                    queries[i], np.float32(1.0), needs_scores=True))
+            frame = self._root_frame(queries[i], k)
             branches.append(
                 frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
                 .select(F.lit(i).alias("qid"), "seg", "doc", "score"))
@@ -1582,21 +1508,13 @@ class IndexSearcher:
         tomb = self._tomb_by_seg()
         k_ = int(k)
 
-        # opt-in worker profile: one summary line per mapInPandas call
-        # (decode vs reduce wall/cpu) appended under /tmp/rucene_prof
-        prof = os.environ.get("RUCENE_COLLECTOR_PROF")
-
         def fn(batches):
-            import time as _time
-            t_wall0, t_cpu0 = _time.time(), _time.process_time()
-            n_in = n_exp_tot = 0
             # streamed per segment (see _iter_seg_chunks): decode,
             # expand, reduce and emit one segment at a time, so worker
             # memory is bounded by one segment's scan rows however many
             # segments _coalesced packs into this task
             for s, pdf in _iter_seg_chunks(batches):
                 n_rows = len(pdf)
-                n_in += n_rows
                 counts = pdf["num_docs"].to_numpy(np.int64)
                 docs = batch_delta_decode(
                     batch_unpack(pdf["docs_bin"].tolist(), counts), counts
@@ -1653,7 +1571,6 @@ class IndexSearcher:
                 if not scored_e.all():
                     sc[np.repeat(~scored_e, lens_e)] = 0
                 doc_a = docs[idx] if not identity else docs
-                n_exp_tot += len(doc_a)
                 q3, d3, s3 = _collector_seg_reduce(
                     doc_a,
                     np.repeat(qid_cat[cidx], lens_e),
@@ -1669,13 +1586,6 @@ class IndexSearcher:
                     "doc": d3,
                     "score": s3,
                 })
-            if prof:
-                os.makedirs("/tmp/rucene_prof", exist_ok=True)
-                with open(f"/tmp/rucene_prof/{os.getpid()}.log", "a") as fh:
-                    fh.write(
-                        f"wall={_time.time() - t_wall0:.3f}"
-                        f" cpu={_time.process_time() - t_cpu0:.3f}"
-                        f" rows={n_in} exp={n_exp_tot}\n")
 
         by_field: dict[str, list[str]] = {}
         for f_, t in by_key:
@@ -1756,8 +1666,7 @@ class IndexSearcher:
                 stats = self._stats_for([(query.field, query.term)])
                 row = stats.get((query.field, query.term))
                 return int(row["df"]) if row else 0
-        elif (self._bcast_deleted
-              and os.environ.get("RUCENE_TERM_COLLECTOR", "1") != "0"):
+        elif self._bcast_deleted:
             # tombstone-aware fast paths: Lucene's live count per leaf is
             # maxDoc - numDeletedDocs — a metadata fold, not a row export
             if isinstance(query, MatchAllDocsQuery):
@@ -1782,9 +1691,9 @@ class IndexSearcher:
         and tombstoned segments decode docs batched and subtract
         searchsorted hits; ONE scalar leaves each scan task, so the job
         is bound by the term-pruned scan, not corpus-sized row export.
-        Additive per row-group, so no segment/file layout invariant
-        (works on multi-file legacy segments too). Cross-route equality
-        incl. post-merge: tests/test_count_live.py."""
+        Additive per row-group, so it needs no segment/file layout
+        invariant. Cross-route equality incl. post-merge:
+        tests/test_count_live.py."""
         tomb = self._tomb_by_seg()
         tomb_segs = set(tomb)
 
@@ -1990,16 +1899,13 @@ class IndexSearcher:
                 self.spark.createDataFrame([], self._score_schema), ["seg", "doc"])
 
         if (prune_counter is None
-                and os.environ.get("RUCENE_BMW_COLLECTOR", "1") != "0"
-                and (self._deleted is None or self._bcast_deleted)
-                and self._segs_single_file()):
+                and (self._deleted is None or self._bcast_deleted)):
             # per-segment BMW collector: the whole θ/split/prune pipeline
             # runs in numpy inside ONE scan pass (see
             # _blockmax_collector_topk) instead of the 4-5 chained jobs
             # below — 27.7s → kernel-bound at 10M docs, and still faster
             # at 5k (one job beats five). The multi-job path remains for
-            # prune_counter introspection, multi-file segment layouts,
-            # and shuffle-scale tombstones.
+            # prune_counter introspection and shuffle-scale tombstones.
             return self._blockmax_collector_topk(infos, field, stats, k)
 
         # --- pass 1: θ from the strongest term, scored exactly
@@ -2718,17 +2624,29 @@ class IndexSearcher:
     def _doc_positions(self, field: str, uniq_terms: list[str],
                        ti_of: dict, seg: int, doc: int):
         """Per-term positions of one (seg, doc) plus its (norm_byte, dl) —
-        one pushed postings scan; explain-path helper."""
-        rows = (
-            self._positions_rows(field, uniq_terms, ti_of)
-            .filter((F.col("seg") == seg) & (F.col("doc") == doc))
-            .collect()
-        )
-        if not rows:
-            return {}, 0, 0
-        pos_map = {r["ti"]: np.asarray(r["positions"], dtype=np.int64)
-                   for r in rows}
-        return pos_map, int(rows[0]["norm_byte"]), int(rows[0]["dl"])
+        one pushed postings scan of the blocks whose doc range holds the
+        doc, decoded in this process; explain-path helper."""
+        blocks = self._postings.filter(
+            (F.col("field") == field) & F.col("term").isin(uniq_terms)
+            & (F.col("seg") == seg)
+            & (F.col("first_doc") <= doc) & (F.col("last_doc") >= doc)
+        ).select("term", "num_docs", "docs_bin", "tfs_bin", "norms_bin",
+                 "dls_bin", "pos_bin").collect()
+        pos_map, nb, dl = {}, 0, 0
+        for b in blocks:
+            n = b["num_docs"]
+            idx = np.flatnonzero(
+                delta_decode(unpack_ints(b["docs_bin"], n)) == doc)
+            if not idx.size:
+                continue
+            i = int(idx[0])
+            tfs = unpack_ints(b["tfs_bin"], n).astype(np.int64)
+            flat, _ = batch_unpack_positions([b["pos_bin"]], tfs)
+            lo = int(tfs[:i].sum())
+            pos_map[ti_of[b["term"]]] = flat[lo:lo + tfs[i]].astype(np.int64)
+            nb = int(unpack_ints(b["norms_bin"], n)[i])
+            dl = int(unpack_ints(b["dls_bin"], n)[i])
+        return pos_map, nb, dl
 
     def _idf_sum_detail(self, field: str, terms: list[str],
                         stats: dict) -> tuple[np.float32, float, dict]:
@@ -2759,28 +2677,28 @@ class IndexSearcher:
                             boost: np.float32, doc: int, what: str,
                             stats: dict) -> dict:
         """Shared BM25 Explanation tree for freq-bearing positional queries
-        (phrase/span) — value arithmetic mirrors the corresponding frame's
-        scoring kernel exactly (f32 path in "lucene" mode, f64 otherwise),
+        (phrase/span) — the value is the leaf kernels' own _freq_scores
+        (f32 path in "lucene" mode, f64 otherwise),
         bm25_similarity.rs:265-361."""
         from .smallfloat import NORM_TABLE
 
-        idf32_total, idf64_total, idf_detail = self._idf_sum_detail(
-            field, idf_terms, stats)
+        _, _, idf_detail = self._idf_sum_detail(field, idf_terms, stats)
+        wk32, coef64 = self._positional_weight(field, idf_terms, boost,
+                                               stats)
         k1_, b_ = self.sim_f[field]
         cache = self.cache_f[field]
+        value = float(_freq_scores(
+            np.asarray([freq]), np.asarray([nb]), np.asarray([dl]),
+            self.scoring == "lucene", wk32, cache, coef64, k1_, b_,
+            self.avgdl64_f[field])[0])
         if self.scoring == "lucene":
-            wk32 = np.float32(np.float32(idf32_total * boost)
-                              * (np.float32(k1_) + np.float32(1.0)))
             tff = np.float32(freq)
-            value = float((wk32 * tff) / (tff + cache[nb]))
             tf_norm = float((tff * (np.float32(k1_) + np.float32(1.0)))
                             / (tff + cache[nb]))
             field_len = float(NORM_TABLE[nb])
         else:
-            coef64 = (idf64_total * float(boost)) * _kp1_64(k1_)
             denom = freq + k1_ * ((1.0 - b_) + b_ * dl
                                   / self.avgdl64_f[field])
-            value = float(coef64 * freq / denom)
             tf_norm = float(freq * (k1_ + 1.0) / denom)
             field_len = float(dl)
         return {
@@ -2813,8 +2731,8 @@ class IndexSearcher:
     def _explain_phrase(self, q: PhraseQuery, boost: np.float32,
                         seg: int, doc: int) -> dict:
         """PhraseWeight::explain — phraseFreq from the shared kernels (the
-        same arithmetic the `_phrase_frame` JVM/numpy paths compute),
-        idf summed over terms in phrase order."""
+        same freq `_phrase_leaf` verifies), idf summed over terms in
+        phrase order."""
         self._check_field(q.field)
         self._check_positions(q.field)
         stats = self._stats_for([(q.field, t) for t in q.terms])
@@ -2845,7 +2763,7 @@ class IndexSearcher:
     def _explain_span(self, q, boost: np.float32, seg: int,
                       doc: int) -> dict:
         """SpanWeight::explain — freq = f32 Σ 1/(1+width) over the span
-        kernel's emitted spans, identical to `_span_frame`."""
+        kernel's emitted spans, identical to `_span_leaf`."""
         from .query import SpanBoostQuery, span_spec, span_terms
         from .spans import span_freq
 
@@ -3045,10 +2963,9 @@ class IndexSearcher:
         if isinstance(q, BooleanQuery):
             return self._boolean_frame(q, boost, needs_scores, stats)
         if isinstance(q, PhraseQuery):
-            return self._phrase_frame(q, boost, stats)
-        from .query import SpanQuery as _SpanQuery
-        if isinstance(q, _SpanQuery):
-            return self._span_frame(q, boost, stats)
+            return self._phrase_leaf(q, boost)
+        if isinstance(q, _SpanQueryT):
+            return self._span_leaf(q, boost)
         if isinstance(q, DisjunctionMaxQuery):
             all_terms = (
                 all(isinstance(d, TermQuery) for d in q.disjuncts)
@@ -3314,106 +3231,77 @@ class IndexSearcher:
             cols += tag_cols
         return base.select(*cols)
 
-    def _positions_rows(self, field: str, uniq_terms: list[str],
-                        ti_of: dict) -> DataFrame:
-        """ONE postings scan (+ positions) for a set of terms of one field,
-        decoded whole-batch → rows (seg, doc, ti, norm_byte, dl, positions).
-        Shared by the phrase and span paths."""
+    def _positional_weight(self, field: str, terms: list[str],
+                           boost: np.float32, stats: dict):
+        """(f32 wk, f64 coef) of a phrase or span query: idf summed over
+        ``terms`` in query order (PhraseWeight / SpanWeight), times the
+        boost and (k1 + 1) — the per-query constants of _freq_scores."""
+        idf32_total, idf64_total, _ = self._idf_sum_detail(
+            field, terms, stats)
+        k1_ = self.sim_f[field][0]
+        wk32 = np.float32(np.float32(idf32_total * boost)
+                          * (np.float32(k1_) + np.float32(1.0)))
+        return wk32, (idf64_total * float(boost)) * _kp1_64(k1_)
 
-        def decode(batches):
-            # whole-batch decode (no per-block Python loop); positions are
-            # restored with one varint pass + segmented cumsum
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                counts = pdf["num_docs"].to_numpy(np.int64)
-                docs = batch_delta_decode(
-                    batch_unpack(pdf["docs_bin"].tolist(), counts), counts
-                ).astype(np.int64)
-                tfs_ = batch_unpack(pdf["tfs_bin"].tolist(), counts
-                                    ).astype(np.int64)
-                nbs = batch_unpack(pdf["norms_bin"].tolist(), counts
-                                   ).astype(np.int64)
-                dls = batch_unpack(pdf["dls_bin"].tolist(), counts
-                                   ).astype(np.int64)
-                flat_pos, _ = batch_unpack_positions(
-                    pdf["pos_bin"].tolist(), tfs_)
-                plists = np.split(flat_pos, np.cumsum(tfs_)[:-1])
-                tis = np.repeat(
-                    np.asarray([ti_of[t] for t in pdf["term"]],
-                               dtype=np.int32), counts)
-                yield pd.DataFrame(
-                    {
-                        "seg": np.repeat(pdf["seg"].to_numpy(np.int32), counts),
-                        "doc": docs,
-                        "ti": tis,
-                        "norm_byte": nbs,
-                        "dl": dls,
-                        "positions": [p.tolist() for p in plists],
-                    }
-                )
+    def _leaf_scan(self, conds, seg_fn, k: int | None) -> DataFrame:
+        """One term-pruned positional postings scan (``conds`` OR-ed)
+        streamed per segment through ``seg_fn(rows, tomb)`` → (docs,
+        scores). With ``k`` the segment's tombstones are passed in (root
+        leaves run only under the broadcast gate); nested leaves get
+        None and are live-masked by their caller."""
+        tomb = self._tomb_by_seg() if k is not None else {}
 
-        scan = self._postings.filter(
-            (F.col("field") == field) & F.col("term").isin(uniq_terms)
-        ).select("term", "seg", "num_docs", "docs_bin", "tfs_bin",
-                 "norms_bin", "dls_bin", "pos_bin")
-        return scan.mapInPandas(
-            decode,
-            "seg int, doc long, ti int, norm_byte int, dl long,"
-            " positions array<long>",
-        )
+        def fn(batches):
+            # streamed per segment — peak memory is one segment's rows
+            # no matter how many segments _coalesced packs in
+            for s, sub in _iter_seg_chunks(batches):
+                dv, sv = seg_fn(sub, tomb.get(int(s)))
+                if len(dv):
+                    yield pd.DataFrame({
+                        "seg": np.full(len(dv), s, dtype=np.int32),
+                        "doc": dv,
+                        "score": sv,
+                    })
 
-    def _phrase_collector_topk(self, q: PhraseQuery, boost: np.float32,
-                               k: int) -> DataFrame:
-        """Zero-shuffle exact-phrase top-k — the per-segment collector
-        kernel (see _collector_topk_frame) extended to phrases, with
-        impact-ordered verification (_phrase_seg_topk).
+        scan = self._postings.filter(reduce(lambda a, b: a | b, conds))
+        scan = scan.select("term", "seg", "block_id", "num_docs",
+                           "docs_bin", "tfs_bin", "norms_bin", "dls_bin",
+                           "pos_bin")
+        return self._coalesced(scan).mapInPandas(fn, self._score_schema)
 
-        The exhaustive exact path (_phrase_frame, slop=0) shuffles one
-        position-array row per (candidate doc, term) into a (seg, doc)
-        groupBy — corpus-sized for a stopword phrase (51.7s at 1M docs,
-        BENCH_1M.json q_stopword_phrase).  Here each worker holds a whole
-        segment's postings for the phrase terms (the searcher pins
-        one-segment-file-per-partition), so conjunction, the min-tf
-        score upper bound, ub-ordered position verification, tombstone
-        masking and the per-segment top-k all happen in numpy inside the
-        scan stage; only ≤ k rows per segment ever leave the executors,
-        and pos_bin blocks that cannot beat θ are never varint-decoded.
-        Used only where per-seg top-k is sound: a ROOT exact phrase going
-        straight to the collector (search()), never as a boolean clause.
-        Scores are bit-identical to _phrase_frame (same float32 kernel,
-        same freq) — asserted by tests/test_phrase_collector.py.
+    def _phrase_leaf(self, q: PhraseQuery, boost: np.float32,
+                     k: int | None = None) -> DataFrame:
+        """Phrase query (exact or sloppy) as ``(seg, doc, score)`` rows from
+        one term-pruned postings scan, with the doc conjunction, position
+        verification and BM25 all in numpy inside the scan task
+        (_phrase_seg_topk). Each task holds whole segments (the searcher
+        pins one file per partition, _coalesced unions whole partitions),
+        so no positions are shuffled.
 
-        Sloppy phrases (slop > 0) ride the same kernel with the bound
-        Σ_slots tf − n_slots + 1 (every _SloppyFreq iteration consumes
-        one position advance and emits ≤1 match of weight ≤1) and the
-        shared sloppy verify — batch-vectorized for two distinct terms,
-        per-doc heap walk behind the same candidate cap as the
-        exhaustive path otherwise."""
+        With ``k`` (a root phrase) the kernel verifies candidates in
+        impact order and stops once the k-th verified score beats every
+        remaining bound, masks tombstones in the worker, and emits ≤ k
+        rows per segment; pos_bin blocks that cannot beat θ are never
+        varint-decoded. With ``k=None`` (a nested clause, count(),
+        delete-by-query) every candidate is verified in bounded chunks
+        and every hit emitted. Tests: tests/test_phrase_collector.py,
+        tests/test_nested_positional.py.
+
+        Sloppy phrases bound freq by Σ_slots tf − n_slots + 1 (every
+        _SloppyFreq iteration consumes one position advance and emits ≤1
+        match of weight ≤1); distinct-term shapes verify batch-vectorized,
+        repeated-term shapes walk per doc behind the candidate cap."""
         self._check_field(q.field)
         self._check_positions(q.field)
         stats = self._stats_for([(q.field, t) for t in set(q.terms)])
         if any((q.field, t) not in stats for t in q.terms):
             return self.spark.createDataFrame([], self._score_schema)
         if q.slop > 0 and len(set(q.terms)) != len(q.terms):
-            # repeated-term sloppy shapes verify per-doc in Python
-            # (repeat groups): same candidate cap as the exhaustive
-            # path.  Distinct-term phrases of any length are lockstep-
-            # vectorized (sloppy_phrase_freq_nslot_flat) and exempt.
             self._check_verify_cap(
                 min(int(stats[(q.field, t)]["df"]) for t in q.terms),
                 f"sloppy phrase {q.terms!r}~{q.slop}")
-        idf_total = np.float32(0.0)
-        idf64_total = 0.0
-        for t in q.terms:
-            df_ = int(stats[(q.field, t)]["df"])
-            idf_total = np.float32(idf_total + idf32(df_, self.doc_count))
-            idf64_total += float(np.log(
-                1.0 + (self.doc_count - df_ + 0.5) / (df_ + 0.5)))
-        k1_, b_ = self.sim_f[q.field]
-        weight32 = np.float32(idf_total * boost)
-        wk32 = np.float32(weight32 * (np.float32(k1_) + np.float32(1.0)))
-        coef64 = (idf64_total * float(boost)) * _kp1_64(k1_)
+        wk32, coef64 = self._positional_weight(q.field, q.terms, boost,
+                                               stats)
 
         # hot-pair rewrite (build.py bigram channel): for an exact phrase,
         # every adjacent (a@p, b@p+1) slot pair with BOTH terms in the hot
@@ -3450,33 +3338,16 @@ class IndexSearcher:
         offsets = [p for _, p, _ in new_slots]
         slop_ = int(q.slop)
         terms_ = list(q.terms)
-        n_uniq = len(uniq_terms)
-        cache = self.cache_f[q.field]
-        avgdl64 = self.avgdl64_f[q.field]
-        lucene = self.scoring == "lucene"
-        tomb = self._tomb_by_seg()
-        k_ = int(k)
-        chunk0 = int(os.environ.get("RUCENE_PHRASE_CHUNK", "4096"))
-        term_ti = ti_of
+        bm = (self.scoring == "lucene", wk32, self.cache_f[q.field], coef64,
+              *self.sim_f[q.field], self.avgdl64_f[q.field])
+        chunk0 = _VERIFY_CHUNK
 
-        def fn(batches):
-            # streamed per segment — peak memory is one segment's rows
-            # no matter how many segments _coalesced packs in
-            for s, sub in _iter_seg_chunks(batches):
-                tds = _decode_seg_tds(sub, term_ti)
-                if len(tds) < n_uniq:
-                    continue
-                dv, sv = _phrase_seg_topk(
-                    tds, slots, offsets, tomb.get(int(s)), k_, chunk0,
-                    lucene, wk32, cache, coef64, k1_, b_, avgdl64,
-                    slop=slop_, terms=terms_)
-                if len(dv) == 0:
-                    continue
-                yield pd.DataFrame({
-                    "seg": np.full(len(dv), s, dtype=np.int32),
-                    "doc": dv,
-                    "score": sv,
-                })
+        def seg_fn(sub, tomb):
+            tds = _decode_seg_tds(sub, ti_of)
+            if len(tds) < len(uniq_terms):
+                return (), ()
+            return _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0,
+                                    *bm, slop=slop_, terms=terms_)
 
         conds = []
         if base_terms:
@@ -3485,27 +3356,19 @@ class IndexSearcher:
         if pair_terms:
             conds.append((F.col("field") == q.field + BIGRAM_SUFFIX)
                          & F.col("term").isin(pair_terms))
-        scan = self._postings.filter(
-            reduce(lambda a, b: a | b, conds)
-        ).select("term", "seg", "block_id", "num_docs", "docs_bin",
-                 "tfs_bin", "norms_bin", "dls_bin", "pos_bin")
-        return self._coalesced(scan).mapInPandas(
-            fn, f"seg int, doc long, score {self._score_t}")
+        return self._leaf_scan(conds, seg_fn, k)
 
-    def _span_collector_topk(self, q, boost: np.float32,
-                             k: int) -> DataFrame:
-        """Zero-shuffle span top-k — the per-segment collector kernel
-        extended to the span family (_span_seg_topk). The exhaustive
-        _span_frame shuffles one positions row per (candidate doc, term)
-        into a corpus-sized (seg, doc) groupBy before verifying; here
-        conjunction, the span-count impact bound, ub-ordered
-        verification, tombstone masking and the per-segment top-k all
-        run in numpy inside the scan stage — only ≤k rows per segment
-        leave the executors, and pos_bin blocks no surviving candidate
-        lands in are never decoded. Used only for ROOT span queries
-        (search()), where per-segment top-k is sound. Scores are
-        identical to _span_frame (same float32 span-freq kernels,
-        tests/test_spans.py cross-route assertions)."""
+    def _span_leaf(self, q, boost: np.float32,
+                   k: int | None = None) -> DataFrame:
+        """Span query as ``(seg, doc, score)`` rows — the span analogue of
+        :meth:`_phrase_leaf` (_span_seg_topk): candidates hold ≥1 term of
+        every required clause group, the impact bound is the span-count
+        bound, and ``k`` / ``k=None`` select root top-k or every hit.
+        Scored like a phrase: weight = f32-summed idf of the tree's terms
+        in tree order, freq = f32 Σ 1/(1+width) over emitted spans.
+        Top-level SpanBoostQuery layers fold into the boost
+        (span_boost.rs:290-291); boosts nested deeper are scoring no-ops
+        like the reference's needs_scores=false sub-weights."""
         from .query import (
             SpanBoostQuery,
             SpanGapQuery,
@@ -3525,36 +3388,27 @@ class IndexSearcher:
         ti_of = {t: i for i, t in enumerate(uniq_terms)}
         spec = span_spec(q, ti_of)
         stats = self._stats_for([(field, t) for t in uniq_terms])
+        wk32, coef64 = self._positional_weight(field, terms, boost, stats)
 
-        idf_total = np.float32(0.0)
-        idf64_total = 0.0
-        for t in terms:
-            row = stats.get((field, t))
-            df_ = int(row["df"]) if row else 0
-            idf_total = np.float32(idf_total + idf32(df_, self.doc_count))
-            idf64_total += float(np.log(
-                1.0 + (self.doc_count - df_ + 0.5) / (df_ + 0.5)))
-        k1_, b_ = self.sim_f[field]
-        weight32 = np.float32(idf_total * boost)
-        wk32 = np.float32(weight32 * (np.float32(k1_) + np.float32(1.0)))
-        coef64 = (idf64_total * float(boost)) * _kp1_64(k1_)
-
+        # required-clause groups: a doc qualifies only with >=1 term of
+        # EVERY top-level near clause (nested trees fold into their
+        # top-level clause's group); or/term roots have a single group
         if isinstance(q, SpanNearQuery):
             groups = [span_terms(c) for c in q.clauses
                       if not isinstance(c, SpanGapQuery)]
         else:
             groups = [terms]
         group_tis = [sorted({ti_of[t] for t in g}) for g in groups]
-        batch_on = os.environ.get("RUCENE_SPAN_BATCH", "1") != "0"
         fast2 = (spec[0] == "near" and bool(spec[3]) and len(spec[1]) == 2
-                 and all(s[0] == "term" for s in spec[1]) and batch_on)
-        # n-clause ordered near over term/gap clauses: lockstep-vectorized
-        # (ordered_near_freq_nclause_flat, round-4 verdict #2) — exempt
-        # from the per-doc-verify candidate cap like the 2-term shape
+                 and all(s[0] == "term" for s in spec[1]))
+        # ordered nears over term/gap clauses of any length verify
+        # lockstep-vectorized, exempt from the per-doc-verify cap
         fastn = (not fast2 and spec[0] == "near" and bool(spec[3])
                  and all(s[0] in ("term", "gap") for s in spec[1])
-                 and spec[1][0][0] == "term" and batch_on)
+                 and spec[1][0][0] == "term")
         if not (fast2 or fastn):
+            # a doc needs >=1 term of every required group, so the
+            # smallest group's summed df bounds the candidate set
             def _df(t: str) -> int:
                 row = stats.get((field, t))
                 return int(row["df"]) if row else 0
@@ -3565,395 +3419,18 @@ class IndexSearcher:
         ta2 = spec[1][0][1] if fast2 else -1
         tb2 = spec[1][1][1] if fast2 else -1
         slop2 = spec[2] if fast2 else 0
+        bm = (self.scoring == "lucene", wk32, self.cache_f[field], coef64,
+              *self.sim_f[field], self.avgdl64_f[field])
+        chunk0 = _VERIFY_CHUNK
 
-        cache = self.cache_f[field]
-        avgdl64 = self.avgdl64_f[field]
-        lucene = self.scoring == "lucene"
-        tomb = self._tomb_by_seg()
-        k_ = int(k)
-        chunk0 = int(os.environ.get("RUCENE_PHRASE_CHUNK", "4096"))
-        ti_map = ti_of
+        def seg_fn(sub, tomb):
+            return _span_seg_topk(
+                _decode_seg_tds(sub, ti_of), spec, group_tis, tomb, k,
+                chunk0, *bm, fast2, ta2, tb2, slop2, fastn)
 
-        def fn(batches):
-            # streamed per segment (see _iter_seg_chunks): bounded memory
-            for s, sub in _iter_seg_chunks(batches):
-                tds = _decode_seg_tds(sub, ti_map)
-                dv, sv = _span_seg_topk(
-                    tds, spec, group_tis, tomb.get(int(s)), k_, chunk0,
-                    lucene, wk32, cache, coef64, k1_, b_, avgdl64,
-                    fast2, ta2, tb2, slop2, fastn)
-                if len(dv) == 0:
-                    continue
-                yield pd.DataFrame({
-                    "seg": np.full(len(dv), s, dtype=np.int32),
-                    "doc": dv,
-                    "score": sv,
-                })
-
-        scan = self._postings.filter(
-            (F.col("field") == field) & F.col("term").isin(uniq_terms)
-        ).select("term", "seg", "block_id", "num_docs", "docs_bin",
-                 "tfs_bin", "norms_bin", "dls_bin", "pos_bin")
-        return self._coalesced(scan).mapInPandas(
-            fn, f"seg int, doc long, score {self._score_t}")
-
-    def _phrase_frame(self, q: PhraseQuery, boost: np.float32, stats: dict) -> DataFrame:
-        """ONE postings scan for all phrase terms (``term IN (...)`` pushed
-        down), one decode stage, then the two-phase ExactPhraseScorer as
-        relational algebra (phrase_scorer.rs:122-294).
-
-        For slop=0 the phrase frequency itself is computed ENTIRELY
-        JVM-side: explode positions, shift each slot's position by its
-        phrase offset, and count (seg, doc, base) groups hitting every
-        slot — the per-doc intersection of shifted position sets
-        (phrase_scorer.rs:179-229) as a groupBy. Python then sees only
-        (seg, doc, freq, norm, dl) scalar rows for the BM25 kernel (bit
-        parity with the batch term scorer), never position payloads — a
-        stopword-pair phrase at 10^6+ docs stays Arrow/JVM-bound instead
-        of materializing ~N candidate position maps into Python
-        (round-2 VERDICT 'What's wrong #2').
-
-        Sloppy phrases keep the per-doc kernel walk (inherently
-        sequential, phrase_scorer.rs:537-575) on the conjunction-filtered
-        candidate set."""
-        self._check_field(q.field)
-        self._check_positions(q.field)
-        if any((q.field, t) not in stats for t in q.terms):
-            return self.spark.createDataFrame([], self._score_schema)
-        idf_total = np.float32(0.0)
-        idf64_total = 0.0
-        for t in q.terms:
-            df_ = int(stats[(q.field, t)]["df"])
-            idf_total = np.float32(idf_total + idf32(df_, self.doc_count))
-            idf64_total += float(np.log(1.0 + (self.doc_count - df_ + 0.5) / (df_ + 0.5)))
-        k1_, b_ = self.sim_f[q.field]
-        weight32 = np.float32(idf_total * boost)
-        wk32 = np.float32(weight32 * (np.float32(k1_) + np.float32(1.0)))
-
-        uniq_terms = sorted(set(q.terms))
-        ti_of = {t: i for i, t in enumerate(uniq_terms)}
-        n_uniq = len(uniq_terms)
-        rows = self._positions_rows(q.field, uniq_terms, ti_of)
-
-        offsets = list(q.positions)
-        terms = list(q.terms)
-        term_tis = [ti_of[t] for t in terms]
-        slop = q.slop
-        cache = self.cache_f[q.field]
-        scoring = self.scoring
-        avgdl64 = self.avgdl64_f[q.field]
-        boost64 = float(boost)
-        coef64 = (idf64_total * boost64) * _kp1_64(k1_)
-
-        if slop == 0:
-            # one shuffle aligns each candidate doc's per-term position
-            # arrays (tf-capped, <=10 elements each); the intersection of
-            # offset-shifted arrays — phrase_scorer.rs:179-229's freq —
-            # is a chained JVM array_intersect, so the frequency never
-            # leaves the JVM and Python receives only scalar rows
-            aligned0 = (
-                rows.groupBy("seg", "doc")
-                .agg(
-                    F.count("*").alias("_n"),
-                    F.map_from_entries(
-                        F.collect_list(F.struct("ti", "positions"))
-                    ).alias("_pm"),
-                    F.first("norm_byte").alias("_nb"),
-                    F.first("dl").alias("_dl"),
-                )
-                .filter(F.col("_n") == n_uniq)
-            )
-            def _shift(off: int):
-                # single-arg lambda: a 2-arg lambda would make transform
-                # pass the ELEMENT INDEX as the second argument
-                return lambda x: x - F.lit(int(off))
-
-            inter = None
-            for t, off in zip(terms, offsets):
-                arr = F.transform(
-                    F.element_at(F.col("_pm"), F.lit(ti_of[t])),
-                    _shift(off))
-                inter = arr if inter is None else F.array_intersect(
-                    inter, arr)
-            scored_rows = (
-                aligned0.select("seg", "doc", "_nb", "_dl",
-                                F.size(inter).alias("_freq"))
-                .filter(F.col("_freq") > 0)
-            )
-
-            def score(batches):
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    fr = pdf["_freq"].to_numpy(np.float64)
-                    if scoring == "lucene":
-                        tff = fr.astype(np.float32)
-                        sc = (wk32 * tff) / (
-                            tff + cache[pdf["_nb"].to_numpy(np.int64)])
-                    else:
-                        dl = pdf["_dl"].to_numpy(np.float64)
-                        denom = fr + k1_ * ((1.0 - b_) + b_ * dl / avgdl64)
-                        sc = coef64 * fr / denom
-                    yield pd.DataFrame({
-                        "seg": pdf["seg"].to_numpy(),
-                        "doc": pdf["doc"].to_numpy(),
-                        "score": sc,
-                    })
-
-            return scored_rows.mapInPandas(score, self._score_schema)
-
-        aligned = (
-            rows.groupBy("seg", "doc")
-            .agg(
-                F.count("*").alias("_n"),
-                F.map_from_entries(
-                    F.collect_list(F.struct("ti", "positions"))).alias("_pm"),
-                F.first("norm_byte").alias("_nb"),
-                F.first("dl").alias("_dl"),
-            )
-            .filter(F.col("_n") == n_uniq)
-        )
-
-        two_term = len(terms) == 2 and terms[0] != terms[1]
-        distinct = len(set(terms)) == len(terms)
-        if not distinct:
-            # repeated-term phrases keep the per-doc heap walk (repeat
-            # groups, phrase_scorer.rs:587-792); gate it on the metadata
-            # candidate bound (min required-term df) so an adversarial
-            # stopword phrase can't run a corpus-sized Python loop —
-            # degrade-by-rejection with guidance, like block-max's
-            # degenerate path (round-3 VERDICT #1).  Distinct-term
-            # phrases of ANY length are lockstep-vectorized (round-4
-            # verdict #2) and exempt.
-            self._check_verify_cap(
-                min(int(stats[(q.field, t)]["df"]) for t in q.terms),
-                f"sloppy phrase {q.terms!r}~{slop}")
-
-        def verify(batches):
-            # sloppy only (exact phrases returned above). Two distinct
-            # terms run the batch-vectorized alternating-leader walk;
-            # n≥3 distinct terms run the lockstep heap-walk simulation
-            # (sloppy_phrase_freq_nslot_batch); repeated-term shapes
-            # keep the per-doc heap walk (phrase_scorer.rs:537-575)
-            # behind the candidate cap checked above.
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                n_cand = len(pdf)
-                pms = pdf["_pm"].tolist()
-                if two_term:
-                    freqs = sloppy_phrase_freq_2term_batch(
-                        [pm[term_tis[0]] for pm in pms],
-                        [pm[term_tis[1]] for pm in pms],
-                        offsets[0], offsets[1], slop,
-                    ).astype(np.float64)
-                elif distinct:
-                    freqs = sloppy_phrase_freq_nslot_batch(
-                        [[np.asarray(pm[ti], dtype=np.int64) for pm in pms]
-                         for ti in term_tis],
-                        offsets, slop).astype(np.float64)
-                else:
-                    freqs = np.zeros(n_cand, dtype=np.float64)
-                    for r in range(n_cand):
-                        pm = pms[r]
-                        pls = [np.asarray(pm[ti], dtype=np.int64)
-                               for ti in term_tis]
-                        freqs[r] = float(
-                            sloppy_phrase_freq(pls, offsets, terms, slop))
-                mask = freqs > 0
-                if not mask.any():
-                    continue
-                sub = pdf[mask]
-                fr = freqs[mask]
-                if scoring == "lucene":
-                    tff = fr.astype(np.float32)
-                    sc = (wk32 * tff) / (
-                        tff + cache[sub["_nb"].to_numpy(dtype=np.int64)]
-                    )
-                else:
-                    dl = sub["_dl"].to_numpy(dtype=np.float64)
-                    denom = fr + k1_ * ((1.0 - b_) + b_ * dl / avgdl64)
-                    sc = coef64 * fr / denom
-                yield pd.DataFrame(
-                    {
-                        "seg": sub["seg"].to_numpy(),
-                        "doc": sub["doc"].to_numpy(),
-                        "score": sc,
-                    }
-                )
-
-        return aligned.mapInPandas(verify, self._score_schema)
-
-    def _span_frame(self, q, boost: np.float32, stats: dict) -> DataFrame:
-        """Span queries as a generalized position join: one postings scan
-        for every term in the span tree, a clause-presence bitmask
-        prefilter (JVM-side), then the shared span kernels on the
-        candidate docs (spans.py; span.rs / span_near.rs / span_or.rs).
-        Scored like a phrase: weight = f32-summed idf of the tree's
-        distinct terms, freq = f32 Σ 1/(1+width) over emitted spans."""
-        from .query import (
-            SpanBoostQuery,
-            SpanGapQuery,
-            SpanNearQuery,
-            span_spec,
-            span_terms,
-        )
-        from .spans import span_freq
-
-        # top-level SpanBoostQuery layers fold into the similarity boost
-        # (span_boost.rs:290-291, b = boost * self.boost); boosts nested
-        # deeper in the tree are scoring no-ops like the reference's
-        # needs_scores=false sub-weights
-        while isinstance(q, SpanBoostQuery):
-            boost = np.float32(boost * np.float32(q.boost))
-            q = q.query
-
-        field = q.field
-        self._check_field(field)
-        self._check_positions(field)
-        terms = span_terms(q)
-        uniq_terms = sorted(set(terms))
-        ti_of = {t: i for i, t in enumerate(uniq_terms)}
-        spec = span_spec(q, ti_of)
-
-        # combined idf weight, f32-accumulated in tree order (SpanWeight)
-        idf_total = np.float32(0.0)
-        idf64_total = 0.0
-        for t in terms:
-            row = stats.get((field, t))
-            df_ = int(row["df"]) if row else 0
-            idf_total = np.float32(idf_total + idf32(df_, self.doc_count))
-            idf64_total += float(np.log(
-                1.0 + (self.doc_count - df_ + 0.5) / (df_ + 0.5)))
-        k1_, b_ = self.sim_f[field]
-        weight32 = np.float32(idf_total * boost)
-        wk32 = np.float32(weight32 * (np.float32(k1_) + np.float32(1.0)))
-
-        # required-clause groups: a doc qualifies only with >=1 term of
-        # EVERY top-level near clause (nested trees fold into their
-        # top-level clause's group); or/term roots have a single group
-        if isinstance(q, SpanNearQuery):
-            groups = [span_terms(c) for c in q.clauses
-                      if not isinstance(c, SpanGapQuery)]
-        else:
-            groups = [terms]
-        full_mask = (1 << len(groups)) - 1
-        # the 2-term-clause ORDERED near ("a before b within n" — the
-        # common serving shape) verifies batch-vectorized
-        # (spans.ordered_near_freq_2term_batch), so it is exempt from the
-        # per-doc-Python candidate cap, like the 2-distinct-term sloppy
-        # phrase
-        batch_on = os.environ.get("RUCENE_SPAN_BATCH", "1") != "0"
-        fast2 = (spec[0] == "near" and bool(spec[3]) and len(spec[1]) == 2
-                 and all(s[0] == "term" for s in spec[1]) and batch_on)
-        fastn = (not fast2 and spec[0] == "near" and bool(spec[3])
-                 and all(s[0] in ("term", "gap") for s in spec[1])
-                 and spec[1][0][0] == "term" and batch_on)
-        if not (fast2 or fastn):
-            # remaining per-doc-Python span shapes (or-trees, unordered
-            # nears): gate on the metadata candidate bound — a doc needs
-            # >=1 term of every required group, so min over groups of the
-            # group's summed df bounds the candidate set (round-3
-            # VERDICT #1).  Ordered nears over term/gap clauses of ANY
-            # length are lockstep-vectorized (round-4 verdict #2) and
-            # exempt.
-            def _df(t: str) -> int:
-                row = stats.get((field, t))
-                return int(row["df"]) if row else 0
-            bound = min((sum(_df(t) for t in g) for g in groups), default=0)
-            self._check_verify_cap(
-                bound, f"span query over {sorted(set(terms))!r}")
-        ti_mask: dict[int, int] = {}
-        for gi, g in enumerate(groups):
-            for t in g:
-                ti_mask[ti_of[t]] = ti_mask.get(ti_of[t], 0) | (1 << gi)
-        mask_map = F.create_map(*[
-            F.lit(x) for ti, mk in ti_mask.items() for x in (ti, mk)])
-
-        rows = self._positions_rows(field, uniq_terms, ti_of)
-        aligned = (
-            rows.withColumn(
-                "_m", F.coalesce(F.element_at(mask_map, F.col("ti")),
-                                 F.lit(0)))
-            .groupBy("seg", "doc")
-            .agg(
-                F.expr("bit_or(_m)").alias("_mk"),
-                F.map_from_entries(
-                    F.collect_list(F.struct("ti", "positions"))).alias("_pm"),
-                F.first("norm_byte").alias("_nb"),
-                F.first("dl").alias("_dl"),
-            )
-            .filter(F.col("_mk") == full_mask)
-        )
-
-        cache = self.cache_f[field]
-        scoring = self.scoring
-        avgdl64 = self.avgdl64_f[field]
-        boost64 = float(boost)
-        coef64 = (idf64_total * boost64) * _kp1_64(k1_)
-
-        ta2 = spec[1][0][1] if fast2 else -1
-        tb2 = spec[1][1][1] if fast2 else -1
-        slop2 = spec[2] if fast2 else 0
-        from .spans import (
-            ordered_near_freq_2term_batch,
-            ordered_near_freq_nclause_flat,
-        )
-
-        def verify(batches):
-            from itertools import chain
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pms = pdf["_pm"].tolist()
-                if fast2:
-                    freqs = ordered_near_freq_2term_batch(
-                        [m[ta2] for m in pms], [m[tb2] for m in pms],
-                        slop2).astype(np.float64)
-                elif fastn:
-                    clauses = []
-                    for s_ in spec[1]:
-                        if s_[0] == "gap":
-                            clauses.append(("gap", s_[1]))
-                            continue
-                        ti = s_[1]
-                        lists = [m[ti] for m in pms]
-                        ln = np.fromiter((len(x) for x in lists),
-                                         dtype=np.int64, count=len(lists))
-                        flat = np.fromiter(chain.from_iterable(lists),
-                                           dtype=np.int64,
-                                           count=int(ln.sum()))
-                        clauses.append(("pos", flat, ln))
-                    freqs = ordered_near_freq_nclause_flat(
-                        clauses, spec[2]).astype(np.float64)
-                else:
-                    freqs = np.zeros(len(pdf), dtype=np.float64)
-                    for r in range(len(pdf)):
-                        pos_map = {ti: np.asarray(pl, dtype=np.int64)
-                                   for ti, pl in pms[r].items()}
-                        freqs[r] = float(span_freq(spec, pos_map))
-                mask = freqs > 0
-                if not mask.any():
-                    continue
-                sub = pdf[mask]
-                fr = freqs[mask]
-                if scoring == "lucene":
-                    tff = fr.astype(np.float32)
-                    sc = (wk32 * tff) / (
-                        tff + cache[sub["_nb"].to_numpy(dtype=np.int64)])
-                else:
-                    dl = sub["_dl"].to_numpy(dtype=np.float64)
-                    denom = fr + k1_ * ((1.0 - b_) + b_ * dl / avgdl64)
-                    sc = coef64 * fr / denom
-                yield pd.DataFrame(
-                    {
-                        "seg": sub["seg"].to_numpy(),
-                        "doc": sub["doc"].to_numpy(),
-                        "score": sc,
-                    }
-                )
-
-        return aligned.mapInPandas(verify, self._score_schema)
+        return self._leaf_scan(
+            [(F.col("field") == field) & F.col("term").isin(uniq_terms)],
+            seg_fn, k)
 
     # -- boolean ---------------------------------------------------------
 

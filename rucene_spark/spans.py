@@ -244,14 +244,18 @@ def ordered_near_freq_nclause_flat(
     return freq
 
 
-def ordered_near_freq_2term_batch(
-    lists_a: list,
-    lists_b: list,
+def ordered_near_freq_2term_flat(
+    flat_a: np.ndarray,
+    la: np.ndarray,
+    flat_b: np.ndarray,
+    lb: np.ndarray,
     slop: int,
 ) -> np.ndarray:
     """Vectorized ordered-near freq for the 2-TERM-clause span shape
     ("a before b within n" — the common serving query) over a whole
-    batch of candidate docs at once.
+    batch of candidate docs at once. ``flat_a`` is every candidate doc's
+    positions for the first clause concatenated in doc order and
+    ``la[i]`` the count belonging to doc ``i`` (same for b).
 
     For term spans the ordered walk (span_near.rs:725-821,
     ``NearSpansOrdered``) is stateless: the clause pointers are monotone
@@ -266,37 +270,7 @@ def ordered_near_freq_2term_batch(
     Python walk. Accumulation is float32 in ascending-``a`` emission
     order — bit-identical to :func:`span_freq` on the same spec
     (fuzz-asserted in tests/test_spans.py).
-
-    List-of-arrays wrapper around :func:`ordered_near_freq_2term_flat`
-    (the flat core the span collector calls directly — its gathered
-    positions are already flat, so per-doc slicing would be pure
-    overhead).
     """
-    from itertools import chain
-
-    n = len(lists_a)
-    la = np.fromiter((len(x) for x in lists_a), dtype=np.int64, count=n)
-    lb = np.fromiter((len(x) for x in lists_b), dtype=np.int64, count=n)
-    flat_a = np.fromiter(chain.from_iterable(lists_a), dtype=np.int64,
-                         count=int(la.sum()))
-    flat_b = np.fromiter(chain.from_iterable(lists_b), dtype=np.int64,
-                         count=int(lb.sum()))
-    return ordered_near_freq_2term_flat(flat_a, la, flat_b, lb, slop)
-
-
-def ordered_near_freq_2term_flat(
-    flat_a: np.ndarray,
-    la: np.ndarray,
-    flat_b: np.ndarray,
-    lb: np.ndarray,
-    slop: int,
-) -> np.ndarray:
-    """Flat-input core of :func:`ordered_near_freq_2term_batch`:
-    ``flat_a`` is every candidate doc's positions for the first clause
-    concatenated in doc order and ``la[i]`` the count belonging to doc
-    ``i`` (same for b). Identical arithmetic and accumulation order as
-    the list wrapper — the padded position matrices are built from the
-    same values, just without materializing per-doc slices."""
     n = len(la)
     freq = np.zeros(n, dtype=np.float32)
     if n == 0:

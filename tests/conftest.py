@@ -99,3 +99,15 @@ def random_query_tree(rng, vocab, bigrams, depth=0):
            if shoulds and not musts else 0)
     return BooleanQuery.build(musts, shoulds, filters, must_nots,
                               min_should_match=msm)
+
+
+def exhaustive_topk(searcher, q, k):
+    """Exhaustive witness for a root query's top-k: the query's nested
+    frame (every phrase/span candidate verified, no impact pruning),
+    live-masked and ordered like search() → [Row(seg, doc, score)]."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    return (searcher._live(searcher._frame(q, np.float32(1.0), True))
+            .orderBy(F.desc("score"), "seg", "doc").limit(k)
+            .select("seg", "doc", "score").collect())

@@ -15,6 +15,7 @@ import os
 import tempfile
 
 import pytest
+from conftest import exhaustive_topk
 
 from rucene_spark.build import (
     BIGRAM_SEP,
@@ -79,13 +80,16 @@ def idx_bigram(spark, corpus):
 
 
 def _phrase_results(spark, d, terms, k=20, collector=True):
-    os.environ["RUCENE_PHRASE_COLLECTOR"] = "1" if collector else "0"
-    try:
-        s = IndexSearcher(spark, d)
-        rows = s.search(PhraseQuery.build("text", terms, slop=0), k).collect()
-        return [(r["doc_id"], r["score"]) for r in rows]
-    finally:
-        os.environ.pop("RUCENE_PHRASE_COLLECTOR", None)
+    """(doc_id, score) top-k of an exact phrase: search()'s impact-pruned
+    root leaf, or (collector=False) the exhaustive nested leaf."""
+    s = IndexSearcher(spark, d)
+    q = PhraseQuery.build("text", terms, slop=0)
+    if collector:
+        return [(r["doc_id"], r["score"]) for r in s.search(q, k).collect()]
+    ids = {(r["seg"], r["doc"]): r["doc_id"] for r in
+           s._docmeta.select("seg", "doc", "doc_id").collect()}
+    return [(ids[(r.seg, r.doc)], r.score)
+            for r in exhaustive_topk(s, q, k)]
 
 
 def test_vocab_built_and_recorded(spark, idx_bigram):

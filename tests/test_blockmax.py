@@ -101,24 +101,20 @@ def test_blockmax_degenerate_fallback_is_exact(spark, corpus, index_dir,
             assert ctr.get("degenerate"), (terms, ctr)
 
 
-def test_blockmax_collector_matches_multijob(spark, corpus, index_dir,
-                                             monkeypatch):
-    """The per-segment BMW collector (default route on single-file
-    layouts) must be rank- and score-identical to the multi-job BMW path
+def test_blockmax_collector_matches_multijob(spark, corpus, index_dir):
+    """The per-segment BMW collector (the default route) must be rank- and score-identical to the multi-job BMW path
     on every term mix — and both must survive deletions."""
     s = IndexSearcher(spark, index_dir, scoring="lucene")
     for terms in _term_sets(corpus):
-        monkeypatch.setenv("RUCENE_BMW_COLLECTOR", "1")
         kernel = s.search_blockmax(terms, 10).select(
             "seg", "doc", "score").collect()
-        monkeypatch.setenv("RUCENE_BMW_COLLECTOR", "0")
-        multijob = s.search_blockmax(terms, 10).select(
+        # a prune_counter routes to the multi-job path (it reports there)
+        multijob = s.search_blockmax(terms, 10, prune_counter={}).select(
             "seg", "doc", "score").collect()
         assert [(r.seg, r.doc) for r in kernel] == [
             (r.seg, r.doc) for r in multijob], terms
         assert [r.score for r in kernel] == pytest.approx(
             [r.score for r in multijob], rel=1e-6), terms
-    monkeypatch.delenv("RUCENE_BMW_COLLECTOR")
 
 
 def test_blockmax_collector_with_tombstones(spark, corpus, tmp_path,

@@ -32,6 +32,11 @@ def index_dir(spark, corpus, tmp_path_factory):
     return d
 
 
+# the exhaustive route: tombstones above the broadcast cap disable every
+# count fast path, so each count is the live-masked frame's row count
+SLOW = {"RUCENE_TOMB_BCAST_CAP": "0"}
+
+
 def _counts(spark, index_dir, terms, env):
     old = {k: os.environ.get(k) for k in env}
     os.environ.update(env)
@@ -53,10 +58,8 @@ def test_count_live_cross_route(spark, corpus, index_dir):
     plain = [t for t in dfs.index if t.startswith("t0")]
     terms = [plain[0], plain[len(plain) // 3], plain[-1], "tzzzzzz"]
     fast = _counts(spark, index_dir, terms,
-                   {"RUCENE_TERM_COLLECTOR": "1",
-                    "RUCENE_COLLECTOR_MIN_DOCS": "1"})
-    slow = _counts(spark, index_dir, terms,
-                   {"RUCENE_TERM_COLLECTOR": "0"})
+                   {"RUCENE_COLLECTOR_MIN_DOCS": "1"})
+    slow = _counts(spark, index_dir, terms, SLOW)
     assert fast == slow
     # deletes actually bite: match-all under tombstones < corpus size
     assert fast["__all__"] == len(corpus) - 80
@@ -71,8 +74,7 @@ def test_count_live_after_merge(spark, corpus, index_dir):
     # single-file merged layout
     delete_by_keys(index_dir, corpus["url"].iloc[100:120].tolist())
     fast = _counts(spark, index_dir, [hi],
-                   {"RUCENE_TERM_COLLECTOR": "1",
-                    "RUCENE_COLLECTOR_MIN_DOCS": "1"})
-    slow = _counts(spark, index_dir, [hi], {"RUCENE_TERM_COLLECTOR": "0"})
+                   {"RUCENE_COLLECTOR_MIN_DOCS": "1"})
+    slow = _counts(spark, index_dir, [hi], SLOW)
     assert fast == slow
     assert fast["__all__"] == len(corpus) - 100

@@ -79,11 +79,20 @@ def test_sloppy_beyond_slop_no_match():
     assert sloppy_phrase_freq(pls, offs, terms, slop=4) > 0.0
 
 
+def _flat(lists):
+    """Per-doc position lists → (concatenated positions, per-doc counts),
+    the flat layout the vectorized kernels take."""
+    lens = np.array([len(x) for x in lists], dtype=np.int64)
+    flat = (np.concatenate(lists).astype(np.int64) if len(lists)
+            else np.empty(0, dtype=np.int64))
+    return flat, lens
+
+
 def test_2term_batch_bit_identical_fuzz():
     """The lockstep 2-term kernel must be float32-BIT-identical to the
     scalar heap walk on random position lists — including adjusted-
     position ties under every offset ordering (the heap tie-break)."""
-    from rucene_spark.phrase import sloppy_phrase_freq_2term_batch
+    from rucene_spark.phrase import sloppy_phrase_freq_2term_flat
 
     rng = np.random.default_rng(2024)
     for o0, o1 in ((0, 1), (1, 0), (0, 0), (2, 0), (0, 3)):
@@ -97,7 +106,8 @@ def test_2term_batch_bit_identical_fuzz():
                 lb_l.append(np.sort(rng.choice(
                     span, size=int(rng.integers(1, 11)),
                     replace=False)).astype(np.int64))
-            got = sloppy_phrase_freq_2term_batch(la_l, lb_l, o0, o1, slop)
+            got = sloppy_phrase_freq_2term_flat(
+                *_flat(la_l), *_flat(lb_l), o0, o1, slop)
             for i in range(len(la_l)):
                 want = sloppy_phrase_freq(
                     [la_l[i], lb_l[i]], [o0, o1], ["ta", "tb"], slop)
@@ -106,24 +116,10 @@ def test_2term_batch_bit_identical_fuzz():
                     la_l[i], lb_l[i], o0, o1, slop, got[i], want)
 
 
-def test_2term_batch_accepts_plain_lists():
-    from rucene_spark.phrase import sloppy_phrase_freq_2term_batch
-
-    got = sloppy_phrase_freq_2term_batch([[1, 5], [2]], [[2, 9], [40]], 0, 1, 3)
-    want0 = sloppy_phrase_freq(
-        [np.array([1, 5]), np.array([2, 9])], [0, 1], ["a", "b"], 3)
-    assert np.float32(got[0]) == want0
-    assert got[1] == np.float32(0.0)
-
-
 def test_2term_flat_equals_list_kernel():
-    """The flat-input core (what the phrase collector feeds directly)
-    returns bit-identical freqs to the list wrapper, including zero-tf
-    rows and empty batches."""
-    from rucene_spark.phrase import (
-        sloppy_phrase_freq_2term_batch,
-        sloppy_phrase_freq_2term_flat,
-    )
+    """The flat-input kernel returns bit-identical freqs to the per-doc
+    scalar kernel, scores zero-tf rows 0, and accepts empty batches."""
+    from rucene_spark.phrase import sloppy_phrase_freq_2term_flat
 
     rng = np.random.default_rng(7)
     for o0, o1, slop in ((0, 1, 2), (1, 0, 0), (0, 3, 5)):
@@ -135,12 +131,12 @@ def test_2term_flat_equals_list_kernel():
                 span, size=na, replace=False)).astype(np.int64))
             lb_l.append(np.sort(rng.choice(
                 span, size=nb, replace=False)).astype(np.int64))
-        want = sloppy_phrase_freq_2term_batch(la_l, lb_l, o0, o1, slop)
-        la = np.array([len(x) for x in la_l], dtype=np.int64)
-        lb = np.array([len(x) for x in lb_l], dtype=np.int64)
+        want = np.array(
+            [sloppy_phrase_freq([a, b], [o0, o1], ["ta", "tb"], slop)
+             if len(a) and len(b) else 0.0
+             for a, b in zip(la_l, lb_l)], dtype=np.float32)
         got = sloppy_phrase_freq_2term_flat(
-            np.concatenate(la_l), la, np.concatenate(lb_l), lb,
-            o0, o1, slop)
+            *_flat(la_l), *_flat(lb_l), o0, o1, slop)
         assert got.tobytes() == want.tobytes()
     e = np.empty(0, dtype=np.int64)
     assert len(sloppy_phrase_freq_2term_flat(e, e, e, e, 0, 1, 2)) == 0
@@ -150,7 +146,7 @@ def test_nslot_batch_bit_identical_fuzz():
     """The lockstep n-slot kernel must be float32-BIT-identical to the
     scalar heap walk for 2..5 DISTINCT slots, contiguous and gapped and
     shuffled offsets, every slop band (round-4 verdict #2)."""
-    from rucene_spark.phrase import sloppy_phrase_freq_nslot_batch
+    from rucene_spark.phrase import sloppy_phrase_freq_nslot_flat
 
     rng = np.random.default_rng(55)
     for _ in range(600):
@@ -164,7 +160,9 @@ def test_nslot_batch_bit_identical_fuzz():
         pls = [[np.sort(rng.choice(40, size=int(rng.integers(1, 11)),
                                    replace=False)).astype(np.int64)
                 for _ in range(n)] for _ in range(S)]
-        got = sloppy_phrase_freq_nslot_batch(pls, offs, slop)
+        flats, lens = zip(*(_flat(p) for p in pls))
+        got = sloppy_phrase_freq_nslot_flat(list(flats), list(lens), offs,
+                                            slop)
         terms = [f"t{s}" for s in range(S)]
         for i in range(n):
             want = sloppy_phrase_freq(

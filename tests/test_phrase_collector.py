@@ -1,17 +1,17 @@
-"""The per-segment exact-phrase collector (impact-ordered verification,
-search.py _phrase_collector_topk) must be rank- AND score-identical to
-the exhaustive JVM exact-phrase path (_phrase_frame) — pruning is
+"""The root phrase leaf (impact-ordered verification with a per-segment
+top-k, search.py _phrase_leaf) must be rank- AND score-identical to the
+exhaustive nested leaf (every candidate verified) — pruning is
 correctness-neutral by construction, and unlike block-max WAND the
 reference has no phrase-impacts analogue to diff against
 (phrase_query.rs:223-270 bails only via two-phase match_cost), so this
 suite IS the gate that keeps it so."""
 
 import collections
-import os
 
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import exhaustive_topk
 
 from rucene_spark.build import IndexWriter
 from rucene_spark.codec import pack_positions
@@ -25,7 +25,7 @@ K1, B = 1.2, 0.75
 
 def _make_tds(n_docs, n_terms, block=128, tfcap=10, seed=0):
     """Synthetic one-segment postings in the exact per-term structure
-    _phrase_collector_topk's worker builds (block-packed pos_bin via the
+    _phrase_leaf's worker builds (block-packed pos_bin via the
     real codec), plus the uncompressed truth for the brute oracle."""
     r = np.random.default_rng(seed)
     texts = [list(r.integers(0, n_terms + 3, size=r.integers(3, 40)))
@@ -159,17 +159,9 @@ def _phrases(corpus) -> list[list[str]]:
 
 
 def _both_paths(s: IndexSearcher, q, k: int):
-    """(collector rows, exhaustive rows) for the same query — the plan
-    cache is cleared between the two so the env gate is re-read."""
-    os.environ["RUCENE_PHRASE_COLLECTOR"] = "1"
-    s._plan_cache.clear()
+    """(root-leaf rows, exhaustive rows) for the same query."""
     a = s.search(q, k).select("seg", "doc", "score").collect()
-    os.environ["RUCENE_PHRASE_COLLECTOR"] = "0"
-    s._plan_cache.clear()
-    b = s.search(q, k).select("seg", "doc", "score").collect()
-    os.environ["RUCENE_PHRASE_COLLECTOR"] = "1"
-    s._plan_cache.clear()
-    return a, b
+    return a, exhaustive_topk(s, q, k)
 
 
 @pytest.mark.parametrize("scoring", ["lucene", "precise"])
@@ -199,7 +191,9 @@ def test_collector_chunked_pruning_converges(spark, corpus, index_dir,
     """chunk0=1 forces many geometric verification rounds and exercises
     the θ early-stop on the common-bigram phrase; results must not
     change (and blocks skipped after θ convergence must not matter)."""
-    monkeypatch.setenv("RUCENE_PHRASE_CHUNK", "1")
+    import rucene_spark.search as search_mod
+
+    monkeypatch.setattr(search_mod, "_VERIFY_CHUNK", 1)
     s = IndexSearcher(spark, index_dir)
     for terms in _phrases(corpus)[:3]:
         got, want = _both_paths(
@@ -209,8 +203,8 @@ def test_collector_chunked_pruning_converges(spark, corpus, index_dir,
 
 
 def test_collector_masks_tombstones(spark, corpus, index_dir, tmp_path):
-    """Deleting the collector path's former top hits must drop them from
-    the result identically to the anti-join path (in-worker mask)."""
+    """Deleting the root leaf's former top hits must drop them from the
+    result identically to the anti-join path (in-worker mask)."""
     import shutil
 
     d = str(tmp_path / "phc_del")
@@ -232,8 +226,8 @@ def test_collector_masks_tombstones(spark, corpus, index_dir, tmp_path):
 
 
 def test_phrase_collector_post_merge(spark, index_dir, corpus, tmp_path):
-    """After force_merge the exact-phrase collector must equal the
-    exhaustive JVM path (regression: multi-file merged segments split a
+    """After force_merge the exact-phrase root leaf must equal the
+    exhaustive path (regression: multi-file merged segments split a
     phrase's terms across scan partitions, emptying the per-partition
     doc conjunction)."""
     import shutil
@@ -244,7 +238,6 @@ def test_phrase_collector_post_merge(spark, index_dir, corpus, tmp_path):
     shutil.copytree(index_dir, d)
     force_merge(spark, d)
     s = IndexSearcher(spark, d)
-    assert s._segs_single_file()
     for terms in _phrases(corpus)[:2]:
         q = PhraseQuery.build("text", terms, slop=0)
         got, want = _both_paths(s, q, 10)
@@ -256,15 +249,15 @@ def test_phrase_collector_post_merge(spark, index_dir, corpus, tmp_path):
 @pytest.mark.parametrize("scoring", ["lucene", "precise"])
 def test_sloppy_collector_equals_exhaustive(spark, corpus, index_dir,
                                             scoring):
-    """Sloppy phrases (slop > 0) through the per-segment collector —
-    2-term vectorized walk AND the per-doc heap walk (3 terms / repeated
-    term) — must be rank- and score-identical to the exhaustive path."""
+    """Sloppy phrases (slop > 0) through the root leaf — 2-term and
+    n-slot vectorized walks AND the per-doc heap walk (repeated term) —
+    must be rank- and score-identical to the exhaustive path."""
     s = IndexSearcher(spark, index_dir, scoring=scoring)
     phrases = _phrases(corpus)
     cases = [
         (phrases[0], 2),                  # common pair, 2-term batch walk
         (phrases[1], 4),                  # mid-df pair
-        (phrases[3], 3),                  # trigram → per-doc heap walk
+        (phrases[3], 3),                  # trigram, n-slot walk
         (phrases[4], 2),                  # repeated term, per-doc walk
         (list(reversed(phrases[0])), 6),  # reversed order, wide slop
     ]

@@ -6,6 +6,7 @@
   column does the seeking);
 * scans prune columns (a top-k search must not read position bytes);
 * the final hit join broadcasts the tiny top-k side;
+* a nested phrase shuffles no position arrays;
 * block-max pass-2 pushes the metadata block filter into the scan.
 """
 
@@ -59,6 +60,19 @@ def test_topk_join_is_broadcast(searcher):
     out = searcher.search(TermQuery("text", "t000000"), 10)
     plan = _physical_plan(out)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def test_nested_phrase_shuffles_no_positions(searcher):
+    """A phrase inside a boolean runs the per-segment leaf in its scan
+    task: no position array is aggregated or shuffled between tasks."""
+    from rucene_spark.query import BooleanQuery, PhraseQuery
+
+    q = BooleanQuery.build(
+        [PhraseQuery.build("text", ["t000000", "t000001"], slop=1)],
+        [TermQuery("text", "t000002")])
+    plan = _optimized(searcher.search(q, 10))
+    assert "collect_list" not in plan
+    assert "positions" not in plan and "array<bigint>" not in plan
 
 
 def test_blockmax_pass2_filter_reaches_scan(searcher):

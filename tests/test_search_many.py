@@ -133,7 +133,6 @@ def test_search_many_post_merge_multi_term(spark, idx, tmp_path):
     for p in seg_table_paths(d, m, "postings"):
         assert len(glob.glob(p + "/*.parquet")) == 1
     s = IndexSearcher(spark, d)
-    assert s._segs_single_file()
     # terms chosen sort-order-apart so a range-partitioned multi-file
     # layout would put them in different files
     q = BooleanQuery.build(
@@ -149,11 +148,11 @@ def test_search_many_post_merge_multi_term(spark, idx, tmp_path):
     assert by_qid.get(1, []) == _rows(s.search(q2, 10))
 
 
-def test_search_many_legacy_multifile_falls_back(spark, idx, tmp_path):
+def test_search_many_legacy_multifile_rejected(spark, idx, tmp_path):
     """A pre-fix index whose merged segment holds MULTIPLE postings files
-    must not reach the partition-local collector kernel: the searcher
-    detects the layout and serves through the layout-independent JVM
-    aggregation, returning the same results."""
+    (not doc-sharded) must never reach the partition-local kernels: the
+    searcher refuses to open it, naming the segment and force_merge; after
+    force_merge it opens and returns the reference results."""
     import glob
     import os
     import shutil
@@ -161,6 +160,7 @@ def test_search_many_legacy_multifile_falls_back(spark, idx, tmp_path):
     import pyarrow.parquet as pq
 
     from rucene_spark.build import load_manifest, seg_table_paths
+    from rucene_spark.merge import force_merge
 
     d = str(tmp_path / "many_legacy")
     shutil.copytree(idx, d)
@@ -172,15 +172,18 @@ def test_search_many_legacy_multifile_falls_back(spark, idx, tmp_path):
     pq.write_table(t.slice(0, half), os.path.join(p0, "part-a.parquet"))
     pq.write_table(t.slice(half), os.path.join(p0, "part-b.parquet"))
     os.remove(f0)
+    with pytest.raises(ValueError,
+                       match=f"segment {m['segments'][0]['segment_id']} "
+                             ".*force_merge"):
+        IndexSearcher(spark, d)
+    force_merge(spark, d)
     s = IndexSearcher(spark, d)
-    assert not s._segs_single_file()
     q = BooleanQuery.build(
         [TermQuery("text", "table"), TermQuery("text", "query")], [], [], [])
     got = s.search_many([q], 10).collect()
     ref = IndexSearcher(spark, idx)
     assert [(r["doc_id"], round(r["score"], 6)) for r in got] == _rows(
         ref.search(q, 10))
-    # the exact-phrase collector must fall back too
     pqry = PhraseQuery.build("text", ["key", "agg"], slop=0)
     assert _rows(s.search(pqry, 10)) == _rows(ref.search(pqry, 10))
 
@@ -203,14 +206,12 @@ def test_single_query_collector_routing(spark, idx, monkeypatch):
                                 [("text", 1.0)]).build(),
         TermQuery("text", "tzzzzzz"),  # absent term
     ]
-    monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", "0")
     routed = IndexSearcher(spark, idx)  # fresh: no cached frame plans
-    monkeypatch.setenv("RUCENE_TERM_COLLECTOR", "0")
     frame = IndexSearcher(spark, idx)
     for q in queries:
-        monkeypatch.setenv("RUCENE_TERM_COLLECTOR", "1")
+        monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", "0")
         got = _rows(routed.search(q, 10))
-        monkeypatch.setenv("RUCENE_TERM_COLLECTOR", "0")
+        monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", str(10**9))
         assert got == _rows(frame.search(q, 10)), repr(q)
 
 
@@ -227,11 +228,10 @@ def test_dismax_collector_routing(spark, idx, monkeypatch):
         DisjunctionMaxQuery([TermQuery("text", "table"),
                              TermQuery("text", "tzzzzzz")], 1.0),
     ]
-    monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", "0")
     for q in cases:
-        monkeypatch.setenv("RUCENE_TERM_COLLECTOR", "1")
+        monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", "0")
         routed = _rows(IndexSearcher(spark, idx).search(q, 10))
-        monkeypatch.setenv("RUCENE_TERM_COLLECTOR", "0")
+        monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", str(10**9))
         frame = _rows(IndexSearcher(spark, idx).search(q, 10))
         assert routed == frame, repr(q)
 

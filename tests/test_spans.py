@@ -3,6 +3,7 @@
 
 import numpy as np
 import pytest
+from conftest import exhaustive_topk
 
 from rucene_spark.build import IndexWriter
 from rucene_spark.oracle import OracleSearcher, build_oracle_index
@@ -160,10 +161,17 @@ def test_span_count_and_unknown_field(spark, built, corpus, oracle):
 # ---------------------------------------------------------------------------
 
 
+def _flat(lists):
+    """Per-doc position lists → (concatenated positions, per-doc counts),
+    the flat layout the vectorized kernels take."""
+    lens = np.array([len(x) for x in lists], dtype=np.int64)
+    return np.concatenate(lists).astype(np.int64), lens
+
+
 def test_ordered_2term_batch_bit_identical_fuzz():
-    """ordered_near_freq_2term_batch == scalar span_freq, f32 BIT equality,
+    """ordered_near_freq_2term_flat == scalar span_freq, f32 BIT equality,
     over 400 random docs incl. exhaustion / empty / same-term cases."""
-    from rucene_spark.spans import ordered_near_freq_2term_batch
+    from rucene_spark.spans import ordered_near_freq_2term_flat
 
     rng = np.random.default_rng(42)
     for slop in (0, 1, 3, 50):
@@ -174,11 +182,12 @@ def test_ordered_2term_batch_bit_identical_fuzz():
             b = np.sort(rng.choice(60, size=nb, replace=False)).astype(np.int64)
             if rng.integers(0, 4) == 0:
                 b = a.copy()  # same-term-twice shape
-            lists_a.append(a.tolist())
-            lists_b.append(b.tolist())
+            lists_a.append(a)
+            lists_b.append(b)
             spec = ("near", [("term", 0), ("term", 1)], slop, True)
             expect.append(np.float32(span_freq(spec, {0: a, 1: b})))
-        got = ordered_near_freq_2term_batch(lists_a, lists_b, slop)
+        got = ordered_near_freq_2term_flat(*_flat(lists_a), *_flat(lists_b),
+                                           slop)
         assert got.dtype == np.float32
         assert [g.tobytes() for g in got] == [e.tobytes() for e in expect]
 
@@ -209,11 +218,11 @@ def test_ordered_2term_span_exempt_from_cap(spark):
 
 
 def test_span_collector_matches_frame_and_deletes(spark, corpus, built,
-                                                  tmp_path, monkeypatch):
-    """The per-segment span collector (default route for root span
-    queries) must match the exhaustive frame path bit-for-bit on every
-    shape, and deleted docs must neither inflate its impact-ordering θ
-    nor appear in results."""
+                                                  oracle, tmp_path):
+    """The root span leaf (impact-pruned per-segment top-k) must match
+    the exhaustive nested leaf and the oracle bit-for-bit on every shape,
+    and deleted docs must neither inflate its impact-ordering θ nor
+    appear in results."""
     from rucene_spark.merge import delete_by_keys
     from rucene_spark.query import SpanBoostQuery
 
@@ -236,20 +245,18 @@ def test_span_collector_matches_frame_and_deletes(spark, corpus, built,
              T("text", mid)], slop=5, in_order=False),
     ]
     s = IndexSearcher(spark, built)
+
+    def bits(x):
+        return np.float32(x).view(np.int32).item()
+
     for q in queries:
-        # clear the plan cache around each env flip — search() memoizes
-        # per (query, k), which would otherwise return the first route's
-        # cached plan for the second call
-        monkeypatch.setenv("RUCENE_SPAN_COLLECTOR", "1")
-        s._plan_cache.clear()
-        kern = [(r["url"], np.float32(r["score"]).view(np.int32).item())
-                for r in s.search(q, 10).collect()]
-        monkeypatch.setenv("RUCENE_SPAN_COLLECTOR", "0")
-        s._plan_cache.clear()
-        frame = [(r["url"], np.float32(r["score"]).view(np.int32).item())
-                 for r in s.search(q, 10).collect()]
-        assert kern == frame, str(q)
-        monkeypatch.delenv("RUCENE_SPAN_COLLECTOR")
+        rows = s.search(q, 10).collect()
+        assert [(r["seg"], r["doc"], bits(r["score"])) for r in rows] == [
+            (r.seg, r.doc, bits(r.score))
+            for r in exhaustive_topk(s, q, 10)], str(q)
+        if not isinstance(q, SpanBoostQuery):  # the oracle has no boost
+            assert [(r["url"], bits(r["score"])) for r in rows] == [
+                (u, bits(sc)) for u, sc, _ in oracle.search(q, 10)], str(q)
 
     # deletes: kill the current top-3, re-search through the collector
     d = str(tmp_path / "span_tomb")
@@ -263,20 +270,14 @@ def test_span_collector_matches_frame_and_deletes(spark, corpus, built,
     s1 = IndexSearcher(spark, d)
     kern = s1.search(q, 10).collect()
     assert not {r["url"] for r in top} & {r["url"] for r in kern}
-    monkeypatch.setenv("RUCENE_SPAN_COLLECTOR", "0")
-    frame = IndexSearcher(spark, d).search(q, 10).collect()
-    assert [(r["url"], r["score"]) for r in kern] == [
-        (r["url"], r["score"]) for r in frame]
+    assert [(r["seg"], r["doc"], r["score"]) for r in kern] == [
+        (r.seg, r.doc, r.score) for r in exhaustive_topk(s1, q, 10)]
 
 
 def test_ordered_2term_flat_equals_list_kernel():
-    """The flat-input core (what the span collector feeds directly)
-    returns bit-identical freqs to the list wrapper, including zero-tf
-    rows and empty batches."""
-    from rucene_spark.spans import (
-        ordered_near_freq_2term_batch,
-        ordered_near_freq_2term_flat,
-    )
+    """The flat-input kernel returns bit-identical freqs to the per-doc
+    scalar span kernel, including zero-tf rows and empty batches."""
+    from rucene_spark.spans import ordered_near_freq_2term_flat
 
     rng = np.random.default_rng(11)
     for slop in (0, 2, 9):
@@ -287,11 +288,12 @@ def test_ordered_2term_flat_equals_list_kernel():
                 60, size=na, replace=False)).astype(np.int64))
             lists_b.append(np.sort(rng.choice(
                 60, size=nb, replace=False)).astype(np.int64))
-        want = ordered_near_freq_2term_batch(lists_a, lists_b, slop)
-        la = np.array([len(x) for x in lists_a], dtype=np.int64)
-        lb = np.array([len(x) for x in lists_b], dtype=np.int64)
-        got = ordered_near_freq_2term_flat(
-            np.concatenate(lists_a), la, np.concatenate(lists_b), lb, slop)
+        spec = ("near", [("term", 0), ("term", 1)], slop, True)
+        want = np.array([span_freq(spec, {0: a, 1: b})
+                         for a, b in zip(lists_a, lists_b)],
+                        dtype=np.float32)
+        got = ordered_near_freq_2term_flat(*_flat(lists_a), *_flat(lists_b),
+                                           slop)
         assert got.tobytes() == want.tobytes()
     e = np.empty(0, dtype=np.int64)
     assert len(ordered_near_freq_2term_flat(e, e, e, e, 3)) == 0

@@ -14,6 +14,7 @@ import shutil
 import tempfile
 
 import pytest
+from conftest import exhaustive_topk
 
 from rucene_spark.build import IndexWriter
 from rucene_spark.query import (
@@ -71,20 +72,14 @@ def test_distinct_nslot_sloppy_exempt_and_correct(spark, idx, probe):
 
 
 def test_nclause_ordered_span_exempt_and_correct(spark, idx, probe):
-    import os
-
     a, b, c = probe
     q = SpanNearQuery([SpanTermQuery("text", a), SpanTermQuery("text", b),
                        SpanTermQuery("text", c)], slop=4, in_order=True)
     tiny = IndexSearcher(spark, idx, verify_candidate_cap=5)
-    got = [(r["url"], r["score"]) for r in tiny.search(q, 10).collect()]
-    # scalar per-doc walk (batch kernels off, cap raised) as the witness
-    os.environ["RUCENE_SPAN_BATCH"] = "0"
-    try:
-        big = IndexSearcher(spark, idx, verify_candidate_cap=10**9)
-        want = [(r["url"], r["score"]) for r in big.search(q, 10).collect()]
-    finally:
-        os.environ.pop("RUCENE_SPAN_BATCH", None)
+    got = [(r["seg"], r["doc"], r["score"])
+           for r in tiny.search(q, 10).collect()]
+    # every candidate verified, no impact pruning, as the witness
+    want = [(r.seg, r.doc, r.score) for r in exhaustive_topk(tiny, q, 10)]
     assert got == want and len(got) > 0
 
 
@@ -93,7 +88,7 @@ def test_two_term_sloppy_exempt_and_exact_path_exempt(spark, idx, probe):
     s = IndexSearcher(spark, idx, verify_candidate_cap=5)
     # vectorized 2-term sloppy runs regardless of df
     assert s.search(PhraseQuery.build("text", [a, b], slop=2), 10).count() >= 0
-    # exact phrases are fully JVM-side — never capped
+    # exact phrases verify by vectorized intersection — never capped
     assert s.search(PhraseQuery.build("text", [a, b, c], slop=0), 10).count() >= 0
     # term queries untouched
     assert s.search(TermQuery("text", a), 10).count() == 10

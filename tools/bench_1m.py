@@ -61,6 +61,12 @@ def main() -> None:
 
     t_all = time.time()
     work = tempfile.mkdtemp(prefix="bench1m_", dir=TMPFS)
+    # BENCH1M_CORPUS_DIR / BENCH1M_LOCAL_DIR name PARENT dirs: the run
+    # works in a fresh subdirectory of each and deletes only that, never
+    # the user-supplied tree itself
+    own = {ext: tempfile.mkdtemp(prefix="bench1m_", dir=os.environ[ext])
+           for ext in ("BENCH1M_CORPUS_DIR", "BENCH1M_LOCAL_DIR")
+           if os.environ.get(ext)}
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("rucene-bench-1m")
@@ -70,7 +76,7 @@ def main() -> None:
         .config("spark.driver.memory",
                 os.environ.get("BENCH1M_DRIVER_MEM", "48g"))
         .config("spark.local.dir",
-                os.environ.get("BENCH1M_LOCAL_DIR")
+                own.get("BENCH1M_LOCAL_DIR")
                 or os.path.join(work, "spark-local"))
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
@@ -87,7 +93,7 @@ def main() -> None:
         # no longer fits the RAM-backed tmpfs next to the driver JVM;
         # BENCH1M_CORPUS_DIR points it at real disk while segments and
         # shuffle stay in tmpfs.
-        corpus_dir = os.environ.get("BENCH1M_CORPUS_DIR") or os.path.join(
+        corpus_dir = own.get("BENCH1M_CORPUS_DIR") or os.path.join(
             work, "corpus")
 
         # BENCH1M_SLIM=1 replaces the html payload with a 1-byte
@@ -317,9 +323,8 @@ def main() -> None:
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
-        for ext in ("BENCH1M_CORPUS_DIR", "BENCH1M_LOCAL_DIR"):
-            if os.environ.get(ext):
-                shutil.rmtree(os.environ[ext], ignore_errors=True)
+        for sub in own.values():
+            shutil.rmtree(sub, ignore_errors=True)
 
 
 if __name__ == "__main__":
