@@ -4,10 +4,12 @@ The engine-parity fuzz (test_engine_parity.py) covers the fresh-build
 layout only. These tests push the same seeded random trees through the
 layouts a long-lived index actually serves from:
 
-1. tombstoned (deletes pending, live-docs anti-join active) — the two
-   engine routes (per-segment collector kernel vs JVM frame path) must be
-   bit-identical to each other; the oracle cannot be consulted here
-   because Lucene semantics keep deleted docs in df/ttf until merge.
+1. tombstoned (deletes pending, live-docs mask active) — rank- and
+   float32-score-bit-identical to an oracle over the FULL corpus with the
+   deleted keys dropped from its complete ranking: Lucene semantics keep
+   deleted docs in df/ttf until merge, so the oracle built over every doc
+   has exactly the engine's stats, and removing deleted docs from a total
+   order leaves the live top-k.
 2. sharded-merged (deletes folded by a multi-file doc-range-sharded
    SegmentMerger.merge) — both engine routes must be rank- AND
    float32-score-bit-identical to a fresh oracle over the surviving
@@ -71,6 +73,11 @@ def merged(spark, corpus, victims, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
+def full_oracle(corpus):
+    return OracleSearcher(build_oracle_index(corpus, n_segments=N_SEG))
+
+
+@pytest.fixture(scope="module")
 def merged_oracle(corpus, victims):
     survivors = corpus[~corpus["url"].isin(set(victims))].reset_index(
         drop=True)
@@ -96,20 +103,22 @@ def _route(spark, d, monkeypatch, collector: bool):
     return IndexSearcher(spark, d)
 
 
-def test_tombstoned_routes_bit_identical(spark, corpus, tombstoned,
-                                         monkeypatch):
-    """Collector kernel vs frame path on a live-docs-filtered index:
-    same urls, same float32 score bits, same order, tree by tree."""
-    trees = _trees(corpus)
-    col = _route(spark, tombstoned, monkeypatch, collector=True)
-    col_hits = [_hits(col, q) for q in trees]
-    frame = _route(spark, tombstoned, monkeypatch, collector=False)
+def test_tombstoned_matches_oracle(spark, corpus, victims, tombstoned,
+                                   full_oracle):
+    """Live-masked search over the tombstoned layout: same urls, same
+    float32 score bits, same order as the full-corpus oracle's ranking
+    of every doc with the deleted keys removed, tree by tree."""
+    dead = set(victims)
+    s = IndexSearcher(spark, tombstoned)
     failures = []
-    for i, q in enumerate(trees):
-        got = _hits(frame, q)
-        if got != col_hits[i]:
-            failures.append(f"fuzz#{i}: collector={col_hits[i][:3]} "
-                            f"frame={got[:3]} :: {q!r}"[:400])
+    for i, q in enumerate(_trees(corpus)):
+        eng = _hits(s, q)
+        orc = [(u, np.float32(sc).view(np.int32).item())
+               for (u, sc, _) in full_oracle.search(q, N_DOCS)
+               if u not in dead][:10]
+        if eng != orc:
+            failures.append(
+                f"fuzz#{i}: engine={eng[:3]} oracle={orc[:3]} :: {q!r}"[:400])
     assert not failures, "\n".join(failures)
 
 
