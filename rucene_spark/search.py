@@ -6,10 +6,12 @@ algebra on ``(seg, doc)``:
 * postings scan      → Parquet scan of ``postings/`` with ``term`` pushdown
   (the blocktree seek becomes row-group pruning on the sorted term column);
 * TermScorer         → mapInPandas block decode + vectorized f32 BM25;
-* ConjunctionScorer  → groupBy must-count (zig-zag advance ≡ shuffle join);
-* DisjunctionSumScorer → groupBy(seg,doc) sum + min_should_match count
-  (disjunction_scorer.rs:24-104);
-* ReqNotScorer       → must_not count == 0 (req_not_scorer.rs:21);
+* Conjunction/DisjunctionSum/ReqNot scorers → must/should/filter/not
+  counts + min_should_match (disjunction_scorer.rs:24-104,
+  req_not_scorer.rs:21) over each (seg, doc): for term, boolean-of-term
+  and term-dismax queries a numpy reduction inside the scan task (the
+  per-segment term collector, ``_collector_topk_frame``); for booleans
+  mixing other clause kinds a groupBy(seg, doc);
 * Exact/SloppyPhraseScorer, span scorers → one per-segment leaf
   (``_phrase_leaf`` / ``_span_leaf``): the doc-level conjunction runs in
   numpy inside the scan task, then the shared phrase/span kernels verify
@@ -109,11 +111,12 @@ def _kp1_64(k1: float) -> float:
 
 def _freq_scores(freq, nbs, dls, lucene, wk32, cache, coef64, k1_, b_,
                  avgdl64) -> np.ndarray:
-    """BM25 of per-doc positional freqs (phrase/span) as float64: the
-    float32 ``(wk*tf)/(tf+cache[norm])`` in "lucene" mode, else the f64
+    """BM25 of per-doc freqs as float64: the float32
+    ``(wk*tf)/(tf+cache[norm])`` in "lucene" mode, else the f64
     ``coef*tf/(tf + k1*((1-b) + b*dl/avgdl))``, in the term scorer's IEEE
-    op order. Used for both the impact upper bound (freq = a count
-    bound) and the verified score of the leaf kernels, and by explain."""
+    op order. Used for the impact upper bound (freq = a count bound) and
+    the verified score of the phrase/span leaf kernels, by explain, and
+    through _term_scores by every term collector."""
     if lucene:
         tf = freq.astype(np.float32)
         return ((wk32 * tf) / (tf + cache[nbs])).astype(np.float64)
@@ -122,15 +125,53 @@ def _freq_scores(freq, nbs, dls, lucene, wk32, cache, coef64, k1_, b_,
         tf + k1_ * ((1.0 - b_) + b_ * dls.astype(np.float64) / avgdl64))
 
 
+def _decode_term_rows(pdf: "pd.DataFrame", lucene: bool):
+    """FOR-decode a batch of term postings rows for the term collectors:
+    per-row posting ``counts``, then per posting the doc ids, tfs and the
+    scoring side column — norm bytes in "lucene" mode, doc lengths in
+    "precise" mode (the ``aux`` argument of _term_scores)."""
+    counts = pdf["num_docs"].to_numpy(np.int64)
+    docs = batch_delta_decode(
+        batch_unpack(pdf["docs_bin"].tolist(), counts), counts
+    ).astype(np.int64)
+    tfs = batch_unpack(pdf["tfs_bin"].tolist(), counts)
+    aux = batch_unpack(pdf["norms_bin" if lucene else "dls_bin"].tolist(),
+                       counts).astype(np.int64)
+    return counts, docs, tfs, aux
+
+
+def _term_scores(ci, tfs, aux, tw) -> np.ndarray:
+    """Float64 BM25 of term postings, posting i scored against clause
+    ``ci[i]`` of the weight table ``tw`` (IndexSearcher._term_weight_table)
+    through _freq_scores. In "lucene" mode a clause's norm byte indexes
+    its field's slice of the concatenated norm caches."""
+    lucene, wk32, cache, cofs, coef64, k1_, b_, avg = tw
+    if lucene:
+        return _freq_scores(tfs, aux + cofs[ci], None, True, wk32[ci],
+                            cache, None, None, None, None)
+    return _freq_scores(tfs, None, aux, False, None, None, coef64[ci],
+                        k1_[ci], b_[ci], avg[ci])
+
+
+def _dead_mask(tomb, docs) -> np.ndarray:
+    """Which of ``docs`` are in the segment's sorted tombstone array."""
+    if tomb is None or len(docs) == 0:
+        return np.zeros(len(docs), dtype=bool)
+    pos = np.searchsorted(tomb, docs)
+    return (pos < len(tomb)) & (tomb[np.minimum(pos, len(tomb) - 1)]
+                                == docs)
+
+
 def _collector_seg_reduce(doc, qid, gid, role, sc, g_role, g_nm, g_nf,
                           g_ms, r_nm, r_nf, r_ms, tomb, lucene, ftype, k):
-    """Segment-local boolean reduction + top-k for the serving collector
+    """Segment-local boolean reduction for the term collector
     (_collector_topk_frame): numpy sort/reduceat mirror of the JVM
-    two-stage aggregation (stage 1 per (qid, gid, doc); stage 2 folds
+    boolean aggregation (stage 1 per (qid, gid, doc); stage 2 folds
     satisfied one-level groups into virtual root clauses; root
-    must/filter/not/msm arithmetic; tombstone mask; per-query top-k by
-    (score desc, doc asc)).  Stable lexsort keeps scan order within each
-    key so the float64 accumulation order matches the JVM sum."""
+    must/filter/not/msm arithmetic; tombstone mask; with ``k`` a
+    per-query top-k by (score desc, doc asc), with ``k=None`` every
+    satisfied row).  Stable lexsort keeps scan order within each key so
+    the float64 accumulation order matches the JVM sum."""
     # stage 1: reduce per (qid, gid, doc)
     order = np.lexsort((doc, gid, qid))
     d, g, q = doc[order], gid[order], qid[order]
@@ -199,14 +240,10 @@ def _collector_seg_reduce(doc, qid, gid, role, sc, g_role, g_nm, g_nf,
     keep = ((nm3 == r_nm[q3]) & (nf3 == r_nf[q3]) & (nn3 == 0)
             & (ns3 >= r_ms[q3]))
     q3, d3, sc3 = q3[keep], d3[keep], sc3[keep]
-    if tomb is not None and len(q3):
-        pos = np.searchsorted(tomb, d3)
-        dead = (pos < len(tomb)) & (
-            tomb[np.minimum(pos, len(tomb) - 1)] == d3)
-        q3, d3, sc3 = q3[~dead], d3[~dead], sc3[~dead]
-    if len(q3) == 0:
-        return q3, d3, sc3.astype(ftype)
-    score = sc3.astype(ftype)
+    live = ~_dead_mask(tomb, d3)
+    q3, d3, score = q3[live], d3[live], sc3[live].astype(ftype)
+    if k is None or len(q3) == 0:
+        return q3, d3, score
     # per-query top-k by (score desc, doc asc)
     o = np.lexsort((d3, -score.astype(np.float64), q3))
     qs_, ds_, ss_ = q3[o], d3[o], score[o]
@@ -309,11 +346,7 @@ def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
         conj = np.intersect1d(conj, tds[ti]["docs"], assume_unique=True)
         if conj.size == 0:
             break
-    if tomb is not None and conj.size:
-        pos_ = np.searchsorted(tomb, conj)
-        dead = (pos_ < len(tomb)) & (
-            tomb[np.minimum(pos_, len(tomb) - 1)] == conj)
-        conj = conj[~dead]
+    conj = conj[~_dead_mask(tomb, conj)]
     if conj.size == 0:
         e64 = np.empty(0, dtype=np.float64)
         return np.empty(0, dtype=np.int64), e64
@@ -540,11 +573,7 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
             gm = np.isin(ti_el, list(g)).astype(np.int64)
             keep &= np.add.reduceat(gm, starts) > 0
         conj = docs_u[keep]
-    if tomb is not None and conj.size:
-        p_ = np.searchsorted(tomb, conj)
-        dead = (p_ < len(tomb)) & (
-            tomb[np.minimum(p_, len(tomb) - 1)] == conj)
-        conj = conj[~dead]
+    conj = conj[~_dead_mask(tomb, conj)]
     if conj.size == 0:
         return e_i, np.empty(0, dtype=np.float64)
 
@@ -801,7 +830,7 @@ class IndexSearcher:
         # tasks, and since the Arrow decode is fused into the scan stage,
         # every core beyond 5 idles (measured: local[32] no faster than
         # local[8] on a 1000-query batch); (b) correctness of the
-        # micro-batch collector kernel (_collector_topk_frame), whose
+        # per-segment kernels (_collector_topk_frame and the leaves), whose
         # segment-local boolean arithmetic and per-segment top-k require
         # each partition to hold a segment's postings COMPLETELY.  Setting
         # openCostInBytes = maxPartitionBytes disables packing (one file
@@ -877,15 +906,21 @@ class IndexSearcher:
             # cap fall back to a shuffle anti-join (tombstones accumulate
             # unboundedly between merges — a broadcast would not); the
             # count is footer-metadata only, through the storage seam.
-            # Cap sizing (RUCENE_TOMB_BCAST_CAP): 4M (key, gen) rows is
-            # ~64 MiB broadcast / a few hundred MiB of transient driver
-            # state in _tomb_by_seg — comfortably inside an 8 GiB
-            # executor. The original 500k cap was the 30M-doc probe's
-            # one cliff (BENCH_30M.json: 2% deletes = 600k tombstones
-            # tripped the shuffle path, post-merge term query 1.1s →
-            # 20.5s warm); above the cap, sustained delete-heavy
-            # workloads should merge (which folds tombstones) rather
-            # than serve through the anti-join forever.
+            # Cap sizing (RUCENE_TOMB_BCAST_CAP): the cap counts rows,
+            # not bytes. Two tables are broadcast at the cap: the
+            # resolved (seg, doc) table, ~64 MiB at 4M rows (two int64
+            # columns; _tomb_by_seg's driver copy is as large again),
+            # and the (key string, gen) tombstone table the resolving
+            # join uses, ~(key bytes + ~40) per row as Spark rows plus
+            # hash index, so 4M URL-sized keys (~60 B) are ~400 MiB
+            # replicated to the driver and every executor. Lower the cap
+            # for long keys or small executors. The original 500k cap
+            # was the 30M-doc probe's one cliff (BENCH_30M.json: 2%
+            # deletes = 600k tombstones tripped the shuffle path,
+            # post-merge term query 1.1s → 20.5s warm); above the cap,
+            # sustained delete-heavy workloads should merge (which folds
+            # tombstones) rather than serve through the anti-join
+            # forever.
             n_tomb = sum(
                 storage.parquet_num_rows(os.path.join(tomb_dir, f))
                 for f in storage.listdir(tomb_dir) if f.endswith(".parquet"))
@@ -983,20 +1018,14 @@ class IndexSearcher:
             return {}
         if self._tomb_cache is None:
             # Arrow-batched transfer: at the 4M-row cap a py4j
-            # row-at-a-time collect costs tens of seconds; toPandas
-            # under Arrow moves the two int columns in columnar
-            # batches. The conf flip is runtime-scoped and restored —
-            # sessions that keep Arrow off elsewhere are unaffected.
-            conf = self.spark.conf
-            key = "spark.sql.execution.arrow.pyspark.enabled"
-            prev = conf.get(key, "false")
-            conf.set(key, "true")
-            try:
-                pdf = self._deleted.toPandas()
-            finally:
-                conf.set(key, prev)
-            segs = pdf["seg"].to_numpy(dtype=np.int64)
-            docs = pdf["doc"].to_numpy(dtype=np.int64)
+            # row-at-a-time collect costs tens of seconds; toArrow moves
+            # the two int columns in columnar batches and, unlike
+            # toPandas, does not depend on (or touch) the session's
+            # spark.sql.execution.arrow.pyspark.enabled, so concurrent
+            # searchers share no mutable session state here.
+            tbl = self._deleted.toArrow()
+            segs = tbl.column("seg").to_numpy().astype(np.int64)
+            docs = tbl.column("doc").to_numpy().astype(np.int64)
             order = np.lexsort((docs, segs))
             segs, docs = segs[order], docs[order]
             bounds = np.flatnonzero(np.diff(segs)) + 1
@@ -1117,47 +1146,47 @@ class IndexSearcher:
 
     def _root_frame(self, query: Query, k: int) -> DataFrame:
         """Live ``(seg, doc, score)`` rows whose (score desc, seg, doc)
-        top-k is the query's top-k — the per-family routing shared by
-        search() and search_many()'s non-flat queries.
+        top-k is the query's top-k — the routing shared by search() and
+        search_many()'s non-flat queries.
 
-        Phrase and span roots run their per-segment leaf with the top-k
-        (tombstones masked in the worker) whenever the tombstone
-        broadcast gate holds. Cost-based routing (the reference picks
-        scorers by cost the same way, boolean_query.rs BooleanWeight)
-        covers the term families: the collector kernel is zero-shuffle
-        but pays a fixed mapInPandas setup (~0.5s measured), while the
-        JVM frame path's shuffle grows with the corpus. Below
-        RUCENE_COLLECTOR_MIN_DOCS the frame path wins (5k docs: 0.05s vs
-        0.6s); above it the kernel does (480k+: it is what closed the
-        serving scaling axis). Root dismax over unique term disjuncts
-        and flattenable term/boolean queries take their per-segment
-        collectors there — the same zero-shuffle kernel a serving
-        micro-batch uses, as a batch of one, score-bit-identical to the
-        frame path (tests/test_search_many.py). Everything else, and
-        every root above the tombstone broadcast cap, is the live-masked
-        query frame."""
-        q0, b0 = self._fold_boost(query, np.float32(1.0))
+        Every query family with a per-segment kernel (_kernel_frame:
+        phrase and span leaves, the term-dismax collector, the flat
+        term/boolean collector) runs it with the top-k whenever the
+        tombstone broadcast gate holds: tombstones are masked in the
+        worker and at most k rows per segment leave it, with no shuffle.
+        Above the gate — and for every other shape — the root is the
+        live-masked query frame, in which those same kernels run with
+        ``k=None`` (_frame_impl)."""
         if self._deleted is None or self._bcast_deleted:
-            if isinstance(q0, PhraseQuery):
-                return self._phrase_leaf(q0, b0, k)
-            if isinstance(q0, _SpanQueryT):
-                return self._span_leaf(q0, b0, k)
-            if self.doc_count >= int(os.environ.get(
-                    "RUCENE_COLLECTOR_MIN_DOCS", "100000")):
-                if isinstance(q0, DisjunctionMaxQuery):
-                    ds = [self._fold_boost(d, b0)[0] for d in q0.disjuncts]
-                    if (all(isinstance(d, TermQuery) for d in ds)
-                            and len({(d.field, d.term) for d in ds})
-                            == len(ds)):
-                        return self._dismax_collector_topk(q0, b0, k)
-                fs = self._flat_specs(query, 0, [0])
-                if fs is not None:
-                    stats = self._stats_for(
-                        [(f_, t) for f_, t, _, _, _ in fs[0]])
-                    return self._collector_topk_frame(
-                        fs[0], fs[2], {0: fs}, k, stats
-                    ).select("seg", "doc", "score")
+            frame = self._kernel_frame(query, np.float32(1.0), k)
+            if frame is not None:
+                return frame
         return self._live(self._frame(query, np.float32(1.0), True))
+
+    def _kernel_frame(self, q: Query, boost: np.float32,
+                      k: int | None) -> DataFrame | None:
+        """``(seg, doc, score)`` rows of a query from its per-segment
+        kernel — phrase leaf, span leaf, term-dismax collector or flat
+        term/boolean collector — or None for every other shape. With
+        ``k`` tombstones are masked in the worker and each segment emits
+        its top-k; with ``k=None`` every matching row is emitted and the
+        caller live-masks."""
+        q, boost = self._fold_boost(q, boost)
+        if isinstance(q, PhraseQuery):
+            return self._phrase_leaf(q, boost, k)
+        if isinstance(q, _SpanQueryT):
+            return self._span_leaf(q, boost, k)
+        if isinstance(q, DisjunctionMaxQuery):
+            ds = [self._fold_boost(d, boost)[0] for d in q.disjuncts]
+            if (all(isinstance(d, TermQuery) for d in ds)
+                    and len({(d.field, d.term) for d in ds}) == len(ds)):
+                return self._dismax_collector_topk(q, boost, k)
+            return None
+        fs = self._flat_specs(q, [0], boost)
+        if fs is None:
+            return None
+        return self._collector_topk_frame({0: fs}, k).select(
+            "seg", "doc", "score")
 
     @staticmethod
     def _fold_boost(q: Query, boost: np.float32):
@@ -1166,27 +1195,27 @@ class IndexSearcher:
             q = q.query
         return q, boost
 
-    def _flat_specs(self, q: Query, qid: int, gid_counter: list,
+    def _flat_specs(self, q: Query, gid_counter: list,
                     boost: np.float32 = np.float32(1.0)):
         """Flatten a term/boolean query (ONE level of nested boolean
-        groups allowed) into batch-executor clause specs tagged
-        ``"{qid}|{gtok}|{role}"`` where ``gtok`` is ``r`` for root
-        clauses or a batch-globally-unique ``g<N>`` for members of a
-        nested group. Returns
-        ``(specs, (root_nm, root_nf, root_msm), groups)`` with
-        ``groups[gtok] = (parent_role, scored, nm, nf, msm)``, or None
-        if the shape needs its own frame (phrase/span/dismax/deeper
-        nesting). Mirrors ``_boolean_frame``'s add() boost/role handling
-        exactly so scores stay bit-identical to the per-query path."""
+        groups allowed) into term-collector clause specs
+        ``(field, term, gid, role, boost, scored)``: ``gid`` is 0 for
+        root clauses, else the nested group's batch-unique number drawn
+        from ``gid_counter``; ``role`` is the clause's _ROLE_CODE in its
+        parent. Returns ``(specs, (root_nm, root_nf, root_msm), groups)``
+        with ``groups[gid] = (parent_role, nm, nf, msm)``, or None if the
+        shape needs its own frame (phrase/span/dismax/deeper nesting).
+        Mirrors ``_boolean_frame``'s add() boost/role handling exactly so
+        scores stay bit-identical to the boolean frame."""
         q, boost = self._fold_boost(q, boost)
         if isinstance(q, TermQuery):
             eff = float(np.float32(boost * np.float32(q.boost)))
-            return ([(q.field, q.term, f"{qid}|r|s", eff, True)],
+            return ([(q.field, q.term, 0, _ROLE_CODE["s"], eff, True)],
                     (0, 0, 0), {})
         if not isinstance(q, BooleanQuery):
             return None
         specs: list[tuple] = []
-        groups: dict[str, tuple] = {}
+        groups: dict[int, tuple] = {}
         clauses = [(q.musts, "m", True), (q.shoulds, "s", True),
                    (q.filters, "f", False), (q.must_nots, "n", False)]
         for subs, role, scored in clauses:
@@ -1197,9 +1226,8 @@ class IndexSearcher:
                     eff = (float(np.float32(sub_boost
                                             * np.float32(sub.boost)))
                            if scored else 1.0)
-                    specs.append(
-                        (sub.field, sub.term, f"{qid}|r|{role}", eff,
-                         scored))
+                    specs.append((sub.field, sub.term, 0, _ROLE_CODE[role],
+                                  eff, scored))
                     continue
                 if not isinstance(sub, BooleanQuery):
                     return None
@@ -1220,21 +1248,14 @@ class IndexSearcher:
                         flat_members.append((m, irole, eff,
                                              scored and iscored))
                 gid_counter[0] += 1
-                gtok = f"g{gid_counter[0]}"
+                gid = gid_counter[0]
                 for m, irole, eff, isc in flat_members:
-                    specs.append(
-                        (m.field, m.term, f"{qid}|{gtok}|{irole}", eff,
-                         isc))
-                groups[gtok] = (role, scored, len(sub.musts),
-                                len(sub.filters), sub.min_should_match)
+                    specs.append((m.field, m.term, gid, _ROLE_CODE[irole],
+                                  eff, isc))
+                groups[gid] = (_ROLE_CODE[role], len(sub.musts),
+                               len(sub.filters), sub.min_should_match)
         return (specs, (len(q.musts), len(q.filters),
                         q.min_should_match), groups)
-
-    @staticmethod
-    def _int_map(d: dict[int, int]):
-        return F.map_from_arrays(
-            F.array(*[F.lit(int(i)) for i in d]),
-            F.array(*[F.lit(int(v)) for v in d.values()]))
 
     def search_many(self, queries: list[Query], k: int = 10) -> DataFrame:
         """Micro-batch serving: top-k for MANY queries in ONE distributed
@@ -1254,20 +1275,20 @@ class IndexSearcher:
         driver's single-threaded DAG scheduler, which is exactly the
         serial floor again. Instead every term/boolean query in the
         batch is flattened into ONE shared clause table
-        (``_flat_specs``) and executed by the same bit-exact batched
-        kernel a single boolean query uses (``_batch_term_frame``): one
-        term-pruned scan + one Arrow decode for the WHOLE batch, one
-        (qid, seg, doc) aggregation applying each query's
-        must/filter/not/msm arithmetic via literal per-qid maps, then a
-        two-phase top-k — per (qid, seg) first, so no single reducer
-        ever sees more than (k × n_segments) rows per query, then per
-        qid on that reduced set. One level of nested boolean groups
-        rides the same kernel (a second tiny aggregation turns each
-        satisfied group into a virtual root clause). Queries the
-        flattener rejects (phrase/span/dismax/deeper nesting) keep
-        their own rank-identical TakeOrdered branch and union in. Stage
-        count is constant in batch size; rank/score identity vs
-        per-query search() is asserted by tests/test_search_many.py."""
+        (``_flat_specs``) and executed by the per-segment term collector
+        a single term/boolean query uses (``_collector_topk_frame``):
+        one term-pruned scan, and inside each scan task the decode,
+        scoring and each query's must/filter/not/msm arithmetic (one
+        level of nested boolean groups folds in as virtual root
+        clauses), with no shuffle. Under the tombstone broadcast gate
+        the worker masks tombstones and keeps the per-(query, segment)
+        top-k; above it the collector emits every satisfied row and the
+        shuffle anti-join (``_live``) removes deleted docs. A per-query
+        window then keeps each query's top-k. Queries the flattener
+        rejects (phrase/span/dismax/deeper nesting) keep their own
+        rank-identical TakeOrdered branch (``_root_frame``) and union
+        in. Stage count is constant in batch size; rank/score identity
+        vs per-query search() is asserted by tests/test_search_many.py."""
         ck = (tuple(repr(q) for q in queries), k, "many")
         hit = self._plan_cache.get(ck)
         if hit is not None:
@@ -1276,125 +1297,24 @@ class IndexSearcher:
         others: list[int] = []
         gid_counter = [0]
         for i, q in enumerate(queries):
-            fs = self._flat_specs(q, i, gid_counter)
+            fs = self._flat_specs(q, gid_counter)
             if fs is not None:
                 flat[i] = fs
             else:
                 others.append(i)
 
         branches = []
-        if flat and (self._deleted is None or self._bcast_deleted):
-            # per-segment collector kernel: zero-shuffle scoring + boolean
-            # arithmetic + per-(query, segment) top-k inside the worker;
-            # only (n_q × n_seg × k) rows reach the final per-query merge
-            all_specs = [s for specs, _, _ in flat.values()
-                         for s in specs]
-            all_groups = {gtok: g for _, _, groups in flat.values()
-                          for gtok, g in groups.items()}
-            stats = self._stats_for(
-                [(f_, t) for f_, t, _, _, _ in all_specs])
-            coll = self._collector_topk_frame(
-                all_specs, all_groups, flat, k, stats)
-            w2 = Window.partitionBy("_q").orderBy(
+        if flat:
+            if self._deleted is None or self._bcast_deleted:
+                coll = self._collector_topk_frame(flat, k)
+            else:
+                coll = self._live(self._collector_topk_frame(flat, None))
+            w = Window.partitionBy("_q").orderBy(
                 F.desc("score"), "seg", "doc")
             branches.append(
-                coll.withColumn("_rn", F.row_number().over(w2))
+                coll.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") <= k).drop("_rn")
                 .select(F.col("_q").alias("qid"), "seg", "doc", "score"))
-        elif flat:
-            # tombstones above the broadcast gate: keep the JVM
-            # aggregation chain whose _live anti-join shuffles instead of
-            # materializing the tombstone set on the driver
-            all_specs = [s for specs, _, _ in flat.values()
-                         for s in specs]
-            all_groups = {gtok: g for _, _, groups in flat.values()
-                          for gtok, g in groups.items()}
-            stats = self._stats_for(
-                [(f_, t) for f_, t, _, _, _ in all_specs])
-            rows = self._batch_term_frame(all_specs, stats, with_tag=True)
-            r = rows.select("_q", "_g", "seg", "doc", "score", "_r")
-            # stage 1: aggregate per (qid, group, doc) — root clauses and
-            # each nested group's members reduce independently (_q/_g/_r
-            # are int codes from the clause table: no string hashing in
-            # the batch's widest groupBy)
-            g1 = r.groupBy("_q", "_g", "seg", "doc").agg(
-                F.sum(F.when(F.col("_r") <= 1, F.col("score"))
-                      .otherwise(F.lit(0.0))).alias("_sc"),
-                F.count(F.when(F.col("_r") == 0, 1)).alias("_nm"),
-                F.count(F.when(F.col("_r") == 1, 1)).alias("_ns"),
-                F.count(F.when(F.col("_r") == 2, 1)).alias("_nf"),
-                F.count(F.when(F.col("_r") == 3, 1)).alias("_nn"),
-            )
-            # stage 2: nested groups become virtual root clauses — kept
-            # only when the group's own must/filter/not/msm arithmetic is
-            # satisfied, contributing one count in the parent role and
-            # (for scored roles) the group score cast like the per-query
-            # nested frame does. Per-group and per-query requirement
-            # constants ride in TINY broadcast-joined metadata frames —
-            # literal map/when expression trees over hundreds of entries
-            # sent the Catalyst optimizer quadratic (measured 40-100s per
-            # plan); two broadcast hash joins plan in milliseconds.
-            spark = self.spark
-            if all_groups:
-                gmeta = spark.createDataFrame(
-                    [(int(gtok[1:]), _ROLE_CODE[v[0]], v[2], v[3], v[4])
-                     for gtok, v in all_groups.items()],
-                    "_g int, _grole int, _gnm long, _gnf long,"
-                    " _gms long")
-                j = g1.join(F.broadcast(gmeta), "_g", "left")
-                is_root = F.col("_grole").isNull()
-                g_ok = ((F.col("_nm") == F.col("_gnm"))
-                        & (F.col("_nf") == F.col("_gnf"))
-                        & (F.col("_nn") == 0)
-                        & (F.col("_ns") >= F.col("_gms")))
-                gsc = (F.when(F.col("_grole") <= 1,
-                              F.col("_sc").cast(self._score_t)
-                              .cast("double"))
-                       .otherwise(F.lit(0.0)))
-                contrib = j.filter(is_root | g_ok).select(
-                    "_q", "seg", "doc",
-                    F.when(is_root, F.col("_sc")).otherwise(gsc)
-                    .alias("_sc"),
-                    F.when(is_root, F.col("_nm")).otherwise(
-                        (F.col("_grole") == 0).cast("long")).alias("_nm"),
-                    F.when(is_root, F.col("_ns")).otherwise(
-                        (F.col("_grole") == 1).cast("long")).alias("_ns"),
-                    F.when(is_root, F.col("_nf")).otherwise(
-                        (F.col("_grole") == 2).cast("long")).alias("_nf"),
-                    F.when(is_root, F.col("_nn")).otherwise(
-                        (F.col("_grole") == 3).cast("long")).alias("_nn"),
-                )
-                agg = contrib.groupBy("_q", "seg", "doc").agg(
-                    F.sum("_sc").alias("_score"),
-                    F.sum("_nm").alias("_nm"), F.sum("_ns").alias("_ns"),
-                    F.sum("_nf").alias("_nf"), F.sum("_nn").alias("_nn"))
-            else:
-                agg = g1.select(
-                    "_q", "seg", "doc", F.col("_sc").alias("_score"),
-                    "_nm", "_ns", "_nf", "_nn")
-            qmeta = spark.createDataFrame(
-                [(i, v[1][0], v[1][1], v[1][2])
-                 for i, v in flat.items()],
-                "_q int, _rnm long, _rnf long, _rms long")
-            cond = (
-                (F.col("_nm") == F.col("_rnm"))
-                & (F.col("_nf") == F.col("_rnf"))
-                & (F.col("_nn") == 0)
-                & (F.col("_ns") >= F.col("_rms"))
-            )
-            cand = self._live(
-                agg.join(F.broadcast(qmeta), "_q").filter(cond).select(
-                    F.col("_q").alias("qid"), "seg", "doc",
-                    F.col("_score").cast(self._score_t).alias("score")))
-            w1 = Window.partitionBy("qid", "seg").orderBy(
-                F.desc("score"), "doc")
-            w2 = Window.partitionBy("qid").orderBy(
-                F.desc("score"), "seg", "doc")
-            branches.append(
-                cand.withColumn("_rn", F.row_number().over(w1))
-                .filter(F.col("_rn") <= k).drop("_rn")
-                .withColumn("_rn", F.row_number().over(w2))
-                .filter(F.col("_rn") <= k).drop("_rn"))
         for i in others:
             frame = self._root_frame(queries[i], k)
             branches.append(
@@ -1409,94 +1329,64 @@ class IndexSearcher:
             self._plan_cache[ck] = out
         return out
 
-    def _collector_topk_frame(self, all_specs: list[tuple],
-                              all_groups: dict, flat: dict,
-                              k: int, stats: dict) -> DataFrame:
-        """Per-SEGMENT top-k collector for a flattened serving batch — the
-        reference's per-segment search loop (searcher.rs drives one
-        collector per LeafReader, then merges) re-expressed as one
-        mapInPandas pass with NO shuffle.
+    def _collector_topk_frame(self, flat: dict, k: int | None) -> DataFrame:
+        """Per-SEGMENT term/boolean collector for flattened queries
+        (``flat[qid] = _flat_specs(...)``) — the reference's per-segment
+        search loop (searcher.rs drives one collector per LeafReader,
+        then merges) re-expressed as one mapInPandas pass with NO
+        shuffle.
 
         A doc's postings live entirely inside its segment, and the scan is
         partitioned one-segment-per-file (searcher __init__ pins
         maxPartitionBytes/openCostInBytes), so every (query, doc) boolean
         reduction — clause sums, must/filter/not counts, msm, one-level
-        group folds — is segment-LOCAL.  The worker therefore folds its
-        whole partition down to k rows per (query, segment) with numpy
-        sort+reduceat, and only (n_queries × n_segments × k) metadata-sized
-        rows ever leave the executors.  This replaces two ~(postings ×
-        clauses)-row shuffles plus a global window sort (measured 12M+
-        shuffled rows for a 200-query batch at 480k docs — the serving
-        scaling ceiling) with zero exchanges before the final tiny merge.
-
-        Global top-k correctness: the final (score desc, seg asc, doc asc)
-        order restricted to one segment is the segment's own order, so the
-        global top-k is a subset of the union of per-segment top-k's.
-        Tombstones are masked in-worker (per-seg sorted arrays; only built
-        under the RUCENE_TOMB_BCAST_CAP broadcast gate) BEFORE ranks are assigned, exactly
-        like the anti-join path.  Score arithmetic reuses the gather
-        expansion + IEEE op order of the batch kernel, and stage sums run
-        in scan order via stable lexsort, so scores stay bit-identical to
-        per-query search() (asserted by tests/test_search_many.py).
-        Output: one frame ``_q int, seg, doc, score`` of per-(query,
-        segment) top-k already msm-filtered and live-masked.
-        """
+        group folds — is segment-LOCAL.  With ``k`` the worker masks the
+        segment's tombstones (per-seg sorted arrays, built only under the
+        RUCENE_TOMB_BCAST_CAP broadcast gate) BEFORE ranks are assigned
+        and folds its partition down to k rows per (query, segment), so
+        only (n_queries × n_segments × k) rows leave the executors.  The
+        final (score desc, seg asc, doc asc) order restricted to one
+        segment is the segment's own order, so the global top-k is a
+        subset of the union of per-segment top-k's.  With ``k=None``
+        (nested clauses, count(), delete-by-query, roots above the
+        broadcast gate) no tombstones are passed and every satisfied
+        ``(query, seg, doc)`` row is emitted for the caller to live-mask.
+        Per-posting scores come from the shared term kernel
+        (_term_scores) and stage sums run in scan order via stable
+        lexsort, so scores stay bit-identical to the boolean frame and
+        the oracle. Output: ``_q int, seg, doc, score``."""
+        # clause table ordered by (field, term) key, so a scan row of a
+        # key expands to a contiguous run of clause numbers
         by_key: dict[tuple[str, str], list] = {}
-        for field, term, tag, boost, scored in all_specs:
-            self._check_field(field)
-            wk32, idf_64, b64 = self._term_weights(field, term, boost,
-                                                   stats)
-            by_key.setdefault((field, term), []).append(
-                (tag, scored, wk32, idf_64, b64))
-
-        cache_f = self.cache_f
-        scoring = self.scoring
-        lucene = scoring == "lucene"
-        ftype = np.float32 if lucene else np.float64
-
-        def _parse(tag):
-            qs, gs, rs = tag.split("|")
-            return (int(qs), 0 if gs == "r" else int(gs[1:]),
-                    _ROLE_CODE[rs])
-
-        coef64 = {
-            key: [(tag, scored, np.float32(wk32),
-                   (idf_64 * b64) * _kp1_64(self.sim_f[key[0]][0]),
-                   self.sim_f[key[0]][0], self.sim_f[key[0]][1])
-                  for tag, scored, wk32, idf_64, b64 in specs_]
-            for key, specs_ in by_key.items()
-        }
-        _keys = list(coef64)
-        kid_of = {key: i for i, key in enumerate(_keys)}
-        cl_counts = np.asarray([len(coef64[key]) for key in _keys],
+        for qid, (specs, _, _) in flat.items():
+            for f_, t, gid, role, boost, scored in specs:
+                by_key.setdefault((f_, t), []).append(
+                    (qid, gid, role, boost, scored))
+        keys = list(by_key)
+        kid_of = {key: i for i, key in enumerate(keys)}
+        cl_counts = np.asarray([len(by_key[key]) for key in keys],
                                dtype=np.int64)
         cl_starts = np.cumsum(cl_counts) - cl_counts
-        _flat = [c for key in _keys for c in coef64[key]]
-        parsed = [_parse(c[0]) for c in _flat]
-        qid_cat = np.asarray([p[0] for p in parsed], dtype=np.int32)
-        gid_cat = np.asarray([p[1] for p in parsed], dtype=np.int32)
-        role_cat = np.asarray([p[2] for p in parsed], dtype=np.int8)
-        scored_cat = np.asarray([c[1] for c in _flat], dtype=bool)
-        wk32_cat = np.asarray([c[2] for c in _flat], dtype=np.float32)
-        coef_cat = np.asarray([c[3] for c in _flat], dtype=np.float64)
-        k1_cat = np.asarray([c[4] for c in _flat], dtype=np.float64)
-        b_cat = np.asarray([c[5] for c in _flat], dtype=np.float64)
-        fld_cat = np.asarray(
-            [key[0] for key in _keys for _ in coef64[key]], dtype=object)
-        avg_cat = np.asarray(
-            [self.avgdl64_f[key[0]] for key in _keys
-             for _ in coef64[key]], dtype=np.float64)
+        cl = [(key, c) for key in keys for c in by_key[key]]
+        tw = self._term_weight_table(
+            [(f_, t, c[3]) for (f_, t), c in cl], self._stats_for(keys))
+        qid_cat = np.asarray([c[0] for _, c in cl], dtype=np.int32)
+        gid_cat = np.asarray([c[1] for _, c in cl], dtype=np.int32)
+        role_cat = np.asarray([c[2] for _, c in cl], dtype=np.int8)
+        scored_cat = np.asarray([c[4] for _, c in cl], dtype=bool)
+        all_scored = bool(scored_cat.all())
 
         # group metadata indexed by gid (0 = root, unused slot)
-        n_g = max((int(g[1:]) for g in all_groups), default=0)
+        groups = {gid: g for _, _, gs in flat.values()
+                  for gid, g in gs.items()}
+        n_g = max(groups, default=0)
         g_role = np.zeros(n_g + 1, dtype=np.int8)
         g_nm = np.zeros(n_g + 1, dtype=np.int64)
         g_nf = np.zeros(n_g + 1, dtype=np.int64)
         g_ms = np.zeros(n_g + 1, dtype=np.int64)
-        for gtok, (prole, _scored, nm_, nf_, ms_) in all_groups.items():
-            gi = int(gtok[1:])
-            g_role[gi] = _ROLE_CODE[prole]
-            g_nm[gi], g_nf[gi], g_ms[gi] = nm_, nf_, ms_
+        for gid, (prole, nm_, nf_, ms_) in groups.items():
+            g_role[gid], g_nm[gid], g_nf[gid], g_ms[gid] = (
+                prole, nm_, nf_, ms_)
         # per-query root requirements indexed by qid
         n_q = max(flat) + 1
         r_nm = np.zeros(n_q, dtype=np.int64)
@@ -1505,8 +1395,9 @@ class IndexSearcher:
         for i, (_specs, (nm_, nf_, ms_), _groups) in flat.items():
             r_nm[i], r_nf[i], r_ms[i] = nm_, nf_, ms_
 
-        tomb = self._tomb_by_seg()
-        k_ = int(k)
+        lucene = tw[0]
+        ftype = np.float32 if lucene else np.float64
+        tomb = self._tomb_by_seg() if k is not None else {}
 
         def fn(batches):
             # streamed per segment (see _iter_seg_chunks): decode,
@@ -1515,69 +1406,37 @@ class IndexSearcher:
             # segments _coalesced packs into this task
             for s, pdf in _iter_seg_chunks(batches):
                 n_rows = len(pdf)
-                counts = pdf["num_docs"].to_numpy(np.int64)
-                docs = batch_delta_decode(
-                    batch_unpack(pdf["docs_bin"].tolist(), counts), counts
-                ).astype(np.int64)
-                tfs = batch_unpack(pdf["tfs_bin"].tolist(), counts)
+                counts, docs, tfs, aux = _decode_term_rows(pdf, lucene)
                 v_starts = np.cumsum(counts) - counts
-                flds = pdf["field"].tolist()
-                trms = pdf["term"].tolist()
-
                 row_kid = np.fromiter(
-                    (kid_of[(f_, t)] for f_, t in zip(flds, trms)),
+                    (kid_of[(f_, t)] for f_, t
+                     in zip(pdf["field"].tolist(), pdf["term"].tolist())),
                     dtype=np.int64, count=n_rows)
+                # expand each scan row to its clauses: postings index
+                # ``idx`` and clause number ``ce`` per expanded posting
                 rc = cl_counts[row_kid]
                 n_exp = int(rc.sum())
                 exp_row = np.repeat(np.arange(n_rows), rc)
                 ends_rc = np.cumsum(rc)
                 within = np.arange(n_exp) - np.repeat(ends_rc - rc, rc)
                 cidx = np.repeat(cl_starts[row_kid], rc) + within
-                identity = bool((rc == 1).all())
                 lens_e = counts[exp_row]
-                out_total = int(lens_e.sum())
-                if identity:
+                if bool((rc == 1).all()):
                     idx = slice(None)
                 else:
+                    out_total = int(lens_e.sum())
                     ends_e = np.cumsum(lens_e)
                     idx = (np.repeat(v_starts[exp_row], lens_e)
                            + np.arange(out_total)
                            - np.repeat(ends_e - lens_e, lens_e))
-
-                tf_out = tfs[idx]
-                fld_e = fld_cat[cidx]
-                scored_e = scored_cat[cidx]
-                if lucene:
-                    nbs = batch_unpack(pdf["norms_bin"].tolist(), counts
-                                       ).astype(np.int64)[idx]
-                    denom = np.empty(out_total, dtype=np.float32)
-                    for f_ in set(fld_e.tolist()):
-                        mm = np.repeat(fld_e == f_, lens_e)
-                        denom[mm] = cache_f[f_][nbs[mm]]
-                    wk_v = np.repeat(wk32_cat[cidx], lens_e)
-                    tff = tf_out.astype(np.float32)
-                    sc = (wk_v * tff) / (tff + denom)
-                else:
-                    dls = batch_unpack(pdf["dls_bin"].tolist(), counts
-                                       ).astype(np.float64)[idx]
-                    avg_v = np.repeat(avg_cat[cidx], lens_e)
-                    coef_v = np.repeat(coef_cat[cidx], lens_e)
-                    k1_v = np.repeat(k1_cat[cidx], lens_e)
-                    b_v = np.repeat(b_cat[cidx], lens_e)
-                    tff = tf_out.astype(np.float64)
-                    denom = tff + k1_v * ((1.0 - b_v) + b_v * dls / avg_v)
-                    sc = coef_v * tff / denom
-                sc = sc.astype(ftype)
-                if not scored_e.all():
-                    sc[np.repeat(~scored_e, lens_e)] = 0
-                doc_a = docs[idx] if not identity else docs
+                ce = np.repeat(cidx, lens_e)
+                sc = _term_scores(ce, tfs[idx], aux[idx], tw).astype(ftype)
+                if not all_scored:
+                    sc[~scored_cat[ce]] = 0
                 q3, d3, s3 = _collector_seg_reduce(
-                    doc_a,
-                    np.repeat(qid_cat[cidx], lens_e),
-                    np.repeat(gid_cat[cidx], lens_e),
-                    np.repeat(role_cat[cidx], lens_e),
+                    docs[idx], qid_cat[ce], gid_cat[ce], role_cat[ce],
                     sc, g_role, g_nm, g_nf, g_ms,
-                    r_nm, r_nf, r_ms, tomb.get(int(s)), lucene, ftype, k_)
+                    r_nm, r_nf, r_ms, tomb.get(int(s)), lucene, ftype, k)
                 if len(q3) == 0:
                     continue
                 yield pd.DataFrame({
@@ -1587,15 +1446,7 @@ class IndexSearcher:
                     "score": s3,
                 })
 
-        by_field: dict[str, list[str]] = {}
-        for f_, t in by_key:
-            by_field.setdefault(f_, []).append(t)
-        cond = reduce(
-            lambda a, b: a | b,
-            [(F.col("field") == f_) & F.col("term").isin(ts)
-             for f_, ts in by_field.items()],
-        )
-        scan = self._postings.filter(cond).select(
+        scan = self._postings.filter(self._terms_cond(keys)).select(
             "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
             "norms_bin", "dls_bin")
         return self._coalesced(scan).mapInPandas(
@@ -1672,9 +1523,7 @@ class IndexSearcher:
             if isinstance(query, MatchAllDocsQuery):
                 tomb = self._tomb_by_seg()
                 return self.doc_count - sum(len(v) for v in tomb.values())
-            if (isinstance(query, TermQuery)
-                    and self.doc_count >= int(os.environ.get(
-                        "RUCENE_COLLECTOR_MIN_DOCS", "100000"))):
+            if isinstance(query, TermQuery):
                 self._check_field(query.field)
                 return self._term_count_live(query)
         return self._live(
@@ -1714,12 +1563,8 @@ class IndexSearcher:
                     seg_rep = np.repeat(segs[masked], c2)
                     total += len(docs)
                     for s in np.unique(seg_rep):
-                        tb = tomb[int(s)]
-                        d = docs[seg_rep == s]
-                        p = np.searchsorted(tb, d)
-                        dead = (p < len(tb)) & (
-                            tb[np.minimum(p, len(tb) - 1)] == d)
-                        total -= int(dead.sum())
+                        total -= int(_dead_mask(
+                            tomb[int(s)], docs[seg_rep == s]).sum())
                 yield pd.DataFrame({"c": [total]})
 
         scan = self._postings.filter(
@@ -2107,60 +1952,28 @@ class IndexSearcher:
         score type — rank- and score-identical to the exhaustive
         disjunction (tests/test_blockmax.py runs both routes)."""
         lucene = self.scoring == "lucene"
-        cache = self.cache_f[field]
-        cache64 = cache.astype(np.float64)
+        cache64 = self.cache_f[field].astype(np.float64)
         avgdl64 = self.avgdl64_f[field]
         k1_, b_ = self.sim_f[field]
-        kp1 = _kp1_64(k1_)
         terms = [t for t, _, _ in infos]
         ti_of = {t: i for i, t in enumerate(terms)}
         n_t = len(terms)
-        wk32 = np.zeros(n_t, dtype=np.float32)
-        coef = np.zeros(n_t, dtype=np.float64)
-        for t, b, _ in infos:
-            w32, idf64, b64 = self._term_weights(field, t, b, stats)
-            wk32[ti_of[t]] = w32
-            coef[ti_of[t]] = (idf64 * b64) * kp1
-        wk64 = wk32.astype(np.float64)
+        tw = self._term_weight_table([(field, t, b) for t, b, _ in infos],
+                                     stats)
+        coef = tw[4]
+        wk64 = tw[1].astype(np.float64)
         tomb = self._tomb_by_seg()
         k_ = int(k)
         ftype = np.float32 if lucene else np.float64
         slack = _UB_SLACK
 
         def _decode(g: pd.DataFrame):
-            """(docs, tfs, norms-or-dls, element ti) for a row subset."""
-            counts = g["num_docs"].to_numpy(np.int64)
-            docs = batch_delta_decode(
-                batch_unpack(g["docs_bin"].tolist(), counts), counts
-            ).astype(np.int64)
-            tfs = batch_unpack(g["tfs_bin"].tolist(), counts)
-            if lucene:
-                aux = batch_unpack(g["norms_bin"].tolist(), counts
-                                   ).astype(np.int64)
-            else:
-                aux = batch_unpack(g["dls_bin"].tolist(), counts
-                                   ).astype(np.int64)
+            """(docs, scores) of a row subset."""
+            counts, docs, tfs, aux = _decode_term_rows(g, lucene)
             ti_el = np.repeat(
                 np.fromiter((ti_of[t] for t in g["term"]),
                             dtype=np.int64, count=len(g)), counts)
-            return docs, tfs, aux, ti_el
-
-        def _score(tfs, aux, ti_el):
-            if lucene:
-                tff = tfs.astype(np.float32)
-                return ((wk32[ti_el] * tff)
-                        / (tff + cache[aux])).astype(np.float64)
-            tff = tfs.astype(np.float64)
-            denom = tff + k1_ * ((1.0 - b_)
-                                 + b_ * aux.astype(np.float64) / avgdl64)
-            return coef[ti_el] * tff / denom
-
-        def _mask_dead(tb, docs):
-            if tb is None or len(docs) == 0:
-                return np.ones(len(docs), dtype=bool)
-            pos = np.searchsorted(tb, docs)
-            return ~((pos < len(tb))
-                     & (tb[np.minimum(pos, len(tb) - 1)] == docs))
+            return docs, _term_scores(ti_el, tfs, aux, tw)
 
         def fn(batches):
             # streamed per segment (see _iter_seg_chunks): bounded memory
@@ -2184,9 +1997,8 @@ class IndexSearcher:
                 drv = int(present[np.lexsort(
                     (present, -tub[present]))[0]])
                 drv_rows = ti_row == drv
-                d_docs, d_tfs, d_aux, d_ti = _decode(sub[drv_rows])
-                d_sc = _score(d_tfs, d_aux, d_ti)
-                live = _mask_dead(tb, d_docs)
+                d_docs, d_sc = _decode(sub[drv_rows])
+                live = ~_dead_mask(tb, d_docs)
                 live_sc = np.sort(d_sc[live].astype(ftype))
                 theta = float(live_sc[-k_]) if len(live_sc) >= k_ else 0.0
                 thr = theta * (1.0 - slack) - 1e-9
@@ -2207,9 +2019,9 @@ class IndexSearcher:
                             & (bub + (total_ub - tub[ti_row]) >= thr))
                 docs_parts, sc_parts = [d_docs], [d_sc]
                 if ess_rows.any():
-                    e_docs, e_tfs, e_aux, e_ti = _decode(sub[ess_rows])
+                    e_docs, e_sc = _decode(sub[ess_rows])
                     docs_parts.append(e_docs)
-                    sc_parts.append(_score(e_tfs, e_aux, e_ti))
+                    sc_parts.append(e_sc)
                 docs_c = np.concatenate(docs_parts)
                 sc_c = np.concatenate(sc_parts)
                 o = np.argsort(docs_c, kind="stable")
@@ -2233,15 +2045,13 @@ class IndexSearcher:
                             docs_u[np.minimum(p, len(docs_u) - 1)] <= ld)
                         keep_idx = np.flatnonzero(n_rows)[hit]
                         if len(keep_idx):
-                            n_docs, n_tfs, n_aux, n_ti = _decode(
-                                sub.iloc[keep_idx])
-                            n_sc = _score(n_tfs, n_aux, n_ti)
+                            n_docs, n_sc = _decode(sub.iloc[keep_idx])
                             pn = np.searchsorted(docs_u, n_docs)
                             m = (pn < len(docs_u)) & (
                                 docs_u[np.minimum(pn, len(docs_u) - 1)]
                                 == n_docs)
                             np.add.at(sums, pn[m], n_sc[m])
-                liveu = _mask_dead(tb, docs_u)
+                liveu = ~_dead_mask(tb, docs_u)
                 docs_u, sums = docs_u[liveu], sums[liveu]
                 if len(docs_u) == 0:
                     continue
@@ -2267,81 +2077,41 @@ class IndexSearcher:
         )
 
     def _dismax_collector_topk(self, q: "DisjunctionMaxQuery",
-                               boost: np.float32, k: int) -> DataFrame:
-        """Zero-shuffle DisjunctionMax top-k — the per-segment collector
+                               boost: np.float32,
+                               k: int | None) -> DataFrame:
+        """Zero-shuffle DisjunctionMax frame — the per-segment collector
         kernel specialized to the dismax fold (dis_max.rs: score =
         max(disjuncts) + tie_breaker * Σ(others)). One scan pass over
         the disjunct terms' postings; per segment the worker decodes,
-        scores each disjunct with the shared BM25 kernel, reduces
-        max/sum per doc with reduceat, masks tombstones, and emits ≤k
-        rows. Requires all-TermQuery disjuncts with unique (field, term)
-        — the same precondition as the exhaustive path's one-scan fast
-        path — and is score-identical to it (per-term float32 kernel,
-        float64 fold, cast to the score type)."""
+        scores each disjunct with the shared term kernel
+        (_term_scores) and reduces max/sum per doc with reduceat. With
+        ``k`` it masks tombstones and emits ≤k rows per segment; with
+        ``k=None`` it emits every matching doc for the caller to
+        live-mask. Requires term disjuncts (after boost folding) with
+        unique (field, term); scores are the per-term float32 kernel,
+        float64 fold, cast to the score type."""
         specs = []
         for d in q.disjuncts:
             d, db = self._fold_boost(d, boost)
             specs.append((d.field, d.term,
                           float(np.float32(db * np.float32(d.boost)))))
-        stats = self._stats_for([(f_, t) for f_, t, _ in specs])
-        lucene = self.scoring == "lucene"
+        keys = [(f_, t) for f_, t, _ in specs]
+        tw = self._term_weight_table(specs, self._stats_for(keys))
+        ci_of = {key: i for i, key in enumerate(keys)}
+        lucene = tw[0]
         ftype = np.float32 if lucene else np.float64
-        n_c = len(specs)
-        wk32 = np.zeros(n_c, dtype=np.float32)
-        coef = np.zeros(n_c, dtype=np.float64)
-        k1_a = np.zeros(n_c, dtype=np.float64)
-        b_a = np.zeros(n_c, dtype=np.float64)
-        avg_a = np.zeros(n_c, dtype=np.float64)
-        flds: list[str] = []
-        ci_of: dict[tuple[str, str], int] = {}
-        for i, (f_, t, b) in enumerate(specs):
-            self._check_field(f_)
-            w32, idf64, b64 = self._term_weights(f_, t, b, stats)
-            k1_, b_ = self.sim_f[f_]
-            wk32[i] = w32
-            coef[i] = (idf64 * b64) * _kp1_64(k1_)
-            k1_a[i], b_a[i] = k1_, b_
-            avg_a[i] = self.avgdl64_f[f_]
-            flds.append(f_)
-            ci_of[(f_, t)] = i
-        cache_f = self.cache_f
         tie = float(q.tie_breaker)
-        tomb = self._tomb_by_seg()
-        k_ = int(k)
+        tomb = self._tomb_by_seg() if k is not None else {}
 
         def fn(batches):
             # streamed per segment (see _iter_seg_chunks): bounded memory
             for s, sub in _iter_seg_chunks(batches):
-                counts = sub["num_docs"].to_numpy(np.int64)
-                d_s = batch_delta_decode(
-                    batch_unpack(sub["docs_bin"].tolist(), counts),
-                    counts).astype(np.int64)
-                tfs = batch_unpack(sub["tfs_bin"].tolist(), counts)
+                counts, d_s, tfs, aux = _decode_term_rows(sub, lucene)
                 ci_row = np.fromiter(
                     (ci_of[(f_, t)] for f_, t
                      in zip(sub["field"], sub["term"])),
                     dtype=np.int64, count=len(sub))
-                ci_el = np.repeat(ci_row, counts)
-                if lucene:
-                    nbs = batch_unpack(sub["norms_bin"].tolist(), counts
-                                       ).astype(np.int64)
-                    denom = np.empty(len(ci_el), dtype=np.float32)
-                    for f_ in set(flds):
-                        mm = np.isin(
-                            ci_el, [i for i, ff in enumerate(flds)
-                                    if ff == f_])
-                        denom[mm] = cache_f[f_][nbs[mm]]
-                    tff = tfs.astype(np.float32)
-                    v_s = ((wk32[ci_el] * tff) / (tff + denom)
-                           ).astype(np.float64)
-                else:
-                    dls = batch_unpack(sub["dls_bin"].tolist(), counts
-                                       ).astype(np.float64)
-                    tff = tfs.astype(np.float64)
-                    den = tff + k1_a[ci_el] * (
-                        (1.0 - b_a[ci_el])
-                        + b_a[ci_el] * dls / avg_a[ci_el])
-                    v_s = coef[ci_el] * tff / den
+                v_s = _term_scores(np.repeat(ci_row, counts), tfs, aux, tw)
                 o = np.argsort(d_s, kind="stable")
                 d_s, v_s = d_s[o], v_s[o]
                 if len(d_s) == 0:
@@ -2354,34 +2124,23 @@ class IndexSearcher:
                 mx = np.maximum.reduceat(v_s, starts)
                 sm = np.add.reduceat(v_s, starts)
                 score = (mx + tie * (sm - mx)).astype(ftype)
-                tb = tomb.get(int(s))
-                if tb is not None and len(du):
-                    pos = np.searchsorted(tb, du)
-                    dead = (pos < len(tb)) & (
-                        tb[np.minimum(pos, len(tb) - 1)] == du)
-                    du, score = du[~dead], score[~dead]
+                live = ~_dead_mask(tomb.get(int(s)), du)
+                du, score = du[live], score[live]
                 if len(du) == 0:
                     continue
-                top = np.lexsort((du, -score))[:k_]
+                if k is not None:
+                    top = np.lexsort((du, -score))[:k]
+                    du, score = du[top], score[top]
                 yield pd.DataFrame({
-                    "seg": np.full(len(top), s, dtype=np.int32),
-                    "doc": du[top],
-                    "score": score[top],
+                    "seg": np.full(len(du), s, dtype=np.int32),
+                    "doc": du,
+                    "score": score,
                 })
 
-        by_field: dict[str, list[str]] = {}
-        for f_, t, _ in specs:
-            by_field.setdefault(f_, []).append(t)
-        cond = reduce(
-            lambda a, b: a | b,
-            [(F.col("field") == f_) & F.col("term").isin(ts)
-             for f_, ts in by_field.items()],
-        )
-        scan = self._postings.filter(cond).select(
+        scan = self._postings.filter(self._terms_cond(keys)).select(
             "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
             "norms_bin", "dls_bin")
-        return self._coalesced(scan).mapInPandas(
-            fn, f"seg int, doc long, score {self._score_t}")
+        return self._coalesced(scan).mapInPandas(fn, self._score_schema)
 
     # ------------------------------------------------------------------
     # explain
@@ -2791,23 +2550,25 @@ class IndexSearcher:
     # stats
     # ------------------------------------------------------------------
 
+    @staticmethod
+    def _terms_cond(keys):
+        """Filter for the (field, term) ``keys``: terms are OR-grouped per
+        field, so the parquet filter stays pushdown-friendly."""
+        by_field: dict[str, list[str]] = {}
+        for f_, t in keys:
+            by_field.setdefault(f_, []).append(t)
+        return reduce(lambda a, b: a | b,
+                      [(F.col("field") == f_) & F.col("term").isin(ts)
+                       for f_, ts in by_field.items()])
+
     def _stats_for(self, keys: list[tuple[str, str]]) -> dict[tuple[str, str], dict]:
         """(field, term) → stats row dict; memoized (misses cached too).
-
-        One pruned scan fetches every missing key: terms are OR-grouped per
-        field so the parquet filter stays pushdown-friendly."""
+        One pruned scan (_terms_cond) fetches every missing key."""
         want = set(keys)
         missing = [k for k in want if k not in self._stats_cache]
         if missing:
-            by_field: dict[str, list[str]] = {}
-            for f_, t in missing:
-                by_field.setdefault(f_, []).append(t)
-            cond = reduce(
-                lambda a, b: a | b,
-                [(F.col("field") == f_) & F.col("term").isin(ts)
-                 for f_, ts in by_field.items()],
-            )
-            rows = self._term_stats.filter(cond).collect()
+            rows = self._term_stats.filter(
+                self._terms_cond(missing)).collect()
             for r in rows:
                 self._stats_cache[(r["field"], r["term"])] = r.asDict()
             for k in missing:
@@ -2869,9 +2630,10 @@ class IndexSearcher:
         tracks the ACTUAL query type (cache_policy.rs:93,105
         debug-asserts the weight is never CONSTANT).  Plain-term filter
         clauses inside BooleanQuery never reach here at all: they ride
-        the batched one-scan term path (_boolean_frame term_specs),
-        which beats a per-clause cached set — the same economics behind
-        the policy's min-frequency 20 for cheap term filters."""
+        the boolean's one-scan term kernel (the term collector, or
+        _boolean_frame's term_specs), which beats a per-clause cached
+        set — the same economics behind the policy's min-frequency 20
+        for cheap term filters."""
         from .cache import query_cache_key
         if isinstance(q, (ConstantScoreQuery, BoostQuery)):
             return None
@@ -2894,14 +2656,18 @@ class IndexSearcher:
 
     def _frame_impl(self, q: Query, boost: np.float32, needs_scores: bool,
                     stats: dict | None = None) -> DataFrame:
-        if stats is None:
-            stats = self._stats_for(self._collect_terms(q))
-
-        if isinstance(q, TermQuery):
-            return self._term_frame(q, boost, stats)
         if isinstance(q, BoostQuery):
             return self._frame(q.query, np.float32(boost * np.float32(q.boost)),
                                needs_scores, stats)
+        # term, flattenable boolean, term-dismax, phrase and span shapes:
+        # their per-segment kernel emits every matching (seg, doc, score)
+        # inside the scan task, with no shuffle
+        frame = self._kernel_frame(q, boost, None)
+        if frame is not None:
+            return frame
+        if stats is None:
+            stats = self._stats_for(self._collect_terms(q))
+
         if isinstance(q, ConstantScoreQuery):
             inner = self._frame(q.query, np.float32(1.0), False, stats)
             s = float(np.float32(boost * np.float32(q.boost)))
@@ -2962,28 +2728,10 @@ class IndexSearcher:
             return inner.filter(F.col("score") > F.lit(float(q.min_score)))
         if isinstance(q, BooleanQuery):
             return self._boolean_frame(q, boost, needs_scores, stats)
-        if isinstance(q, PhraseQuery):
-            return self._phrase_leaf(q, boost)
-        if isinstance(q, _SpanQueryT):
-            return self._span_leaf(q, boost)
         if isinstance(q, DisjunctionMaxQuery):
-            all_terms = (
-                all(isinstance(d, TermQuery) for d in q.disjuncts)
-                and len({(d.field, d.term) for d in q.disjuncts})
-                == len(q.disjuncts)
-            )
-            if all_terms:
-                specs = [
-                    (d.field, d.term, "",
-                     float(np.float32(boost * np.float32(d.boost))), True)
-                    for d in q.disjuncts
-                ]
-                unioned = self._batch_term_frame(specs, stats, with_tag=False)
-            else:
-                tagged = [
-                    self._frame(d, boost, needs_scores, stats) for d in q.disjuncts
-                ]
-                unioned = reduce(DataFrame.unionByName, tagged)
+            unioned = reduce(DataFrame.unionByName, [
+                self._frame(d, boost, needs_scores, stats)
+                for d in q.disjuncts])
             tie = float(q.tie_breaker)
             return (
                 unioned.groupBy("seg", "doc")
@@ -3012,11 +2760,6 @@ class IndexSearcher:
 
     # -- leaves ---------------------------------------------------------
 
-    def _term_frame(self, q: TermQuery, boost: np.float32, stats: dict) -> DataFrame:
-        total_boost = float(np.float32(boost * np.float32(q.boost)))
-        return self._batch_term_frame(
-            [(q.field, q.term, "", total_boost, True)], stats, with_tag=False)
-
     def _term_weights(self, field: str, term: str, boost: float, stats: dict):
         """Per-(field, term) scoring constants: (wk32, idf64, boost64).
         ``wk32`` folds the field's k1 (per-field similarity)."""
@@ -3028,12 +2771,42 @@ class IndexSearcher:
         idf_64 = float(np.log(1.0 + (self.doc_count - df_ + 0.5) / (df_ + 0.5)))
         return wk32, idf_64, float(boost)
 
+    def _term_weight_table(self, clauses: list[tuple], stats: dict):
+        """BM25 constants of term clauses ``(field, term, boost)`` as
+        arrays indexed by clause number — the ``tw`` table of
+        _term_scores: (lucene, f32 wk, the clauses' fields' norm caches
+        concatenated, each clause's offset into them, f64 coef, k1, b,
+        avgdl)."""
+        fields = list(dict.fromkeys(f_ for f_, _, _ in clauses))
+        for f_ in fields:
+            self._check_field(f_)
+        caches = [self.cache_f[f_] for f_ in fields]
+        off = dict(zip(fields, np.cumsum([0] + [len(c) for c in caches])))
+        n = len(clauses)
+        wk32 = np.zeros(n, dtype=np.float32)
+        cofs = np.zeros(n, dtype=np.int64)
+        coef = np.zeros(n, dtype=np.float64)
+        k1_a = np.zeros(n, dtype=np.float64)
+        b_a = np.zeros(n, dtype=np.float64)
+        avg_a = np.zeros(n, dtype=np.float64)
+        for i, (f_, t, boost) in enumerate(clauses):
+            w32, idf64, b64 = self._term_weights(f_, t, boost, stats)
+            k1_, b_ = self.sim_f[f_]
+            wk32[i], cofs[i] = w32, off[f_]
+            coef[i] = (idf64 * b64) * _kp1_64(k1_)
+            k1_a[i], b_a[i], avg_a[i] = k1_, b_, self.avgdl64_f[f_]
+        cache = (np.concatenate(caches) if caches
+                 else np.zeros(0, dtype=np.float32))
+        return (self.scoring == "lucene", wk32, cache, cofs, coef, k1_a,
+                b_a, avg_a)
+
     def _batch_term_frame(self, specs: list[tuple], stats: dict,
                           with_tag: bool, scan: DataFrame | None = None) -> DataFrame:
         """ONE postings scan + ONE Arrow decode stage for many term clauses.
 
-        ``specs``: (field, term, tag, boost, scored) per clause. Replaces
-        the per-term scan union for boolean/dismax queries — the
+        ``specs``: (field, term, tag, boost, scored) per clause. Serves
+        the boolean frame's term clauses when the boolean mixes them with
+        other clause kinds, and the block-max multi-job path — the
         reference's per-clause postings iterators share one index pass here
         (conjunction_scorer.rs / disjunction_scorer.rs collapse into a
         single term-pruned columnar scan). Clauses may span fields; each
@@ -3042,135 +2815,82 @@ class IndexSearcher:
         Scale shape: the Python decode emits ONE row per (field, term)
         posting — ``(seg, doc, kid, tff, denom)``, all fixed-width ints/
         floats — and the per-CLAUSE expansion (a term referenced by many
-        clauses of a serving micro-batch) happens JVM-side as a broadcast
-        hash join against a clause table keyed by ``kid``.  The previous
-        shape expanded per-clause INSIDE the Python worker with an
-        object-dtype tag column, so a 1000-query batch paid Arrow
-        serialization + string hashing on ~4x the rows; the join form
-        keeps the hot columns in whole-stage codegen.  Score arithmetic
-        runs in the SAME IEEE op order as the row-at-a-time path
-        (f32: ``(wk*tff)/(tff+denom)``; f64: ``(coef*tff)/denom``), so
-        scores stay bit-identical (asserted by test_engine_parity).
-        ``with_tag`` adds the clause-table columns ``_ct`` (string tag,
-        boolean-frame protocol) and ``_q``/``_g``/``_r`` (int qid / group
-        id / role code m=0 s=1 f=2 n=3, serving-batch protocol).
+        clauses) happens JVM-side against a clause table keyed by
+        ``kid``, so the hot columns stay in whole-stage codegen.  Score
+        arithmetic runs in the SAME IEEE op order as the row-at-a-time
+        path (f32: ``(wk*tff)/(tff+denom)``; f64: ``(coef*tff)/denom``),
+        so scores stay bit-identical (asserted by test_engine_parity).
+        ``with_tag`` adds the clause tag column ``_ct`` (the boolean
+        role m/s/f/n).
         """
-        by_key: dict[tuple[str, str], list] = {}
-        for field, term, tag, boost, scored in specs:
-            self._check_field(field)
-            wk32, idf_64, b64 = self._term_weights(field, term, boost, stats)
-            by_key.setdefault((field, term), []).append(
-                (tag, scored, wk32, idf_64, b64))
-
-        cache_f = self.cache_f
-        scoring = self.scoring
-        lucene = scoring == "lucene"
+        lucene, wk32, cache, cofs, coef, k1_a, b_a, avg_a = (
+            self._term_weight_table(
+                [(f_, t, boost) for f_, t, _, boost, _ in specs], stats))
         # clause table rows: one per spec, keyed by the (field, term) key
         # id the decode emits.  _w folds every per-clause scalar the score
         # needs (f32 wk = idf*boost*(k1+1); f64 coef = idf*boost*(k1+1)).
-        _keys = list(by_key)
-        kid_of = {k: i for i, k in enumerate(_keys)}
+        kid_of: dict[tuple[str, str], int] = {}
+        key_ci: list[int] = []  # a clause of each key: its field constants
         cl_rows = []
-        for k in _keys:
-            kid = kid_of[k]
-            k1_, b_ = self.sim_f[k[0]]
-            for tag, scored, wk32, idf_64, b64 in by_key[k]:
-                if "|" in tag:
-                    qs, gs, rs = tag.split("|")
-                    qi, gi = int(qs), (0 if gs == "r" else int(gs[1:]))
-                else:
-                    qi, gi, rs = -1, 0, (tag or "s")
-                ri = _ROLE_CODE.get(rs, 1)
-                w = (float(wk32) if lucene
-                     else (idf_64 * b64) * _kp1_64(k1_))
-                cl_rows.append((kid, tag, qi, gi, ri, w, bool(scored)))
-
-        # per-key field constants for the f64 denominator, gathered by kid
-        # inside the decode (k1/b/avgdl are per FIELD; norms cache is the
-        # f32 path's per-field denominator)
-        k1_of_key = np.asarray([self.sim_f[k[0]][0] for k in _keys],
-                               dtype=np.float64)
-        b_of_key = np.asarray([self.sim_f[k[0]][1] for k in _keys],
-                              dtype=np.float64)
-        avg_of_key = np.asarray([self.avgdl64_f[k[0]] for k in _keys],
-                                dtype=np.float64)
+        for ci, (f_, t, tag, _, scored) in enumerate(specs):
+            if (f_, t) not in kid_of:
+                kid_of[(f_, t)] = len(key_ci)
+                key_ci.append(ci)
+            w = float(wk32[ci]) if lucene else float(coef[ci])
+            cl_rows.append((kid_of[(f_, t)], tag, w, bool(scored)))
+        ci_of_key = np.asarray(key_ci, dtype=np.int64)
 
         def fn(batches):
             # whole-batch decode: every block of the Arrow batch is
-            # unpacked in a few numpy passes (batch_unpack /
-            # batch_delta_decode); emission is one row per posting with
-            # fixed-width columns only — no per-block Python loop, no
-            # per-clause duplication
+            # unpacked in a few numpy passes (_decode_term_rows);
+            # emission is one row per posting with fixed-width columns
+            # only — no per-block Python loop, no per-clause duplication
             for pdf in batches:
                 n_rows = len(pdf)
                 if n_rows == 0:
                     continue
-                counts = pdf["num_docs"].to_numpy(np.int64)
-                docs = batch_delta_decode(
-                    batch_unpack(pdf["docs_bin"].tolist(), counts), counts
-                ).astype(np.int64)
-                tfs = batch_unpack(pdf["tfs_bin"].tolist(), counts)
-                flds = pdf["field"].tolist()
-                trms = pdf["term"].tolist()
+                counts, docs, tfs, aux = _decode_term_rows(pdf, lucene)
                 row_kid = np.fromiter(
-                    (kid_of[(f_, t)] for f_, t in zip(flds, trms)),
+                    (kid_of[(f_, t)] for f_, t
+                     in zip(pdf["field"].tolist(), pdf["term"].tolist())),
                     dtype=np.int64, count=n_rows)
+                kid_el = np.repeat(row_kid, counts)
+                ci = ci_of_key[kid_el]
                 out = {
                     "seg": np.repeat(pdf["seg"].to_numpy(np.int32), counts),
                     "doc": docs,
-                    "kid": np.repeat(row_kid, counts).astype(np.int32),
+                    "kid": kid_el.astype(np.int32),
                 }
                 if lucene:
-                    nbs = batch_unpack(pdf["norms_bin"].tolist(), counts
-                                       ).astype(np.int64)
-                    denom = np.empty(len(nbs), dtype=np.float32)
-                    fld_doc = np.repeat(np.asarray(flds, dtype=object),
-                                        counts)
-                    for f_ in set(flds):
-                        m = fld_doc == f_
-                        denom[m] = cache_f[f_][nbs[m]]
                     out["tff"] = tfs.astype(np.float32)
-                    out["denom"] = denom
+                    out["denom"] = cache[aux + cofs[ci]]
                 else:
-                    dls = batch_unpack(pdf["dls_bin"].tolist(), counts
-                                       ).astype(np.float64)
                     tff = tfs.astype(np.float64)
-                    k1_v = np.repeat(k1_of_key[row_kid], counts)
-                    b_v = np.repeat(b_of_key[row_kid], counts)
-                    avg_v = np.repeat(avg_of_key[row_kid], counts)
                     out["tff"] = tff
-                    out["denom"] = tff + k1_v * ((1.0 - b_v)
-                                                 + b_v * dls / avg_v)
+                    out["denom"] = tff + k1_a[ci] * (
+                        (1.0 - b_a[ci])
+                        + b_a[ci] * aux.astype(np.float64) / avg_a[ci])
                 yield pd.DataFrame(out)
 
         if scan is None:
-            by_field: dict[str, list[str]] = {}
-            for f_, t in by_key:
-                by_field.setdefault(f_, []).append(t)
-            cond = reduce(
-                lambda a, b: a | b,
-                [(F.col("field") == f_) & F.col("term").isin(ts)
-                 for f_, ts in by_field.items()],
-            )
-            scan = self._postings.filter(cond).select(
+            scan = self._postings.filter(self._terms_cond(kid_of)).select(
                 "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
                 "norms_bin", "dls_bin")
         num_t = "float" if lucene else "double"
         decoded = scan.mapInPandas(
             fn, f"seg int, doc long, kid int, tff {num_t}, denom {num_t}")
 
-        # clause-table attach.  Small tables (every interactive query, and
-        # serving micro-batches up to ~100 clauses) inline as a LITERAL
-        # array expression indexed by kid — pure whole-stage-codegen
-        # projection, no extra Spark job.  createDataFrame(local rows)
-        # parallelizes through an RDD, so the previous broadcast-join form
-        # cost one defaultParallelism-task materialization job PER frame
-        # (round-4 sf0.1 regression: querystring builds two frames = two
-        # extra 32-task jobs, +0.5s fixed).  Above the cap the join form
-        # wins (a 1000-query batch amortizes one job; a literal array that
+        # clause-table attach.  Small tables (every interactive query)
+        # inline as a LITERAL array expression indexed by kid — pure
+        # whole-stage-codegen projection, no extra Spark job.
+        # createDataFrame(local rows) parallelizes through an RDD, so the
+        # broadcast-join form costs one defaultParallelism-task
+        # materialization job PER frame (round-4 sf0.1 regression:
+        # querystring builds two frames = two extra 32-task jobs, +0.5s
+        # fixed).  Above the cap the join form wins (a literal array that
         # big would bloat the plan), so it remains the fallback.
         if len(cl_rows) <= self._CL_LITERAL_MAX:
-            per_kid: list[list] = [[] for _ in _keys]
+            per_kid: list[list] = [[] for _ in key_ci]
             for row in cl_rows:
                 per_kid[row[0]].append(row)
 
@@ -3181,10 +2901,9 @@ class IndexSearcher:
                 # dominated plan-build time).  repr(float) round-trips
                 # exactly through DOUBLE, and the terminal cast restores
                 # the f32 the join form carried.
-                _kid, ct, qi, gi, ri, w, sc = row
+                _kid, ct, w, sc = row
                 ct_sql = "'" + str(ct).replace("'", "''") + "'"
-                return (f"named_struct('_ct',{ct_sql},'_q',{int(qi)},"
-                        f"'_g',{int(gi)},'_r',{int(ri)},"
+                return (f"named_struct('_ct',{ct_sql},"
                         f"'_w',CAST({float(w)!r} AS {num_t}),"
                         f"'_scored',{'true' if sc else 'false'})")
 
@@ -3200,18 +2919,13 @@ class IndexSearcher:
                     "seg", "doc", "tff", "denom",
                     F.explode(cl).alias("_cl"))
             w_c, sc_c = F.col("_cl._w"), F.col("_cl._scored")
-            tag_cols = [F.col("_cl._ct").alias("_ct"),
-                        F.col("_cl._q").alias("_q"),
-                        F.col("_cl._g").alias("_g"),
-                        F.col("_cl._r").alias("_r")]
+            tag_col = F.col("_cl._ct").alias("_ct")
         else:
             cl_df = self.spark.createDataFrame(
-                cl_rows,
-                f"kid int, _ct string, _q int, _g int, _r int, _w {num_t},"
-                " _scored boolean")
+                cl_rows, f"kid int, _ct string, _w {num_t}, _scored boolean")
             base = decoded.join(F.broadcast(cl_df), "kid")
             w_c, sc_c = F.col("_w"), F.col("_scored")
-            tag_cols = ["_ct", "_q", "_g", "_r"]
+            tag_col = F.col("_ct")
         # f32/f64 score in the row-at-a-time op order, inside codegen.
         # Spark widens float arithmetic to double, so the f32 path casts
         # back to float after EVERY op: double-rounding a single +,*,/ of
@@ -3228,7 +2942,7 @@ class IndexSearcher:
             F.lit(0.0).cast(num_t)).alias("score")
         cols = ["seg", "doc", score]
         if with_tag:
-            cols += tag_cols
+            cols.append(tag_col)
         return base.select(*cols)
 
     def _positional_weight(self, field: str, terms: list[str],

@@ -57,8 +57,7 @@ def test_count_live_cross_route(spark, corpus, index_dir):
     dfs = term_df_spectrum(corpus)
     plain = [t for t in dfs.index if t.startswith("t0")]
     terms = [plain[0], plain[len(plain) // 3], plain[-1], "tzzzzzz"]
-    fast = _counts(spark, index_dir, terms,
-                   {"RUCENE_COLLECTOR_MIN_DOCS": "1"})
+    fast = _counts(spark, index_dir, terms, {})
     slow = _counts(spark, index_dir, terms, SLOW)
     assert fast == slow
     # deletes actually bite: match-all under tombstones < corpus size
@@ -73,8 +72,7 @@ def test_count_live_after_merge(spark, corpus, index_dir):
     # fresh deletes on the merged index exercise the fold on the
     # single-file merged layout
     delete_by_keys(index_dir, corpus["url"].iloc[100:120].tolist())
-    fast = _counts(spark, index_dir, [hi],
-                   {"RUCENE_COLLECTOR_MIN_DOCS": "1"})
+    fast = _counts(spark, index_dir, [hi], {})
     slow = _counts(spark, index_dir, [hi], SLOW)
     assert fast == slow
     assert fast["__all__"] == len(corpus) - 100

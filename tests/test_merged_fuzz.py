@@ -11,7 +11,7 @@ layouts a long-lived index actually serves from:
    has exactly the engine's stats, and removing deleted docs from a total
    order leaves the live top-k.
 2. sharded-merged (deletes folded by a multi-file doc-range-sharded
-   SegmentMerger.merge) — both engine routes must be rank- AND
+   SegmentMerger.merge) — search() must be rank- AND
    float32-score-bit-identical to a fresh oracle over the surviving
    corpus: a full merge re-aggregates stats, so the merged index is
    semantically a fresh build (segment_merger.rs doc-id squeeze), and the
@@ -97,12 +97,6 @@ def _trees(corpus):
     return [random_query_tree(rng, vocab, bigrams) for _ in range(N_TREES)]
 
 
-def _route(spark, d, monkeypatch, collector: bool):
-    monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS",
-                       "0" if collector else str(10**9))
-    return IndexSearcher(spark, d)
-
-
 def test_tombstoned_matches_oracle(spark, corpus, victims, tombstoned,
                                    full_oracle):
     """Live-masked search over the tombstoned layout: same urls, same
@@ -139,14 +133,11 @@ def test_merged_search_many_matches_per_query(spark, corpus, merged):
         assert by_qid.get(i, []) == want, f"qid {i}: {q!r}"
 
 
-@pytest.mark.parametrize("collector", [True, False],
-                         ids=["collector", "frame"])
-def test_merged_sharded_matches_oracle(spark, corpus, merged, merged_oracle,
-                                       monkeypatch, collector):
-    """Both routes over the multi-file sharded merged segment must be
+def test_merged_sharded_matches_oracle(spark, corpus, merged, merged_oracle):
+    """search() over the multi-file sharded merged segment must be
     rank- and score-bit-identical to a fresh oracle on the survivors."""
     trees = _trees(corpus)
-    s = _route(spark, merged, monkeypatch, collector=collector)
+    s = IndexSearcher(spark, merged)
     failures = []
     for i, q in enumerate(trees):
         eng = _hits(s, q)

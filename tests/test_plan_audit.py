@@ -7,6 +7,8 @@
 * scans prune columns (a top-k search must not read position bytes);
 * the final hit join broadcasts the tiny top-k side;
 * a nested phrase shuffles no position arrays;
+* a nested boolean of terms reduces in its scan task (no (seg, doc)
+  shuffle);
 * block-max pass-2 pushes the metadata block filter into the scan.
 """
 
@@ -15,7 +17,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from rucene_spark.build import IndexWriter
-from rucene_spark.query import QueryStringQueryBuilder, TermQuery
+from rucene_spark.query import (ConstantScoreQuery, QueryStringQueryBuilder,
+                                TermQuery)
 from rucene_spark.search import IndexSearcher
 from rucene_spark.webtext import make_corpus
 
@@ -73,6 +76,18 @@ def test_nested_phrase_shuffles_no_positions(searcher):
     plan = _optimized(searcher.search(q, 10))
     assert "collect_list" not in plan
     assert "positions" not in plan and "array<bigint>" not in plan
+
+
+def test_nested_term_boolean_shuffles_no_seg_doc(searcher):
+    """A boolean of terms under ConstantScoreQuery runs the per-segment
+    term collector: the must/should arithmetic, one nested group
+    included, reduces inside the scan task — no (seg, doc) exchange."""
+    import numpy as np
+
+    q = ConstantScoreQuery(QueryStringQueryBuilder(
+        "+t000000 +(t000001 t000002)", [("text", 1.0)]).build())
+    plan = _physical_plan(searcher._frame(q, np.float32(1.0), True))
+    assert "Exchange hashpartitioning(seg" not in plan, plan
 
 
 def test_blockmax_pass2_filter_reaches_scan(searcher):

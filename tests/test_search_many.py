@@ -3,6 +3,7 @@ to per-query search() for every query in the batch (one distributed job
 replaces N dispatches; semantics unchanged)."""
 
 import pytest
+from conftest import exhaustive_topk
 
 from rucene_spark.build import IndexWriter
 from rucene_spark.query import (
@@ -188,11 +189,14 @@ def test_search_many_legacy_multifile_rejected(spark, idx, tmp_path):
     assert _rows(s.search(pqry, 10)) == _rows(ref.search(pqry, 10))
 
 
-def test_single_query_collector_routing(spark, idx, monkeypatch):
-    """search() routes flattenable term/boolean queries through the
-    per-segment collector kernel above RUCENE_COLLECTOR_MIN_DOCS; the
-    routed result must be rank- and score-identical to the JVM frame
-    path (cost-based routing must never change semantics)."""
+def _seg_rows(rows):
+    return [(r["seg"], r["doc"], float(r["score"])) for r in rows]
+
+
+def test_single_query_collector_routing(spark, idx):
+    """search() runs flattenable term/boolean roots through the
+    per-segment collector's top-k; it must be rank- and score-identical
+    to the exhaustive witness (every matching row, ordered + limited)."""
     queries = [
         TermQuery("text", "table"),
         BooleanQuery.build(
@@ -206,19 +210,16 @@ def test_single_query_collector_routing(spark, idx, monkeypatch):
                                 [("text", 1.0)]).build(),
         TermQuery("text", "tzzzzzz"),  # absent term
     ]
-    routed = IndexSearcher(spark, idx)  # fresh: no cached frame plans
-    frame = IndexSearcher(spark, idx)
+    s = IndexSearcher(spark, idx)
     for q in queries:
-        monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", "0")
-        got = _rows(routed.search(q, 10))
-        monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", str(10**9))
-        assert got == _rows(frame.search(q, 10)), repr(q)
+        assert (_seg_rows(s.search(q, 10).collect())
+                == _seg_rows(exhaustive_topk(s, q, 10))), repr(q)
 
 
-def test_dismax_collector_routing(spark, idx, monkeypatch):
-    """Root dismax through the per-segment collector must be rank- and
-    score-identical to the exhaustive frame path, including boosted
-    disjuncts and tie_breaker values."""
+def test_dismax_collector_routing(spark, idx):
+    """Root dismax through the per-segment collector's top-k must be
+    rank- and score-identical to the exhaustive witness, including
+    boosted disjuncts and tie_breaker values."""
     cases = [
         DisjunctionMaxQuery([TermQuery("text", "table"),
                              TermQuery("text", "query")], 0.3),
@@ -228,12 +229,53 @@ def test_dismax_collector_routing(spark, idx, monkeypatch):
         DisjunctionMaxQuery([TermQuery("text", "table"),
                              TermQuery("text", "tzzzzzz")], 1.0),
     ]
+    s = IndexSearcher(spark, idx)
     for q in cases:
-        monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", "0")
-        routed = _rows(IndexSearcher(spark, idx).search(q, 10))
-        monkeypatch.setenv("RUCENE_COLLECTOR_MIN_DOCS", str(10**9))
-        frame = _rows(IndexSearcher(spark, idx).search(q, 10))
-        assert routed == frame, repr(q)
+        assert (_seg_rows(s.search(q, 10).collect())
+                == _seg_rows(exhaustive_topk(s, q, 10))), repr(q)
+
+
+def test_search_many_above_tomb_cap(spark, idx, tmp_path, monkeypatch):
+    """Above the tombstone broadcast cap the batch collector emits every
+    satisfied row and the shuffle anti-join removes deleted docs; each
+    query's top-k must equal per-query search() under the broadcast
+    route, with no deleted doc returned."""
+    import shutil
+
+    from rucene_spark.merge import delete_by_keys
+
+    d = str(tmp_path / "many_cap_idx")
+    shutil.copytree(idx, d)
+    top = IndexSearcher(spark, d).search(
+        TermQuery("text", "table"), 3).collect()
+    deleted = {r["doc_id"] for r in top}
+    delete_by_keys(d, sorted(deleted))
+    bcast = IndexSearcher(spark, d)
+    assert bcast._bcast_deleted
+    monkeypatch.setenv("RUCENE_TOMB_BCAST_CAP", "0")
+    shuf = IndexSearcher(spark, d)
+    assert not shuf._bcast_deleted
+    queries = [
+        TermQuery("text", "table"),
+        QueryStringQueryBuilder("table +query", [("text", 1.0)]).build(),
+        QueryStringQueryBuilder("table +(query scan)",
+                                [("text", 1.0)]).build(),
+        BooleanQuery.build(
+            [], [TermQuery("text", "table"), TermQuery("text", "query"),
+                 TermQuery("text", "scan")], [], [], min_should_match=2),
+        DisjunctionMaxQuery([TermQuery("text", "table"),
+                             TermQuery("text", "query")], 0.3),
+        PhraseQuery.build("text", ["key", "agg"], slop=0),
+    ]
+    by_qid = {}
+    for r in shuf.search_many(queries, 10).collect():
+        by_qid.setdefault(r["qid"], []).append(
+            (r["doc_id"], float(r["score"])))
+    for i, q in enumerate(queries):
+        want = [(r["doc_id"], float(r["score"]))
+                for r in bcast.search(q, 10).collect()]
+        assert by_qid.get(i, []) == want, f"qid {i}: {q!r}"
+        assert not deleted & {d_ for d_, _ in want}
 
 
 def test_collector_seg_reduce_all_groups_unsatisfied():

@@ -62,3 +62,24 @@ def test_default_cap_broadcasts_at_probe_scale_count(
     assert IndexSearcher(spark, index_dir)._bcast_deleted
     monkeypatch.setenv("RUCENE_TOMB_BCAST_CAP", "12")
     assert not IndexSearcher(spark, index_dir)._bcast_deleted
+
+
+def test_concurrent_searchers_leave_arrow_conf_unchanged(spark, index_dir):
+    """Four threads each open a searcher on the tombstoned index and
+    search it, each materializing its own tombstone memo: every thread
+    gets the single-threaded result, and the session's Arrow conf is
+    the same afterwards (the tombstone transfer never flips it)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    q = TermQuery("text", "t000000")
+    want = _topk(IndexSearcher(spark, index_dir), q)
+
+    def run(_):
+        return _topk(IndexSearcher(spark, index_dir), q)
+
+    with ThreadPoolExecutor(4) as ex:
+        got = list(ex.map(run, range(4), timeout=600))
+    assert got == [want] * 4
+    assert spark.conf.get(key) == before
