@@ -11,7 +11,8 @@ layouts a long-lived index actually serves from:
    has exactly the engine's stats, and removing deleted docs from a total
    order leaves the live top-k.
 2. sharded-merged (deletes folded by a multi-file doc-range-sharded
-   SegmentMerger.merge) — search() must be rank- AND
+   SegmentMerger.merge) — search()'s per-segment top-k collector and the
+   exhaustive live-masked query frame must both be rank- AND
    float32-score-bit-identical to a fresh oracle over the surviving
    corpus: a full merge re-aggregates stats, so the merged index is
    semantically a fresh build (segment_merger.rs doc-id squeeze), and the
@@ -21,7 +22,7 @@ layouts a long-lived index actually serves from:
 
 import numpy as np
 import pytest
-from conftest import corpus_query_material, random_query_tree
+from conftest import corpus_query_material, exhaustive_topk, random_query_tree
 
 from rucene_spark.build import IndexWriter, load_manifest
 from rucene_spark.merge import SegmentMerger, delete_by_keys
@@ -133,14 +134,30 @@ def test_merged_search_many_matches_per_query(spark, corpus, merged):
         assert by_qid.get(i, []) == want, f"qid {i}: {q!r}"
 
 
-def test_merged_sharded_matches_oracle(spark, corpus, merged, merged_oracle):
-    """search() over the multi-file sharded merged segment must be
-    rank- and score-bit-identical to a fresh oracle on the survivors."""
+def _frame_hits(searcher, q, k=10):
+    """The top-k of the exhaustive live-masked query frame (the k=None
+    kernels that serve nested and above-cap roots), as _hits() shapes
+    search()'s rows."""
+    urls = {(r["seg"], r["doc"]): r["url"]
+            for r in searcher._docmeta.select("seg", "doc", "url").collect()}
+    return [(urls[(r["seg"], r["doc"])],
+             np.float32(r["score"]).view(np.int32).item())
+            for r in exhaustive_topk(searcher, q, k)]
+
+
+@pytest.mark.parametrize("route", ["collector", "frame"])
+def test_merged_sharded_matches_oracle(spark, corpus, merged, merged_oracle,
+                                       route):
+    """Both ways to a root's top-k over the multi-file sharded merged
+    segment — search()'s per-segment top-k collector and the exhaustive
+    query frame — must be rank- and score-bit-identical to a fresh
+    oracle on the survivors."""
     trees = _trees(corpus)
     s = IndexSearcher(spark, merged)
+    hits = _hits if route == "collector" else _frame_hits
     failures = []
     for i, q in enumerate(trees):
-        eng = _hits(s, q)
+        eng = hits(s, q)
         orc = [(u, np.float32(sc).view(np.int32).item())
                for (u, sc, _) in merged_oracle.search(q, 10)]
         if eng != orc:
