@@ -11,7 +11,9 @@ algebra on ``(seg, doc)``:
   req_not_scorer.rs:21) over each (seg, doc): for term, boolean-of-term
   and term-dismax queries a numpy reduction inside the scan task (the
   per-segment term collector, ``_collector_topk_frame``); for booleans
-  mixing other clause kinds a groupBy(seg, doc);
+  mixing other clause kinds a groupBy(seg, doc) over the clauses'
+  frames, the term clauses decoded and scored by the same term kernel
+  in their scan task (``_batch_term_frame``);
 * Exact/SloppyPhraseScorer, span scorers → one per-segment leaf
   (``_phrase_leaf`` / ``_span_leaf``): the doc-level conjunction runs in
   numpy inside the scan task, then the shared phrase/span kernels verify
@@ -43,12 +45,14 @@ scale-critical property that per-term scans would lose at wide boolean
 queries.
 
 ``search_blockmax`` is the BMW (block-max WAND) serving path the north
-rule adds on top of the reference (SURVEY.md §4.3): per-128-doc-block
-upper bounds computed from stored ``(max_tf, max_norm_byte, min_dl)``
-metadata prune block decodes against a θ lower bound obtained by exactly
-scoring the highest-impact term. Pruning is provably rank-preserving (any
-doc in a pruned block has total score < θ ≤ the true k-th score), which
-``tests/test_blockmax.py`` asserts against the exhaustive scorer.
+rule adds on top of the reference (SURVEY.md §4.3), one per-segment
+kernel (``_bmw_seg_topk``): per-128-doc-block upper bounds computed from
+stored ``(max_tf, max_norm_byte, min_dl)`` metadata prune block decodes
+against a θ lower bound obtained by exactly scoring the segment's
+highest-impact term. Pruning is provably rank-preserving (any doc in a
+pruned block has total score < θ ≤ the true k-th score), which
+``tests/test_blockmax.py`` asserts against the exhaustive scorer. Above
+the tombstone broadcast gate it runs that exhaustive disjunction.
 """
 
 from __future__ import annotations
@@ -151,6 +155,31 @@ def _term_scores(ci, tfs, aux, tw) -> np.ndarray:
                             cache, None, None, None, None)
     return _freq_scores(tfs, None, aux, False, None, None, coef64[ci],
                         k1_[ci], b_[ci], avg[ci])
+
+
+def _expand_clauses(row_kid, counts, cl_counts, cl_starts):
+    """Expand decoded term postings to (posting, clause) pairs. Scan row
+    i holds ``counts[i]`` postings of key ``row_kid[i]``, whose clauses
+    are the contiguous clause numbers ``cl_starts[kid] + range(
+    cl_counts[kid])``; each row repeats its postings once per clause.
+    Returns the posting index (a slice when no key has two clauses) and
+    the clause number of every expanded posting. A doc's rows keep scan
+    order, then clause order, so per-doc sums stay in one fixed order."""
+    n_rows = len(row_kid)
+    rc = cl_counts[row_kid]
+    exp_row = np.repeat(np.arange(n_rows), rc)
+    within = np.arange(int(rc.sum())) - np.repeat(np.cumsum(rc) - rc, rc)
+    cidx = np.repeat(cl_starts[row_kid], rc) + within
+    lens_e = counts[exp_row]
+    if bool((rc == 1).all()):
+        idx = slice(None)
+    else:
+        v_starts = np.cumsum(counts) - counts
+        ends_e = np.cumsum(lens_e)
+        idx = (np.repeat(v_starts[exp_row], lens_e)
+               + np.arange(int(lens_e.sum()))
+               - np.repeat(ends_e - lens_e, lens_e))
+    return idx, np.repeat(cidx, lens_e)
 
 
 def _dead_mask(tomb, docs) -> np.ndarray:
@@ -699,6 +728,124 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
     return dv[o2], sv[o2]
 
 
+def _bmw_seg_topk(sub, tomb, k, ti_of, tw, cache64, k1_, b_, avgdl64):
+    """Segment-local block-max WAND top-k of a should-sum disjunction —
+    the θ/MaxScore-split/block-prune pipeline of search_blockmax run on
+    ONE segment's term postings rows ``sub`` (with their
+    ``(max_tf, max_norm_byte, min_dl, first_doc, last_doc)`` block
+    metadata); ``ti_of`` maps a term to its clause in the weight table
+    ``tw`` (IndexSearcher._term_weight_table).
+
+    1. θ_s: decode only the segment's strongest term (max block-ub
+       upper bound), score it exactly, mask tombstones, take the k-th
+       score. ≥k live docs have total ≥ θ_s (driver score is a lower
+       bound of the total — BM25 contributions are non-negative), so
+       θ_s lower-bounds the segment's true k-th total and pruning
+       against it keeps the segment top-k intact; the global top-k is a
+       subset of the per-segment top-k union.
+    2. MaxScore split (Turtle & Flood) on SEGMENT-LOCAL term bounds (max
+       of the term's block ubs in this segment): non-essential terms =
+       the maximal ascending-ub prefix with Σ ub < θ_s.
+    3. Essential terms: decode only blocks with
+       ``block_ub + Σ_{t'≠t} tub(t') ≥ thr`` — pure arithmetic over the
+       block metadata columns; pruned blocks are never decoded.
+    4. Candidates: essential partial + Σ ub(nonessential) ≥ thr.
+    5. Non-essential terms: decode only blocks whose
+       [first_doc, last_doc] holds a candidate (searchsorted), add
+       contributions for candidate docs only.
+
+    θ_s = 0 (fewer than k driver postings) makes thr negative and every
+    test above vacuous — the pass degrades to exhaustive scoring.
+    Scores: each posting through _term_scores, per-doc sum in float64,
+    cast to the score type — rank- and score-identical to the exhaustive
+    disjunction (tests/test_blockmax.py)."""
+    lucene, coef = tw[0], tw[4]
+    wk64 = tw[1].astype(np.float64)
+    ftype = np.float32 if lucene else np.float64
+
+    def _decode(g: pd.DataFrame):
+        """(docs, scores) of a row subset."""
+        counts, docs, tfs, aux = _decode_term_rows(g, lucene)
+        ti_el = np.repeat(
+            np.fromiter((ti_of[t] for t in g["term"]),
+                        dtype=np.int64, count=len(g)), counts)
+        return docs, _term_scores(ti_el, tfs, aux, tw)
+
+    ti_row = np.fromiter((ti_of[t] for t in sub["term"]),
+                         dtype=np.int64, count=len(sub))
+    mtf = sub["max_tf"].to_numpy(np.float64)
+    if lucene:
+        mnb = sub["max_norm_byte"].to_numpy(np.int64)
+        bub = wk64[ti_row] * mtf / (mtf + cache64[mnb])
+    else:
+        mdl = sub["min_dl"].to_numpy(np.float64)
+        bub = coef[ti_row] * mtf / (
+            mtf + k1_ * ((1.0 - b_) + b_ * mdl / avgdl64))
+    tub = np.zeros(len(ti_of), dtype=np.float64)
+    np.maximum.at(tub, ti_row, bub)
+    present = np.unique(ti_row)
+    # 1) θ_s from the segment's strongest term
+    drv = int(present[np.lexsort((present, -tub[present]))[0]])
+    drv_rows = ti_row == drv
+    d_docs, d_sc = _decode(sub[drv_rows])
+    live = ~_dead_mask(tomb, d_docs)
+    live_sc = np.sort(d_sc[live].astype(ftype))
+    theta = float(live_sc[-k]) if len(live_sc) >= k else 0.0
+    thr = theta * (1.0 - _UB_SLACK) - 1e-9
+    # 2) MaxScore split on segment-local bounds
+    order = present[np.lexsort((present, tub[present]))]
+    ness, acc = [], 0.0
+    for ti in order[:-1]:  # strongest term stays essential
+        if theta > 0 and acc + tub[ti] < thr:
+            ness.append(int(ti))
+            acc += tub[ti]
+        else:
+            break
+    ub_n = float(sum(tub[ti] for ti in ness))
+    total_ub = float(tub[present].sum())
+    # 3) essential blocks surviving the metadata bound
+    ess_rows = (~drv_rows & ~np.isin(ti_row, ness)
+                & (bub + (total_ub - tub[ti_row]) >= thr))
+    docs_parts, sc_parts = [d_docs], [d_sc]
+    if ess_rows.any():
+        e_docs, e_sc = _decode(sub[ess_rows])
+        docs_parts.append(e_docs)
+        sc_parts.append(e_sc)
+    docs_c = np.concatenate(docs_parts)
+    sc_c = np.concatenate(sc_parts)
+    o = np.argsort(docs_c, kind="stable")
+    docs_c, sc_c = docs_c[o], sc_c[o]
+    nb = np.empty(len(docs_c), dtype=bool)
+    nb[0] = True
+    nb[1:] = docs_c[1:] != docs_c[:-1]
+    starts = np.flatnonzero(nb)
+    docs_u = docs_c[starts]
+    sums = np.add.reduceat(sc_c, starts)
+    # 4) candidates; 5) non-essential contributions
+    if ness:
+        cand = sums + ub_n >= thr
+        docs_u, sums = docs_u[cand], sums[cand]
+        n_rows = np.isin(ti_row, ness)
+        if n_rows.any() and len(docs_u):
+            fd = sub["first_doc"].to_numpy(np.int64)[n_rows]
+            ld = sub["last_doc"].to_numpy(np.int64)[n_rows]
+            p = np.searchsorted(docs_u, fd)
+            hit = (p < len(docs_u)) & (
+                docs_u[np.minimum(p, len(docs_u) - 1)] <= ld)
+            keep_idx = np.flatnonzero(n_rows)[hit]
+            if len(keep_idx):
+                n_docs, n_sc = _decode(sub.iloc[keep_idx])
+                pn = np.searchsorted(docs_u, n_docs)
+                m = (pn < len(docs_u)) & (
+                    docs_u[np.minimum(pn, len(docs_u) - 1)] == n_docs)
+                np.add.at(sums, pn[m], n_sc[m])
+    liveu = ~_dead_mask(tomb, docs_u)
+    docs_u, sums = docs_u[liveu], sums[liveu]
+    score = sums.astype(ftype)
+    top = np.lexsort((docs_u, -score))[:k]
+    return docs_u[top], score[top]
+
+
 def _iter_seg_chunks(batches):
     """Stream a collector partition's Arrow batches as one pandas frame
     per SEGMENT, without ever buffering the whole partition.
@@ -762,8 +909,13 @@ def _decode_seg_tds(sub: "pd.DataFrame", ti_of: dict) -> dict:
 _SCORE_SCHEMA = "seg int, doc long, score float"
 _SCORE_SCHEMA64 = "seg int, doc long, score double"
 _ROLE_CODE = {"m": 0, "s": 1, "f": 2, "n": 3}  # boolean clause roles
+# postings columns of the phrase/span leaves and of the BMW collector
+_LEAF_SCAN_COLS = ("term", "seg", "block_id", "num_docs", "docs_bin",
+                   "tfs_bin", "norms_bin", "dls_bin", "pos_bin")
+_BMW_SCAN_COLS = ("term", "seg", "num_docs", "docs_bin", "tfs_bin",
+                  "norms_bin", "dls_bin", "max_tf", "max_norm_byte",
+                  "min_dl", "first_doc", "last_doc")
 _UB_SLACK = 1e-5  # relative slack on the BMW θ filter (f32 vs f64 rounding)
-_MAX_CAND_BUCKETS = 4096  # BMW pass-2 candidate-bucket collect cap
 
 
 class IndexSearcher:
@@ -1113,9 +1265,6 @@ class IndexSearcher:
         return frame.join(deleted, ["seg", "doc"], "left_anti")
 
     _PLAN_CACHE_MAX = 1024
-    # clause-table literal-inline cap for _batch_term_frame (above it, the
-    # broadcast-join form with its one materialization job wins)
-    _CL_LITERAL_MAX = 128
 
     def search(self, query: Query, k: int = 10) -> DataFrame:
         """Top-k by (score desc, seg asc, doc asc) joined back to doc keys.
@@ -1407,29 +1556,12 @@ class IndexSearcher:
             for s, pdf in _iter_seg_chunks(batches):
                 n_rows = len(pdf)
                 counts, docs, tfs, aux = _decode_term_rows(pdf, lucene)
-                v_starts = np.cumsum(counts) - counts
                 row_kid = np.fromiter(
                     (kid_of[(f_, t)] for f_, t
                      in zip(pdf["field"].tolist(), pdf["term"].tolist())),
                     dtype=np.int64, count=n_rows)
-                # expand each scan row to its clauses: postings index
-                # ``idx`` and clause number ``ce`` per expanded posting
-                rc = cl_counts[row_kid]
-                n_exp = int(rc.sum())
-                exp_row = np.repeat(np.arange(n_rows), rc)
-                ends_rc = np.cumsum(rc)
-                within = np.arange(n_exp) - np.repeat(ends_rc - rc, rc)
-                cidx = np.repeat(cl_starts[row_kid], rc) + within
-                lens_e = counts[exp_row]
-                if bool((rc == 1).all()):
-                    idx = slice(None)
-                else:
-                    out_total = int(lens_e.sum())
-                    ends_e = np.cumsum(lens_e)
-                    idx = (np.repeat(v_starts[exp_row], lens_e)
-                           + np.arange(out_total)
-                           - np.repeat(ends_e - lens_e, lens_e))
-                ce = np.repeat(cidx, lens_e)
+                idx, ce = _expand_clauses(row_kid, counts, cl_counts,
+                                          cl_starts)
                 sc = _term_scores(ce, tfs[idx], aux[idx], tw).astype(ftype)
                 if not all_scored:
                     sc[~scored_cat[ce]] = 0
@@ -1685,391 +1817,60 @@ class IndexSearcher:
 
     def search_blockmax(self, terms: list[str], k: int = 10,
                         boosts: list[float] | None = None,
-                        prune_counter: dict | None = None,
                         field: str | None = None) -> DataFrame:
-        """Block-max pruned top-k for a should-sum disjunction — the
-        MaxScore/BMW hybrid the north rule adds over the reference
-        (SURVEY.md §4.3: rucene stores skip pointers, skip_writer.rs:36-56,
-        but no impact bounds and no WAND operator).
+        """Block-max pruned top-k for a should-sum disjunction of distinct
+        ``terms`` — the MaxScore/BMW hybrid the north rule adds over the
+        reference (SURVEY.md §4.3: rucene stores skip pointers,
+        skip_writer.rs:36-56, but no impact bounds and no WAND operator).
 
-        1. θ: exactly score the highest-upper-bound ("driver") term; θ =
-           its k-th score — a lower bound on the true k-th total score.
-        2. MaxScore split (Turtle & Flood): non-essential terms N = the
-           maximal ascending-ub prefix with Σ ub(N) < θ. Docs matching
-           only N terms cannot reach top-k.
-        3. Essential terms: decode blocks surviving the per-block bound
-           ``ub(B) + Σ_{t'≠t} ub(t') ≥ θ`` — ub(B) is a pure JVM
-           expression over stored ``(max_tf, max_norm_byte, min_dl)``
-           metadata, no decode.
-        4. Candidates: docs with essential partial + Σ ub(N) ≥ θ. Collect
-           per-segment candidate doc-id ranges (n_segments tiny rows).
-        5. Non-essential terms: decode only blocks whose
-           ``[first_doc, last_doc]`` intersects the candidate range of
-           their segment; join contributions back onto candidates.
-
-        Rank-preservation: a doc losing any block to pruning provably has
-        total score < θ ≤ true k-th score, so every true top-k doc is
-        fully scored, and understated partials cannot displace them
-        (asserted vs the exhaustive scorer in tests/test_blockmax.py).
+        Under the tombstone broadcast gate it runs the per-segment BMW
+        collector (_blockmax_collector_topk / _bmw_seg_topk). Above the
+        gate the kernel cannot mask tombstones before it takes θ, so it
+        could not prune safely: the exhaustive disjunction runs instead,
+        which gives the same answer. Duplicate terms, or ``boosts`` of
+        another length than ``terms``, raise ValueError.
         """
+        if len(set(terms)) != len(terms):
+            raise ValueError(f"search_blockmax: duplicate terms in {terms!r}")
         if boosts is None:
             boosts = [1.0] * len(terms)
+        if len(boosts) != len(terms):
+            raise ValueError(
+                f"search_blockmax: {len(boosts)} boosts for "
+                f"{len(terms)} terms")
         field = field or self.default_field
         self._check_field(field)
-        cache = self.cache_f[field]
-        avgdl64 = self.avgdl64_f[field]
-        k1_, b_ = self.sim_f[field]
-        kp1 = _kp1_64(k1_)
         stats = self._stats_for([(field, t) for t in terms])
-        lucene = self.scoring == "lucene"
-
-        infos = []  # (term, boost, term_ub)
-        for t, b in zip(terms, boosts):
-            row = stats.get((field, t))
-            if row is None:
-                continue
-            wk32, idf_64, b64 = self._term_weights(
-                field, t, float(np.float32(b)), stats)
-            mtf = float(row["max_tf"])
-            if lucene:
-                ub = float(wk32) * mtf / (
-                    mtf + float(cache[int(row["max_norm_byte"])]))
-            else:
-                denom = mtf + k1_ * (
-                    (1.0 - b_) + b_ * float(row["min_dl"]) / avgdl64)
-                ub = idf_64 * b64 * kp1 * mtf / denom
-            infos.append((t, float(np.float32(b)), ub))
+        infos = [(t, float(np.float32(b))) for t, b in zip(terms, boosts)
+                 if (field, t) in stats]
         if not infos:
             return self._docmeta.join(
                 self.spark.createDataFrame([], self._score_schema), ["seg", "doc"])
-
-        if (prune_counter is None
-                and (self._deleted is None or self._bcast_deleted)):
-            # per-segment BMW collector: the whole θ/split/prune pipeline
-            # runs in numpy inside ONE scan pass (see
-            # _blockmax_collector_topk) instead of the 4-5 chained jobs
-            # below — 27.7s → kernel-bound at 10M docs, and still faster
-            # at 5k (one job beats five). The multi-job path remains for
-            # prune_counter introspection and shuffle-scale tombstones.
+        if self._deleted is None or self._bcast_deleted:
             return self._blockmax_collector_topk(infos, field, stats, k)
-
-        # --- pass 1: θ from the strongest term, scored exactly
-        driver_term, driver_boost, _ = max(infos, key=lambda x: x[2])
-        first = (
-            self._live(self._frame(TermQuery(field, driver_term),
-                                   np.float32(driver_boost), True, stats))
-            .orderBy(F.desc("score"), "seg", "doc").limit(k).collect()
-        )
-        theta = float(first[-1]["score"]) if len(first) == k else 0.0
-        thr = theta * (1.0 - _UB_SLACK) - 1e-9
-
-        # --- MaxScore split: maximal ascending-ub prefix below θ
-        by_ub = sorted(infos, key=lambda x: x[2])
-        nonessential, acc = [], 0.0
-        for info in by_ub:
-            if theta > 0 and acc + info[2] < thr:
-                nonessential.append(info)
-                acc += info[2]
-            else:
-                break
-        ness_terms = {t for t, _, _ in nonessential}
-        essential = [i for i in infos if i[0] not in ness_terms]
-        ub_n = sum(ub for _, _, ub in nonessential)
-        total_ub = sum(ub for _, _, ub in infos)
-
-        # --- block upper-bound expression (metadata only, no decode)
-        if lucene:
-            cache_arr = F.array(*[F.lit(float(c)) for c in cache])
-            denom_col = F.element_at(cache_arr, F.col("max_norm_byte") + 1)
-        else:
-            denom_col = F.lit(k1_) * (
-                F.lit(1.0 - b_) + F.lit(b_) * F.col("min_dl") / F.lit(avgdl64))
-
-        def block_keep(sub_infos):
-            keep = F.lit(False)
-            for t, b, ub in sub_infos:
-                wk32, idf_64, b64 = self._term_weights(field, t, b, stats)
-                scale = float(wk32) if lucene else idf_64 * b64 * kp1
-                block_ub = (F.lit(scale) * F.col("max_tf")
-                            / (F.col("max_tf") + denom_col))
-                keep = keep | ((F.col("term") == t)
-                               & (block_ub + F.lit(total_ub - ub) >= F.lit(thr)))
-            return keep
-
-        scan_cols = ["field", "term", "seg", "num_docs", "docs_bin",
-                     "tfs_bin", "norms_bin", "dls_bin"]
-        ess_scan = self._postings.filter(
-            (F.col("field") == field)
-            & F.col("term").isin([t for t, _, _ in essential]))
-        ess_keep = block_keep(essential)
-        ess_specs = [(field, t, "", b, True) for t, b, _ in essential]
-        ess_decode = self._batch_term_frame(
-            ess_specs, stats, with_tag=False,
-            scan=ess_scan.filter(ess_keep).select(*scan_cols))
-        partial = (
-            ess_decode.groupBy("seg", "doc")
-            .agg(F.sum("score").alias("score"))
-        )
-
-        if prune_counter is not None:
-            all_scan = self._postings.filter(
-                (F.col("field") == field)
-                & F.col("term").isin([t for t, _, _ in infos]))
-            prune_counter["theta"] = theta
-            prune_counter["n_essential"] = len(essential)
-            prune_counter["n_nonessential"] = len(nonessential)
-            prune_counter["total_blocks"] = all_scan.count()
-            prune_counter["kept_blocks"] = ess_scan.filter(ess_keep).count()
-
-        if not nonessential:
-            scored = partial
-        else:
-            partial = partial.persist()
-            candidates = partial.filter(F.col("score") + F.lit(ub_n) >= F.lit(thr))
-            # candidate doc-id BUCKETS per segment (16k docs/bucket ≈ 128
-            # blocks): a non-essential block decodes only if it overlaps a
-            # bucket that still holds a candidate — far tighter than the
-            # per-segment [min, max] span when candidates are sparse. The
-            # collect is bounded: above _MAX_CAND_BUCKETS we degrade to the
-            # coarse per-segment range (metadata-sized either way).
-            bshift = 14
-            brows = (candidates
-                     .groupBy("seg", F.shiftright(F.col("doc"), bshift)
-                              .alias("b"))
-                     .count().limit(_MAX_CAND_BUCKETS + 1).collect())
-            if len(brows) <= _MAX_CAND_BUCKETS:
-                bset = {(int(r["seg"]), int(r["b"])) for r in brows}
-                by_seg: dict[int, list[int]] = {}
-                for sg, bb in bset:
-                    by_seg.setdefault(sg, []).append(bb)
-                rng = F.lit(False)
-                fb = F.shiftright(F.col("first_doc"), bshift)
-                lb = F.shiftright(F.col("last_doc"), bshift)
-                for sg, bs in by_seg.items():
-                    lo, hi = (min(bs) << bshift), ((max(bs) + 1) << bshift) - 1
-                    # narrow blocks (≤2 buckets) are bucket-checked exactly;
-                    # wide blocks fall back to the conservative seg range —
-                    # both keep every block that could hold a candidate
-                    narrow_hit = ((lb - fb <= 1)
-                                  & (fb.isin(bs) | lb.isin(bs)))
-                    wide_hit = ((lb - fb > 1)
-                                & (F.col("last_doc") >= lo)
-                                & (F.col("first_doc") <= hi))
-                    rng = rng | ((F.col("seg") == sg)
-                                 & (narrow_hit | wide_hit))
-                ness_scan = self._postings.filter(
-                    (F.col("field") == field)
-                    & F.col("term").isin(list(ness_terms)) & rng
-                ).select(*scan_cols)
-                ness_specs = [(field, t, "", b, True)
-                              for t, b, _ in nonessential]
-                ness_decode = self._batch_term_frame(
-                    ness_specs, stats, with_tag=False, scan=ness_scan)
-                ness_sum = ness_decode.groupBy("seg", "doc").agg(
-                    F.sum("score").alias("_ns"))
-                if prune_counter is not None:
-                    prune_counter["kept_blocks"] += ness_scan.count()
-                scored = (
-                    candidates.join(ness_sum, ["seg", "doc"], "left")
-                    .select("seg", "doc",
-                            (F.col("score")
-                             + F.coalesce(F.col("_ns"), F.lit(0.0))
-                             ).alias("score"))
-                )
-            else:
-                # DEGENERATE pruning: candidates cover (nearly) the whole
-                # doc-id space — measured at 500k-1M Zipf docs, the coarse
-                # per-segment ranges kept 4779/4780 blocks while still
-                # paying the candidate-join machinery (3.5x a plain
-                # disjunction). When block filtering cannot save IO, score
-                # the non-essential terms EXHAUSTIVELY in one scan and sum
-                # with the essential partials — exact disjunction scores
-                # for every matching doc, so rank-identity is trivially
-                # preserved (scoring a superset never demotes a true
-                # top-k doc).
-                ness_specs = [(field, t, "", b, True)
-                              for t, b, _ in nonessential]
-                ness_decode = self._batch_term_frame(
-                    ness_specs, stats, with_tag=False)
-                if prune_counter is not None:
-                    prune_counter["degenerate"] = True
-                    prune_counter["kept_blocks"] += self._postings.filter(
-                        (F.col("field") == field)
-                        & F.col("term").isin(list(ness_terms))).count()
-                scored = (
-                    partial.unionByName(
-                        ness_decode.groupBy("seg", "doc").agg(
-                            F.sum("score").alias("score")))
-                    .groupBy("seg", "doc").agg(F.sum("score").alias("score"))
-                )
-
-        topk = (
-            self._live(scored.select("seg", "doc",
-                                     F.col("score").cast(self._score_t)
-                                     .alias("score")))
-            .orderBy(F.desc("score"), "seg", "doc").limit(k)
-        )
-        return (
-            self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
-            .orderBy(F.desc("score"), "seg", "doc")
-        )
+        return self.search(BooleanQuery.build(
+            [], [TermQuery(field, t, b) for t, b in infos], [], []), k)
 
     def _blockmax_collector_topk(self, infos: list[tuple], field: str,
                                  stats: dict, k: int) -> DataFrame:
-        """Zero-shuffle BMW top-k — search_blockmax's θ/MaxScore-split/
-        block-prune pipeline collapsed into the per-segment collector
-        kernel (one mapInPandas over the term-pruned scan, ≤k rows per
-        segment out), the way Lucene runs WAND per leaf inside one
-        collect pass rather than as separate jobs.
-
-        Per segment (= one scan partition, pinned by the searcher's
-        one-file-per-partition read):
-
-        1. θ_s: decode only the segment's strongest term (max block-ub
-           upper bound), score it exactly, mask tombstones, take the
-           k-th score. ≥k live docs have total ≥ θ_s (driver score is a
-           lower bound of the total — BM25 contributions are
-           non-negative), so θ_s lower-bounds the segment's true k-th
-           total and pruning against it keeps the segment top-k intact;
-           the global top-k is a subset of the per-segment top-k union.
-        2. MaxScore split on SEGMENT-LOCAL term bounds (max of the
-           term's block ubs in this segment — tighter than the global
-           bound the multi-job path uses).
-        3. Essential terms: decode only blocks with
-           ``block_ub + Σ_{t'≠t} tub(t') ≥ thr`` — pure arithmetic over
-           the (max_tf, max_norm_byte, min_dl) block metadata columns;
-           pruned blocks are never varint-decoded.
-        4. Candidates: essential partial + Σ ub(nonessential) ≥ thr.
-        5. Non-essential terms: decode only blocks whose
-           [first_doc, last_doc] holds a candidate (searchsorted), add
-           contributions for candidate docs only.
-
-        θ_s = 0 (fewer than k driver postings) makes thr negative and
-        every test above vacuous — the pass degrades to exhaustive
-        scoring, mirroring the multi-job path's ``theta > 0`` guard.
-        Scores: per-term kernel identical to _collector_topk_frame
-        (float32 in "lucene" mode), per-doc sum in float64, cast to the
-        score type — rank- and score-identical to the exhaustive
-        disjunction (tests/test_blockmax.py runs both routes)."""
-        lucene = self.scoring == "lucene"
-        cache64 = self.cache_f[field].astype(np.float64)
-        avgdl64 = self.avgdl64_f[field]
+        """Zero-shuffle BMW top-k of ``infos`` = (term, boost): one
+        mapInPandas over the term-pruned scan runs _bmw_seg_topk per
+        segment (≤k rows per segment out), the way Lucene runs WAND per
+        leaf inside one collect pass."""
         k1_, b_ = self.sim_f[field]
-        terms = [t for t, _, _ in infos]
+        terms = [t for t, _ in infos]
         ti_of = {t: i for i, t in enumerate(terms)}
-        n_t = len(terms)
-        tw = self._term_weight_table([(field, t, b) for t, b, _ in infos],
+        tw = self._term_weight_table([(field, t, b) for t, b in infos],
                                      stats)
-        coef = tw[4]
-        wk64 = tw[1].astype(np.float64)
-        tomb = self._tomb_by_seg()
-        k_ = int(k)
-        ftype = np.float32 if lucene else np.float64
-        slack = _UB_SLACK
+        bmw = (int(k), ti_of, tw, self.cache_f[field].astype(np.float64),
+               k1_, b_, self.avgdl64_f[field])
 
-        def _decode(g: pd.DataFrame):
-            """(docs, scores) of a row subset."""
-            counts, docs, tfs, aux = _decode_term_rows(g, lucene)
-            ti_el = np.repeat(
-                np.fromiter((ti_of[t] for t in g["term"]),
-                            dtype=np.int64, count=len(g)), counts)
-            return docs, _term_scores(ti_el, tfs, aux, tw)
+        def seg_fn(sub, tomb):
+            return _bmw_seg_topk(sub, tomb, *bmw)
 
-        def fn(batches):
-            # streamed per segment (see _iter_seg_chunks): bounded memory
-            for s, sub in _iter_seg_chunks(batches):
-                tb = tomb.get(int(s))
-                ti_row = np.fromiter(
-                    (ti_of[t] for t in sub["term"]),
-                    dtype=np.int64, count=len(sub))
-                mtf = sub["max_tf"].to_numpy(np.float64)
-                if lucene:
-                    mnb = sub["max_norm_byte"].to_numpy(np.int64)
-                    bub = wk64[ti_row] * mtf / (mtf + cache64[mnb])
-                else:
-                    mdl = sub["min_dl"].to_numpy(np.float64)
-                    bub = coef[ti_row] * mtf / (
-                        mtf + k1_ * ((1.0 - b_) + b_ * mdl / avgdl64))
-                tub = np.zeros(n_t, dtype=np.float64)
-                np.maximum.at(tub, ti_row, bub)
-                present = np.unique(ti_row)
-                # 1) θ_s from the segment's strongest term
-                drv = int(present[np.lexsort(
-                    (present, -tub[present]))[0]])
-                drv_rows = ti_row == drv
-                d_docs, d_sc = _decode(sub[drv_rows])
-                live = ~_dead_mask(tb, d_docs)
-                live_sc = np.sort(d_sc[live].astype(ftype))
-                theta = float(live_sc[-k_]) if len(live_sc) >= k_ else 0.0
-                thr = theta * (1.0 - slack) - 1e-9
-                # 2) MaxScore split on segment-local bounds
-                order = present[np.lexsort((present, tub[present]))]
-                ness, acc = [], 0.0
-                for ti in order[:-1]:  # strongest term stays essential
-                    if theta > 0 and acc + tub[ti] < thr:
-                        ness.append(int(ti))
-                        acc += tub[ti]
-                    else:
-                        break
-                ness_set = set(ness)
-                ub_n = float(sum(tub[ti] for ti in ness))
-                total_ub = float(tub[present].sum())
-                # 3) essential blocks surviving the metadata bound
-                ess_rows = (~drv_rows & ~np.isin(ti_row, ness)
-                            & (bub + (total_ub - tub[ti_row]) >= thr))
-                docs_parts, sc_parts = [d_docs], [d_sc]
-                if ess_rows.any():
-                    e_docs, e_sc = _decode(sub[ess_rows])
-                    docs_parts.append(e_docs)
-                    sc_parts.append(e_sc)
-                docs_c = np.concatenate(docs_parts)
-                sc_c = np.concatenate(sc_parts)
-                o = np.argsort(docs_c, kind="stable")
-                docs_c, sc_c = docs_c[o], sc_c[o]
-                nb = np.empty(len(docs_c), dtype=bool)
-                nb[0] = True
-                nb[1:] = docs_c[1:] != docs_c[:-1]
-                starts = np.flatnonzero(nb)
-                docs_u = docs_c[starts]
-                sums = np.add.reduceat(sc_c, starts)
-                # 4) candidates; 5) non-essential contributions
-                if ness_set:
-                    cand = sums + ub_n >= thr
-                    docs_u, sums = docs_u[cand], sums[cand]
-                    n_rows = np.isin(ti_row, ness)
-                    if n_rows.any() and len(docs_u):
-                        fd = sub["first_doc"].to_numpy(np.int64)[n_rows]
-                        ld = sub["last_doc"].to_numpy(np.int64)[n_rows]
-                        p = np.searchsorted(docs_u, fd)
-                        hit = (p < len(docs_u)) & (
-                            docs_u[np.minimum(p, len(docs_u) - 1)] <= ld)
-                        keep_idx = np.flatnonzero(n_rows)[hit]
-                        if len(keep_idx):
-                            n_docs, n_sc = _decode(sub.iloc[keep_idx])
-                            pn = np.searchsorted(docs_u, n_docs)
-                            m = (pn < len(docs_u)) & (
-                                docs_u[np.minimum(pn, len(docs_u) - 1)]
-                                == n_docs)
-                            np.add.at(sums, pn[m], n_sc[m])
-                liveu = ~_dead_mask(tb, docs_u)
-                docs_u, sums = docs_u[liveu], sums[liveu]
-                if len(docs_u) == 0:
-                    continue
-                score = sums.astype(ftype)
-                top = np.lexsort((docs_u, -score))[:k_]
-                yield pd.DataFrame({
-                    "seg": np.full(len(top), s, dtype=np.int32),
-                    "doc": docs_u[top],
-                    "score": score[top],
-                })
-
-        scan = self._postings.filter(
-            (F.col("field") == field) & F.col("term").isin(terms)
-        ).select("term", "seg", "num_docs", "docs_bin", "tfs_bin",
-                 "norms_bin", "dls_bin", "max_tf", "max_norm_byte",
-                 "min_dl", "first_doc", "last_doc")
-        frame = self._coalesced(scan).mapInPandas(
-            fn, f"seg int, doc long, score {self._score_t}")
+        frame = self._leaf_scan(
+            [(F.col("field") == field) & F.col("term").isin(terms)],
+            seg_fn, k, _BMW_SCAN_COLS)
         topk = frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
         return (
             self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
@@ -2800,51 +2601,38 @@ class IndexSearcher:
         return (self.scoring == "lucene", wk32, cache, cofs, coef, k1_a,
                 b_a, avg_a)
 
-    def _batch_term_frame(self, specs: list[tuple], stats: dict,
-                          with_tag: bool, scan: DataFrame | None = None) -> DataFrame:
-        """ONE postings scan + ONE Arrow decode stage for many term clauses.
+    def _batch_term_frame(self, specs: list[tuple], stats: dict) -> DataFrame:
+        """ONE postings scan + ONE Arrow decode stage for the term clauses
+        of a boolean that mixes them with other clause kinds.
 
-        ``specs``: (field, term, tag, boost, scored) per clause. Serves
-        the boolean frame's term clauses when the boolean mixes them with
-        other clause kinds, and the block-max multi-job path — the
-        reference's per-clause postings iterators share one index pass here
-        (conjunction_scorer.rs / disjunction_scorer.rs collapse into a
-        single term-pruned columnar scan). Clauses may span fields; each
-        decodes against its own field's norm cache / avgdl.
-
-        Scale shape: the Python decode emits ONE row per (field, term)
-        posting — ``(seg, doc, kid, tff, denom)``, all fixed-width ints/
-        floats — and the per-CLAUSE expansion (a term referenced by many
-        clauses) happens JVM-side against a clause table keyed by
-        ``kid``, so the hot columns stay in whole-stage codegen.  Score
-        arithmetic runs in the SAME IEEE op order as the row-at-a-time
-        path (f32: ``(wk*tff)/(tff+denom)``; f64: ``(coef*tff)/denom``),
-        so scores stay bit-identical (asserted by test_engine_parity).
-        ``with_tag`` adds the clause tag column ``_ct`` (the boolean
-        role m/s/f/n).
-        """
-        lucene, wk32, cache, cofs, coef, k1_a, b_a, avg_a = (
-            self._term_weight_table(
-                [(f_, t, boost) for f_, t, _, boost, _ in specs], stats))
-        # clause table rows: one per spec, keyed by the (field, term) key
-        # id the decode emits.  _w folds every per-clause scalar the score
-        # needs (f32 wk = idf*boost*(k1+1); f64 coef = idf*boost*(k1+1)).
-        kid_of: dict[tuple[str, str], int] = {}
-        key_ci: list[int] = []  # a clause of each key: its field constants
-        cl_rows = []
-        for ci, (f_, t, tag, _, scored) in enumerate(specs):
-            if (f_, t) not in kid_of:
-                kid_of[(f_, t)] = len(key_ci)
-                key_ci.append(ci)
-            w = float(wk32[ci]) if lucene else float(coef[ci])
-            cl_rows.append((kid_of[(f_, t)], tag, w, bool(scored)))
-        ci_of_key = np.asarray(key_ci, dtype=np.int64)
+        ``specs``: (field, term, role, boost) per clause, ``role`` its
+        _ROLE_CODE. The reference's per-clause postings iterators share
+        one index pass here (conjunction_scorer.rs / disjunction_scorer.rs
+        collapse into a single term-pruned columnar scan). Clauses may
+        span fields; each scores against its own field's norm cache /
+        avgdl. The worker decodes, expands and scores through the term
+        collectors' helpers (_decode_term_rows, _expand_clauses,
+        _term_scores) and emits ``(seg, doc, score, _ct)``: one row per
+        posting and clause, so a (field, term) referenced by several
+        clauses emits one row per clause, in clause order. Filter and
+        must-not rows carry a score the boolean sum ignores."""
+        # clause table ordered by (field, term) key, so a scan row of a
+        # key expands to a contiguous run of clause numbers
+        by_key: dict[tuple[str, str], list] = {}
+        for f_, t, role, boost in specs:
+            by_key.setdefault((f_, t), []).append((role, boost))
+        kid_of = {key: i for i, key in enumerate(by_key)}
+        cl_counts = np.asarray([len(c) for c in by_key.values()],
+                               dtype=np.int64)
+        cl_starts = np.cumsum(cl_counts) - cl_counts
+        cl = [(key, c) for key, cs in by_key.items() for c in cs]
+        tw = self._term_weight_table(
+            [(f_, t, boost) for (f_, t), (_, boost) in cl], stats)
+        roles = np.asarray([role for _, (role, _) in cl], dtype=np.int32)
+        lucene = tw[0]
+        ftype = np.float32 if lucene else np.float64
 
         def fn(batches):
-            # whole-batch decode: every block of the Arrow batch is
-            # unpacked in a few numpy passes (_decode_term_rows);
-            # emission is one row per posting with fixed-width columns
-            # only — no per-block Python loop, no per-clause duplication
             for pdf in batches:
                 n_rows = len(pdf)
                 if n_rows == 0:
@@ -2854,96 +2642,22 @@ class IndexSearcher:
                     (kid_of[(f_, t)] for f_, t
                      in zip(pdf["field"].tolist(), pdf["term"].tolist())),
                     dtype=np.int64, count=n_rows)
-                kid_el = np.repeat(row_kid, counts)
-                ci = ci_of_key[kid_el]
-                out = {
-                    "seg": np.repeat(pdf["seg"].to_numpy(np.int32), counts),
-                    "doc": docs,
-                    "kid": kid_el.astype(np.int32),
-                }
-                if lucene:
-                    out["tff"] = tfs.astype(np.float32)
-                    out["denom"] = cache[aux + cofs[ci]]
-                else:
-                    tff = tfs.astype(np.float64)
-                    out["tff"] = tff
-                    out["denom"] = tff + k1_a[ci] * (
-                        (1.0 - b_a[ci])
-                        + b_a[ci] * aux.astype(np.float64) / avg_a[ci])
-                yield pd.DataFrame(out)
+                idx, ce = _expand_clauses(row_kid, counts, cl_counts,
+                                          cl_starts)
+                yield pd.DataFrame({
+                    "seg": np.repeat(pdf["seg"].to_numpy(np.int32),
+                                     counts)[idx],
+                    "doc": docs[idx],
+                    "score": _term_scores(ce, tfs[idx], aux[idx],
+                                          tw).astype(ftype),
+                    "_ct": roles[ce],
+                })
 
-        if scan is None:
-            scan = self._postings.filter(self._terms_cond(kid_of)).select(
-                "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
-                "norms_bin", "dls_bin")
-        num_t = "float" if lucene else "double"
-        decoded = scan.mapInPandas(
-            fn, f"seg int, doc long, kid int, tff {num_t}, denom {num_t}")
-
-        # clause-table attach.  Small tables (every interactive query)
-        # inline as a LITERAL array expression indexed by kid — pure
-        # whole-stage-codegen projection, no extra Spark job.
-        # createDataFrame(local rows) parallelizes through an RDD, so the
-        # broadcast-join form costs one defaultParallelism-task
-        # materialization job PER frame (round-4 sf0.1 regression:
-        # querystring builds two frames = two extra 32-task jobs, +0.5s
-        # fixed).  Above the cap the join form wins (a literal array that
-        # big would bloat the plan), so it remains the fallback.
-        if len(cl_rows) <= self._CL_LITERAL_MAX:
-            per_kid: list[list] = [[] for _ in key_ci]
-            for row in cl_rows:
-                per_kid[row[0]].append(row)
-
-            def _cl_struct(row):
-                # one SQL literal per clause — the whole nested array
-                # below ships as ONE expression string (a single py4j
-                # round-trip; per-clause F.struct/F.lit calls measurably
-                # dominated plan-build time).  repr(float) round-trips
-                # exactly through DOUBLE, and the terminal cast restores
-                # the f32 the join form carried.
-                _kid, ct, w, sc = row
-                ct_sql = "'" + str(ct).replace("'", "''") + "'"
-                return (f"named_struct('_ct',{ct_sql},"
-                        f"'_w',CAST({float(w)!r} AS {num_t}),"
-                        f"'_scored',{'true' if sc else 'false'})")
-
-            arr_sql = "array(" + ",".join(
-                "array(" + ",".join(_cl_struct(r) for r in rows_k) + ")"
-                for rows_k in per_kid) + ")"
-            cl = F.element_at(F.expr(arr_sql), F.col("kid") + F.lit(1))
-            if all(len(rows_k) == 1 for rows_k in per_kid):
-                base = decoded.select(
-                    "seg", "doc", "tff", "denom", cl[0].alias("_cl"))
-            else:
-                base = decoded.select(
-                    "seg", "doc", "tff", "denom",
-                    F.explode(cl).alias("_cl"))
-            w_c, sc_c = F.col("_cl._w"), F.col("_cl._scored")
-            tag_col = F.col("_cl._ct").alias("_ct")
-        else:
-            cl_df = self.spark.createDataFrame(
-                cl_rows, f"kid int, _ct string, _w {num_t}, _scored boolean")
-            base = decoded.join(F.broadcast(cl_df), "kid")
-            w_c, sc_c = F.col("_w"), F.col("_scored")
-            tag_col = F.col("_ct")
-        # f32/f64 score in the row-at-a-time op order, inside codegen.
-        # Spark widens float arithmetic to double, so the f32 path casts
-        # back to float after EVERY op: double-rounding a single +,*,/ of
-        # exact f32 operands is innocuous at 53>=2*24+2 bits of interim
-        # precision, so each step is bit-identical to a native f32 op
-        # (asserted by test_engine_parity).
-        if lucene:
-            num = (w_c * F.col("tff")).cast("float")
-            den = (F.col("tff") + F.col("denom")).cast("float")
-            expr = (num / den).cast("float")
-        else:
-            expr = (w_c * F.col("tff")) / F.col("denom")
-        score = F.when(sc_c, expr).otherwise(
-            F.lit(0.0).cast(num_t)).alias("score")
-        cols = ["seg", "doc", score]
-        if with_tag:
-            cols.append(tag_col)
-        return base.select(*cols)
+        scan = self._postings.filter(self._terms_cond(by_key)).select(
+            "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
+            "norms_bin", "dls_bin")
+        return scan.mapInPandas(
+            fn, f"seg int, doc long, score {self._score_t}, _ct int")
 
     def _positional_weight(self, field: str, terms: list[str],
                            boost: np.float32, stats: dict):
@@ -2957,12 +2671,13 @@ class IndexSearcher:
                           * (np.float32(k1_) + np.float32(1.0)))
         return wk32, (idf64_total * float(boost)) * _kp1_64(k1_)
 
-    def _leaf_scan(self, conds, seg_fn, k: int | None) -> DataFrame:
-        """One term-pruned positional postings scan (``conds`` OR-ed)
-        streamed per segment through ``seg_fn(rows, tomb)`` → (docs,
-        scores). With ``k`` the segment's tombstones are passed in (root
-        leaves run only under the broadcast gate); nested leaves get
-        None and are live-masked by their caller."""
+    def _leaf_scan(self, conds, seg_fn, k: int | None,
+                   cols=_LEAF_SCAN_COLS) -> DataFrame:
+        """One term-pruned postings scan (``conds`` OR-ed, ``cols``
+        read) streamed per segment through ``seg_fn(rows, tomb)`` →
+        (docs, scores). With ``k`` the segment's tombstones are passed in
+        (root leaves run only under the broadcast gate); nested leaves
+        get None and are live-masked by their caller."""
         tomb = self._tomb_by_seg() if k is not None else {}
 
         def fn(batches):
@@ -2977,10 +2692,8 @@ class IndexSearcher:
                         "score": sv,
                     })
 
-        scan = self._postings.filter(reduce(lambda a, b: a | b, conds))
-        scan = scan.select("term", "seg", "block_id", "num_docs",
-                           "docs_bin", "tfs_bin", "norms_bin", "dls_bin",
-                           "pos_bin")
+        scan = self._postings.filter(
+            reduce(lambda a, b: a | b, conds)).select(*cols)
         return self._coalesced(scan).mapInPandas(fn, self._score_schema)
 
     def _phrase_leaf(self, q: PhraseQuery, boost: np.float32,
@@ -3153,39 +2866,37 @@ class IndexSearcher:
         term_specs: list[tuple] = []
         tagged: list[DataFrame] = []
 
-        def add(subs, tag, scored, sub_boost):
+        def add(subs, role, scored, sub_boost):
+            ct = _ROLE_CODE[role]
             for sub in subs:
                 if isinstance(sub, TermQuery):
                     eff = (float(np.float32(sub_boost * np.float32(sub.boost)))
                            if scored else 1.0)
-                    term_specs.append((sub.field, sub.term, tag, eff, scored))
+                    term_specs.append((sub.field, sub.term, ct, eff))
                 elif scored:
                     tagged.append(self._frame(sub, sub_boost, needs_scores, stats)
-                                  .withColumn("_ct", F.lit(tag)))
+                                  .withColumn("_ct", F.lit(ct)))
                 else:
                     tagged.append(
                         self._frame(sub, np.float32(1.0), False, stats)
                         .select("seg", "doc",
                                 F.lit(0.0).cast(self._score_t).alias("score"))
-                        .withColumn("_ct", F.lit(tag)))
+                        .withColumn("_ct", F.lit(ct)))
 
         add(q.musts, "m", True, boost)
         add(q.shoulds, "s", True, boost)
         add(q.filters, "f", False, np.float32(1.0))
         add(q.must_nots, "n", False, np.float32(1.0))
         if term_specs:
-            tagged.append(
-                self._batch_term_frame(term_specs, stats, with_tag=True)
-                .select("seg", "doc", "score", "_ct"))
+            tagged.append(self._batch_term_frame(term_specs, stats))
 
         unioned = reduce(DataFrame.unionByName, tagged)
+        ct = F.col("_ct")
         agg = unioned.groupBy("seg", "doc").agg(
-            F.sum(F.when(F.col("_ct").isin("m", "s"), F.col("score"))
+            F.sum(F.when(ct <= _ROLE_CODE["s"], F.col("score"))
                   .otherwise(F.lit(0.0))).alias("_score"),
-            F.count(F.when(F.col("_ct") == "m", 1)).alias("_nm"),
-            F.count(F.when(F.col("_ct") == "s", 1)).alias("_ns"),
-            F.count(F.when(F.col("_ct") == "f", 1)).alias("_nf"),
-            F.count(F.when(F.col("_ct") == "n", 1)).alias("_nn"),
+            *[F.count(F.when(ct == code, 1)).alias("_n" + role)
+              for role, code in _ROLE_CODE.items()],
         )
         cond = (
             (F.col("_nm") == len(q.musts))

@@ -58,73 +58,71 @@ def test_blockmax_equals_exhaustive(spark, corpus, index_dir, scoring):
                 [r.score for r in exhaustive], rel=1e-6), (terms, k, scoring)
 
 
-def test_blockmax_actually_prunes(spark, index_dir, corpus):
+def test_blockmax_actually_prunes(spark, index_dir, corpus, monkeypatch):
     """For a skewed disjunction (one rare high-idf term + dense stopword-ish
-    terms) the metadata filter must discard some blocks — pruning is the
-    point of BMW, not just matching the exhaustive scorer."""
+    terms) the per-segment kernel must skip some block decodes — pruning
+    is the point of BMW, not just matching the exhaustive scorer. The
+    kernel runs in-process on each segment's scan rows, with the decode
+    helper wrapped to count the rows it decodes."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    import rucene_spark.search as search_mod
+
     s = IndexSearcher(spark, index_dir, scoring="lucene")
     dfs = term_df_spectrum(corpus)
     plain = [t for t in dfs.index if t.startswith("t0")]
     # rare driver term → high theta; dense terms have many low-ub blocks
     terms = [plain[-1], plain[0], plain[1]]
-    ctr: dict = {}
-    s.search_blockmax(terms, 1, prune_counter=ctr).collect()
-    assert ctr["total_blocks"] > 0
-    assert ctr["theta"] > 0
-    assert ctr["kept_blocks"] < ctr["total_blocks"], ctr
+    stats = s._stats_for([("text", t) for t in terms])
+    tw = s._term_weight_table([("text", t, 1.0) for t in terms], stats)
+    ti_of = {t: i for i, t in enumerate(terms)}
+    k1_, b_ = s.sim_f["text"]
+    rows = s._postings.filter(
+        (F.col("field") == "text") & F.col("term").isin(terms)
+    ).select(*search_mod._BMW_SCAN_COLS).toPandas()
+
+    decoded = [0]
+    real = search_mod._decode_term_rows
+
+    def counting(pdf, lucene):
+        decoded[0] += len(pdf)
+        return real(pdf, lucene)
+
+    monkeypatch.setattr(search_mod, "_decode_term_rows", counting)
+    best = []
+    for _, sub in rows.groupby("seg", sort=True):
+        _, scores = search_mod._bmw_seg_topk(
+            sub.reset_index(drop=True), None, 1, ti_of, tw,
+            s.cache_f["text"].astype(np.float64), k1_, b_,
+            s.avgdl64_f["text"])
+        best.extend(scores)
+    assert 0 < decoded[0] < len(rows), (decoded[0], len(rows))
+    # the per-segment winners still hold the true top-1
+    top = s.search_blockmax(terms, 1).collect()
+    assert max(best) == top[0]["score"]
 
 
-def test_blockmax_degenerate_fallback_is_exact(spark, corpus, index_dir,
-                                               monkeypatch):
-    """When the candidate-bucket collect overflows (_MAX_CAND_BUCKETS),
-    the degenerate fallback scores non-essential terms exhaustively in
-    one scan — results must stay rank- and score-identical."""
-    import rucene_spark.search as search_mod
-
-    monkeypatch.setattr(search_mod, "_MAX_CAND_BUCKETS", 0)
+def test_blockmax_rejects_duplicate_terms(spark, corpus, index_dir):
+    """The kernel keys clauses by term, so a repeated term would fold
+    into one clause and score differently from the exhaustive
+    disjunction (which scores it twice)."""
     s = IndexSearcher(spark, index_dir, scoring="lucene")
-    for terms in _term_sets(corpus):
-        exhaustive = s.search(
-            BooleanQuery.build([], [TermQuery("text", t) for t in terms],
-                               [], []),
-            10,
-        ).select("seg", "doc", "score").collect()
-        ctr: dict = {}
-        pruned = s.search_blockmax(terms, 10, prune_counter=ctr).select(
-            "seg", "doc", "score").collect()
-        assert [(r.seg, r.doc) for r in pruned] == [
-            (r.seg, r.doc) for r in exhaustive], terms
-        assert [r.score for r in pruned] == pytest.approx(
-            [r.score for r in exhaustive], rel=1e-6), terms
-        # with a 0 cap, any multi-term query with candidates must degrade
-        if ctr.get("n_nonessential", 0) and ctr.get("theta", 0) > 0:
-            assert ctr.get("degenerate"), (terms, ctr)
+    a, b = _term_sets(corpus)[0]
+    with pytest.raises(ValueError, match="duplicate"):
+        s.search_blockmax([a, a, b], 3)
 
 
-def test_blockmax_collector_matches_multijob(spark, corpus, index_dir):
-    """The per-segment BMW collector (the default route) must be rank- and score-identical to the multi-job BMW path
-    on every term mix — and both must survive deletions."""
+def test_blockmax_rejects_boosts_length_mismatch(spark, corpus, index_dir):
     s = IndexSearcher(spark, index_dir, scoring="lucene")
-    for terms in _term_sets(corpus):
-        kernel = s.search_blockmax(terms, 10).select(
-            "seg", "doc", "score").collect()
-        # a prune_counter routes to the multi-job path (it reports there)
-        multijob = s.search_blockmax(terms, 10, prune_counter={}).select(
-            "seg", "doc", "score").collect()
-        assert [(r.seg, r.doc) for r in kernel] == [
-            (r.seg, r.doc) for r in multijob], terms
-        assert [r.score for r in kernel] == pytest.approx(
-            [r.score for r in multijob], rel=1e-6), terms
+    a, b = _term_sets(corpus)[0]
+    with pytest.raises(ValueError, match="boosts"):
+        s.search_blockmax([a, b], 3, boosts=[2.0])
 
 
-def test_blockmax_collector_with_tombstones(spark, corpus, tmp_path,
-                                            monkeypatch):
-    """Deleted docs must neither inflate the collector's segment-local θ
-    nor appear in its results."""
-    from rucene_spark.build import IndexWriter
+def _check_tombstones(spark, corpus, d, monkeypatch, cap):
     from rucene_spark.merge import delete_by_keys
 
-    d = str(tmp_path / "bmw_tomb")
     IndexWriter(spark, d, n_segments=4).build(
         spark.createDataFrame(corpus[["url", "text", "lang"]]))
     dfs = term_df_spectrum(corpus)
@@ -134,7 +132,10 @@ def test_blockmax_collector_with_tombstones(spark, corpus, tmp_path,
     s0 = IndexSearcher(spark, d, scoring="lucene")
     top = s0.search_blockmax(terms, 3).collect()
     delete_by_keys(d, [r["url"] for r in top])
+    if cap is not None:
+        monkeypatch.setenv("RUCENE_TOMB_BCAST_CAP", cap)
     s = IndexSearcher(spark, d, scoring="lucene")
+    assert s._bcast_deleted == (cap is None)
     gone = {(r.seg, r.doc) for r in top}
     kernel = s.search_blockmax(terms, 10).select(
         "seg", "doc", "score").collect()
@@ -147,3 +148,18 @@ def test_blockmax_collector_with_tombstones(spark, corpus, tmp_path,
         (r.seg, r.doc) for r in exhaustive]
     assert [r.score for r in kernel] == pytest.approx(
         [r.score for r in exhaustive], rel=1e-6)
+
+
+def test_blockmax_collector_with_tombstones(spark, corpus, tmp_path,
+                                            monkeypatch):
+    """Deleted docs must neither inflate the collector's segment-local θ
+    nor appear in its results."""
+    _check_tombstones(spark, corpus, str(tmp_path / "bmw_tomb"),
+                      monkeypatch, None)
+
+
+def test_blockmax_above_tomb_cap(spark, corpus, tmp_path, monkeypatch):
+    """Above the tombstone broadcast cap (RUCENE_TOMB_BCAST_CAP=0) the
+    exhaustive disjunction serves the same top-k, without deleted docs."""
+    _check_tombstones(spark, corpus, str(tmp_path / "bmw_tomb"),
+                      monkeypatch, "0")

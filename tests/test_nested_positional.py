@@ -242,6 +242,28 @@ def test_nested_positional_matches_oracle(spark, corpus, index_dir,
         "fixture phrases must match in most roles"
 
 
+def test_term_in_two_clauses_beside_phrase_matches_oracle(
+        spark, corpus, index_dir, oracle_index):
+    """A boolean mixing a phrase with term clauses, one term in both a
+    must and a should clause: the term clauses are scored in their scan
+    task and the shared term emits one row per clause, so it counts as
+    two clauses and adds its score twice, like the oracle's."""
+    toks = collections.Counter(
+        t for text in corpus["text"] for t in text.split(" "))
+    mid = TermQuery("text", toks.most_common(40)[-1][0])
+    other = TermQuery("text", toks.most_common(3)[-1][0], 1.5)
+    leaf = _leaves(corpus)["sloppy"]
+    s = IndexSearcher(spark, index_dir, scoring="lucene")
+    orc = _Oracle(oracle_index, precise=False)
+    for q in (BooleanQuery.build([mid, leaf], [mid, other]),
+              BooleanQuery.build([mid], [leaf, mid, other])):
+        want = [(key, _bits(sc, "lucene")) for key, sc, _ in orc.search(q, K)]
+        got = [(r["url"], _bits(r["score"], "lucene"))
+               for r in s.search(q, K).collect()]
+        assert got and got == want, repr(q)
+        assert s.count(q) == orc.count(q), repr(q)
+
+
 @pytest.fixture(scope="module")
 def tombstoned(spark, corpus, index_dir, tmp_path_factory):
     """A copy of the index with the top hits of every leaf deleted (so the

@@ -9,7 +9,7 @@
 * a nested phrase shuffles no position arrays;
 * a nested boolean of terms reduces in its scan task (no (seg, doc)
   shuffle);
-* block-max pass-2 pushes the metadata block filter into the scan.
+* the block-max collector's scan pushes its term filter.
 """
 
 import pytest
@@ -90,14 +90,12 @@ def test_nested_term_boolean_shuffles_no_seg_doc(searcher):
     assert "Exchange hashpartitioning(seg" not in plan, plan
 
 
-def test_blockmax_pass2_filter_reaches_scan(searcher):
-    ctr: dict = {}
-    out = searcher.search_blockmax(["t000000", "t000001"], 5,
-                                   prune_counter=ctr)
-    out.collect()
-    # the metadata-only bound uses stored per-block columns; the term IN
-    # filter must still be pushed on the essential scan
-    assert ctr["total_blocks"] >= ctr["kept_blocks"]
+def test_blockmax_scan_pushes_in_filter(searcher):
+    """The BMW collector's postings scan pushes the term IN filter into
+    the Parquet reader (block pruning itself runs in the kernel)."""
+    out = searcher.search_blockmax(["t000000", "t000001"], 5)
+    plan = _optimized(out)
+    assert "PushedFilters" in plan and "In(term" in plan
 
 
 def test_tokenizer_stage_is_single_shuffle(spark, tmp_path_factory):
