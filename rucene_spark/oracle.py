@@ -400,6 +400,7 @@ class OracleSearcher:
                 total += m.scores[d]
             total += sum(matched)
             # f32 at the node boundary: BooleanScorer.score() -> f32
-            # (module docstring; engine _boolean_frame casts the same way)
+            # (module docstring; the engine's plan evaluator, _eval_node,
+            # rounds every node the same way)
             out[d] = float(np.float32(total))
         return _Matches(out)

@@ -5,30 +5,36 @@ algebra on ``(seg, doc)``:
 
 * postings scan      → Parquet scan of ``postings/`` with ``term`` pushdown
   (the blocktree seek becomes row-group pruning on the sorted term column);
-* TermScorer         → mapInPandas block decode + vectorized f32 BM25;
-* Conjunction/DisjunctionSum/ReqNot scorers → must/should/filter/not
-  counts + min_should_match (disjunction_scorer.rs:24-104,
-  req_not_scorer.rs:21) over each (seg, doc): for term, boolean-of-term
-  and term-dismax queries a numpy reduction inside the scan task (the
-  per-segment term collector, ``_collector_topk_frame``); for booleans
-  mixing other clause kinds a groupBy(seg, doc) over the clauses'
-  frames, the term clauses decoded and scored by the same term kernel
-  in their scan task (``_batch_term_frame``);
-* Exact/SloppyPhraseScorer, span scorers → one per-segment leaf
-  (``_phrase_leaf`` / ``_span_leaf``): the doc-level conjunction runs in
-  numpy inside the scan task, then the shared phrase/span kernels verify
-  positions on the candidates only (two-phase iteration: cheap
-  conjunction first, expensive position check after —
-  search/mod.rs:127-155). A root leaf keeps its per-segment top-k; a
-  nested one emits every verified (seg, doc, score) row;
+* scorer tree        → one per-segment plan (``_postings_frame``). Every
+  query tree whose leaves are term, phrase and span queries — under
+  boolean (must/should/filter/must_not, msm), dismax, boost,
+  constant-score, min-score and boosting nodes at any depth — compiles
+  into a plan (``_compile``) that runs in ONE term-pruned scan task per
+  segment with no shuffle, the way the reference drives one scorer
+  tree per leaf reader (boolean_query.rs:195-279,
+  conjunction_scorer.rs:20-127). Per segment the term leaves (the
+  TermScorer) decode their rows once and score with vectorized BM25;
+  the phrase and span leaves (Exact/SloppyPhraseScorer, span scorers)
+  run the doc-level conjunction in numpy, then the shared phrase/span
+  kernels verify positions on the candidates only (two-phase
+  iteration, search/mod.rs:127-155); the Conjunction/DisjunctionSum/
+  ReqNot/DisjunctionMax scorers become numpy set operations over
+  doc-sorted arrays (``_eval_node``, the oracle's arithmetic). A root
+  masks tombstones and keeps its per-segment top-k; nested use emits
+  every matching (seg, doc, score) row;
+* trees with a docmeta-backed leaf (range, exists, match-all and
+  FilterQuery predicates) → their postings-only subtrees run as plans;
+  booleans combine their clauses with a groupBy(seg, doc), dismax with a
+  union + groupBy, BoostingQuery with a left join;
 * TopDocsCollector   → ``ORDER BY score DESC, seg, doc LIMIT k``
   (TakeOrderedAndProject = per-partition heap + merge, top_docs.rs:28-172).
 
 Scoring modes:
 
 * ``lucene``  — float32, byte315 norms, reproduces the reference kernel
-  (rank-identical to oracle.py); clause sums accumulate in f64 and cast to
-  f32 once (same documented divergence as the oracle).
+  (rank-identical to oracle.py); clause sums accumulate in f64 within a
+  node and round to f32 at every node boundary (same documented
+  divergence as the oracle).
 * ``precise`` — float64, exact field lengths; every formula is
   ANSI-SQL-expressible, which is what the DuckDB correctness gate checks.
 
@@ -39,10 +45,12 @@ memoized per searcher. All transcendentals (ln, the norm cache) are
 computed driver-side in numpy and shipped as literals/closures, so executor
 math is pure f32/f64 arithmetic.
 
-Multi-term queries read the postings table ONCE (``term IN (...)`` pushed
-to Parquet) and decode every clause in a single Arrow stage — the
-scale-critical property that per-term scans would lose at wide boolean
-queries.
+A plan reads the postings table ONCE (``term IN (...)`` pushed to
+Parquet, ``pos_bin`` read only when a phrase or span leaf needs it) and
+decodes every term clause in a single Arrow stage — the scale-critical
+property that per-term scans would lose at wide boolean queries.
+``search_many`` runs every postings-only query of a batch as outputs of
+one plan set.
 
 ``search_blockmax`` is the BMW (block-max WAND) serving path the north
 rule adds on top of the reference (SURVEY.md §4.3), one per-segment
@@ -92,10 +100,16 @@ from .query import (
     FilterQuery,
     MatchAllDocsQuery,
     MinScoreQuery,
+    MultiRangeQuery,
     PhraseQuery,
     Query,
     RangeQuery,
+    SpanBoostQuery,
+    SpanGapQuery,
+    SpanNearQuery,
     TermQuery,
+    span_spec,
+    span_terms,
 )
 from .query import SpanQuery as _SpanQueryT
 
@@ -120,7 +134,7 @@ def _freq_scores(freq, nbs, dls, lucene, wk32, cache, coef64, k1_, b_,
     ``coef*tf/(tf + k1*((1-b) + b*dl/avgdl))``, in the term scorer's IEEE
     op order. Used for the impact upper bound (freq = a count bound) and
     the verified score of the phrase/span leaf kernels, by explain, and
-    through _term_scores by every term collector."""
+    through _term_scores by the plan's term leaves and the BMW kernel."""
     if lucene:
         tf = freq.astype(np.float32)
         return ((wk32 * tf) / (tf + cache[nbs])).astype(np.float64)
@@ -130,7 +144,7 @@ def _freq_scores(freq, nbs, dls, lucene, wk32, cache, coef64, k1_, b_,
 
 
 def _decode_term_rows(pdf: "pd.DataFrame", lucene: bool):
-    """FOR-decode a batch of term postings rows for the term collectors:
+    """FOR-decode a batch of term postings rows for the term kernels:
     per-row posting ``counts``, then per posting the doc ids, tfs and the
     scoring side column — norm bytes in "lucene" mode, doc lengths in
     "precise" mode (the ``aux`` argument of _term_scores)."""
@@ -145,10 +159,11 @@ def _decode_term_rows(pdf: "pd.DataFrame", lucene: bool):
 
 
 def _term_scores(ci, tfs, aux, tw) -> np.ndarray:
-    """Float64 BM25 of term postings, posting i scored against clause
-    ``ci[i]`` of the weight table ``tw`` (IndexSearcher._term_weight_table)
-    through _freq_scores. In "lucene" mode a clause's norm byte indexes
-    its field's slice of the concatenated norm caches."""
+    """Float64 BM25 of term postings scored against clause ``ci`` (one
+    clause number, or one per posting) of the weight table ``tw``
+    (IndexSearcher._term_weight_table) through _freq_scores. In "lucene"
+    mode a clause's norm byte indexes its field's slice of the
+    concatenated norm caches."""
     lucene, wk32, cache, cofs, coef64, k1_, b_, avg = tw
     if lucene:
         return _freq_scores(tfs, aux + cofs[ci], None, True, wk32[ci],
@@ -157,136 +172,184 @@ def _term_scores(ci, tfs, aux, tw) -> np.ndarray:
                         k1_[ci], b_[ci], avg[ci])
 
 
-def _expand_clauses(row_kid, counts, cl_counts, cl_starts):
-    """Expand decoded term postings to (posting, clause) pairs. Scan row
-    i holds ``counts[i]`` postings of key ``row_kid[i]``, whose clauses
-    are the contiguous clause numbers ``cl_starts[kid] + range(
-    cl_counts[kid])``; each row repeats its postings once per clause.
-    Returns the posting index (a slice when no key has two clauses) and
-    the clause number of every expanded posting. A doc's rows keep scan
-    order, then clause order, so per-doc sums stay in one fixed order."""
-    n_rows = len(row_kid)
-    rc = cl_counts[row_kid]
-    exp_row = np.repeat(np.arange(n_rows), rc)
-    within = np.arange(int(rc.sum())) - np.repeat(np.cumsum(rc) - rc, rc)
-    cidx = np.repeat(cl_starts[row_kid], rc) + within
-    lens_e = counts[exp_row]
-    if bool((rc == 1).all()):
-        idx = slice(None)
-    else:
-        v_starts = np.cumsum(counts) - counts
-        ends_e = np.cumsum(lens_e)
-        idx = (np.repeat(v_starts[exp_row], lens_e)
-               + np.arange(int(lens_e.sum()))
-               - np.repeat(ends_e - lens_e, lens_e))
-    return idx, np.repeat(cidx, lens_e)
+def _in_sorted(arr, x):
+    """Index of each of ``x`` in the sorted unique array ``arr`` and
+    whether it is there (the index is 0 where it is not)."""
+    if len(arr) == 0 or len(x) == 0:
+        return np.zeros(len(x), dtype=np.int64), np.zeros(len(x), dtype=bool)
+    pos = np.minimum(np.searchsorted(arr, x), len(arr) - 1)
+    ok = arr[pos] == x
+    return np.where(ok, pos, 0), ok
 
 
 def _dead_mask(tomb, docs) -> np.ndarray:
     """Which of ``docs`` are in the segment's sorted tombstone array."""
-    if tomb is None or len(docs) == 0:
+    if tomb is None:
         return np.zeros(len(docs), dtype=bool)
-    pos = np.searchsorted(tomb, docs)
-    return (pos < len(tomb)) & (tomb[np.minimum(pos, len(tomb) - 1)]
-                                == docs)
+    return _in_sorted(tomb, docs)[1]
 
 
-def _collector_seg_reduce(doc, qid, gid, role, sc, g_role, g_nm, g_nf,
-                          g_ms, r_nm, r_nf, r_ms, tomb, lucene, ftype, k):
-    """Segment-local boolean reduction for the term collector
-    (_collector_topk_frame): numpy sort/reduceat mirror of the JVM
-    boolean aggregation (stage 1 per (qid, gid, doc); stage 2 folds
-    satisfied one-level groups into virtual root clauses; root
-    must/filter/not/msm arithmetic; tombstone mask; with ``k`` a
-    per-query top-k by (score desc, doc asc), with ``k=None`` every
-    satisfied row).  Stable lexsort keeps scan order within each key so
-    the float64 accumulation order matches the JVM sum."""
-    # stage 1: reduce per (qid, gid, doc)
-    order = np.lexsort((doc, gid, qid))
-    d, g, q = doc[order], gid[order], qid[order]
-    r, v = role[order], sc[order].astype(np.float64)
-    nb = np.empty(len(d), dtype=bool)
-    if len(d):
-        nb[0] = True
-    nb[1:] = (d[1:] != d[:-1]) | (g[1:] != g[:-1]) | (q[1:] != q[:-1])
-    starts = np.flatnonzero(nb)
-    sc1 = np.add.reduceat(np.where(r <= 1, v, 0.0), starts)
-    nm = np.add.reduceat((r == 0).astype(np.int64), starts)
-    ns = np.add.reduceat((r == 1).astype(np.int64), starts)
-    nf = np.add.reduceat((r == 2).astype(np.int64), starts)
-    nn = np.add.reduceat((r == 3).astype(np.int64), starts)
-    kq, kg, kd = q[starts], g[starts], d[starts]
+def _node_round(v, lucene: bool):
+    """A node's float64 scores, rounded to float32 in "lucene" mode."""
+    return v.astype(np.float32).astype(np.float64) if lucene else v
 
-    # stage 2: satisfied groups become virtual root clauses
-    is_root = kg == 0
-    if not is_root.all():
-        gm = ~is_root
-        gg = kg[gm]
-        ok = ((nm[gm] == g_nm[gg]) & (nf[gm] == g_nf[gg])
-              & (nn[gm] == 0) & (ns[gm] >= g_ms[gg]))
-        grole = g_role[gg][ok]
-        gsc_raw = sc1[gm][ok]
-        if lucene:
-            gsc = np.where(grole <= 1,
-                           gsc_raw.astype(np.float32).astype(np.float64),
-                           0.0)
+
+def _scores_at(d, v, cand):
+    """Scores of ``cand`` in the leaf result ``(d, v)`` (0 where absent)
+    and the presence mask."""
+    p, ok = _in_sorted(d, cand)
+    return np.where(ok, v[p] if len(v) else 0.0, 0.0), ok
+
+
+def _union(results):
+    """Sorted union of the doc arrays of ``(docs, scores)`` results."""
+    return np.unique(np.concatenate(
+        [d for d, _ in results] + [np.empty(0, dtype=np.int64)]))
+
+
+def _eval_node(node, leaf, lucene: bool):
+    """Evaluate one compiled plan node (IndexSearcher._compile) on one
+    segment → ``(docs, scores)``: sorted unique doc ids and float64
+    scores. ``leaf(node)`` evaluates the term, phrase, span and none
+    leaves.
+
+    Nodes combine with the oracle's arithmetic (oracle.OracleSearcher):
+    a boolean sums its must scores, then its matched should scores, in
+    clause order in float64, and adds the two sums; a dismax is
+    ``mx + tie * (sum - mx)`` over its matching disjuncts in order; in
+    "lucene" mode every node rounds its scores to float32, as each
+    Scorer::score() of the reference returns f32."""
+    kind = node[0]
+    if kind == "bool":
+        _, musts, shoulds, filters, nots, msm = node
+        ms = [_eval_node(x, leaf, lucene) for x in musts]
+        ss = [_eval_node(x, leaf, lucene) for x in shoulds]
+        req = [d for d, _ in ms] + [_eval_node(x, leaf, lucene)[0]
+                                    for x in filters]
+        cand = (reduce(lambda a, b: np.intersect1d(a, b, assume_unique=True),
+                       req) if req else _union(ss))
+        for x in nots:
+            cand = cand[~_in_sorted(_eval_node(x, leaf, lucene)[0], cand)[1]]
+        total = np.zeros(len(cand))
+        for d, v in ms:
+            total += _scores_at(d, v, cand)[0]
+        ssum = np.zeros(len(cand))
+        n_s = np.zeros(len(cand), dtype=np.int64)
+        for d, v in ss:
+            val, ok = _scores_at(d, v, cand)
+            ssum += val
+            n_s += ok
+        keep = n_s >= msm
+        return cand[keep], _node_round((total + ssum)[keep], lucene)
+    if kind == "dismax":
+        _, subs, tie = node
+        rs = [_eval_node(x, leaf, lucene) for x in subs]
+        cand = _union(rs)
+        mx = np.full(len(cand), -np.inf)
+        sm = np.zeros(len(cand))
+        for d, v in rs:
+            val, ok = _scores_at(d, v, cand)
+            sm += val
+            mx = np.where(ok, np.maximum(mx, val), mx)
+        return cand, _node_round(mx + tie * (sm - mx), lucene)
+    if kind == "const":
+        d, _ = _eval_node(node[1], leaf, lucene)
+        return d, np.full(len(d), node[2])
+    if kind == "min":
+        d, v = _eval_node(node[1], leaf, lucene)
+        keep = v > node[2]
+        return d[keep], v[keep]
+    if kind == "boosting":
+        _, pos, neg, nb = node
+        d, v = _eval_node(pos, leaf, lucene)
+        hit = _in_sorted(_eval_node(neg, leaf, lucene)[0], d)[1]
+        return d, np.where(hit, _node_round(v * nb, lucene), v)
+    return leaf(node)
+
+
+def _seg_outputs(outputs, leaf, tomb, k, lucene: bool):
+    """``(output_id, docs, scores)`` of one segment for each
+    ``(output_id, node)`` plan. With ``k`` (a root) tombstones are
+    masked and each output keeps its top-k by (score desc, doc asc); a
+    phrase or span root runs its leaf kernel's impact-ordered top-k.
+    With ``k=None`` every matching doc is returned."""
+    for oid, node in outputs:
+        if k is not None and node[0] in ("phrase", "span"):
+            d, v = leaf(node, tomb, k)
         else:
-            gsc = np.where(grole <= 1, gsc_raw, 0.0)
-        q2 = np.concatenate([kq[is_root], kq[gm][ok]])
-        d2 = np.concatenate([kd[is_root], kd[gm][ok]])
-        v2 = np.concatenate([sc1[is_root], gsc])
-        nm2 = np.concatenate([nm[is_root],
-                              (grole == 0).astype(np.int64)])
-        ns2 = np.concatenate([ns[is_root],
-                              (grole == 1).astype(np.int64)])
-        nf2 = np.concatenate([nf[is_root],
-                              (grole == 2).astype(np.int64)])
-        nn2 = np.concatenate([nn[is_root],
-                              (grole == 3).astype(np.int64)])
-        o2 = np.lexsort((d2, q2))
-        d2, q2 = d2[o2], q2[o2]
-        v2, nm2, ns2 = v2[o2], nm2[o2], ns2[o2]
-        nf2, nn2 = nf2[o2], nn2[o2]
-        # d2 CAN be empty: a batch whose rows are all group clauses with
-        # no group satisfied (e.g. every should-group missed its msm)
-        # leaves no root rows and no virtual clauses (found by the
-        # merged-layout fuzz, tests/test_merged_fuzz.py)
-        nb2 = np.empty(len(d2), dtype=bool)
-        if len(d2):
-            nb2[0] = True
-        nb2[1:] = (d2[1:] != d2[:-1]) | (q2[1:] != q2[:-1])
-        st2 = np.flatnonzero(nb2)
-        sc3 = np.add.reduceat(v2, st2)
-        nm3 = np.add.reduceat(nm2, st2)
-        ns3 = np.add.reduceat(ns2, st2)
-        nf3 = np.add.reduceat(nf2, st2)
-        nn3 = np.add.reduceat(nn2, st2)
-        q3, d3 = q2[st2], d2[st2]
-    else:
-        q3, d3, sc3 = kq, kd, sc1
-        nm3, ns3, nf3, nn3 = nm, ns, nf, nn
+            d, v = _eval_node(node, leaf, lucene)
+            if k is not None:
+                live = ~_dead_mask(tomb, d)
+                top = np.lexsort((d[live], -v[live]))[:k]
+                d, v = d[live][top], v[live][top]
+        if len(d):
+            yield oid, d, v
 
-    keep = ((nm3 == r_nm[q3]) & (nf3 == r_nf[q3]) & (nn3 == 0)
-            & (ns3 >= r_ms[q3]))
-    q3, d3, sc3 = q3[keep], d3[keep], sc3[keep]
-    live = ~_dead_mask(tomb, d3)
-    q3, d3, score = q3[live], d3[live], sc3[live].astype(ftype)
-    if k is None or len(q3) == 0:
-        return q3, d3, score
-    # per-query top-k by (score desc, doc asc)
-    o = np.lexsort((d3, -score.astype(np.float64), q3))
-    qs_, ds_, ss_ = q3[o], d3[o], score[o]
-    new_q = np.empty(len(qs_), dtype=bool)
-    new_q[0] = True
-    new_q[1:] = qs_[1:] != qs_[:-1]
-    grp_start = np.maximum.accumulate(
-        np.where(new_q, np.arange(len(qs_)), 0))
-    sel = (np.arange(len(qs_)) - grp_start) < k
-    return qs_[sel], ds_[sel], ss_[sel]
+
+class _SegPostings:
+    """One segment's scan rows as the plan leaves' input, decoded on
+    first use: the rows of every term-leaf key in one FOR decode
+    (_decode_term_rows), grouped by key and doc-sorted; the rows of
+    every positional key into the per-term dicts of the phrase/span
+    kernels (_decode_seg_tds). Calling it evaluates one leaf node; with
+    ``k`` a phrase/span leaf masks ``tomb`` and keeps its top-k."""
+
+    def __init__(self, sub, kid_of, pos_keys, tw, chunk0):
+        self.sub = sub
+        self.keys = list(zip(sub["field"].tolist(), sub["term"].tolist()))
+        self.kid_of, self.pos_keys = kid_of, pos_keys
+        self.tw, self.chunk0 = tw, chunk0
+        self._terms = None
+        self._tds = None
+
+    def _term_postings(self):
+        if self._terms is None:
+            row_kid = np.fromiter((self.kid_of.get(key, -1)
+                                   for key in self.keys),
+                                  dtype=np.int64, count=len(self.keys))
+            m = row_kid >= 0
+            counts, docs, tfs, aux = _decode_term_rows(self.sub[m],
+                                                       self.tw[0])
+            pk = np.repeat(row_kid[m], counts)
+            o = np.lexsort((docs, pk))
+            self._terms = (docs[o], tfs[o], aux[o], np.searchsorted(
+                pk[o], np.arange(len(self.kid_of) + 1)))
+        return self._terms
+
+    def __call__(self, node, tomb=None, k=None):
+        kind = node[0]
+        if kind == "term":
+            _, kid, ci = node
+            docs, tfs, aux, bounds = self._term_postings()
+            lo, hi = bounds[kid], bounds[kid + 1]
+            return docs[lo:hi], _term_scores(ci, tfs[lo:hi], aux[lo:hi],
+                                             self.tw)
+        e = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+        if kind == "none":
+            return e
+        if self._tds is None:
+            m = np.fromiter((key in self.pos_keys for key in self.keys),
+                            dtype=bool, count=len(self.keys))
+            self._tds = _decode_seg_tds(self.sub[m])
+        keys = node[1]
+        tds = {ti: self._tds[key] for ti, key in enumerate(keys)
+               if key in self._tds}
+        if kind == "phrase":
+            if len(tds) < len(keys):
+                return e
+            _, _, slots, offsets, bm, slop, terms = node
+            d, v = _phrase_seg_topk(tds, slots, offsets, tomb, k,
+                                    self.chunk0, *bm, slop=slop, terms=terms)
+        else:
+            _, _, spec, group_tis, bm, fast = node
+            d, v = _span_seg_topk(tds, spec, group_tis, tomb, k,
+                                  self.chunk0, *bm, *fast)
+        o = np.argsort(d)
+        return d[o], v[o]
 
 
 class _LazyPositions:
-    """Per-term lazily-decoded position store for the collector kernels.
+    """Per-term lazily-decoded position store for the phrase/span kernels.
 
     The impact-ordered verify loop touches pos_bin blocks in
     ub-descending doc chunks; decoding one 128-entry block per
@@ -413,14 +476,6 @@ def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
     offpad = max(offsets) if offsets else 0
     stores = {ti: _LazyPositions(tds[ti]) for ti in uniq_tis}
 
-    def _gather(ti, ent_chunk, docs_chunk):
-        """positions of the given (ascending) entries of term ti →
-        (doc-repeated array, flat positions, per-entry tf), decoding
-        only the pos_bin blocks the entries land in (batched + memoized
-        across chunks by the _LazyPositions store)."""
-        flat, tfe = stores[ti].gather(ent_chunk)
-        return np.repeat(docs_chunk, tfe), flat, tfe
-
     vd_parts, vs_parts = [], []
     n_hits = 0
     theta = None
@@ -437,10 +492,13 @@ def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
         nbs_k = nbs_c[sel][so]
         dls_k = dls_c[sel][so]
 
+        # (doc-repeated array, flat positions, per-entry tf) per term,
+        # decoding only the pos_bin blocks the chunk's entries land in
         gathered = {}
         for ti, off in slots:
             if ti not in gathered:
-                gathered[ti] = _gather(ti, ent[ti][sel][so], cd)
+                flat, tfe = stores[ti].gather(ent[ti][sel][so])
+                gathered[ti] = (np.repeat(cd, tfe), flat, tfe)
         if slop == 0:
             acc = None
             maxpos = 0
@@ -636,12 +694,6 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
 
     stores = {ti: _LazyPositions(td) for ti, td in tds.items()}
 
-    def _gather_pos(ti, ent_chunk):
-        """flat positions + per-entry tf for ASCENDING entries of term
-        ti, decoding only the blocks touched (batched + memoized across
-        chunks by the _LazyPositions store)."""
-        return stores[ti].gather(ent_chunk)
-
     vd_parts, vs_parts = [], []
     n_hits = 0
     theta = None
@@ -663,11 +715,11 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
             # all-True by the group-conjunction construction) — the
             # gathered flat positions feed the flat kernel directly, no
             # per-doc slicing
-            flat_a, tfa = _gather_pos(ta2, ent[ta2][cidx])
+            flat_a, tfa = stores[ta2].gather(ent[ta2][cidx])
             if tb2 == ta2:
                 flat_b, tfb = flat_a, tfa
             else:
-                flat_b, tfb = _gather_pos(tb2, ent[tb2][cidx])
+                flat_b, tfb = stores[tb2].gather(ent[tb2][cidx])
             freqs = ordered_near_freq_2term_flat(
                 flat_a, tfa, flat_b, tfb, slop2).astype(np.float64)
         elif fastn:
@@ -683,7 +735,7 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
                     continue
                 ti = s_[1]
                 if ti not in gath:
-                    gath[ti] = _gather_pos(ti, ent[ti][cidx])
+                    gath[ti] = stores[ti].gather(ent[ti][cidx])
                 flat, tfe = gath[ti]
                 clauses.append(("pos", flat, tfe))
             freqs = ordered_near_freq_nclause_flat(
@@ -696,7 +748,7 @@ def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
                 pm = present[ti][cidx]
                 lst: list = [None] * len(cd)
                 if pm.any():
-                    flat, tfe = _gather_pos(ti, ent[ti][cidx][pm])
+                    flat, tfe = stores[ti].gather(ent[ti][cidx][pm])
                     ends = np.cumsum(tfe)
                     where = np.flatnonzero(pm)
                     for j, w in enumerate(where):
@@ -847,7 +899,7 @@ def _bmw_seg_topk(sub, tomb, k, ti_of, tw, cache64, k1_, b_, avgdl64):
 
 
 def _iter_seg_chunks(batches):
-    """Stream a collector partition's Arrow batches as one pandas frame
+    """Stream a scan partition's Arrow batches as one pandas frame
     per SEGMENT, without ever buffering the whole partition.
 
     A partition is a sequence of whole segment files (the searcher
@@ -880,16 +932,16 @@ def _iter_seg_chunks(batches):
                     else pd.concat(buf, ignore_index=True))
 
 
-def _decode_seg_tds(sub: "pd.DataFrame", ti_of: dict) -> dict:
-    """One segment's positional postings rows → per-term decode dict for
-    the phrase/span collector kernels: sorted docs, aligned
+def _decode_seg_tds(sub: "pd.DataFrame") -> dict:
+    """One segment's positional postings rows → per-(field, term) decode
+    dict for the phrase/span kernels: sorted docs, aligned
     tfs/nbs/dls, per-block counts/ends and the still-encoded pos_bin
     blobs (decoded lazily by the kernels' block gathers)."""
     tds = {}
-    for t, grp in sub.groupby("term", sort=False):
+    for key, grp in sub.groupby(["field", "term"], sort=False):
         grp = grp.sort_values("block_id")
         counts = grp["num_docs"].to_numpy(np.int64)
-        tds[ti_of[t]] = {
+        tds[key] = {
             "docs": batch_delta_decode(
                 batch_unpack(grp["docs_bin"].tolist(), counts), counts
             ).astype(np.int64),
@@ -906,12 +958,65 @@ def _decode_seg_tds(sub: "pd.DataFrame", ti_of: dict) -> dict:
     return tds
 
 
-_SCORE_SCHEMA = "seg int, doc long, score float"
-_SCORE_SCHEMA64 = "seg int, doc long, score double"
+def _children(q: Query) -> list:
+    """The sub-queries of a query node ([] for a leaf)."""
+    if isinstance(q, BooleanQuery):
+        return q.musts + q.shoulds + q.filters + q.must_nots
+    if isinstance(q, (BoostQuery, ConstantScoreQuery, FilterQuery,
+                      MinScoreQuery)):
+        return [q.query]
+    if isinstance(q, DisjunctionMaxQuery):
+        return q.disjuncts
+    if isinstance(q, BoostingQuery):
+        return [q.positive, q.negative]
+    return []
+
+
+def _postings_only(q: Query) -> bool:
+    """Whether every leaf of ``q`` is a term, phrase or span query under
+    boolean, dismax, boost, constant-score, min-score and boosting nodes
+    — the trees IndexSearcher._postings_frame evaluates in one scan."""
+    if isinstance(q, (TermQuery, PhraseQuery, _SpanQueryT)):
+        return True
+    if isinstance(q, (BooleanQuery, BoostQuery, ConstantScoreQuery,
+                      MinScoreQuery, DisjunctionMaxQuery, BoostingQuery)):
+        return all(_postings_only(s) for s in _children(q))
+    return False
+
+
+class _Plan:
+    """What compiling postings-only trees (IndexSearcher._compile)
+    collects for their one scan: the term-leaf clauses ``(field, term,
+    boost)``, the number of each term-leaf (field, term) key, the keys
+    of the phrase/span leaves, and every key the scan reads (insertion
+    ordered, so a plan's scan filter is deterministic)."""
+
+    def __init__(self, stats: dict):
+        self.stats = stats
+        self.clauses: list[tuple] = []
+        self.kid_of: dict[tuple[str, str], int] = {}
+        self.pos_keys: set = set()
+        self.scan_keys: dict = {}
+
+    def add_positional(self, keys) -> None:
+        self.pos_keys.update(keys)
+        for key in keys:
+            self.scan_keys.setdefault(key)
+
+
+def _no_match(description: str, details=()) -> dict:
+    """A non-matching Explanation node."""
+    return {"match": False, "value": 0.0, "description": description,
+            "details": list(details)}
+
+
 _ROLE_CODE = {"m": 0, "s": 1, "f": 2, "n": 3}  # boolean clause roles
-# postings columns of the phrase/span leaves and of the BMW collector
-_LEAF_SCAN_COLS = ("term", "seg", "block_id", "num_docs", "docs_bin",
-                   "tfs_bin", "norms_bin", "dls_bin", "pos_bin")
+# postings columns of the plan evaluator's scan; the positional ones are
+# read only when a phrase or span leaf is in the plan
+_TERM_SCAN_COLS = ("field", "term", "seg", "num_docs", "docs_bin",
+                   "tfs_bin", "norms_bin", "dls_bin")
+_POS_SCAN_COLS = ("block_id", "pos_bin")
+# postings columns of the BMW collector
 _BMW_SCAN_COLS = ("term", "seg", "num_docs", "docs_bin", "tfs_bin",
                   "norms_bin", "dls_bin", "max_tf", "max_norm_byte",
                   "min_dl", "first_doc", "last_doc")
@@ -982,7 +1087,7 @@ class IndexSearcher:
         # tasks, and since the Arrow decode is fused into the scan stage,
         # every core beyond 5 idles (measured: local[32] no faster than
         # local[8] on a 1000-query batch); (b) correctness of the
-        # per-segment kernels (_collector_topk_frame and the leaves), whose
+        # per-segment plans (_postings_frame) and the BMW kernel, whose
         # segment-local boolean arithmetic and per-segment top-k require
         # each partition to hold a segment's postings COMPLETELY.  Setting
         # openCostInBytes = maxPartitionBytes disables packing (one file
@@ -1095,7 +1200,7 @@ class IndexSearcher:
                 & (gen_scope_expr(m["segments"]) <= F.col("_tg")),
             ).select("seg", "doc")
         self._score_t = "float" if scoring == "lucene" else "double"
-        self._score_schema = _SCORE_SCHEMA if scoring == "lucene" else _SCORE_SCHEMA64
+        self._score_schema = f"seg int, doc long, score {self._score_t}"
         self._stats_cache: dict[tuple[str, str], dict | None] = {}
         self._plan_cache: dict[tuple[str, int], DataFrame] = {}
         self._tomb_cache: dict[int, np.ndarray] | None = None
@@ -1131,11 +1236,12 @@ class IndexSearcher:
 
     def _coalesced(self, scan: DataFrame) -> DataFrame:
         """Pack multiple segment files into one scan task when segments
-        far outnumber cores. The collector kernels reduce per SEGMENT
-        inside the worker (np.unique(seg) loop), so their only layout
-        invariant is that a segment's rows stay wholly inside one
-        partition — coalesce() unions WHOLE input partitions with no
-        shuffle and no file splits, preserving it. Without this, a
+        far outnumber cores. The per-segment plans reduce per SEGMENT
+        inside the worker (each segment's rows stream through
+        _iter_seg_chunks), so their only layout invariant is that a
+        segment's rows stay wholly inside one partition — coalesce()
+        unions WHOLE input partitions with no shuffle and no file
+        splits, preserving it. Without this, a
         229-segment index pays 229 task setups per query (~8 waves on
         32 cores) even though the term-pruned data per task is tiny —
         the 10M-doc profile showed every query family converging to
@@ -1161,7 +1267,7 @@ class IndexSearcher:
 
     def _tomb_by_seg(self) -> dict[int, np.ndarray]:
         """Resolved tombstones as per-segment sorted doc-id arrays, for the
-        collector kernel's in-worker live-docs mask.  Only called when the
+        kernels' in-worker live-docs mask.  Only called when the
         broadcast gate held (RUCENE_TOMB_BCAST_CAP, default 4M
         tombstones), so the driver materializes at most that many
         (seg, doc) pairs — the same bound the broadcast anti-join
@@ -1279,132 +1385,52 @@ class IndexSearcher:
         still executes the full distributed job, so deletes visible to
         THIS searcher (fixed at construction, like a Lucene point-in-time
         reader) and scores are always freshly computed."""
-        ck = (repr(query), k)
-        hit = self._plan_cache.get(ck)
-        if hit is not None:
-            return hit
-        frame = self._root_frame(query, k)
-        topk = frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
-        out = (
-            self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
-            .orderBy(F.desc("score"), "seg", "doc")
-        )
-        if len(self._plan_cache) < self._PLAN_CACHE_MAX:
-            self._plan_cache[ck] = out
+        return self._memo_plan((repr(query), k), lambda: self._topk_hits(
+            self._root_frame(query, k), k))
+
+    def _memo_plan(self, key, build) -> DataFrame:
+        """The plan cache: ``build()``'s DataFrame, memoized per key."""
+        out = self._plan_cache.get(key)
+        if out is None:
+            out = build()
+            if len(self._plan_cache) < self._PLAN_CACHE_MAX:
+                self._plan_cache[key] = out
         return out
+
+    def _topk_hits(self, frame: DataFrame, k: int) -> DataFrame:
+        """The (score desc, seg, doc) top-k rows of a ``(seg, doc,
+        score)`` frame, joined back to docmeta (top-k side broadcast)."""
+        topk = frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
+        return (self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
+                .orderBy(F.desc("score"), "seg", "doc"))
 
     def _root_frame(self, query: Query, k: int) -> DataFrame:
         """Live ``(seg, doc, score)`` rows whose (score desc, seg, doc)
         top-k is the query's top-k — the routing shared by search() and
-        search_many()'s non-flat queries.
+        search_many()'s queries with a docmeta-backed leaf.
 
-        Every query family with a per-segment kernel (_kernel_frame:
-        phrase and span leaves, the term-dismax collector, the flat
-        term/boolean collector) runs it with the top-k whenever the
-        tombstone broadcast gate holds: tombstones are masked in the
-        worker and at most k rows per segment leave it, with no shuffle.
-        Above the gate — and for every other shape — the root is the
-        live-masked query frame, in which those same kernels run with
-        ``k=None`` (_frame_impl)."""
-        if self._deleted is None or self._bcast_deleted:
-            frame = self._kernel_frame(query, np.float32(1.0), k)
-            if frame is not None:
-                return frame
+        A postings-only tree (_postings_only) runs its per-segment plan
+        with the top-k whenever the tombstone broadcast gate holds:
+        tombstones are masked in the worker and at most k rows per
+        segment leave it, with no shuffle. Above the gate — and for a
+        tree with a docmeta-backed leaf — the root is the live-masked
+        query frame, in which every postings-only subtree runs its plan
+        with ``k=None`` (_frame_impl)."""
+        if _postings_only(query) and (self._deleted is None
+                                      or self._bcast_deleted):
+            return self._postings_frame(
+                {0: (query, np.float32(1.0))}, k).select("seg", "doc",
+                                                         "score")
         return self._live(self._frame(query, np.float32(1.0), True))
-
-    def _kernel_frame(self, q: Query, boost: np.float32,
-                      k: int | None) -> DataFrame | None:
-        """``(seg, doc, score)`` rows of a query from its per-segment
-        kernel — phrase leaf, span leaf, term-dismax collector or flat
-        term/boolean collector — or None for every other shape. With
-        ``k`` tombstones are masked in the worker and each segment emits
-        its top-k; with ``k=None`` every matching row is emitted and the
-        caller live-masks."""
-        q, boost = self._fold_boost(q, boost)
-        if isinstance(q, PhraseQuery):
-            return self._phrase_leaf(q, boost, k)
-        if isinstance(q, _SpanQueryT):
-            return self._span_leaf(q, boost, k)
-        if isinstance(q, DisjunctionMaxQuery):
-            ds = [self._fold_boost(d, boost)[0] for d in q.disjuncts]
-            if (all(isinstance(d, TermQuery) for d in ds)
-                    and len({(d.field, d.term) for d in ds}) == len(ds)):
-                return self._dismax_collector_topk(q, boost, k)
-            return None
-        fs = self._flat_specs(q, [0], boost)
-        if fs is None:
-            return None
-        return self._collector_topk_frame({0: fs}, k).select(
-            "seg", "doc", "score")
 
     @staticmethod
     def _fold_boost(q: Query, boost: np.float32):
-        while isinstance(q, BoostQuery):
+        """Fold BoostQuery layers — and the SpanBoostQuery layers atop a
+        span query (span_boost.rs:290-291) — into ``boost``."""
+        while isinstance(q, (BoostQuery, SpanBoostQuery)):
             boost = np.float32(boost * np.float32(q.boost))
             q = q.query
         return q, boost
-
-    def _flat_specs(self, q: Query, gid_counter: list,
-                    boost: np.float32 = np.float32(1.0)):
-        """Flatten a term/boolean query (ONE level of nested boolean
-        groups allowed) into term-collector clause specs
-        ``(field, term, gid, role, boost, scored)``: ``gid`` is 0 for
-        root clauses, else the nested group's batch-unique number drawn
-        from ``gid_counter``; ``role`` is the clause's _ROLE_CODE in its
-        parent. Returns ``(specs, (root_nm, root_nf, root_msm), groups)``
-        with ``groups[gid] = (parent_role, nm, nf, msm)``, or None if the
-        shape needs its own frame (phrase/span/dismax/deeper nesting).
-        Mirrors ``_boolean_frame``'s add() boost/role handling exactly so
-        scores stay bit-identical to the boolean frame."""
-        q, boost = self._fold_boost(q, boost)
-        if isinstance(q, TermQuery):
-            eff = float(np.float32(boost * np.float32(q.boost)))
-            return ([(q.field, q.term, 0, _ROLE_CODE["s"], eff, True)],
-                    (0, 0, 0), {})
-        if not isinstance(q, BooleanQuery):
-            return None
-        specs: list[tuple] = []
-        groups: dict[int, tuple] = {}
-        clauses = [(q.musts, "m", True), (q.shoulds, "s", True),
-                   (q.filters, "f", False), (q.must_nots, "n", False)]
-        for subs, role, scored in clauses:
-            for sub in subs:
-                sub, sub_boost = self._fold_boost(
-                    sub, boost if scored else np.float32(1.0))
-                if isinstance(sub, TermQuery):
-                    eff = (float(np.float32(sub_boost
-                                            * np.float32(sub.boost)))
-                           if scored else 1.0)
-                    specs.append((sub.field, sub.term, 0, _ROLE_CODE[role],
-                                  eff, scored))
-                    continue
-                if not isinstance(sub, BooleanQuery):
-                    return None
-                inner = [(sub.musts, "m", True), (sub.shoulds, "s", True),
-                         (sub.filters, "f", False),
-                         (sub.must_nots, "n", False)]
-                flat_members = []
-                for isubs, irole, iscored in inner:
-                    for m in isubs:
-                        m, m_boost = self._fold_boost(
-                            m, sub_boost if (scored and iscored)
-                            else np.float32(1.0))
-                        if not isinstance(m, TermQuery):
-                            return None
-                        eff = (float(np.float32(m_boost
-                                                * np.float32(m.boost)))
-                               if (scored and iscored) else 1.0)
-                        flat_members.append((m, irole, eff,
-                                             scored and iscored))
-                gid_counter[0] += 1
-                gid = gid_counter[0]
-                for m, irole, eff, isc in flat_members:
-                    specs.append((m.field, m.term, gid, _ROLE_CODE[irole],
-                                  eff, isc))
-                groups[gid] = (_ROLE_CODE[role], len(sub.musts),
-                               len(sub.filters), sub.min_should_match)
-        return (specs, (len(q.musts), len(q.filters),
-                        q.min_should_match), groups)
 
     def search_many(self, queries: list[Query], k: int = 10) -> DataFrame:
         """Micro-batch serving: top-k for MANY queries in ONE distributed
@@ -1422,167 +1448,46 @@ class IndexSearcher:
         The batch does NOT become one union branch per query — a
         200-branch union schedules thousands of tiny tasks through the
         driver's single-threaded DAG scheduler, which is exactly the
-        serial floor again. Instead every term/boolean query in the
-        batch is flattened into ONE shared clause table
-        (``_flat_specs``) and executed by the per-segment term collector
-        a single term/boolean query uses (``_collector_topk_frame``):
-        one term-pruned scan, and inside each scan task the decode,
-        scoring and each query's must/filter/not/msm arithmetic (one
-        level of nested boolean groups folds in as virtual root
-        clauses), with no shuffle. Under the tombstone broadcast gate
-        the worker masks tombstones and keeps the per-(query, segment)
-        top-k; above it the collector emits every satisfied row and the
-        shuffle anti-join (``_live``) removes deleted docs. A per-query
-        window then keeps each query's top-k. Queries the flattener
-        rejects (phrase/span/dismax/deeper nesting) keep their own
-        rank-identical TakeOrdered branch (``_root_frame``) and union
-        in. Stage count is constant in batch size; rank/score identity
-        vs per-query search() is asserted by tests/test_search_many.py."""
-        ck = (tuple(repr(q) for q in queries), k, "many")
-        hit = self._plan_cache.get(ck)
-        if hit is not None:
-            return hit
-        flat: dict[int, tuple] = {}
-        others: list[int] = []
-        gid_counter = [0]
-        for i, q in enumerate(queries):
-            fs = self._flat_specs(q, gid_counter)
-            if fs is not None:
-                flat[i] = fs
-            else:
-                others.append(i)
+        serial floor again. Instead every postings-only query of the
+        batch becomes one output of ONE plan set (_postings_frame): one
+        term-pruned scan, and inside each scan task every query's plan
+        evaluated per segment, with no shuffle. Under the tombstone
+        broadcast gate the worker masks tombstones and keeps the
+        per-(query, segment) top-k; above it every matching row leaves
+        the worker and the shuffle anti-join (``_live``) removes deleted
+        docs. A per-query window then keeps each query's top-k. A query
+        with a docmeta-backed leaf keeps its own rank-identical
+        TakeOrdered branch (``_root_frame``) and unions in. Rank/score
+        identity vs per-query search() is asserted by
+        tests/test_search_many.py."""
+        return self._memo_plan((tuple(repr(q) for q in queries), k, "many"),
+                               lambda: self._many_hits(queries, k))
 
+    def _many_hits(self, queries: list[Query], k: int) -> DataFrame:
+        trees = {i: (q, np.float32(1.0)) for i, q in enumerate(queries)
+                 if _postings_only(q)}
         branches = []
-        if flat:
+        if trees:
             if self._deleted is None or self._bcast_deleted:
-                coll = self._collector_topk_frame(flat, k)
+                coll = self._postings_frame(trees, k)
             else:
-                coll = self._live(self._collector_topk_frame(flat, None))
+                coll = self._live(self._postings_frame(trees, None))
             w = Window.partitionBy("_q").orderBy(
                 F.desc("score"), "seg", "doc")
             branches.append(
                 coll.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") <= k).drop("_rn")
                 .select(F.col("_q").alias("qid"), "seg", "doc", "score"))
-        for i in others:
-            frame = self._root_frame(queries[i], k)
+        for i, q in enumerate(queries):
+            if i in trees:
+                continue
+            frame = self._root_frame(q, k)
             branches.append(
                 frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
                 .select(F.lit(i).alias("qid"), "seg", "doc", "score"))
         topk = reduce(DataFrame.unionByName, branches)
-        out = (
-            self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
-            .orderBy("qid", F.desc("score"), "seg", "doc")
-        )
-        if len(self._plan_cache) < self._PLAN_CACHE_MAX:
-            self._plan_cache[ck] = out
-        return out
-
-    def _collector_topk_frame(self, flat: dict, k: int | None) -> DataFrame:
-        """Per-SEGMENT term/boolean collector for flattened queries
-        (``flat[qid] = _flat_specs(...)``) — the reference's per-segment
-        search loop (searcher.rs drives one collector per LeafReader,
-        then merges) re-expressed as one mapInPandas pass with NO
-        shuffle.
-
-        A doc's postings live entirely inside its segment, and the scan is
-        partitioned one-segment-per-file (searcher __init__ pins
-        maxPartitionBytes/openCostInBytes), so every (query, doc) boolean
-        reduction — clause sums, must/filter/not counts, msm, one-level
-        group folds — is segment-LOCAL.  With ``k`` the worker masks the
-        segment's tombstones (per-seg sorted arrays, built only under the
-        RUCENE_TOMB_BCAST_CAP broadcast gate) BEFORE ranks are assigned
-        and folds its partition down to k rows per (query, segment), so
-        only (n_queries × n_segments × k) rows leave the executors.  The
-        final (score desc, seg asc, doc asc) order restricted to one
-        segment is the segment's own order, so the global top-k is a
-        subset of the union of per-segment top-k's.  With ``k=None``
-        (nested clauses, count(), delete-by-query, roots above the
-        broadcast gate) no tombstones are passed and every satisfied
-        ``(query, seg, doc)`` row is emitted for the caller to live-mask.
-        Per-posting scores come from the shared term kernel
-        (_term_scores) and stage sums run in scan order via stable
-        lexsort, so scores stay bit-identical to the boolean frame and
-        the oracle. Output: ``_q int, seg, doc, score``."""
-        # clause table ordered by (field, term) key, so a scan row of a
-        # key expands to a contiguous run of clause numbers
-        by_key: dict[tuple[str, str], list] = {}
-        for qid, (specs, _, _) in flat.items():
-            for f_, t, gid, role, boost, scored in specs:
-                by_key.setdefault((f_, t), []).append(
-                    (qid, gid, role, boost, scored))
-        keys = list(by_key)
-        kid_of = {key: i for i, key in enumerate(keys)}
-        cl_counts = np.asarray([len(by_key[key]) for key in keys],
-                               dtype=np.int64)
-        cl_starts = np.cumsum(cl_counts) - cl_counts
-        cl = [(key, c) for key in keys for c in by_key[key]]
-        tw = self._term_weight_table(
-            [(f_, t, c[3]) for (f_, t), c in cl], self._stats_for(keys))
-        qid_cat = np.asarray([c[0] for _, c in cl], dtype=np.int32)
-        gid_cat = np.asarray([c[1] for _, c in cl], dtype=np.int32)
-        role_cat = np.asarray([c[2] for _, c in cl], dtype=np.int8)
-        scored_cat = np.asarray([c[4] for _, c in cl], dtype=bool)
-        all_scored = bool(scored_cat.all())
-
-        # group metadata indexed by gid (0 = root, unused slot)
-        groups = {gid: g for _, _, gs in flat.values()
-                  for gid, g in gs.items()}
-        n_g = max(groups, default=0)
-        g_role = np.zeros(n_g + 1, dtype=np.int8)
-        g_nm = np.zeros(n_g + 1, dtype=np.int64)
-        g_nf = np.zeros(n_g + 1, dtype=np.int64)
-        g_ms = np.zeros(n_g + 1, dtype=np.int64)
-        for gid, (prole, nm_, nf_, ms_) in groups.items():
-            g_role[gid], g_nm[gid], g_nf[gid], g_ms[gid] = (
-                prole, nm_, nf_, ms_)
-        # per-query root requirements indexed by qid
-        n_q = max(flat) + 1
-        r_nm = np.zeros(n_q, dtype=np.int64)
-        r_nf = np.zeros(n_q, dtype=np.int64)
-        r_ms = np.zeros(n_q, dtype=np.int64)
-        for i, (_specs, (nm_, nf_, ms_), _groups) in flat.items():
-            r_nm[i], r_nf[i], r_ms[i] = nm_, nf_, ms_
-
-        lucene = tw[0]
-        ftype = np.float32 if lucene else np.float64
-        tomb = self._tomb_by_seg() if k is not None else {}
-
-        def fn(batches):
-            # streamed per segment (see _iter_seg_chunks): decode,
-            # expand, reduce and emit one segment at a time, so worker
-            # memory is bounded by one segment's scan rows however many
-            # segments _coalesced packs into this task
-            for s, pdf in _iter_seg_chunks(batches):
-                n_rows = len(pdf)
-                counts, docs, tfs, aux = _decode_term_rows(pdf, lucene)
-                row_kid = np.fromiter(
-                    (kid_of[(f_, t)] for f_, t
-                     in zip(pdf["field"].tolist(), pdf["term"].tolist())),
-                    dtype=np.int64, count=n_rows)
-                idx, ce = _expand_clauses(row_kid, counts, cl_counts,
-                                          cl_starts)
-                sc = _term_scores(ce, tfs[idx], aux[idx], tw).astype(ftype)
-                if not all_scored:
-                    sc[~scored_cat[ce]] = 0
-                q3, d3, s3 = _collector_seg_reduce(
-                    docs[idx], qid_cat[ce], gid_cat[ce], role_cat[ce],
-                    sc, g_role, g_nm, g_nf, g_ms,
-                    r_nm, r_nf, r_ms, tomb.get(int(s)), lucene, ftype, k)
-                if len(q3) == 0:
-                    continue
-                yield pd.DataFrame({
-                    "_q": q3,
-                    "seg": np.full(len(q3), s, dtype=np.int32),
-                    "doc": d3,
-                    "score": s3,
-                })
-
-        scan = self._postings.filter(self._terms_cond(keys)).select(
-            "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
-            "norms_bin", "dls_bin")
-        return self._coalesced(scan).mapInPandas(
-            fn, f"_q int, seg int, doc long, score {self._score_t}")
+        return (self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
+                .orderBy("qid", F.desc("score"), "seg", "doc"))
 
     def search_with_timeout(self, query: Query, k: int = 10,
                             timeout_s: float = 30.0) -> list:
@@ -1603,12 +1508,11 @@ class IndexSearcher:
         (the pinned-mode-aware thread wrapper); if pinning is explicitly
         disabled we skip the cancellation — cancelling a job group from a
         shared JVM thread could cancel unrelated concurrent jobs."""
-        import os as _os
         import uuid as _uuid
 
         from pyspark import InheritableThread
 
-        pinned = _os.environ.get(
+        pinned = os.environ.get(
             "PYSPARK_PIN_THREAD", "true").lower() != "false"
         sc = self.spark.sparkContext
         gid = f"rucene-timeout-{_uuid.uuid4().hex[:8]}"
@@ -1640,24 +1544,19 @@ class IndexSearcher:
         return result
 
     def count(self, query: Query) -> int:
-        # count fast paths apply only without deletes (searcher.rs:632-654)
-        if self._deleted is None:
+        # count fast paths (searcher.rs:632-654); under deletes the live
+        # count per leaf is maxDoc - numDeletedDocs, a metadata fold
+        if self._deleted is None or self._bcast_deleted:
             if isinstance(query, MatchAllDocsQuery):
-                return self.doc_count
+                return self.doc_count - sum(
+                    len(v) for v in self._tomb_by_seg().values())
             if isinstance(query, TermQuery):
                 self._check_field(query.field)
-                stats = self._stats_for([(query.field, query.term)])
-                row = stats.get((query.field, query.term))
+                if self._deleted is not None:
+                    return self._term_count_live(query)
+                row = self._stats_for([(query.field, query.term)]).get(
+                    (query.field, query.term))
                 return int(row["df"]) if row else 0
-        elif self._bcast_deleted:
-            # tombstone-aware fast paths: Lucene's live count per leaf is
-            # maxDoc - numDeletedDocs — a metadata fold, not a row export
-            if isinstance(query, MatchAllDocsQuery):
-                tomb = self._tomb_by_seg()
-                return self.doc_count - sum(len(v) for v in tomb.values())
-            if isinstance(query, TermQuery):
-                self._check_field(query.field)
-                return self._term_count_live(query)
         return self._live(
             self._frame(query, np.float32(1.0), needs_scores=False)).count()
 
@@ -1808,12 +1707,7 @@ class IndexSearcher:
             )
             .select("seg", "doc", "score")
         )
-        out = (
-            self._docmeta.join(F.broadcast(combined.orderBy(
-                F.desc("score"), "seg", "doc").limit(k)), ["seg", "doc"])
-            .orderBy(F.desc("score"), "seg", "doc")
-        )
-        return out
+        return self._topk_hits(combined, k)
 
     def search_blockmax(self, terms: list[str], k: int = 10,
                         boosts: list[float] | None = None,
@@ -1866,82 +1760,12 @@ class IndexSearcher:
                k1_, b_, self.avgdl64_f[field])
 
         def seg_fn(sub, tomb):
-            return _bmw_seg_topk(sub, tomb, *bmw)
+            return [(0, *_bmw_seg_topk(sub, tomb, *bmw))]
 
-        frame = self._leaf_scan(
-            [(F.col("field") == field) & F.col("term").isin(terms)],
-            seg_fn, k, _BMW_SCAN_COLS)
-        topk = frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
-        return (
-            self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
-            .orderBy(F.desc("score"), "seg", "doc")
-        )
-
-    def _dismax_collector_topk(self, q: "DisjunctionMaxQuery",
-                               boost: np.float32,
-                               k: int | None) -> DataFrame:
-        """Zero-shuffle DisjunctionMax frame — the per-segment collector
-        kernel specialized to the dismax fold (dis_max.rs: score =
-        max(disjuncts) + tie_breaker * Σ(others)). One scan pass over
-        the disjunct terms' postings; per segment the worker decodes,
-        scores each disjunct with the shared term kernel
-        (_term_scores) and reduces max/sum per doc with reduceat. With
-        ``k`` it masks tombstones and emits ≤k rows per segment; with
-        ``k=None`` it emits every matching doc for the caller to
-        live-mask. Requires term disjuncts (after boost folding) with
-        unique (field, term); scores are the per-term float32 kernel,
-        float64 fold, cast to the score type."""
-        specs = []
-        for d in q.disjuncts:
-            d, db = self._fold_boost(d, boost)
-            specs.append((d.field, d.term,
-                          float(np.float32(db * np.float32(d.boost)))))
-        keys = [(f_, t) for f_, t, _ in specs]
-        tw = self._term_weight_table(specs, self._stats_for(keys))
-        ci_of = {key: i for i, key in enumerate(keys)}
-        lucene = tw[0]
-        ftype = np.float32 if lucene else np.float64
-        tie = float(q.tie_breaker)
-        tomb = self._tomb_by_seg() if k is not None else {}
-
-        def fn(batches):
-            # streamed per segment (see _iter_seg_chunks): bounded memory
-            for s, sub in _iter_seg_chunks(batches):
-                counts, d_s, tfs, aux = _decode_term_rows(sub, lucene)
-                ci_row = np.fromiter(
-                    (ci_of[(f_, t)] for f_, t
-                     in zip(sub["field"], sub["term"])),
-                    dtype=np.int64, count=len(sub))
-                v_s = _term_scores(np.repeat(ci_row, counts), tfs, aux, tw)
-                o = np.argsort(d_s, kind="stable")
-                d_s, v_s = d_s[o], v_s[o]
-                if len(d_s) == 0:
-                    continue
-                nb = np.empty(len(d_s), dtype=bool)
-                nb[0] = True
-                nb[1:] = d_s[1:] != d_s[:-1]
-                starts = np.flatnonzero(nb)
-                du = d_s[starts]
-                mx = np.maximum.reduceat(v_s, starts)
-                sm = np.add.reduceat(v_s, starts)
-                score = (mx + tie * (sm - mx)).astype(ftype)
-                live = ~_dead_mask(tomb.get(int(s)), du)
-                du, score = du[live], score[live]
-                if len(du) == 0:
-                    continue
-                if k is not None:
-                    top = np.lexsort((du, -score))[:k]
-                    du, score = du[top], score[top]
-                yield pd.DataFrame({
-                    "seg": np.full(len(du), s, dtype=np.int32),
-                    "doc": du,
-                    "score": score,
-                })
-
-        scan = self._postings.filter(self._terms_cond(keys)).select(
-            "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
-            "norms_bin", "dls_bin")
-        return self._coalesced(scan).mapInPandas(fn, self._score_schema)
+        frame = self._seg_scan(
+            (F.col("field") == field) & F.col("term").isin(terms),
+            _BMW_SCAN_COLS, seg_fn, k)
+        return self._topk_hits(frame, k)
 
     # ------------------------------------------------------------------
     # explain
@@ -1950,110 +1774,77 @@ class IndexSearcher:
     def explain(self, query: Query, seg: int, doc: int) -> dict:
         """Structured score breakdown for one (seg, doc) — the reference's
         ``Explanation`` tree (bm25_similarity.rs:265-361, explanation.rs):
-        nested ``{value, description, details}`` dicts, float32 faithful in
-        "lucene" mode."""
+        nested ``{value, description, details}`` dicts. The value is
+        bit-identical to the doc's search() score in both scoring modes:
+        boosts fold into the leaf weights the way search() passes them
+        down, and every node combines with the plan evaluator's
+        arithmetic (_eval_node)."""
+        return self._explain(query, np.float32(1.0), seg, doc)
+
+    def _explain(self, query: Query, boost: np.float32, seg: int,
+                 doc: int) -> dict:
+        query, boost = self._fold_boost(query, boost)
+        lucene = self.scoring == "lucene"
         if isinstance(query, TermQuery):
-            return self._explain_term(query, np.float32(1.0), seg, doc)
-        if isinstance(query, BoostQuery):
-            if isinstance(query.query, TermQuery):
-                return self._explain_term(
-                    query.query, np.float32(query.boost), seg, doc)
-            if isinstance(query.query, PhraseQuery):
-                return self._explain_phrase(
-                    query.query, np.float32(query.boost), seg, doc)
-            from .query import SpanQuery as _SpanQuery
-            if isinstance(query.query, _SpanQuery):
-                return self._explain_span(
-                    query.query, np.float32(query.boost), seg, doc)
-            inner = self.explain(query.query, seg, doc)
-            inner["value"] = float(
-                np.float32(inner["value"] * np.float32(query.boost)))
-            return inner
+            return self._explain_term(query, boost, seg, doc)
+        if isinstance(query, PhraseQuery):
+            return self._explain_phrase(query, boost, seg, doc)
+        if isinstance(query, _SpanQueryT):
+            return self._explain_span(query, boost, seg, doc)
         if isinstance(query, BooleanQuery):
             # BooleanWeight::explain semantics: a failed must/filter, a
             # matching must_not, or unmet min_should_match all make the doc
             # a NON-match, even if other clauses would contribute score.
-            details = []
+            musts = []
             for sub in query.musts:
-                e = self.explain(sub, seg, doc)
-                details.append(e)
-                if not e["match"]:
-                    return {
-                        "match": False, "value": 0.0,
-                        "description": "Failure to meet condition of"
-                                       " required clause",
-                        "details": details,
-                    }
-            matched_shoulds = []
-            for sub in query.shoulds:
-                e = self.explain(sub, seg, doc)
-                if e["match"]:
-                    details.append(e)
-                    matched_shoulds.append(e)
-            if len(matched_shoulds) < query.min_should_match:
-                return {
-                    "match": False, "value": 0.0,
-                    "description": f"Failure to match minimum number of"
-                                   f" optional clauses:"
-                                   f" {query.min_should_match}",
-                    "details": details,
-                }
-            for sub in query.filters:
-                if not self._matches_doc(sub, seg, doc):
-                    return {
-                        "match": False, "value": 0.0,
-                        "description": "Failure to meet condition of"
-                                       " filter clause",
-                        "details": details,
-                    }
-            for sub in query.must_nots:
-                if self._matches_doc(sub, seg, doc):
-                    return {
-                        "match": False, "value": 0.0,
-                        "description": "Failure to meet condition of"
-                                       " prohibited clause",
-                        "details": details,
-                    }
+                musts.append(self._explain(sub, boost, seg, doc))
+                if not musts[-1]["match"]:
+                    return _no_match("Failure to meet condition of required"
+                                     " clause", musts)
+            shoulds = [e for e in (self._explain(sub, boost, seg, doc)
+                                   for sub in query.shoulds) if e["match"]]
+            details = musts + shoulds
+            if len(shoulds) < query.min_should_match:
+                return _no_match("Failure to match minimum number of optional"
+                                 f" clauses: {query.min_should_match}",
+                                 details)
+            if not all(self._matches_doc(s, seg, doc) for s in query.filters):
+                return _no_match("Failure to meet condition of filter clause",
+                                 details)
+            if any(self._matches_doc(s, seg, doc) for s in query.must_nots):
+                return _no_match("Failure to meet condition of prohibited"
+                                 " clause", details)
             if not details:
-                return {"match": False, "value": 0.0,
-                        "description": "no matching clauses", "details": []}
-            value = float(np.float32(np.float64(
-                sum(d["value"] for d in details))))
-            return {
-                "match": True,
-                "value": value,
-                "description": "sum of:",
-                "details": details,
-            }
-        if isinstance(query, PhraseQuery):
-            return self._explain_phrase(query, np.float32(1.0), seg, doc)
-        from .query import SpanQuery as _SpanQuery
-        if isinstance(query, _SpanQuery):
-            return self._explain_span(query, np.float32(1.0), seg, doc)
+                return _no_match("no matching clauses")
+            # musts summed, then matched shoulds, then the two added
+            total = 0.0
+            for e in musts:
+                total += e["value"]
+            total += sum(e["value"] for e in shoulds)
+            return {"match": True,
+                    "value": float(_node_round(np.asarray([total]),
+                                               lucene)[0]),
+                    "description": "sum of:", "details": details}
         if isinstance(query, DisjunctionMaxQuery):
             # DisjunctionMaxWeight::explain (dis_max.rs): max of the
-            # matching sub-explanations, plus tie_breaker × the others;
-            # the combine arithmetic mirrors the frame's Spark agg
-            # (f32 max, f64 sum, f64 combine, f32 cast)
-            details = [self.explain(d, seg, doc) for d in query.disjuncts]
+            # matching sub-explanations, plus tie_breaker × the others
+            details = [self._explain(d, boost, seg, doc)
+                       for d in query.disjuncts]
             matched = [e for e in details if e["match"]]
             if not matched:
-                return {"match": False, "value": 0.0,
-                        "description": "No matching clause",
-                        "details": details}
-            mx = max(np.float32(e["value"]) for e in matched)
-            s64 = float(sum(np.float64(np.float32(e["value"]))
-                            for e in matched))
+                return _no_match("No matching clause", details)
+            vals = [e["value"] for e in matched]
+            mx = max(vals)
             tie = float(query.tie_breaker)
-            value = float(np.float32(np.float64(mx)
-                                     + tie * (s64 - np.float64(mx))))
+            value = _node_round(np.asarray([mx + tie * (sum(vals) - mx)]),
+                                lucene)[0]
             desc = ("max of:" if tie == 0.0
                     else f"max plus {tie} times others of:")
-            return {"match": True, "value": value, "description": desc,
-                    "details": matched}
+            return {"match": True, "value": float(value),
+                    "description": desc, "details": matched}
         # generic fallback: evaluate the query's frame at this one doc
         row = (
-            self._frame(query, np.float32(1.0), needs_scores=True)
+            self._frame(query, boost, needs_scores=True)
             .filter((F.col("seg") == seg) & (F.col("doc") == doc))
             .limit(1).collect()
         )
@@ -2061,9 +1852,7 @@ class IndexSearcher:
             return {"match": True, "value": float(row[0]["score"]),
                     "description": f"{type(query).__name__}, score:",
                     "details": []}
-        return {"match": False, "value": 0.0,
-                "description": f"no match ({type(query).__name__})",
-                "details": []}
+        return _no_match(f"no match ({type(query).__name__})")
 
     def _matches_doc(self, q: Query, seg: int, doc: int) -> bool:
         """Does ``q`` match one specific (seg, doc)? Explain-path helper."""
@@ -2074,72 +1863,18 @@ class IndexSearcher:
 
     def _explain_term(self, q: TermQuery, boost: np.float32,
                       seg: int, doc: int) -> dict:
-        from .smallfloat import NORM_TABLE
-
+        """TermWeight::explain — the term kernels' score of the doc's tf
+        (one-term _explain_bm25)."""
         self._check_field(q.field)
         stats = self._stats_for([(q.field, q.term)])
-        row = stats.get((q.field, q.term))
-        df_ = int(row["df"]) if row else 0
-        hit = None
-        if df_:
-            blocks = self._postings.filter(
-                (F.col("field") == q.field)
-                & (F.col("term") == q.term) & (F.col("seg") == seg)
-                & (F.col("first_doc") <= doc) & (F.col("last_doc") >= doc)
-            ).collect()
-            for b in blocks:
-                d = delta_decode(unpack_ints(b["docs_bin"], b["num_docs"]))
-                idx = np.flatnonzero(d == doc)
-                if idx.size:
-                    tfs = unpack_ints(b["tfs_bin"], b["num_docs"])
-                    nbs = unpack_ints(b["norms_bin"], b["num_docs"])
-                    hit = (int(tfs[idx[0]]), int(nbs[idx[0]]))
-                    break
-        if hit is None:
-            return {"match": False, "value": 0.0,
-                    "description": f"no matching term term={q.term}",
-                    "details": []}
-        freq, nb = hit
-        cache = self.cache_f[q.field]
-        k1_, b_ = self.sim_f[q.field]
-        k1f = np.float32(k1_)
-        total_boost = np.float32(boost * np.float32(q.boost))
-        idf = idf32(df_, self.doc_count)
-        field_len = float(NORM_TABLE[nb])
-        tf_norm = np.float32(
-            (np.float32(freq) * (k1f + np.float32(1.0)))
-            / (np.float32(freq) + cache[nb]))
-        value = float(np.float32(np.float32(idf * total_boost)
-                                 * (k1f + np.float32(1.0)) * np.float32(freq)
-                                 / (np.float32(freq) + cache[nb])))
-        return {
-            "match": True,
-            "value": value,
-            "description": f"score(doc={doc},freq={freq}), product of:",
-            "details": [
-                {"value": float(idf),
-                 "description": "idf, computed as log(1 + (docCount - docFreq"
-                                " + 0.5) / (docFreq + 0.5)) from:",
-                 "details": [
-                     {"value": float(df_), "description": "docFreq", "details": []},
-                     {"value": float(self.doc_count), "description": "docCount",
-                      "details": []},
-                 ]},
-                {"value": float(tf_norm),
-                 "description": "tfNorm, computed as (freq * (k1 + 1)) / (freq"
-                                " + k1 * (1 - b + b * fieldLength /"
-                                " avgFieldLength)) from:",
-                 "details": [
-                     {"value": float(freq), "description": "termFreq", "details": []},
-                     {"value": float(k1_), "description": "parameter k1", "details": []},
-                     {"value": float(b_), "description": "parameter b", "details": []},
-                     {"value": float(self.avgdl_f[q.field]),
-                      "description": "avgFieldLength", "details": []},
-                     {"value": field_len, "description": "fieldLength",
-                      "details": []},
-                 ]},
-            ],
-        }
+        hits, nb, dl = ({}, 0, 0) if not stats else self._doc_postings(
+            q.field, [q.term], seg, doc, positions=False)
+        if q.term not in hits:
+            return _no_match(f"no matching term term={q.term}")
+        return self._explain_bm25(
+            q.field, [q.term], hits[q.term][0], nb, dl,
+            np.float32(boost * np.float32(q.boost)), doc, "term " + q.term,
+            stats)
 
     def payloads(self, field: str, term: str, seg: int,
                  doc: int) -> list[tuple[int, bytes]]:
@@ -2181,18 +1916,19 @@ class IndexSearcher:
             return list(zip(pos.tolist(), doc_pays))
         return []
 
-    def _doc_positions(self, field: str, uniq_terms: list[str],
-                       ti_of: dict, seg: int, doc: int):
-        """Per-term positions of one (seg, doc) plus its (norm_byte, dl) —
-        one pushed postings scan of the blocks whose doc range holds the
-        doc, decoded in this process; explain-path helper."""
+    def _doc_postings(self, field: str, terms: list[str], seg: int,
+                      doc: int, positions: bool = True):
+        """Per-term ``(tf, positions)`` of one (seg, doc) plus its
+        (norm_byte, dl) — one pushed postings scan of the blocks whose
+        doc range holds the doc, decoded in this process (positions are
+        None unless asked for); explain-path helper."""
         blocks = self._postings.filter(
-            (F.col("field") == field) & F.col("term").isin(uniq_terms)
+            (F.col("field") == field) & F.col("term").isin(terms)
             & (F.col("seg") == seg)
             & (F.col("first_doc") <= doc) & (F.col("last_doc") >= doc)
         ).select("term", "num_docs", "docs_bin", "tfs_bin", "norms_bin",
-                 "dls_bin", "pos_bin").collect()
-        pos_map, nb, dl = {}, 0, 0
+                 "dls_bin", *(["pos_bin"] if positions else [])).collect()
+        hits, nb, dl = {}, 0, 0
         for b in blocks:
             n = b["num_docs"]
             idx = np.flatnonzero(
@@ -2201,12 +1937,15 @@ class IndexSearcher:
                 continue
             i = int(idx[0])
             tfs = unpack_ints(b["tfs_bin"], n).astype(np.int64)
-            flat, _ = batch_unpack_positions([b["pos_bin"]], tfs)
-            lo = int(tfs[:i].sum())
-            pos_map[ti_of[b["term"]]] = flat[lo:lo + tfs[i]].astype(np.int64)
+            pos = None
+            if positions:
+                flat, _ = batch_unpack_positions([b["pos_bin"]], tfs)
+                lo = int(tfs[:i].sum())
+                pos = flat[lo:lo + tfs[i]].astype(np.int64)
+            hits[b["term"]] = (int(tfs[i]), pos)
             nb = int(unpack_ints(b["norms_bin"], n)[i])
             dl = int(unpack_ints(b["dls_bin"], n)[i])
-        return pos_map, nb, dl
+        return hits, nb, dl
 
     def _idf_sum_detail(self, field: str, terms: list[str],
                         stats: dict) -> tuple[np.float32, float, dict]:
@@ -2232,35 +1971,40 @@ class IndexSearcher:
                   "description": "idf(), sum of:", "details": per_term}
         return idf32_total, idf64_total, detail
 
-    def _explain_positional(self, field: str, idf_terms: list[str],
-                            freq: float, nb: int, dl: int,
-                            boost: np.float32, doc: int, what: str,
-                            stats: dict) -> dict:
-        """Shared BM25 Explanation tree for freq-bearing positional queries
-        (phrase/span) — the value is the leaf kernels' own _freq_scores
-        (f32 path in "lucene" mode, f64 otherwise),
-        bm25_similarity.rs:265-361."""
+    def _tf_norm(self, field: str, freq: float, nb: int,
+                 dl: int) -> tuple[float, float]:
+        """(tfNorm, fieldLength) Explanation details of a doc's freq: f32
+        over the norm byte's length in "lucene" mode, f64 over the exact
+        length otherwise."""
         from .smallfloat import NORM_TABLE
 
+        k1_, b_ = self.sim_f[field]
+        if self.scoring == "lucene":
+            tff = np.float32(freq)
+            return (float((tff * (np.float32(k1_) + np.float32(1.0)))
+                          / (tff + self.cache_f[field][nb])),
+                    float(NORM_TABLE[nb]))
+        return (float(freq * (k1_ + 1.0) / (
+            freq + k1_ * ((1.0 - b_) + b_ * dl / self.avgdl64_f[field]))),
+            float(dl))
+
+    def _explain_bm25(self, field: str, idf_terms: list[str],
+                      freq: float, nb: int, dl: int, boost: np.float32,
+                      doc: int, what: str, stats: dict) -> dict:
+        """Shared BM25 Explanation tree of a term, phrase or span leaf
+        (``what`` names it) — the value is the leaf kernels' own
+        _freq_scores (f32 path in "lucene" mode, f64 otherwise),
+        bm25_similarity.rs:265-361."""
         _, _, idf_detail = self._idf_sum_detail(field, idf_terms, stats)
-        wk32, coef64 = self._positional_weight(field, idf_terms, boost,
-                                               stats)
+        wk32, coef64 = self._bm25_weight(field, idf_terms, boost,
+                                         stats)
         k1_, b_ = self.sim_f[field]
         cache = self.cache_f[field]
         value = float(_freq_scores(
             np.asarray([freq]), np.asarray([nb]), np.asarray([dl]),
             self.scoring == "lucene", wk32, cache, coef64, k1_, b_,
             self.avgdl64_f[field])[0])
-        if self.scoring == "lucene":
-            tff = np.float32(freq)
-            tf_norm = float((tff * (np.float32(k1_) + np.float32(1.0)))
-                            / (tff + cache[nb]))
-            field_len = float(NORM_TABLE[nb])
-        else:
-            denom = freq + k1_ * ((1.0 - b_) + b_ * dl
-                                  / self.avgdl64_f[field])
-            tf_norm = float(freq * (k1_ + 1.0) / denom)
-            field_len = float(dl)
+        tf_norm, field_len = self._tf_norm(field, freq, nb, dl)
         return {
             "match": True,
             "value": value,
@@ -2273,8 +2017,8 @@ class IndexSearcher:
                                 " (freq + k1 * (1 - b + b * fieldLength /"
                                 " avgFieldLength)) from:",
                  "details": [
-                     {"value": float(freq), "description": "phraseFreq"
-                      if what.startswith("phrase") else "spanFreq",
+                     {"value": float(freq),
+                      "description": what.split(" ")[0] + "Freq",
                       "details": []},
                      {"value": float(k1_), "description": "parameter k1",
                       "details": []},
@@ -2291,45 +2035,35 @@ class IndexSearcher:
     def _explain_phrase(self, q: PhraseQuery, boost: np.float32,
                         seg: int, doc: int) -> dict:
         """PhraseWeight::explain — phraseFreq from the shared kernels (the
-        same freq `_phrase_leaf` verifies), idf summed over terms in
+        same freq the plan's phrase leaf verifies), idf summed over terms in
         phrase order."""
         self._check_field(q.field)
         self._check_positions(q.field)
         stats = self._stats_for([(q.field, t) for t in q.terms])
         if any((q.field, t) not in stats for t in q.terms):
-            return {"match": False, "value": 0.0,
-                    "description": "no matching term", "details": []}
-        uniq_terms = sorted(set(q.terms))
-        ti_of = {t: i for i, t in enumerate(uniq_terms)}
-        pos_map, nb, dl = self._doc_positions(
-            q.field, uniq_terms, ti_of, seg, doc)
-        if len(pos_map) < len(uniq_terms):
-            return {"match": False, "value": 0.0,
-                    "description": "no matching term", "details": []}
-        pls = [pos_map[ti_of[t]] for t in q.terms]
+            return _no_match("no matching term")
+        hits, nb, dl = self._doc_postings(q.field, sorted(set(q.terms)),
+                                          seg, doc)
+        if any(t not in hits for t in q.terms):
+            return _no_match("no matching term")
+        pls = [hits[t][1] for t in q.terms]
         if q.slop == 0:
             freq = float(exact_phrase_freq(pls, list(q.positions)))
         else:
             freq = float(sloppy_phrase_freq(
                 pls, list(q.positions), list(q.terms), q.slop))
         if freq <= 0:
-            return {"match": False, "value": 0.0,
-                    "description": f"no matching phrase occurrence"
-                                   f" (slop={q.slop})", "details": []}
-        return self._explain_positional(
+            return _no_match(f"no matching phrase occurrence (slop={q.slop})")
+        return self._explain_bm25(
             q.field, list(q.terms), freq, nb, dl, boost, doc,
             "phrase " + " ".join(q.terms), stats)
 
     def _explain_span(self, q, boost: np.float32, seg: int,
                       doc: int) -> dict:
         """SpanWeight::explain — freq = f32 Σ 1/(1+width) over the span
-        kernel's emitted spans, identical to `_span_leaf`."""
-        from .query import SpanBoostQuery, span_spec, span_terms
+        kernel's emitted spans, identical to the plan's span leaf."""
         from .spans import span_freq
 
-        while isinstance(q, SpanBoostQuery):
-            boost = np.float32(boost * np.float32(q.boost))
-            q = q.query
         field = q.field
         self._check_field(field)
         self._check_positions(field)
@@ -2338,13 +2072,12 @@ class IndexSearcher:
         uniq_terms = sorted(set(terms))
         ti_of = {t: i for i, t in enumerate(uniq_terms)}
         spec = span_spec(q, ti_of)
-        pos_map, nb, dl = self._doc_positions(
-            field, uniq_terms, ti_of, seg, doc)
+        hits, nb, dl = self._doc_postings(field, uniq_terms, seg, doc)
+        pos_map = {ti_of[t]: pos for t, (_, pos) in hits.items()}
         freq = float(span_freq(spec, pos_map)) if pos_map else 0.0
         if freq <= 0:
-            return {"match": False, "value": 0.0,
-                    "description": "no matching spans", "details": []}
-        return self._explain_positional(
+            return _no_match("no matching spans")
+        return self._explain_bm25(
             field, terms, freq, nb, dl, boost, doc, "span query", stats)
 
     # ------------------------------------------------------------------
@@ -2380,42 +2113,30 @@ class IndexSearcher:
     def _collect_terms(self, q: Query) -> list[tuple[str, str]]:
         """All (field, term) leaves of a query tree (validates fields)."""
         if isinstance(q, TermQuery):
-            self._check_field(q.field)
-            return [(q.field, q.term)]
-        if isinstance(q, PhraseQuery):
-            self._check_field(q.field)
-            return [(q.field, t) for t in q.terms]
-        from .query import SpanQuery as _SpanQuery, span_terms
-        if isinstance(q, _SpanQuery):
-            self._check_field(q.field)
-            return [(q.field, t) for t in span_terms(q)]
-        if isinstance(q, BooleanQuery):
-            subs = q.musts + q.shoulds + q.filters + q.must_nots
-        elif isinstance(q, (BoostQuery, ConstantScoreQuery, FilterQuery,
-                            MinScoreQuery)):
-            subs = [q.query]
-        elif isinstance(q, DisjunctionMaxQuery):
-            subs = q.disjuncts
-        elif isinstance(q, BoostingQuery):
-            subs = [q.positive, q.negative]
+            terms = [q.term]
+        elif isinstance(q, PhraseQuery):
+            terms = q.terms
+        elif isinstance(q, _SpanQueryT):
+            terms = span_terms(q)
         else:
-            return []
-        return [t for s in subs for t in self._collect_terms(s)]
+            return [t for s in _children(q) for t in self._collect_terms(s)]
+        self._check_field(q.field)
+        return [(q.field, t) for t in terms]
 
     # ------------------------------------------------------------------
     # planning: query tree → (seg, doc, score) frame
     # ------------------------------------------------------------------
 
-    def _frame(self, q: Query, boost: np.float32, needs_scores: bool,
-               stats: dict | None = None) -> DataFrame:
+    def _frame(self, q: Query, boost: np.float32,
+               needs_scores: bool) -> DataFrame:
         if not needs_scores and self._query_cache is not None:
-            cached = self._cached_filter_frame(q, boost, stats)
+            cached = self._cached_filter_frame(q, boost)
             if cached is not None:
                 return cached
-        return self._frame_impl(q, boost, needs_scores, stats)
+        return self._frame_impl(q, boost, needs_scores)
 
-    def _cached_filter_frame(self, q: Query, boost: np.float32,
-                             stats: dict | None) -> DataFrame | None:
+    def _cached_filter_frame(self, q: Query,
+                             boost: np.float32) -> DataFrame | None:
         """CachingWrapperWeight::create_scorer protocol
         (query_cache.rs:416-456), step for step: policy.on_use, index
         size eligibility (:424-428 — the leaf min_size test, applied to
@@ -2429,10 +2150,10 @@ class IndexSearcher:
         ConstantScore/Boost wrappers are skipped at this level (their
         inner query is consulted on recursion instead) — the policy
         tracks the ACTUAL query type (cache_policy.rs:93,105
-        debug-asserts the weight is never CONSTANT).  Plain-term filter
-        clauses inside BooleanQuery never reach here at all: they ride
-        the boolean's one-scan term kernel (the term collector, or
-        _boolean_frame's term_specs), which beats a per-clause cached
+        debug-asserts the weight is never CONSTANT).  No clause inside a
+        postings-only tree reaches here, nor a postings-only clause of a
+        boolean with a docmeta-backed leaf: they ride their tree's
+        one-scan plan (_postings_frame), which beats a per-clause cached
         set — the same economics behind the policy's min-frequency 20
         for cheap term filters."""
         from .cache import query_cache_key
@@ -2449,50 +2170,45 @@ class IndexSearcher:
         if hit is None:
             if not policy.should_cache(q, key):
                 return None
-            frame = self._frame_impl(q, np.float32(1.0), False, stats)
+            frame = self._frame_impl(q, np.float32(1.0), False)
             hit = qc.put(self._gen_key, key, frame.select("seg", "doc"))
         s = float(np.float32(boost))
         return hit.select(
             "seg", "doc", F.lit(s).cast(self._score_t).alias("score"))
 
-    def _frame_impl(self, q: Query, boost: np.float32, needs_scores: bool,
-                    stats: dict | None = None) -> DataFrame:
+    def _frame_impl(self, q: Query, boost: np.float32,
+                    needs_scores: bool) -> DataFrame:
+        if _postings_only(q):
+            # one per-segment plan: every matching (seg, doc, score)
+            # leaves the scan task, with no shuffle
+            return self._postings_frame({0: (q, boost)}, None).select(
+                "seg", "doc", "score")
         if isinstance(q, BoostQuery):
             return self._frame(q.query, np.float32(boost * np.float32(q.boost)),
-                               needs_scores, stats)
-        # term, flattenable boolean, term-dismax, phrase and span shapes:
-        # their per-segment kernel emits every matching (seg, doc, score)
-        # inside the scan task, with no shuffle
-        frame = self._kernel_frame(q, boost, None)
-        if frame is not None:
-            return frame
-        if stats is None:
-            stats = self._stats_for(self._collect_terms(q))
-
+                               needs_scores)
+        # a tree with a docmeta-backed leaf: fetch every term's stats in
+        # one job before its postings-only subtrees plan one by one
+        self._stats_for(self._collect_terms(q))
         if isinstance(q, ConstantScoreQuery):
-            inner = self._frame(q.query, np.float32(1.0), False, stats)
+            inner = self._frame(q.query, np.float32(1.0), False)
             s = float(np.float32(boost * np.float32(q.boost)))
             return inner.select("seg", "doc",
                                 F.lit(s).cast(self._score_t).alias("score"))
-        if isinstance(q, MatchAllDocsQuery):
-            s = float(np.float32(boost))
-            return self._docmeta.select(
-                "seg", "doc", F.lit(s).cast(self._score_t).alias("score"))
-        if isinstance(q, RangeQuery):
-            cond = F.col(q.column).isNotNull()
-            if q.lower is not None:
-                cond = cond & (F.col(q.column) >= F.lit(q.lower))
-            if q.upper is not None:
-                cond = cond & (F.col(q.column) <= F.lit(q.upper))
-            s = float(np.float32(boost))
-            return self._docmeta.filter(cond).select(
-                "seg", "doc", F.lit(s).cast(self._score_t).alias("score"))
-        from .query import MultiRangeQuery
-        if isinstance(q, MultiRangeQuery):
-            # multi-dim points (bkd_writer.rs): all dims in ONE scan; each
-            # range reaches the Parquet reader as a pushed filter
+        if isinstance(q, (MatchAllDocsQuery, RangeQuery, MultiRangeQuery,
+                          ExistsQuery)):
+            # doc-values leaves, constant-scored over docmeta; multi-dim
+            # points (bkd_writer.rs) test all dims in ONE scan, each
+            # range a filter pushed to the Parquet reader
+            if isinstance(q, MultiRangeQuery):
+                ranges = q.ranges
+            elif isinstance(q, RangeQuery):
+                ranges = [(q.column, q.lower, q.upper)]
+            elif isinstance(q, ExistsQuery):
+                ranges = [(q.column, None, None)]
+            else:
+                ranges = []
             cond = F.lit(True)
-            for col, lo, hi in q.ranges:
+            for col, lo, hi in ranges:
                 cond = cond & F.col(col).isNotNull()
                 if lo is not None:
                     cond = cond & (F.col(col) >= F.lit(lo))
@@ -2501,14 +2217,10 @@ class IndexSearcher:
             s = float(np.float32(boost))
             return self._docmeta.filter(cond).select(
                 "seg", "doc", F.lit(s).cast(self._score_t).alias("score"))
-        if isinstance(q, ExistsQuery):
-            s = float(np.float32(boost))
-            return self._docmeta.filter(F.col(q.column).isNotNull()).select(
-                "seg", "doc", F.lit(s).cast(self._score_t).alias("score"))
         if isinstance(q, FilterQuery):
             # candidate generation first, expensive per-doc predicate after
             # (two-phase iteration, filter_query.rs:28-52)
-            inner = self._frame(q.query, boost, needs_scores, stats)
+            inner = self._frame(q.query, boost, needs_scores)
             joined = inner.join(self._docmeta, ["seg", "doc"])
             if callable(q.predicate):
                 schema = self._score_schema
@@ -2525,13 +2237,13 @@ class IndexSearcher:
             return joined.filter(q.predicate).select("seg", "doc", "score")
         if isinstance(q, MinScoreQuery):
             # min_scorer.rs:69-71 — matches() requires score strictly > min
-            inner = self._frame(q.query, boost, True, stats)
+            inner = self._frame(q.query, boost, True)
             return inner.filter(F.col("score") > F.lit(float(q.min_score)))
         if isinstance(q, BooleanQuery):
-            return self._boolean_frame(q, boost, needs_scores, stats)
+            return self._boolean_frame(q, boost, needs_scores)
         if isinstance(q, DisjunctionMaxQuery):
             unioned = reduce(DataFrame.unionByName, [
-                self._frame(d, boost, needs_scores, stats)
+                self._frame(d, boost, needs_scores)
                 for d in q.disjuncts])
             tie = float(q.tie_breaker)
             return (
@@ -2544,8 +2256,8 @@ class IndexSearcher:
                 )
             )
         if isinstance(q, BoostingQuery):
-            pos = self._frame(q.positive, boost, needs_scores, stats)
-            neg = self._frame(q.negative, np.float32(1.0), False, stats)
+            pos = self._frame(q.positive, boost, needs_scores)
+            neg = self._frame(q.negative, np.float32(1.0), False)
             nb = float(q.negative_boost)
             return (
                 pos.join(neg.select("seg", "doc", F.lit(True).alias("_neg")),
@@ -2559,18 +2271,87 @@ class IndexSearcher:
             )
         raise TypeError(f"unsupported query: {type(q)}")
 
-    # -- leaves ---------------------------------------------------------
+    def _postings_frame(self, trees: dict, k: int | None) -> DataFrame:
+        """``(_q, seg, doc, score)`` rows of postings-only query trees
+        (_postings_only), ``trees[output_id] = (query, boost)`` — the one
+        evaluator of term, phrase and span leaves under any nesting of
+        boolean, dismax, boost, constant-score, min-score and boosting.
 
-    def _term_weights(self, field: str, term: str, boost: float, stats: dict):
-        """Per-(field, term) scoring constants: (wk32, idf64, boost64).
-        ``wk32`` folds the field's k1 (per-field similarity)."""
-        row = stats.get((field, term))
-        df_ = int(row["df"]) if row else 0
-        k1f = np.float32(self.sim_f[field][0])
-        w32 = np.float32(idf32(max(df_, 1), self.doc_count) * np.float32(boost))
-        wk32 = np.float32(w32 * (k1f + np.float32(1.0)))
-        idf_64 = float(np.log(1.0 + (self.doc_count - df_ + 0.5) / (df_ + 0.5)))
-        return wk32, idf_64, float(boost)
+        Like the reference's scorer tree per leaf reader
+        (boolean_query.rs:195-279, conjunction_scorer.rs:20-127), each
+        tree compiles into a plan (_compile) that runs per segment inside
+        ONE term-pruned scan over the union of the leaves' keys, reading
+        ``pos_bin`` only for phrase/span leaves: term rows decode once,
+        phrase/span leaves run their kernels, nodes combine in numpy
+        (_eval_node). Tasks hold whole segments (_iter_seg_chunks), so no
+        (seg, doc) shuffle exists. With ``k`` (a root, only under the
+        tombstone broadcast gate) the worker masks tombstones and keeps
+        each output's per-segment top-k; with ``k=None`` (nested use,
+        count(), roots above the gate) every match is emitted and the
+        caller live-masks. The query cache is not consulted inside a
+        tree (_cached_filter_frame)."""
+        stats = self._stats_for([key for q, _ in trees.values()
+                                 for key in self._collect_terms(q)])
+        plan = _Plan(stats)
+        outputs = [(oid, self._compile(q, boost, plan))
+                   for oid, (q, boost) in trees.items()]
+        if not plan.scan_keys:
+            return self.spark.createDataFrame(
+                [], f"_q int, {self._score_schema}")
+        tw = self._term_weight_table(plan.clauses, stats)
+        kid_of, pos_keys = plan.kid_of, frozenset(plan.pos_keys)
+        chunk0 = _VERIFY_CHUNK
+
+        def seg_fn(sub, tomb):
+            leaf = _SegPostings(sub, kid_of, pos_keys, tw, chunk0)
+            return _seg_outputs(outputs, leaf, tomb, k, tw[0])
+
+        cols = _TERM_SCAN_COLS + (_POS_SCAN_COLS if pos_keys else ())
+        return self._seg_scan(self._terms_cond(plan.scan_keys), cols,
+                              seg_fn, k)
+
+    def _compile(self, q: Query, boost: np.float32, plan: "_Plan"):
+        """A postings-only query tree as a plan node for _eval_node,
+        recording in ``plan`` what its scan must read. Boosts fold into
+        each leaf's weight the way _frame and the oracle pass them down;
+        filter, must-not, constant-score and boosting-negative children
+        compile with boost 1 (their scores are never used)."""
+        q, boost = self._fold_boost(q, boost)
+        one = np.float32(1.0)
+        if isinstance(q, TermQuery):
+            key = (q.field, q.term)
+            kid = plan.kid_of.setdefault(key, len(plan.kid_of))
+            plan.scan_keys.setdefault(key)
+            plan.clauses.append(
+                (q.field, q.term, float(np.float32(boost
+                                                   * np.float32(q.boost)))))
+            return ("term", kid, len(plan.clauses) - 1)
+        if isinstance(q, PhraseQuery):
+            return self._compile_phrase(q, boost, plan)
+        if isinstance(q, _SpanQueryT):
+            return self._compile_span(q, boost, plan)
+        if isinstance(q, BooleanQuery):
+            return ("bool", [self._compile(x, boost, plan) for x in q.musts],
+                    [self._compile(x, boost, plan) for x in q.shoulds],
+                    [self._compile(x, one, plan) for x in q.filters],
+                    [self._compile(x, one, plan) for x in q.must_nots],
+                    q.min_should_match)
+        if isinstance(q, DisjunctionMaxQuery):
+            return ("dismax", [self._compile(d, boost, plan)
+                               for d in q.disjuncts], float(q.tie_breaker))
+        if isinstance(q, ConstantScoreQuery):
+            return ("const", self._compile(q.query, one, plan),
+                    float(np.float32(boost * np.float32(q.boost))))
+        if isinstance(q, MinScoreQuery):
+            return ("min", self._compile(q.query, boost, plan),
+                    float(q.min_score))
+        if isinstance(q, BoostingQuery):
+            return ("boosting", self._compile(q.positive, boost, plan),
+                    self._compile(q.negative, one, plan),
+                    float(q.negative_boost))
+        raise TypeError(f"not a postings-only query: {type(q)}")
+
+    # -- leaves ---------------------------------------------------------
 
     def _term_weight_table(self, clauses: list[tuple], stats: dict):
         """BM25 constants of term clauses ``(field, term, boost)`` as
@@ -2583,87 +2364,24 @@ class IndexSearcher:
             self._check_field(f_)
         caches = [self.cache_f[f_] for f_ in fields]
         off = dict(zip(fields, np.cumsum([0] + [len(c) for c in caches])))
-        n = len(clauses)
-        wk32 = np.zeros(n, dtype=np.float32)
-        cofs = np.zeros(n, dtype=np.int64)
-        coef = np.zeros(n, dtype=np.float64)
-        k1_a = np.zeros(n, dtype=np.float64)
-        b_a = np.zeros(n, dtype=np.float64)
-        avg_a = np.zeros(n, dtype=np.float64)
-        for i, (f_, t, boost) in enumerate(clauses):
-            w32, idf64, b64 = self._term_weights(f_, t, boost, stats)
-            k1_, b_ = self.sim_f[f_]
-            wk32[i], cofs[i] = w32, off[f_]
-            coef[i] = (idf64 * b64) * _kp1_64(k1_)
-            k1_a[i], b_a[i], avg_a[i] = k1_, b_, self.avgdl64_f[f_]
+        rows = [(*self._bm25_weight(f_, [t], np.float32(b), stats),
+                 off[f_], *self.sim_f[f_], self.avgdl64_f[f_])
+                for f_, t, b in clauses]
+        wk32, coef, cofs, k1_a, b_a, avg_a = (
+            np.asarray([r[i] for r in rows], dtype=dt) for i, dt in
+            enumerate((np.float32, np.float64, np.int64, np.float64,
+                       np.float64, np.float64)))
         cache = (np.concatenate(caches) if caches
                  else np.zeros(0, dtype=np.float32))
         return (self.scoring == "lucene", wk32, cache, cofs, coef, k1_a,
                 b_a, avg_a)
 
-    def _batch_term_frame(self, specs: list[tuple], stats: dict) -> DataFrame:
-        """ONE postings scan + ONE Arrow decode stage for the term clauses
-        of a boolean that mixes them with other clause kinds.
-
-        ``specs``: (field, term, role, boost) per clause, ``role`` its
-        _ROLE_CODE. The reference's per-clause postings iterators share
-        one index pass here (conjunction_scorer.rs / disjunction_scorer.rs
-        collapse into a single term-pruned columnar scan). Clauses may
-        span fields; each scores against its own field's norm cache /
-        avgdl. The worker decodes, expands and scores through the term
-        collectors' helpers (_decode_term_rows, _expand_clauses,
-        _term_scores) and emits ``(seg, doc, score, _ct)``: one row per
-        posting and clause, so a (field, term) referenced by several
-        clauses emits one row per clause, in clause order. Filter and
-        must-not rows carry a score the boolean sum ignores."""
-        # clause table ordered by (field, term) key, so a scan row of a
-        # key expands to a contiguous run of clause numbers
-        by_key: dict[tuple[str, str], list] = {}
-        for f_, t, role, boost in specs:
-            by_key.setdefault((f_, t), []).append((role, boost))
-        kid_of = {key: i for i, key in enumerate(by_key)}
-        cl_counts = np.asarray([len(c) for c in by_key.values()],
-                               dtype=np.int64)
-        cl_starts = np.cumsum(cl_counts) - cl_counts
-        cl = [(key, c) for key, cs in by_key.items() for c in cs]
-        tw = self._term_weight_table(
-            [(f_, t, boost) for (f_, t), (_, boost) in cl], stats)
-        roles = np.asarray([role for _, (role, _) in cl], dtype=np.int32)
-        lucene = tw[0]
-        ftype = np.float32 if lucene else np.float64
-
-        def fn(batches):
-            for pdf in batches:
-                n_rows = len(pdf)
-                if n_rows == 0:
-                    continue
-                counts, docs, tfs, aux = _decode_term_rows(pdf, lucene)
-                row_kid = np.fromiter(
-                    (kid_of[(f_, t)] for f_, t
-                     in zip(pdf["field"].tolist(), pdf["term"].tolist())),
-                    dtype=np.int64, count=n_rows)
-                idx, ce = _expand_clauses(row_kid, counts, cl_counts,
-                                          cl_starts)
-                yield pd.DataFrame({
-                    "seg": np.repeat(pdf["seg"].to_numpy(np.int32),
-                                     counts)[idx],
-                    "doc": docs[idx],
-                    "score": _term_scores(ce, tfs[idx], aux[idx],
-                                          tw).astype(ftype),
-                    "_ct": roles[ce],
-                })
-
-        scan = self._postings.filter(self._terms_cond(by_key)).select(
-            "field", "term", "seg", "num_docs", "docs_bin", "tfs_bin",
-            "norms_bin", "dls_bin")
-        return scan.mapInPandas(
-            fn, f"seg int, doc long, score {self._score_t}, _ct int")
-
-    def _positional_weight(self, field: str, terms: list[str],
-                           boost: np.float32, stats: dict):
-        """(f32 wk, f64 coef) of a phrase or span query: idf summed over
-        ``terms`` in query order (PhraseWeight / SpanWeight), times the
-        boost and (k1 + 1) — the per-query constants of _freq_scores."""
+    def _bm25_weight(self, field: str, terms: list[str],
+                     boost: np.float32, stats: dict):
+        """(f32 wk, f64 coef) of a term clause (``terms`` of one) or of a
+        phrase or span query: idf summed over ``terms`` in query order
+        (PhraseWeight / SpanWeight), times the boost and (k1 + 1) — the
+        per-clause constants of _freq_scores."""
         idf32_total, idf64_total, _ = self._idf_sum_detail(
             field, terms, stats)
         k1_ = self.sim_f[field][0]
@@ -2671,47 +2389,46 @@ class IndexSearcher:
                           * (np.float32(k1_) + np.float32(1.0)))
         return wk32, (idf64_total * float(boost)) * _kp1_64(k1_)
 
-    def _leaf_scan(self, conds, seg_fn, k: int | None,
-                   cols=_LEAF_SCAN_COLS) -> DataFrame:
-        """One term-pruned postings scan (``conds`` OR-ed, ``cols``
-        read) streamed per segment through ``seg_fn(rows, tomb)`` →
-        (docs, scores). With ``k`` the segment's tombstones are passed in
-        (root leaves run only under the broadcast gate); nested leaves
-        get None and are live-masked by their caller."""
+    def _seg_scan(self, cond, cols, seg_fn, k: int | None) -> DataFrame:
+        """One term-pruned postings scan (``cond``, ``cols`` read)
+        streamed per segment through ``seg_fn(rows, tomb)`` → iterable
+        of ``(output_id, docs, scores)``, as ``(_q, seg, doc, score)``
+        rows. With ``k`` the segment's tombstones are passed in (roots
+        run only under the broadcast gate); otherwise None, and the
+        caller live-masks."""
         tomb = self._tomb_by_seg() if k is not None else {}
+        ftype = np.float32 if self.scoring == "lucene" else np.float64
 
         def fn(batches):
             # streamed per segment — peak memory is one segment's rows
             # no matter how many segments _coalesced packs in
             for s, sub in _iter_seg_chunks(batches):
-                dv, sv = seg_fn(sub, tomb.get(int(s)))
-                if len(dv):
-                    yield pd.DataFrame({
-                        "seg": np.full(len(dv), s, dtype=np.int32),
-                        "doc": dv,
-                        "score": sv,
-                    })
+                parts = list(seg_fn(sub, tomb.get(int(s))))
+                if not parts:
+                    continue
+                n = sum(len(d) for _, d, _ in parts)
+                yield pd.DataFrame({
+                    "_q": np.repeat(np.asarray([o for o, _, _ in parts],
+                                               dtype=np.int32),
+                                    [len(d) for _, d, _ in parts]),
+                    "seg": np.full(n, s, dtype=np.int32),
+                    "doc": np.concatenate([d for _, d, _ in parts]),
+                    "score": np.concatenate(
+                        [v for _, _, v in parts]).astype(ftype),
+                })
 
-        scan = self._postings.filter(
-            reduce(lambda a, b: a | b, conds)).select(*cols)
-        return self._coalesced(scan).mapInPandas(fn, self._score_schema)
+        scan = self._postings.filter(cond).select(*cols)
+        return self._coalesced(scan).mapInPandas(
+            fn, f"_q int, {self._score_schema}")
 
-    def _phrase_leaf(self, q: PhraseQuery, boost: np.float32,
-                     k: int | None = None) -> DataFrame:
-        """Phrase query (exact or sloppy) as ``(seg, doc, score)`` rows from
-        one term-pruned postings scan, with the doc conjunction, position
-        verification and BM25 all in numpy inside the scan task
-        (_phrase_seg_topk). Each task holds whole segments (the searcher
-        pins one file per partition, _coalesced unions whole partitions),
-        so no positions are shuffled.
-
-        With ``k`` (a root phrase) the kernel verifies candidates in
-        impact order and stops once the k-th verified score beats every
-        remaining bound, masks tombstones in the worker, and emits ≤ k
-        rows per segment; pos_bin blocks that cannot beat θ are never
-        varint-decoded. With ``k=None`` (a nested clause, count(),
-        delete-by-query) every candidate is verified in bounded chunks
-        and every hit emitted. Tests: tests/test_phrase_collector.py,
+    def _compile_phrase(self, q: PhraseQuery, boost: np.float32,
+                        plan: "_Plan"):
+        """Plan leaf of a phrase query (exact or sloppy), verified and
+        scored inside the scan task by _phrase_seg_topk: as a root it
+        verifies in impact order and stops once the k-th score beats
+        every remaining bound (pos_bin blocks that cannot beat θ are
+        never decoded); nested, every candidate is verified in bounded
+        chunks. Tests: tests/test_phrase_collector.py,
         tests/test_nested_positional.py.
 
         Sloppy phrases bound freq by Σ_slots tf − n_slots + 1 (every
@@ -2720,15 +2437,19 @@ class IndexSearcher:
         repeated-term shapes walk per doc behind the candidate cap."""
         self._check_field(q.field)
         self._check_positions(q.field)
-        stats = self._stats_for([(q.field, t) for t in set(q.terms)])
+        stats = plan.stats
         if any((q.field, t) not in stats for t in q.terms):
-            return self.spark.createDataFrame([], self._score_schema)
+            # a missing term matches nothing; its keys stay in the scan
+            # filter (never decoded), so every plan reads postings once
+            for t in q.terms:
+                plan.scan_keys.setdefault((q.field, t))
+            return ("none",)
         if q.slop > 0 and len(set(q.terms)) != len(q.terms):
             self._check_verify_cap(
                 min(int(stats[(q.field, t)]["df"]) for t in q.terms),
                 f"sloppy phrase {q.terms!r}~{q.slop}")
-        wk32, coef64 = self._positional_weight(q.field, q.terms, boost,
-                                               stats)
+        wk32, coef64 = self._bm25_weight(q.field, q.terms, boost,
+                                         stats)
 
         # hot-pair rewrite (build.py bigram channel): for an exact phrase,
         # every adjacent (a@p, b@p+1) slot pair with BOTH terms in the hot
@@ -2763,50 +2484,24 @@ class IndexSearcher:
         ti_of = {t: i for i, t in enumerate(uniq_terms)}
         slots = [(ti_of[t], p) for t, p, _ in new_slots]
         offsets = [p for _, p, _ in new_slots]
-        slop_ = int(q.slop)
-        terms_ = list(q.terms)
         bm = (self.scoring == "lucene", wk32, self.cache_f[q.field], coef64,
               *self.sim_f[q.field], self.avgdl64_f[q.field])
-        chunk0 = _VERIFY_CHUNK
+        keys = ([(q.field, t) for t in base_terms]
+                + [(q.field + BIGRAM_SUFFIX, t) for t in pair_terms])
+        plan.add_positional(keys)
+        return ("phrase", keys, slots, offsets, bm, int(q.slop),
+                list(q.terms))
 
-        def seg_fn(sub, tomb):
-            tds = _decode_seg_tds(sub, ti_of)
-            if len(tds) < len(uniq_terms):
-                return (), ()
-            return _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0,
-                                    *bm, slop=slop_, terms=terms_)
-
-        conds = []
-        if base_terms:
-            conds.append((F.col("field") == q.field)
-                         & F.col("term").isin(base_terms))
-        if pair_terms:
-            conds.append((F.col("field") == q.field + BIGRAM_SUFFIX)
-                         & F.col("term").isin(pair_terms))
-        return self._leaf_scan(conds, seg_fn, k)
-
-    def _span_leaf(self, q, boost: np.float32,
-                   k: int | None = None) -> DataFrame:
-        """Span query as ``(seg, doc, score)`` rows — the span analogue of
-        :meth:`_phrase_leaf` (_span_seg_topk): candidates hold ≥1 term of
-        every required clause group, the impact bound is the span-count
-        bound, and ``k`` / ``k=None`` select root top-k or every hit.
+    def _compile_span(self, q, boost: np.float32, plan: "_Plan"):
+        """Plan leaf of a span query — the span analogue of
+        :meth:`_compile_phrase` (_span_seg_topk): candidates hold ≥1 term
+        of every required clause group, the impact bound is the
+        span-count bound, and a root keeps its top-k.
         Scored like a phrase: weight = f32-summed idf of the tree's terms
         in tree order, freq = f32 Σ 1/(1+width) over emitted spans.
-        Top-level SpanBoostQuery layers fold into the boost
-        (span_boost.rs:290-291); boosts nested deeper are scoring no-ops
-        like the reference's needs_scores=false sub-weights."""
-        from .query import (
-            SpanBoostQuery,
-            SpanGapQuery,
-            SpanNearQuery,
-            span_spec,
-            span_terms,
-        )
-
-        while isinstance(q, SpanBoostQuery):
-            boost = np.float32(boost * np.float32(q.boost))
-            q = q.query
+        Top-level SpanBoostQuery layers fold into the boost (_compile's
+        _fold_boost); boosts nested deeper are scoring no-ops like the
+        reference's needs_scores=false sub-weights."""
         field = q.field
         self._check_field(field)
         self._check_positions(field)
@@ -2814,8 +2509,8 @@ class IndexSearcher:
         uniq_terms = sorted(set(terms))
         ti_of = {t: i for i, t in enumerate(uniq_terms)}
         spec = span_spec(q, ti_of)
-        stats = self._stats_for([(field, t) for t in uniq_terms])
-        wk32, coef64 = self._positional_weight(field, terms, boost, stats)
+        stats = plan.stats
+        wk32, coef64 = self._bm25_weight(field, terms, boost, stats)
 
         # required-clause groups: a doc qualifies only with >=1 term of
         # EVERY top-level near clause (nested trees fold into their
@@ -2848,37 +2543,37 @@ class IndexSearcher:
         slop2 = spec[2] if fast2 else 0
         bm = (self.scoring == "lucene", wk32, self.cache_f[field], coef64,
               *self.sim_f[field], self.avgdl64_f[field])
-        chunk0 = _VERIFY_CHUNK
-
-        def seg_fn(sub, tomb):
-            return _span_seg_topk(
-                _decode_seg_tds(sub, ti_of), spec, group_tis, tomb, k,
-                chunk0, *bm, fast2, ta2, tb2, slop2, fastn)
-
-        return self._leaf_scan(
-            [(F.col("field") == field) & F.col("term").isin(uniq_terms)],
-            seg_fn, k)
+        keys = [(field, t) for t in uniq_terms]
+        plan.add_positional(keys)
+        return ("span", keys, spec, group_tis, bm,
+                (fast2, ta2, tb2, slop2, fastn))
 
     # -- boolean ---------------------------------------------------------
 
     def _boolean_frame(self, q: BooleanQuery, boost: np.float32,
-                       needs_scores: bool, stats: dict) -> DataFrame:
-        term_specs: list[tuple] = []
+                       needs_scores: bool) -> DataFrame:
+        """A boolean with a docmeta-backed clause: its postings-only
+        clauses run as one plan set in one scan (_postings_frame, one
+        output id per clause), every other clause as its own frame, and
+        a groupBy(seg, doc) over the clauses' role-tagged rows applies
+        the must/filter/must-not/msm arithmetic. Filter and must-not
+        rows carry a score the sum ignores."""
+        trees: dict[int, tuple] = {}
+        roles: list[int] = []
         tagged: list[DataFrame] = []
 
         def add(subs, role, scored, sub_boost):
             ct = _ROLE_CODE[role]
             for sub in subs:
-                if isinstance(sub, TermQuery):
-                    eff = (float(np.float32(sub_boost * np.float32(sub.boost)))
-                           if scored else 1.0)
-                    term_specs.append((sub.field, sub.term, ct, eff))
+                if _postings_only(sub):
+                    trees[len(roles)] = (sub, sub_boost)
+                    roles.append(ct)
                 elif scored:
-                    tagged.append(self._frame(sub, sub_boost, needs_scores, stats)
+                    tagged.append(self._frame(sub, sub_boost, needs_scores)
                                   .withColumn("_ct", F.lit(ct)))
                 else:
                     tagged.append(
-                        self._frame(sub, np.float32(1.0), False, stats)
+                        self._frame(sub, np.float32(1.0), False)
                         .select("seg", "doc",
                                 F.lit(0.0).cast(self._score_t).alias("score"))
                         .withColumn("_ct", F.lit(ct)))
@@ -2887,8 +2582,11 @@ class IndexSearcher:
         add(q.shoulds, "s", True, boost)
         add(q.filters, "f", False, np.float32(1.0))
         add(q.must_nots, "n", False, np.float32(1.0))
-        if term_specs:
-            tagged.append(self._batch_term_frame(term_specs, stats))
+        if trees:
+            role_of = F.element_at(F.array(*map(F.lit, roles)),
+                                   F.col("_q") + 1)
+            tagged.append(self._postings_frame(trees, None).select(
+                "seg", "doc", "score", role_of.alias("_ct")))
 
         unioned = reduce(DataFrame.unionByName, tagged)
         ct = F.col("_ct")

@@ -50,14 +50,19 @@ def corpus_query_material(corpus):
     return vocab, bigrams
 
 
-def random_query_tree(rng, vocab, bigrams, depth=0):
+def random_query_tree(rng, vocab, bigrams, depth=0, extended=False):
     """One random query tree: terms (incl. misses), exact/sloppy phrases
     over real and fake bigrams, spans, dismax/boost/constant wrappers and
-    nested booleans with msm/filters/must_nots."""
-    from rucene_spark.query import (BooleanQuery, BoostQuery,
+    nested booleans with msm/filters/must_nots. ``extended`` adds
+    BoostingQuery and MinScoreQuery nodes; without it the tree stream of
+    a seed is the one it has always been."""
+    from rucene_spark.query import (BooleanQuery, BoostingQuery, BoostQuery,
                                     ConstantScoreQuery, DisjunctionMaxQuery,
-                                    PhraseQuery, SpanNearQuery, SpanTermQuery,
-                                    TermQuery)
+                                    MinScoreQuery, PhraseQuery, SpanNearQuery,
+                                    SpanTermQuery, TermQuery)
+
+    def sub():
+        return random_query_tree(rng, vocab, bigrams, depth + 1, extended)
 
     r = rng.random()
     if depth >= 2 or r < 0.30:
@@ -75,26 +80,23 @@ def random_query_tree(rng, vocab, bigrams, depth=0):
             slop=int(rng.integers(0, 4)),
             in_order=bool(rng.random() < 0.5))
     if r < 0.63:
-        subs = [random_query_tree(rng, vocab, bigrams, depth + 1)
-                for _ in range(2 + int(rng.integers(2)))]
+        subs = [sub() for _ in range(2 + int(rng.integers(2)))]
         return DisjunctionMaxQuery(subs, float(rng.random() * 0.5))
     if r < 0.69:
-        return ConstantScoreQuery(
-            random_query_tree(rng, vocab, bigrams, depth + 1),
-            float(1 + rng.random()))
+        return ConstantScoreQuery(sub(), float(1 + rng.random()))
     if r < 0.75:
-        return BoostQuery(random_query_tree(rng, vocab, bigrams, depth + 1),
-                          float(0.5 + rng.random()))
-    musts = [random_query_tree(rng, vocab, bigrams, depth + 1)
-             for _ in range(int(rng.integers(0, 3)))]
-    shoulds = [random_query_tree(rng, vocab, bigrams, depth + 1)
-               for _ in range(int(rng.integers(0, 3)))]
-    must_nots = [random_query_tree(rng, vocab, bigrams, depth + 1)
-                 for _ in range(int(rng.integers(0, 2)))]
-    filters = [random_query_tree(rng, vocab, bigrams, depth + 1)
-               for _ in range(int(rng.integers(0, 2)))]
+        return BoostQuery(sub(), float(0.5 + rng.random()))
+    if extended and r < 0.81:
+        return BoostingQuery(sub(), sub(), float(0.1 + 0.8 * rng.random()))
+    if extended and r < 0.87:
+        # a cutoff inside the score range of the fuzz corpora
+        return MinScoreQuery(sub(), float(2.0 * rng.random()))
+    musts = [sub() for _ in range(int(rng.integers(0, 3)))]
+    shoulds = [sub() for _ in range(int(rng.integers(0, 3)))]
+    must_nots = [sub() for _ in range(int(rng.integers(0, 2)))]
+    filters = [sub() for _ in range(int(rng.integers(0, 2)))]
     if not (musts or shoulds or filters):
-        shoulds = [random_query_tree(rng, vocab, bigrams, depth + 1)]
+        shoulds = [sub()]
     msm = (int(rng.integers(0, len(shoulds) + 1))
            if shoulds and not musts else 0)
     return BooleanQuery.build(musts, shoulds, filters, must_nots,

@@ -215,3 +215,31 @@ def test_fuzz_random_query_trees_rank_identical(spark, corpus, built, oracle):
         except AssertionError as e:
             failures.append(f"fuzz#{i}: {e} :: {q!r}"[:400])
     assert not failures, "\n".join(failures)
+
+
+def test_fuzz_extended_trees_rank_identical(spark, corpus, built, oracle):
+    """Seeded fuzz over the extended tree stream, which adds BoostingQuery
+    and MinScoreQuery nodes at any depth: 40 trees rank- and
+    float32-score-bit-identical to the oracle at the root, and equal to
+    the oracle's count()."""
+    from conftest import corpus_query_material, random_query_tree
+
+    d, _ = built
+    _, osearch = oracle
+    esearch = IndexSearcher(spark, d)
+
+    vocab, bigrams = corpus_query_material(corpus)
+    rng = np.random.default_rng(20261018)
+    trees = [random_query_tree(rng, vocab, bigrams, extended=True)
+             for _ in range(40)]
+    assert sum("Boosting" in repr(q) or "MinScore" in repr(q)
+               for q in trees) >= 10
+    failures = []
+    for i, q in enumerate(trees):
+        try:
+            assert_rank_identical(engine_hits(esearch, q, 10),
+                                  osearch.search(q, 10), f"ext#{i}")
+            assert esearch.count(q) == osearch.count(q), f"ext#{i} count"
+        except AssertionError as e:
+            failures.append(f"ext#{i}: {e} :: {q!r}"[:400])
+    assert not failures, "\n".join(failures)

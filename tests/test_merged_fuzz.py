@@ -117,6 +117,29 @@ def test_tombstoned_matches_oracle(spark, corpus, victims, tombstoned,
     assert not failures, "\n".join(failures)
 
 
+def test_tombstoned_extended_matches_oracle(spark, corpus, victims,
+                                            tombstoned, full_oracle):
+    """The extended tree stream (BoostingQuery and MinScoreQuery nodes
+    added) over the tombstoned layout: 40 trees, same urls, float32
+    score bits and order as the full-corpus oracle with the deleted keys
+    dropped."""
+    dead = set(victims)
+    vocab, bigrams = corpus_query_material(corpus)
+    rng = np.random.default_rng(SEED + 1)
+    s = IndexSearcher(spark, tombstoned)
+    failures = []
+    for i in range(40):
+        q = random_query_tree(rng, vocab, bigrams, extended=True)
+        eng = _hits(s, q)
+        orc = [(u, np.float32(sc).view(np.int32).item())
+               for (u, sc, _) in full_oracle.search(q, N_DOCS)
+               if u not in dead][:10]
+        if eng != orc:
+            failures.append(
+                f"ext#{i}: engine={eng[:3]} oracle={orc[:3]} :: {q!r}"[:400])
+    assert not failures, "\n".join(failures)
+
+
 def test_merged_search_many_matches_per_query(spark, corpus, merged):
     """The micro-batch serving executor over the sharded merged layout:
     one job for the whole fuzz batch, rank/score-identical per qid to

@@ -9,9 +9,12 @@
 * a nested phrase shuffles no position arrays;
 * a nested boolean of terms reduces in its scan task (no (seg, doc)
   shuffle);
+* a postings-only query tree of any shape reads postings once and
+  shuffles no (seg, doc);
 * the block-max collector's scan pushes its term filter.
 """
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -24,8 +27,12 @@ from rucene_spark.webtext import make_corpus
 
 
 @pytest.fixture(scope="module")
-def searcher(spark, tmp_path_factory):
-    corpus = make_corpus(300, seed=13)
+def corpus():
+    return make_corpus(300, seed=13)
+
+
+@pytest.fixture(scope="module")
+def searcher(spark, corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("audit_idx"))
     IndexWriter(spark, d, n_segments=2).build(
         spark.createDataFrame(corpus.drop(columns=["html"])))
@@ -38,6 +45,13 @@ def _physical_plan(df) -> str:
 
 def _optimized(df) -> str:
     return df._jdf.queryExecution().toString()
+
+
+def _postings_scans(plan: str) -> int:
+    """FileScan nodes over the postings table (the only table with a
+    ``docs_bin`` column) in a physical plan."""
+    return sum("FileScan" in line and "docs_bin" in line
+               for line in plan.splitlines())
 
 
 def test_term_scan_pushes_predicate_and_prunes_columns(searcher):
@@ -88,6 +102,39 @@ def test_nested_term_boolean_shuffles_no_seg_doc(searcher):
         "+t000000 +(t000001 t000002)", [("text", 1.0)]).build())
     plan = _physical_plan(searcher._frame(q, np.float32(1.0), True))
     assert "Exchange hashpartitioning(seg" not in plan, plan
+
+
+def test_postings_only_trees_scan_once_without_seg_shuffle(searcher,
+                                                          corpus):
+    """Random postings-only trees (terms, phrases, spans under nested
+    booleans, dismax, boost and constant-score nodes) run as one
+    per-segment plan: the search() root and the nested _frame() both
+    read postings in exactly one scan and have no (seg, doc) exchange."""
+    from conftest import corpus_query_material, random_query_tree
+
+    vocab, bigrams = corpus_query_material(corpus)
+    rng = np.random.default_rng(20261018)
+    trees = [random_query_tree(rng, vocab, bigrams) for _ in range(10)]
+    shapes = "".join(map(repr, trees))
+    assert "BooleanQuery(musts" in shapes and "PhraseQuery" in shapes
+    for q in trees:
+        for df in (searcher.search(q, 10),
+                   searcher._frame(q, np.float32(1.0), True)):
+            plan = _physical_plan(df)
+            assert "Exchange hashpartitioning(seg" not in plan, repr(q)
+            assert _postings_scans(plan) == 1, (repr(q), plan)
+
+
+def test_range_clause_boolean_reads_postings_once(searcher):
+    """A boolean mixing a RangeQuery clause with two term clauses keeps
+    the docmeta frame route, and its term clauses share one postings
+    scan."""
+    from rucene_spark.query import BooleanQuery, RangeQuery
+
+    q = BooleanQuery.build([TermQuery("text", "t000000")],
+                           [TermQuery("text", "t000001")],
+                           [RangeQuery("lang", "en", "en")], [])
+    assert _postings_scans(_physical_plan(searcher.search(q, 10))) == 1
 
 
 def test_blockmax_scan_pushes_in_filter(searcher):

@@ -2,15 +2,21 @@
 to per-query search() for every query in the batch (one distributed job
 replaces N dispatches; semantics unchanged)."""
 
+import numpy as np
 import pytest
 from conftest import exhaustive_topk
 
 from rucene_spark.build import IndexWriter
 from rucene_spark.query import (
     BooleanQuery,
+    BoostingQuery,
     DisjunctionMaxQuery,
+    MinScoreQuery,
     PhraseQuery,
     QueryStringQueryBuilder,
+    RangeQuery,
+    SpanNearQuery,
+    SpanTermQuery,
     TermQuery,
 )
 from rucene_spark.search import IndexSearcher
@@ -25,8 +31,19 @@ def idx(spark, tmp_path_factory):
     return d
 
 
+def _bits(score):
+    return np.float32(score).view(np.int32).item()
+
+
 def _rows(df):
-    return [(r["doc_id"], round(r["score"], 6)) for r in df.collect()]
+    return [(r["doc_id"], _bits(r["score"])) for r in df.collect()]
+
+
+def _by_qid(rows):
+    out = {}
+    for r in rows:
+        out.setdefault(r["qid"], []).append((r["doc_id"], _bits(r["score"])))
+    return out
 
 
 def test_search_many_matches_per_query(spark, idx):
@@ -64,14 +81,34 @@ def test_search_many_matches_per_query(spark, idx):
             [BooleanQuery.build([], [TermQuery("text", "query"),
                                      TermQuery("text", "scan")], [], [],
                                 min_should_match=2)]),
+        # positional leaves and the nodes that batch with them
+        PhraseQuery.build("text", ["order", "fast"], slop=2),
+        SpanNearQuery([SpanTermQuery("text", "agg"),
+                       SpanTermQuery("text", "part")], slop=1,
+                      in_order=True),
+        SpanNearQuery([SpanTermQuery("text", "part"),
+                       SpanTermQuery("text", "agg")], slop=2,
+                      in_order=False),
+        BooleanQuery.build(
+            [PhraseQuery.build("text", ["window", "join"], slop=0)],
+            [TermQuery("text", "table")], [], []),
+        DisjunctionMaxQuery([PhraseQuery.build("text", ["data", "slow"]),
+                             TermQuery("text", "scan")], 0.2),
+        BoostingQuery(TermQuery("text", "table"), TermQuery("text", "query"),
+                      0.3),
+        MinScoreQuery(BooleanQuery.build(
+            [], [TermQuery("text", "table"), TermQuery("text", "scan")],
+            [], []), 0.5),
+        # a docmeta-backed clause: its own branch of the batch
+        BooleanQuery.build([TermQuery("text", "table")],
+                           [TermQuery("text", "scan")],
+                           [RangeQuery("n_chars", 0, 400)], []),
     ]
-    batch = s.search_many(queries, 10).collect()
-    by_qid = {}
-    for r in batch:
-        by_qid.setdefault(r["qid"], []).append(
-            (r["doc_id"], round(r["score"], 6)))
+    by_qid = _by_qid(s.search_many(queries, 10).collect())
     for i, q in enumerate(queries):
-        assert by_qid.get(i, []) == _rows(s.search(q, 10)), f"qid {i}"
+        want = _rows(s.search(q, 10))
+        assert want or isinstance(q, TermQuery), f"qid {i} matches nothing"
+        assert by_qid.get(i, []) == want, f"qid {i}"
 
 
 def test_search_many_plan_cached(spark, idx):
@@ -104,11 +141,7 @@ def test_search_many_with_deletes(spark, idx, tmp_path):
             [], [TermQuery("text", "table"), TermQuery("text", "query")],
             [], [], min_should_match=1),
     ]
-    batch = s.search_many(queries, 10).collect()
-    by_qid = {}
-    for r in batch:
-        by_qid.setdefault(r["qid"], []).append(
-            (r["doc_id"], round(r["score"], 6)))
+    by_qid = _by_qid(s.search_many(queries, 10).collect())
     deleted = {r["doc_id"] for r in top}
     for i, q in enumerate(queries):
         assert by_qid.get(i, []) == _rows(s.search(q, 10)), f"qid {i}"
@@ -141,10 +174,7 @@ def test_search_many_post_merge_multi_term(spark, idx, tmp_path):
     q2 = BooleanQuery.build(
         [], [TermQuery("text", "table"), TermQuery("text", "scan")],
         [], [], min_should_match=2)
-    got = s.search_many([q, q2], 10).collect()
-    by_qid = {}
-    for r in got:
-        by_qid.setdefault(r["qid"], []).append((r["doc_id"], round(r["score"], 6)))
+    by_qid = _by_qid(s.search_many([q, q2], 10).collect())
     assert by_qid.get(0, []) == _rows(s.search(q, 10))
     assert by_qid.get(1, []) == _rows(s.search(q2, 10))
 
@@ -183,7 +213,7 @@ def test_search_many_legacy_multifile_rejected(spark, idx, tmp_path):
         [TermQuery("text", "table"), TermQuery("text", "query")], [], [], [])
     got = s.search_many([q], 10).collect()
     ref = IndexSearcher(spark, idx)
-    assert [(r["doc_id"], round(r["score"], 6)) for r in got] == _rows(
+    assert [(r["doc_id"], _bits(r["score"])) for r in got] == _rows(
         ref.search(q, 10))
     pqry = PhraseQuery.build("text", ["key", "agg"], slop=0)
     assert _rows(s.search(pqry, 10)) == _rows(ref.search(pqry, 10))
@@ -280,40 +310,37 @@ def test_search_many_above_tomb_cap(spark, idx, tmp_path, monkeypatch):
 
 def test_collector_seg_reduce_all_groups_unsatisfied():
     """Kernel-level regression (found by tests/test_merged_fuzz.py): a
-    batch whose rows are ALL group clauses with no group satisfied left
-    stage 2 with zero root rows and zero virtual clauses — the empty
-    boundary-mask build crashed with IndexError. Must return empty."""
+    segment where every nested boolean group misses its requirement
+    left the old boolean reduce with zero root rows and zero virtual
+    clauses, and the empty boundary-mask build crashed with IndexError.
+    The plan evaluator's per-segment function must return no rows."""
     import numpy as np
 
-    from rucene_spark.search import _collector_seg_reduce
+    from rucene_spark.search import _seg_outputs
 
-    # one query (qid 0): a single should-group (gid 1) that REQUIRES one
-    # must (g_nm=1), but the only row present is a should inside it
-    doc = np.array([5], dtype=np.int64)
-    qid = np.array([0], dtype=np.int64)
-    gid = np.array([1], dtype=np.int64)
-    role = np.array([1], dtype=np.int64)   # should, inside the group
-    sc = np.array([0.25], dtype=np.float64)
-    g_role = np.array([0, 1], dtype=np.int64)   # group sits as root should
-    g_nm = np.array([0, 1], dtype=np.int64)     # group needs 1 must
-    g_nf = np.zeros(2, dtype=np.int64)
-    g_ms = np.zeros(2, dtype=np.int64)
-    r_nm = np.zeros(1, dtype=np.int64)
-    r_nf = np.zeros(1, dtype=np.int64)
-    r_ms = np.ones(1, dtype=np.int64)
-    q3, d3, s3 = _collector_seg_reduce(
-        doc, qid, gid, role, sc, g_role, g_nm, g_nf, g_ms,
-        r_nm, r_nf, r_ms, None, True, np.float32, 10)
-    assert len(q3) == 0 and len(d3) == 0 and len(s3) == 0
+    def leaf_of(postings):
+        def leaf(node, tomb=None, k=None):
+            d, v = postings.get(node[1], ((), ()))
+            return (np.asarray(d, dtype=np.int64),
+                    np.asarray(v, dtype=np.float64))
+        return leaf
 
-    # control: add the required must row -> the group satisfies and the
-    # doc comes back with the group's f32-rounded score
-    doc2 = np.array([5, 5], dtype=np.int64)
-    gid2 = np.array([1, 1], dtype=np.int64)
-    role2 = np.array([0, 1], dtype=np.int64)
-    sc2 = np.array([0.5, 0.25], dtype=np.float64)
-    q3, d3, s3 = _collector_seg_reduce(
-        doc2, np.zeros(2, dtype=np.int64), gid2, role2, sc2,
-        g_role, g_nm, g_nf, g_ms, r_nm, r_nf, r_ms, None, True,
-        np.float32, 10)
-    assert list(d3) == [5] and s3[0] == np.float32(0.75)
+    t = [("term", kid, kid) for kid in range(4)]
+    # root: should-groups, msm 1. Group A needs must t0 (with should
+    # t1); group B needs 2 of its shoulds t2, t3
+    group_a = ("bool", [t[0]], [t[1]], [], [], 0)
+    group_b = ("bool", [], [t[2], t[3]], [], [], 2)
+    plan = [(0, ("bool", [], [group_a, group_b], [], [], 1))]
+    postings = {1: ([5], [0.25]), 2: ([5], [0.125])}
+    for k in (10, None):
+        assert list(_seg_outputs(plan, leaf_of(postings), None, k,
+                                 True)) == []
+
+    # control: add group A's must -> the group is satisfied and the doc
+    # comes back with the group's f32-rounded score
+    postings[0] = ([5], [0.5])
+    for k in (10, None):
+        ((oid, d3, s3),) = _seg_outputs(plan, leaf_of(postings), None, k,
+                                        True)
+        assert oid == 0 and list(d3) == [5]
+        assert np.float32(s3[0]) == np.float32(0.75)
