@@ -45,6 +45,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession, functions as F
 
 from . import storage
@@ -1086,32 +1087,18 @@ def find_merge_wave(policy: TieredMergePolicy, segs: list[dict],
 def maybe_merge(spark: SparkSession, index_dir: str,
                 policy: TieredMergePolicy | None = None,
                 max_merges: int = 100,
-                threads: int | None = None) -> list[dict]:
+                threads: int = 1) -> list[dict]:
     """Run the tiered policy to quiescence — the ConcurrentMergeScheduler
-    loop (merge_scheduler.rs:141-198). ``threads`` (default
-    ``RUCENE_MERGE_THREADS``, 1) is the scheduler's max_merge_count
-    analogue: per wave, up to that many DISJOINT policy picks run their
+    loop (merge_scheduler.rs:141-198). ``threads`` is the scheduler's
+    max_merge_count analogue: per wave, up to that many DISJOINT policy
+    picks (find_merge_wave; one pick is policy.find_merge's) run their
     data phases concurrently on driver threads (each merge's remap/write
     is its own Spark job; the cluster schedules them side by side), with
     the shared-state sections serialized on one commit lock and
     orphan/dead-overlay GC deferred to the end of the wave (gc_index
     would delete a sibling's staged-but-uncommitted output)."""
     policy = policy or TieredMergePolicy()
-    if threads is None:
-        threads = int(os.environ.get("RUCENE_MERGE_THREADS", "1"))
     done: list[dict] = []
-    if threads <= 1:
-        for _ in range(max_merges):
-            m = load_manifest(index_dir)
-            sizes = segment_sizes(index_dir, m)
-            segs = [dict(s, bytes=sizes[s["segment_id"]])
-                    for s in m["segments"]]
-            pick = policy.find_merge(segs)
-            if not pick:
-                break
-            done.append(SegmentMerger(spark, index_dir).merge(pick))
-        return done
-
     lock = threading.Lock()
     while len(done) < max_merges:
         m = load_manifest(index_dir)
@@ -1122,8 +1109,11 @@ def maybe_merge(spark: SparkSession, index_dir: str,
         if not picks:
             break
         with ThreadPoolExecutor(max_workers=len(picks)) as ex:
-            futs = [ex.submit(SegmentMerger(spark, index_dir).merge, p,
-                              commit_lock=lock, gc=False) for p in picks]
+            # the merge threads keep the caller's Spark local properties
+            # (job group, scheduler pool)
+            futs = [ex.submit(inheritable_thread_target(spark)(
+                SegmentMerger(spark, index_dir).merge), p,
+                commit_lock=lock, gc=False) for p in picks]
             results, errors = [], []
             for f in futs:
                 try:

@@ -23,9 +23,10 @@ algebra on ``(seg, doc)``:
   masks tombstones and keeps its per-segment top-k; nested use emits
   every matching (seg, doc, score) row;
 * trees with a docmeta-backed leaf (range, exists, match-all and
-  FilterQuery predicates) → their postings-only subtrees run as plans;
-  booleans combine their clauses with a groupBy(seg, doc), dismax with a
-  union + groupBy, BoostingQuery with a left join;
+  FilterQuery predicates) → the same nodes over "rows" leaves (postings
+  subtrees from one plan scan, docmeta frames), hash-partitioned ONCE
+  by (seg, doc) and combined by the same ``_eval_node``, which also
+  values explain()'s nodes;
 * TopDocsCollector   → ``ORDER BY score DESC, seg, doc LIMIT k``
   (TakeOrderedAndProject = per-partition heap + merge, top_docs.rs:28-172).
 
@@ -50,7 +51,7 @@ Parquet, ``pos_bin`` read only when a phrase or span leaf needs it) and
 decodes every term clause in a single Arrow stage — the scale-critical
 property that per-term scans would lose at wide boolean queries.
 ``search_many`` runs every postings-only query of a batch as outputs of
-one plan set.
+one plan set, and every other query as an output of one rows evaluation.
 
 ``search_blockmax`` is the BMW (block-max WAND) serving path the north
 rule adds on top of the reference (SURVEY.md §4.3), one per-segment
@@ -210,8 +211,8 @@ def _union(results):
 def _eval_node(node, leaf, lucene: bool):
     """Evaluate one compiled plan node (IndexSearcher._compile) on one
     segment → ``(docs, scores)``: sorted unique doc ids and float64
-    scores. ``leaf(node)`` evaluates the term, phrase, span and none
-    leaves.
+    scores. ``leaf(node)`` evaluates the term, phrase, span, none and
+    rows leaves.
 
     Nodes combine with the oracle's arithmetic (oracle.OracleSearcher):
     a boolean sums its must scores, then its matched should scores, in
@@ -899,17 +900,18 @@ def _bmw_seg_topk(sub, tomb, k, ti_of, tw, cache64, k1_, b_, avgdl64):
 
 
 def _iter_seg_chunks(batches):
-    """Stream a scan partition's Arrow batches as one pandas frame
-    per SEGMENT, without ever buffering the whole partition.
+    """Stream a partition's Arrow batches as one pandas frame per
+    SEGMENT, without ever buffering the whole partition.
 
-    A partition is a sequence of whole segment files (the searcher
+    A scan partition is a sequence of whole segment files (the searcher
     forbids file splits; _coalesced only unions whole partitions), each
-    read in file order — so a segment's rows form one contiguous run in
-    the batch stream. Buffering only until the seg value changes bounds
-    worker memory at one segment's scan rows + one Arrow batch,
-    independent of how many segments _coalesced packs into the task
-    (a stopword-phrase scan over a many-segment partition would
-    otherwise hold every packed segment's positions at once)."""
+    read in file order, and a rows-leaf partition is sorted by seg — so
+    a segment's rows form one contiguous run in the batch stream.
+    Buffering only until the seg value changes bounds worker memory at
+    one segment's rows + one Arrow batch, independent of how many
+    segments the task holds (a stopword-phrase scan over a many-segment
+    partition would otherwise hold every packed segment's positions at
+    once)."""
     buf: list = []
     cur = None
     for pdf in batches:
@@ -985,23 +987,34 @@ def _postings_only(q: Query) -> bool:
 
 
 class _Plan:
-    """What compiling postings-only trees (IndexSearcher._compile)
-    collects for their one scan: the term-leaf clauses ``(field, term,
+    """What compiling query trees (IndexSearcher._compile) collects: for
+    the one postings scan, the term-leaf clauses ``(field, term,
     boost)``, the number of each term-leaf (field, term) key, the keys
     of the phrase/span leaves, and every key the scan reads (insertion
-    ordered, so a plan's scan filter is deterministic)."""
+    ordered, so a plan's scan filter is deterministic); in ``rows``, the
+    source of each ``("rows", lid)`` leaf — a postings-only subtree
+    ``(query, boost)`` or a ``(seg, doc, score)`` DataFrame, or its
+    Explanation in an explain plan (``at`` = the one (seg, doc))."""
 
-    def __init__(self, stats: dict):
+    def __init__(self, stats: dict | None = None, rows: bool = False,
+                 at: tuple[int, int] | None = None):
         self.stats = stats
         self.clauses: list[tuple] = []
         self.kid_of: dict[tuple[str, str], int] = {}
         self.pos_keys: set = set()
         self.scan_keys: dict = {}
+        self.rows: list | None = [] if rows or at is not None else None
+        self.at = at
 
     def add_positional(self, keys) -> None:
         self.pos_keys.update(keys)
         for key in keys:
             self.scan_keys.setdefault(key)
+
+    def rows_leaf(self, src):
+        """A ``("rows", lid)`` leaf node for ``src``."""
+        self.rows.append(src)
+        return ("rows", len(self.rows) - 1)
 
 
 def _no_match(description: str, details=()) -> dict:
@@ -1010,7 +1023,6 @@ def _no_match(description: str, details=()) -> dict:
             "details": list(details)}
 
 
-_ROLE_CODE = {"m": 0, "s": 1, "f": 2, "n": 3}  # boolean clause roles
 # postings columns of the plan evaluator's scan; the positional ones are
 # read only when a phrase or span leaf is in the plan
 _TERM_SCAN_COLS = ("field", "term", "seg", "num_docs", "docs_bin",
@@ -1255,9 +1267,8 @@ class IndexSearcher:
 
     def _bigram_hot(self, field: str):
         """Frozen hot vocabulary of the field's bigram channel, or None
-        when the index has no channel / the env kill-switch is set."""
-        if (self._bigram_cfg is None
-                or os.environ.get("RUCENE_PHRASE_BIGRAMS", "1") == "0"):
+        when the index has no channel."""
+        if self._bigram_cfg is None:
             return None
         if self._bigram_vocab is None:
             from .build import load_bigram_vocab
@@ -1386,7 +1397,8 @@ class IndexSearcher:
         THIS searcher (fixed at construction, like a Lucene point-in-time
         reader) and scores are always freshly computed."""
         return self._memo_plan((repr(query), k), lambda: self._topk_hits(
-            self._root_frame(query, k), k))
+            self._query_frame({0: (query, np.float32(1.0))}, k).select(
+                "seg", "doc", "score"), k))
 
     def _memo_plan(self, key, build) -> DataFrame:
         """The plan cache: ``build()``'s DataFrame, memoized per key."""
@@ -1403,25 +1415,6 @@ class IndexSearcher:
         topk = frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
         return (self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
                 .orderBy(F.desc("score"), "seg", "doc"))
-
-    def _root_frame(self, query: Query, k: int) -> DataFrame:
-        """Live ``(seg, doc, score)`` rows whose (score desc, seg, doc)
-        top-k is the query's top-k — the routing shared by search() and
-        search_many()'s queries with a docmeta-backed leaf.
-
-        A postings-only tree (_postings_only) runs its per-segment plan
-        with the top-k whenever the tombstone broadcast gate holds:
-        tombstones are masked in the worker and at most k rows per
-        segment leave it, with no shuffle. Above the gate — and for a
-        tree with a docmeta-backed leaf — the root is the live-masked
-        query frame, in which every postings-only subtree runs its plan
-        with ``k=None`` (_frame_impl)."""
-        if _postings_only(query) and (self._deleted is None
-                                      or self._bcast_deleted):
-            return self._postings_frame(
-                {0: (query, np.float32(1.0))}, k).select("seg", "doc",
-                                                         "score")
-        return self._live(self._frame(query, np.float32(1.0), True))
 
     @staticmethod
     def _fold_boost(q: Query, boost: np.float32):
@@ -1451,41 +1444,23 @@ class IndexSearcher:
         serial floor again. Instead every postings-only query of the
         batch becomes one output of ONE plan set (_postings_frame): one
         term-pruned scan, and inside each scan task every query's plan
-        evaluated per segment, with no shuffle. Under the tombstone
-        broadcast gate the worker masks tombstones and keeps the
-        per-(query, segment) top-k; above it every matching row leaves
-        the worker and the shuffle anti-join (``_live``) removes deleted
-        docs. A per-query window then keeps each query's top-k. A query
-        with a docmeta-backed leaf keeps its own rank-identical
-        TakeOrdered branch (``_root_frame``) and unions in. Rank/score
-        identity vs per-query search() is asserted by
+        evaluated per segment, with no shuffle. Every query with a
+        docmeta-backed leaf becomes one output of ONE rows evaluation
+        (_query_frame): one scan for their postings-only subtrees and one
+        (seg, doc) shuffle. Tombstones are handled as in search()
+        (_query_frame), and a per-query window keeps each query's top-k.
+        Rank/score identity vs per-query search() is asserted by
         tests/test_search_many.py."""
         return self._memo_plan((tuple(repr(q) for q in queries), k, "many"),
                                lambda: self._many_hits(queries, k))
 
     def _many_hits(self, queries: list[Query], k: int) -> DataFrame:
-        trees = {i: (q, np.float32(1.0)) for i, q in enumerate(queries)
-                 if _postings_only(q)}
-        branches = []
-        if trees:
-            if self._deleted is None or self._bcast_deleted:
-                coll = self._postings_frame(trees, k)
-            else:
-                coll = self._live(self._postings_frame(trees, None))
-            w = Window.partitionBy("_q").orderBy(
-                F.desc("score"), "seg", "doc")
-            branches.append(
-                coll.withColumn("_rn", F.row_number().over(w))
+        frame = self._query_frame(
+            {i: (q, np.float32(1.0)) for i, q in enumerate(queries)}, k)
+        w = Window.partitionBy("_q").orderBy(F.desc("score"), "seg", "doc")
+        topk = (frame.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") <= k).drop("_rn")
                 .select(F.col("_q").alias("qid"), "seg", "doc", "score"))
-        for i, q in enumerate(queries):
-            if i in trees:
-                continue
-            frame = self._root_frame(q, k)
-            branches.append(
-                frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
-                .select(F.lit(i).alias("qid"), "seg", "doc", "score"))
-        topk = reduce(DataFrame.unionByName, branches)
         return (self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
                 .orderBy("qid", F.desc("score"), "seg", "doc"))
 
@@ -1762,9 +1737,9 @@ class IndexSearcher:
         def seg_fn(sub, tomb):
             return [(0, *_bmw_seg_topk(sub, tomb, *bmw))]
 
-        frame = self._seg_scan(
-            (F.col("field") == field) & F.col("term").isin(terms),
-            _BMW_SCAN_COLS, seg_fn, k)
+        frame = self._seg_map(self._coalesced(self._postings.filter(
+            (F.col("field") == field) & F.col("term").isin(terms)).select(
+                *_BMW_SCAN_COLS)), seg_fn, k)
         return self._topk_hits(frame, k)
 
     # ------------------------------------------------------------------
@@ -1784,82 +1759,62 @@ class IndexSearcher:
     def _explain(self, query: Query, boost: np.float32, seg: int,
                  doc: int) -> dict:
         query, boost = self._fold_boost(query, boost)
-        lucene = self.scoring == "lucene"
         if isinstance(query, TermQuery):
             return self._explain_term(query, boost, seg, doc)
         if isinstance(query, PhraseQuery):
             return self._explain_phrase(query, boost, seg, doc)
         if isinstance(query, _SpanQueryT):
             return self._explain_span(query, boost, seg, doc)
-        if isinstance(query, BooleanQuery):
+        # a node: its children explained as the leaves of an explain plan
+        # (_compile), its value from _eval_node over their one-doc values;
+        # a docmeta-backed leaf explains from its frame at the doc
+        plan = _Plan(at=(seg, doc))
+        node = self._compile(query, boost, plan)
+        ex = plan.rows
+        if node[0] == "rows":
+            return ex[0]
+        def one_doc(leaf):
+            e = ex[leaf[1]]
+            return (np.asarray([doc] if e["match"] else [], dtype=np.int64),
+                    np.asarray([e["value"]] if e["match"] else [],
+                               dtype=np.float64))
+
+        d, v = _eval_node(node, one_doc, self.scoring == "lucene")
+        value = float(v[0]) if len(d) else None
+        name = type(query).__name__
+        if node[0] == "bool":
             # BooleanWeight::explain semantics: a failed must/filter, a
-            # matching must_not, or unmet min_should_match all make the doc
-            # a NON-match, even if other clauses would contribute score.
-            musts = []
-            for sub in query.musts:
-                musts.append(self._explain(sub, boost, seg, doc))
-                if not musts[-1]["match"]:
-                    return _no_match("Failure to meet condition of required"
-                                     " clause", musts)
-            shoulds = [e for e in (self._explain(sub, boost, seg, doc)
-                                   for sub in query.shoulds) if e["match"]]
-            details = musts + shoulds
-            if len(shoulds) < query.min_should_match:
-                return _no_match("Failure to match minimum number of optional"
-                                 f" clauses: {query.min_should_match}",
-                                 details)
-            if not all(self._matches_doc(s, seg, doc) for s in query.filters):
-                return _no_match("Failure to meet condition of filter clause",
-                                 details)
-            if any(self._matches_doc(s, seg, doc) for s in query.must_nots):
-                return _no_match("Failure to meet condition of prohibited"
-                                 " clause", details)
-            if not details:
-                return _no_match("no matching clauses")
-            # musts summed, then matched shoulds, then the two added
-            total = 0.0
-            for e in musts:
-                total += e["value"]
-            total += sum(e["value"] for e in shoulds)
-            return {"match": True,
-                    "value": float(_node_round(np.asarray([total]),
-                                               lucene)[0]),
-                    "description": "sum of:", "details": details}
-        if isinstance(query, DisjunctionMaxQuery):
+            # matching must_not, or unmet min_should_match all make the
+            # doc a NON-match, even if other clauses would contribute score
+            nm, ns, nf = (len(query.musts), len(query.shoulds),
+                          len(query.filters))
+            desc = "sum of:"
+            kept = ex[:nm] + [e for e in ex[nm:nm + ns] if e["match"]]
+            why = next(reason for failed, reason in (
+                (not all(e["match"] for e in ex[:nm]),
+                 "Failure to meet condition of required clause"),
+                (len(kept) - nm < query.min_should_match,
+                 "Failure to match minimum number of optional clauses:"
+                 f" {query.min_should_match}"),
+                (not all(e["match"] for e in ex[nm + ns:nm + ns + nf]),
+                 "Failure to meet condition of filter clause"),
+                (any(e["match"] for e in ex[nm + ns + nf:]),
+                 "Failure to meet condition of prohibited clause"),
+                (True, "no matching clauses")) if failed)
+        elif node[0] == "dismax":
             # DisjunctionMaxWeight::explain (dis_max.rs): max of the
             # matching sub-explanations, plus tie_breaker × the others
-            details = [self._explain(d, boost, seg, doc)
-                       for d in query.disjuncts]
-            matched = [e for e in details if e["match"]]
-            if not matched:
-                return _no_match("No matching clause", details)
-            vals = [e["value"] for e in matched]
-            mx = max(vals)
             tie = float(query.tie_breaker)
-            value = _node_round(np.asarray([mx + tie * (sum(vals) - mx)]),
-                                lucene)[0]
             desc = ("max of:" if tie == 0.0
                     else f"max plus {tie} times others of:")
-            return {"match": True, "value": float(value),
-                    "description": desc, "details": matched}
-        # generic fallback: evaluate the query's frame at this one doc
-        row = (
-            self._frame(query, boost, needs_scores=True)
-            .filter((F.col("seg") == seg) & (F.col("doc") == doc))
-            .limit(1).collect()
-        )
-        if row:
-            return {"match": True, "value": float(row[0]["score"]),
-                    "description": f"{type(query).__name__}, score:",
-                    "details": []}
-        return _no_match(f"no match ({type(query).__name__})")
-
-    def _matches_doc(self, q: Query, seg: int, doc: int) -> bool:
-        """Does ``q`` match one specific (seg, doc)? Explain-path helper."""
-        f = self._frame(q, np.float32(1.0), needs_scores=False)
-        return bool(
-            f.filter((F.col("seg") == seg) & (F.col("doc") == doc))
-            .limit(1).count())
+            kept = [e for e in ex if e["match"]]
+            why = "No matching clause"
+        else:
+            desc, kept, why = f"{name}, score:", ex, f"no match ({name})"
+        if value is None:
+            return _no_match(why, ex)
+        return {"match": True, "value": value, "description": desc,
+                "details": kept}
 
     def _explain_term(self, q: TermQuery, boost: np.float32,
                       seg: int, doc: int) -> dict:
@@ -2129,11 +2084,13 @@ class IndexSearcher:
 
     def _frame(self, q: Query, boost: np.float32,
                needs_scores: bool) -> DataFrame:
+        q, boost = self._fold_boost(q, boost)
         if not needs_scores and self._query_cache is not None:
             cached = self._cached_filter_frame(q, boost)
             if cached is not None:
                 return cached
-        return self._frame_impl(q, boost, needs_scores)
+        return self._query_frame({0: (q, boost)}, None, needs_scores).select(
+            "seg", "doc", "score")
 
     def _cached_filter_frame(self, q: Query,
                              boost: np.float32) -> DataFrame | None:
@@ -2147,17 +2104,17 @@ class IndexSearcher:
         query uncached.  Only reached with needs_scores=False — the
         QueryCache::do_cache equivalence contract (query_cache.rs:42-54).
 
-        ConstantScore/Boost wrappers are skipped at this level (their
-        inner query is consulted on recursion instead) — the policy
-        tracks the ACTUAL query type (cache_policy.rs:93,105
-        debug-asserts the weight is never CONSTANT).  No clause inside a
-        postings-only tree reaches here, nor a postings-only clause of a
-        boolean with a docmeta-backed leaf: they ride their tree's
-        one-scan plan (_postings_frame), which beats a per-clause cached
-        set — the same economics behind the policy's min-frequency 20
-        for cheap term filters."""
+        Boost wrappers fold away first (_frame) and ConstantScore
+        wrappers are skipped (their inner query is consulted on
+        recursion instead) — the policy tracks the ACTUAL query type
+        (cache_policy.rs:93,105 debug-asserts the weight is never
+        CONSTANT). Inside a tree, only the children that are neither
+        scored nor postings-only reach here (_compile); postings-only
+        ones ride the tree's one-scan plan (_postings_frame), which beats
+        a per-clause cached set — the same economics behind the policy's
+        min-frequency 20 for cheap term filters."""
         from .cache import query_cache_key
-        if isinstance(q, (ConstantScoreQuery, BoostQuery)):
+        if isinstance(q, ConstantScoreQuery):
             return None
         key = query_cache_key(q)
         if key is None:
@@ -2170,35 +2127,79 @@ class IndexSearcher:
         if hit is None:
             if not policy.should_cache(q, key):
                 return None
-            frame = self._frame_impl(q, np.float32(1.0), False)
+            frame = self._query_frame({0: (q, np.float32(1.0))}, None, False)
             hit = qc.put(self._gen_key, key, frame.select("seg", "doc"))
         s = float(np.float32(boost))
         return hit.select(
             "seg", "doc", F.lit(s).cast(self._score_t).alias("score"))
 
-    def _frame_impl(self, q: Query, boost: np.float32,
-                    needs_scores: bool) -> DataFrame:
-        if _postings_only(q):
-            # one per-segment plan: every matching (seg, doc, score)
-            # leaves the scan task, with no shuffle
-            return self._postings_frame({0: (q, boost)}, None).select(
-                "seg", "doc", "score")
-        if isinstance(q, BoostQuery):
-            return self._frame(q.query, np.float32(boost * np.float32(q.boost)),
-                               needs_scores)
-        # a tree with a docmeta-backed leaf: fetch every term's stats in
-        # one job before its postings-only subtrees plan one by one
-        self._stats_for(self._collect_terms(q))
-        if isinstance(q, ConstantScoreQuery):
-            inner = self._frame(q.query, np.float32(1.0), False)
-            s = float(np.float32(boost * np.float32(q.boost)))
-            return inner.select("seg", "doc",
-                                F.lit(s).cast(self._score_t).alias("score"))
+    def _query_frame(self, trees: dict, k: int | None,
+                     scored: bool = True) -> DataFrame:
+        """``(_q, seg, doc, score)`` rows of query trees
+        ``trees[output_id] = (query, boost)``: with ``k``, live rows
+        whose per-``_q`` top-k is each tree's (under the tombstone gate
+        the workers mask tombstones and keep per-segment top-k rows;
+        above it every match leaves them and ``_live`` anti-joins); with
+        ``k=None`` every match. Postings-only trees are outputs of one plan
+        scan (_postings_frame). The others compile into nodes over rows
+        leaves (_compile) — their postings-only subtrees from one more
+        plan scan, docmeta leaves (_leaf_frame), unscored children's
+        _frame — hash-partitioned ONCE by (seg, doc) and evaluated per
+        segment by _eval_node; a bare docmeta-backed leaf is its frame."""
+        if k is not None and self._deleted is not None and (
+                not self._bcast_deleted):
+            return self._live(self._query_frame(trees, None))
+        post = {o: t for o, t in trees.items() if _postings_only(t[0])}
+        rest = {o: t for o, t in trees.items() if o not in post}
+        parts = [self._postings_frame(post, k)] if post else []
+        self._stats_for([key for q, _ in rest.values()
+                         for key in self._collect_terms(q)])
+        plan = _Plan(rows=True)
+        nodes = []
+        for oid, (q, boost) in rest.items():
+            node = self._compile(q, boost, plan, scored)
+            if node[0] != "rows":
+                nodes.append((oid, node))
+                continue
+            # a bare docmeta-backed leaf: its frame is the output
+            frame, plan.rows[node[1]] = plan.rows[node[1]], None
+            parts.append((frame if k is None else self._live(frame)).select(
+                F.lit(oid).alias("_q"), "seg", "doc", "score"))
+        if nodes:
+            leaves = [src.select(F.lit(lid).alias("_q"), "seg", "doc",
+                                 "score")
+                      for lid, src in enumerate(plan.rows)
+                      if isinstance(src, DataFrame)]
+            subtrees = {lid: src for lid, src in enumerate(plan.rows)
+                        if isinstance(src, tuple)}
+            if subtrees:
+                leaves.append(self._postings_frame(subtrees, None))
+            n_leaves, lucene = len(plan.rows), self.scoring == "lucene"
+
+            def seg_fn(sub, tomb):
+                doc = sub["doc"].to_numpy(np.int64)
+                score = sub["score"].to_numpy(np.float64)
+                at = np.searchsorted(sub["_q"].to_numpy(),
+                                     np.arange(n_leaves + 1))
+                return _seg_outputs(nodes, lambda n: (
+                    doc[at[n[1]]:at[n[1] + 1]],
+                    score[at[n[1]]:at[n[1] + 1]]), tomb, k, lucene)
+
+            parts.append(self._seg_map(
+                reduce(DataFrame.unionByName, leaves)
+                .repartition("seg", "doc")
+                .sortWithinPartitions("seg", "_q", "doc"), seg_fn, k))
+        return reduce(DataFrame.unionByName, parts)
+
+    def _leaf_frame(self, q: Query, boost: np.float32,
+                    scored: bool) -> DataFrame:
+        """``(seg, doc, score)`` frame of a docmeta-backed leaf: a
+        doc-values leaf constant-scored at ``boost`` over docmeta, or a
+        FilterQuery's inner query frame joined to docmeta and filtered."""
         if isinstance(q, (MatchAllDocsQuery, RangeQuery, MultiRangeQuery,
                           ExistsQuery)):
-            # doc-values leaves, constant-scored over docmeta; multi-dim
-            # points (bkd_writer.rs) test all dims in ONE scan, each
-            # range a filter pushed to the Parquet reader
+            # multi-dim points (bkd_writer.rs) test all dims in ONE scan,
+            # each range a filter pushed to the Parquet reader
             if isinstance(q, MultiRangeQuery):
                 ranges = q.ranges
             elif isinstance(q, RangeQuery):
@@ -2220,10 +2221,9 @@ class IndexSearcher:
         if isinstance(q, FilterQuery):
             # candidate generation first, expensive per-doc predicate after
             # (two-phase iteration, filter_query.rs:28-52)
-            inner = self._frame(q.query, boost, needs_scores)
+            inner = self._frame(q.query, boost, scored)
             joined = inner.join(self._docmeta, ["seg", "doc"])
             if callable(q.predicate):
-                schema = self._score_schema
                 pred = q.predicate
 
                 def fn(batches):
@@ -2233,42 +2233,8 @@ class IndexSearcher:
                         mask = np.asarray(pred(pdf), dtype=bool)
                         yield pdf.loc[mask, ["seg", "doc", "score"]]
 
-                return joined.mapInPandas(fn, schema)
+                return joined.mapInPandas(fn, self._score_schema)
             return joined.filter(q.predicate).select("seg", "doc", "score")
-        if isinstance(q, MinScoreQuery):
-            # min_scorer.rs:69-71 — matches() requires score strictly > min
-            inner = self._frame(q.query, boost, True)
-            return inner.filter(F.col("score") > F.lit(float(q.min_score)))
-        if isinstance(q, BooleanQuery):
-            return self._boolean_frame(q, boost, needs_scores)
-        if isinstance(q, DisjunctionMaxQuery):
-            unioned = reduce(DataFrame.unionByName, [
-                self._frame(d, boost, needs_scores)
-                for d in q.disjuncts])
-            tie = float(q.tie_breaker)
-            return (
-                unioned.groupBy("seg", "doc")
-                .agg(F.max("score").alias("_mx"), F.sum("score").alias("_sum"))
-                .select(
-                    "seg", "doc",
-                    (F.col("_mx") + F.lit(tie) * (F.col("_sum") - F.col("_mx"))
-                     ).cast(self._score_t).alias("score"),
-                )
-            )
-        if isinstance(q, BoostingQuery):
-            pos = self._frame(q.positive, boost, needs_scores)
-            neg = self._frame(q.negative, np.float32(1.0), False)
-            nb = float(q.negative_boost)
-            return (
-                pos.join(neg.select("seg", "doc", F.lit(True).alias("_neg")),
-                         ["seg", "doc"], "left")
-                .select(
-                    "seg", "doc",
-                    F.when(F.col("_neg").isNotNull(),
-                           (F.col("score") * F.lit(nb)).cast(self._score_t))
-                    .otherwise(F.col("score")).alias("score"),
-                )
-            )
         raise TypeError(f"unsupported query: {type(q)}")
 
     def _postings_frame(self, trees: dict, k: int | None) -> DataFrame:
@@ -2286,10 +2252,8 @@ class IndexSearcher:
         (_eval_node). Tasks hold whole segments (_iter_seg_chunks), so no
         (seg, doc) shuffle exists. With ``k`` (a root, only under the
         tombstone broadcast gate) the worker masks tombstones and keeps
-        each output's per-segment top-k; with ``k=None`` (nested use,
-        count(), roots above the gate) every match is emitted and the
-        caller live-masks. The query cache is not consulted inside a
-        tree (_cached_filter_frame)."""
+        each output's per-segment top-k; with ``k=None`` every match is
+        emitted and the caller live-masks."""
         stats = self._stats_for([key for q, _ in trees.values()
                                  for key in self._collect_terms(q)])
         plan = _Plan(stats)
@@ -2307,15 +2271,19 @@ class IndexSearcher:
             return _seg_outputs(outputs, leaf, tomb, k, tw[0])
 
         cols = _TERM_SCAN_COLS + (_POS_SCAN_COLS if pos_keys else ())
-        return self._seg_scan(self._terms_cond(plan.scan_keys), cols,
-                              seg_fn, k)
+        return self._seg_map(self._coalesced(self._postings.filter(
+            self._terms_cond(plan.scan_keys)).select(*cols)), seg_fn, k)
 
-    def _compile(self, q: Query, boost: np.float32, plan: "_Plan"):
-        """A postings-only query tree as a plan node for _eval_node,
-        recording in ``plan`` what its scan must read. Boosts fold into
-        each leaf's weight the way _frame and the oracle pass them down;
-        filter, must-not, constant-score and boosting-negative children
-        compile with boost 1 (their scores are never used)."""
+    def _compile(self, q: Query, boost: np.float32, plan: "_Plan",
+                 scored: bool = True):
+        """A query tree as a plan node for _eval_node, recording in
+        ``plan`` what its evaluation reads. Boosts fold into each leaf's
+        weight the way the oracle passes them down; filter, must-not,
+        constant-score and boosting-negative children compile with boost
+        1 and ``scored=False`` (their scores are never used). A postings
+        plan takes postings-only trees; in a rows or explain plan
+        children (``sub``) and docmeta-backed leaves become rows
+        leaves."""
         q, boost = self._fold_boost(q, boost)
         one = np.float32(1.0)
         if isinstance(q, TermQuery):
@@ -2330,26 +2298,49 @@ class IndexSearcher:
             return self._compile_phrase(q, boost, plan)
         if isinstance(q, _SpanQueryT):
             return self._compile_span(q, boost, plan)
+
+        def sub(x, b, s=scored):
+            # a child: in an explain plan a rows leaf holding its
+            # Explanation; in a rows plan a postings-only child is a rows
+            # leaf of the plan scan, an unscored child a rows leaf of its
+            # _frame (the query-cache protocol); otherwise it compiles
+            if plan.at is not None:
+                return plan.rows_leaf(self._explain(x, b, *plan.at))
+            if plan.rows is not None and _postings_only(x):
+                return plan.rows_leaf((x, b))
+            if plan.rows is not None and not s:
+                return plan.rows_leaf(self._frame(x, one, False))
+            return self._compile(x, b, plan, s)
+
         if isinstance(q, BooleanQuery):
-            return ("bool", [self._compile(x, boost, plan) for x in q.musts],
-                    [self._compile(x, boost, plan) for x in q.shoulds],
-                    [self._compile(x, one, plan) for x in q.filters],
-                    [self._compile(x, one, plan) for x in q.must_nots],
+            return ("bool", [sub(x, boost) for x in q.musts],
+                    [sub(x, boost) for x in q.shoulds],
+                    [sub(x, one, False) for x in q.filters],
+                    [sub(x, one, False) for x in q.must_nots],
                     q.min_should_match)
         if isinstance(q, DisjunctionMaxQuery):
-            return ("dismax", [self._compile(d, boost, plan)
-                               for d in q.disjuncts], float(q.tie_breaker))
+            return ("dismax", [sub(d, boost) for d in q.disjuncts],
+                    float(q.tie_breaker))
         if isinstance(q, ConstantScoreQuery):
-            return ("const", self._compile(q.query, one, plan),
+            return ("const", sub(q.query, one, False),
                     float(np.float32(boost * np.float32(q.boost))))
         if isinstance(q, MinScoreQuery):
-            return ("min", self._compile(q.query, boost, plan),
-                    float(q.min_score))
+            return ("min", sub(q.query, boost, True), float(q.min_score))
         if isinstance(q, BoostingQuery):
-            return ("boosting", self._compile(q.positive, boost, plan),
-                    self._compile(q.negative, one, plan),
-                    float(q.negative_boost))
-        raise TypeError(f"not a postings-only query: {type(q)}")
+            return ("boosting", sub(q.positive, boost),
+                    sub(q.negative, one, False), float(q.negative_boost))
+        if plan.rows is None:
+            raise TypeError(f"not a postings-only query: {type(q)}")
+        frame = self._leaf_frame(q, boost, scored)
+        if plan.at is not None:  # explain: the frame's row at the one doc
+            seg, doc = plan.at
+            row = frame.filter((F.col("seg") == seg)
+                               & (F.col("doc") == doc)).limit(1).collect()
+            name = type(q).__name__
+            frame = ({"match": True, "value": float(row[0]["score"]),
+                      "description": f"{name}, score:", "details": []}
+                     if row else _no_match(f"no match ({name})"))
+        return plan.rows_leaf(frame)
 
     # -- leaves ---------------------------------------------------------
 
@@ -2389,19 +2380,18 @@ class IndexSearcher:
                           * (np.float32(k1_) + np.float32(1.0)))
         return wk32, (idf64_total * float(boost)) * _kp1_64(k1_)
 
-    def _seg_scan(self, cond, cols, seg_fn, k: int | None) -> DataFrame:
-        """One term-pruned postings scan (``cond``, ``cols`` read)
-        streamed per segment through ``seg_fn(rows, tomb)`` → iterable
-        of ``(output_id, docs, scores)``, as ``(_q, seg, doc, score)``
-        rows. With ``k`` the segment's tombstones are passed in (roots
-        run only under the broadcast gate); otherwise None, and the
-        caller live-masks."""
+    def _seg_map(self, rows: DataFrame, seg_fn, k: int | None) -> DataFrame:
+        """``rows`` (a postings scan, or a seg-sorted shuffle) streamed
+        per segment (_iter_seg_chunks) through ``seg_fn(rows, tomb)`` →
+        iterable of ``(output_id, docs, scores)``, as ``(_q, seg, doc,
+        score)`` rows. ``tomb`` is the segment's tombstones with ``k``
+        (roots run only under the broadcast gate), else None."""
         tomb = self._tomb_by_seg() if k is not None else {}
         ftype = np.float32 if self.scoring == "lucene" else np.float64
 
         def fn(batches):
             # streamed per segment — peak memory is one segment's rows
-            # no matter how many segments _coalesced packs in
+            # no matter how many segments a partition holds
             for s, sub in _iter_seg_chunks(batches):
                 parts = list(seg_fn(sub, tomb.get(int(s))))
                 if not parts:
@@ -2417,9 +2407,7 @@ class IndexSearcher:
                         [v for _, _, v in parts]).astype(ftype),
                 })
 
-        scan = self._postings.filter(cond).select(*cols)
-        return self._coalesced(scan).mapInPandas(
-            fn, f"_q int, {self._score_schema}")
+        return rows.mapInPandas(fn, f"_q int, {self._score_schema}")
 
     def _compile_phrase(self, q: PhraseQuery, boost: np.float32,
                         plan: "_Plan"):
@@ -2547,61 +2535,3 @@ class IndexSearcher:
         plan.add_positional(keys)
         return ("span", keys, spec, group_tis, bm,
                 (fast2, ta2, tb2, slop2, fastn))
-
-    # -- boolean ---------------------------------------------------------
-
-    def _boolean_frame(self, q: BooleanQuery, boost: np.float32,
-                       needs_scores: bool) -> DataFrame:
-        """A boolean with a docmeta-backed clause: its postings-only
-        clauses run as one plan set in one scan (_postings_frame, one
-        output id per clause), every other clause as its own frame, and
-        a groupBy(seg, doc) over the clauses' role-tagged rows applies
-        the must/filter/must-not/msm arithmetic. Filter and must-not
-        rows carry a score the sum ignores."""
-        trees: dict[int, tuple] = {}
-        roles: list[int] = []
-        tagged: list[DataFrame] = []
-
-        def add(subs, role, scored, sub_boost):
-            ct = _ROLE_CODE[role]
-            for sub in subs:
-                if _postings_only(sub):
-                    trees[len(roles)] = (sub, sub_boost)
-                    roles.append(ct)
-                elif scored:
-                    tagged.append(self._frame(sub, sub_boost, needs_scores)
-                                  .withColumn("_ct", F.lit(ct)))
-                else:
-                    tagged.append(
-                        self._frame(sub, np.float32(1.0), False)
-                        .select("seg", "doc",
-                                F.lit(0.0).cast(self._score_t).alias("score"))
-                        .withColumn("_ct", F.lit(ct)))
-
-        add(q.musts, "m", True, boost)
-        add(q.shoulds, "s", True, boost)
-        add(q.filters, "f", False, np.float32(1.0))
-        add(q.must_nots, "n", False, np.float32(1.0))
-        if trees:
-            role_of = F.element_at(F.array(*map(F.lit, roles)),
-                                   F.col("_q") + 1)
-            tagged.append(self._postings_frame(trees, None).select(
-                "seg", "doc", "score", role_of.alias("_ct")))
-
-        unioned = reduce(DataFrame.unionByName, tagged)
-        ct = F.col("_ct")
-        agg = unioned.groupBy("seg", "doc").agg(
-            F.sum(F.when(ct <= _ROLE_CODE["s"], F.col("score"))
-                  .otherwise(F.lit(0.0))).alias("_score"),
-            *[F.count(F.when(ct == code, 1)).alias("_n" + role)
-              for role, code in _ROLE_CODE.items()],
-        )
-        cond = (
-            (F.col("_nm") == len(q.musts))
-            & (F.col("_nf") == len(q.filters))
-            & (F.col("_nn") == 0)
-            & (F.col("_ns") >= q.min_should_match)
-        )
-        return agg.filter(cond).select(
-            "seg", "doc", F.col("_score").cast(self._score_t).alias("score")
-        )

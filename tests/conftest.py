@@ -50,22 +50,56 @@ def corpus_query_material(corpus):
     return vocab, bigrams
 
 
-def random_query_tree(rng, vocab, bigrams, depth=0, extended=False):
+# docmeta bounds for random_query_tree(docmeta=True), over the
+# webtext.make_corpus columns: ``lang`` values and ``url`` site prefixes
+_LANGS = (None, "de", "en", "zh")
+_SITES = tuple(f"https://site{n:04d}" for n in (0, 1, 2, 5, 40, 200))
+
+
+def random_docmeta_leaf(rng):
+    """A random docmeta-backed leaf: a RangeQuery or ExistsQuery over
+    ``lang``, a MultiRangeQuery over ``url`` (and sometimes ``lang``),
+    or a MatchAllDocsQuery."""
+    from rucene_spark.query import (ExistsQuery, MatchAllDocsQuery,
+                                    MultiRangeQuery, RangeQuery)
+
+    r = rng.random()
+    if r < 0.4:
+        lo, hi = sorted(int(x) for x in rng.integers(len(_LANGS), size=2))
+        return RangeQuery("lang", _LANGS[lo], _LANGS[hi] if hi else None)
+    if r < 0.55:
+        return ExistsQuery("lang")
+    if r < 0.85:
+        lo, hi = sorted(int(x) for x in rng.choice(len(_SITES), 2,
+                                                   replace=False))
+        ranges = [("url", _SITES[lo], _SITES[hi])]
+        if rng.random() < 0.5:
+            ranges.append(("lang", "en", "en"))
+        return MultiRangeQuery(ranges)
+    return MatchAllDocsQuery()
+
+
+def random_query_tree(rng, vocab, bigrams, depth=0, extended=False,
+                      docmeta=False):
     """One random query tree: terms (incl. misses), exact/sloppy phrases
     over real and fake bigrams, spans, dismax/boost/constant wrappers and
     nested booleans with msm/filters/must_nots. ``extended`` adds
-    BoostingQuery and MinScoreQuery nodes; without it the tree stream of
-    a seed is the one it has always been."""
+    BoostingQuery and MinScoreQuery nodes; ``docmeta`` turns some leaves
+    into docmeta-backed ones (random_docmeta_leaf). Without them the
+    tree stream of a seed is the one it has always been."""
     from rucene_spark.query import (BooleanQuery, BoostingQuery, BoostQuery,
                                     ConstantScoreQuery, DisjunctionMaxQuery,
                                     MinScoreQuery, PhraseQuery, SpanNearQuery,
                                     SpanTermQuery, TermQuery)
 
     def sub():
-        return random_query_tree(rng, vocab, bigrams, depth + 1, extended)
+        return random_query_tree(rng, vocab, bigrams, depth + 1, extended,
+                                 docmeta)
 
     r = rng.random()
     if depth >= 2 or r < 0.30:
+        if docmeta and rng.random() < 0.35:
+            return random_docmeta_leaf(rng)
         return TermQuery("text", vocab[int(rng.integers(len(vocab)))])
     if r < 0.45:
         a, b = bigrams[int(rng.integers(len(bigrams)))]

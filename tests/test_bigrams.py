@@ -11,7 +11,6 @@ the position-verify paths only see capped position lists.
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 import pytest
@@ -112,18 +111,16 @@ def test_pair_channel_in_postings(spark, idx_bigram):
 
 
 @pytest.mark.parametrize("terms", PHRASES, ids=[" ".join(p) for p in PHRASES])
-def test_phrase_identity_all_routes(spark, idx_plain, idx_bigram, terms):
+def test_phrase_identity_all_routes(spark, idx_plain, idx_bigram, terms,
+                                    monkeypatch):
     want = _phrase_results(spark, idx_plain, terms, collector=True)
     # sanity: collector matches exhaustive on the plain index
     assert want == _phrase_results(spark, idx_plain, terms, collector=False)
     got = _phrase_results(spark, idx_bigram, terms, collector=True)
     assert got == want, f"bigram route diverged for {terms}"
-    # kill-switch path on the bigram index must also agree
-    os.environ["RUCENE_PHRASE_BIGRAMS"] = "0"
-    try:
-        off = _phrase_results(spark, idx_bigram, terms, collector=True)
-    finally:
-        os.environ.pop("RUCENE_PHRASE_BIGRAMS", None)
+    # the unrewritten path on the bigram index must also agree
+    monkeypatch.setattr(IndexSearcher, "_bigram_hot", lambda self, f: None)
+    off = _phrase_results(spark, idx_bigram, terms, collector=True)
     assert off == want
 
 

@@ -130,6 +130,27 @@ def test_explain_boolean_non_match_cases(spark, corpus, hi_mid, tmp_index):
         assert not e["match"]
 
 
+def test_explain_filter_only_boolean_matches(spark, corpus, hi_mid,
+                                             tmp_index):
+    """A boolean whose only clauses are filters matches every filtered
+    doc at score 0.0 in search(); explain() must say the same doc by
+    doc, with the same value, and still say no match elsewhere."""
+    hi, mid = hi_mid
+    IndexWriter(spark, tmp_index, n_segments=4).build(
+        spark.createDataFrame(corpus[["url", "text", "lang"]]))
+    s = IndexSearcher(spark, tmp_index)
+    q = BooleanQuery(filters=[TermQuery("text", mid)])
+    rows = s.search(q, 3).collect()
+    assert rows
+    for r in rows:
+        assert float(r["score"]) == 0.0
+        e = s.explain(q, r["seg"], r["doc"])
+        assert e["match"] and e["value"] == 0.0, e
+    missing = BooleanQuery(filters=[TermQuery("text", "tzzzzzz")])
+    e = s.explain(missing, rows[0]["seg"], rows[0]["doc"])
+    assert not e["match"] and "filter" in e["description"]
+
+
 def test_update_documents_replaces_by_key(spark, corpus, hi_mid, tmp_index):
     """IndexWriter::update_document analogue: delete-then-add by key in
     one call; the replacement is visible, the old copy is not, and a

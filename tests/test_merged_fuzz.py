@@ -10,7 +10,11 @@ layouts a long-lived index actually serves from:
    deleted docs in df/ttf until merge, so the oracle built over every doc
    has exactly the engine's stats, and removing deleted docs from a total
    order leaves the live top-k.
-2. sharded-merged (deletes folded by a multi-file doc-range-sharded
+2. trees with docmeta-backed leaves (range, exists, multi-range and
+   match-all), which take the rows evaluation: search() on the fresh
+   and the tombstoned layout, count(), a search_many batch and
+   explain() of each tree's top hit, all against the oracle's bits.
+3. sharded-merged (deletes folded by a multi-file doc-range-sharded
    SegmentMerger.merge) — search()'s per-segment top-k collector and the
    exhaustive live-masked query frame must both be rank- AND
    float32-score-bit-identical to a fresh oracle over the surviving
@@ -51,6 +55,11 @@ def _build(spark, corpus, d):
     df = spark.createDataFrame(corpus.drop(columns=["html"]))
     IndexWriter(spark, d, n_segments=N_SEG, key_col="url").build(df)
     return d
+
+
+@pytest.fixture(scope="module")
+def fresh(spark, corpus, tmp_path_factory):
+    return _build(spark, corpus, str(tmp_path_factory.mktemp("fuzz_fresh")))
 
 
 @pytest.fixture(scope="module")
@@ -137,6 +146,54 @@ def test_tombstoned_extended_matches_oracle(spark, corpus, victims,
         if eng != orc:
             failures.append(
                 f"ext#{i}: engine={eng[:3]} oracle={orc[:3]} :: {q!r}"[:400])
+    assert not failures, "\n".join(failures)
+
+
+def _bits(score):
+    return np.float32(score).view(np.int32).item()
+
+
+def test_docmeta_trees_match_oracle(spark, corpus, victims, fresh,
+                                    tombstoned, full_oracle):
+    """40 extended trees with docmeta-backed leaves: search() on the
+    fresh layout, search() on the tombstoned layout (against the
+    full-corpus oracle with the deleted keys dropped), count(), one
+    search_many batch, and explain() of every tree's top hit, all
+    bit-identical to the oracle."""
+    vocab, bigrams = corpus_query_material(corpus)
+    rng = np.random.default_rng(SEED + 2)
+    trees = [random_query_tree(rng, vocab, bigrams, extended=True,
+                               docmeta=True) for _ in range(40)]
+    shapes = "".join(map(repr, trees))
+    for leaf in ("RangeQuery(", "ExistsQuery(", "MultiRangeQuery(",
+                 "MatchAllDocsQuery("):
+        assert leaf in shapes, leaf
+    dead = set(victims)
+    s = IndexSearcher(spark, fresh)
+    st = IndexSearcher(spark, tombstoned)
+    batch = {}
+    for r in s.search_many(trees, 10).collect():
+        batch.setdefault(r["qid"], []).append((r["url"], _bits(r["score"])))
+    failures = []
+    for i, q in enumerate(trees):
+        full = [(u, _bits(sc)) for (u, sc, _) in full_oracle.search(q, N_DOCS)]
+        rows = s.search(q, 10).collect()
+        got = {
+            "fresh": [(r["url"], _bits(r["score"])) for r in rows],
+            "tomb": _hits(st, q),
+            "count": s.count(q),
+            "many": batch.get(i, []),
+        }
+        want = {"fresh": full[:10],
+                "tomb": [h for h in full if h[0] not in dead][:10],
+                "count": full_oracle.count(q), "many": full[:10]}
+        if rows:
+            e = s.explain(q, rows[0]["seg"], rows[0]["doc"])
+            got["explain"] = (e["match"], _bits(e["value"]))
+            want["explain"] = (True, _bits(rows[0]["score"]))
+        bad = [key for key in got if got[key] != want[key]]
+        if bad:
+            failures.append(f"docmeta#{i} {bad}: {q!r}"[:400])
     assert not failures, "\n".join(failures)
 
 

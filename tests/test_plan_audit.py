@@ -11,6 +11,8 @@
   shuffle);
 * a postings-only query tree of any shape reads postings once and
   shuffles no (seg, doc);
+* a tree with a docmeta-backed leaf reads postings once and shuffles
+  once by (seg, doc), however deep its booleans nest;
 * the block-max collector's scan pushes its term filter.
 """
 
@@ -126,8 +128,8 @@ def test_postings_only_trees_scan_once_without_seg_shuffle(searcher,
 
 
 def test_range_clause_boolean_reads_postings_once(searcher):
-    """A boolean mixing a RangeQuery clause with two term clauses keeps
-    the docmeta frame route, and its term clauses share one postings
+    """A boolean mixing a RangeQuery clause with two term clauses takes
+    the rows evaluation, and its term clauses share one postings
     scan."""
     from rucene_spark.query import BooleanQuery, RangeQuery
 
@@ -135,6 +137,48 @@ def test_range_clause_boolean_reads_postings_once(searcher):
                            [TermQuery("text", "t000001")],
                            [RangeQuery("lang", "en", "en")], [])
     assert _postings_scans(_physical_plan(searcher.search(q, 10))) == 1
+
+
+def _docmeta_trees():
+    from rucene_spark.query import (BooleanQuery, BoostingQuery,
+                                    DisjunctionMaxQuery, ExistsQuery,
+                                    PhraseQuery, RangeQuery)
+
+    t = [TermQuery("text", f"t00000{i}") for i in range(4)]
+    rng = RangeQuery("lang", "en", "en")
+    return [
+        BooleanQuery.build([], [t[0], t[1]], [rng], []),
+        DisjunctionMaxQuery(
+            [rng, PhraseQuery.build("text", ["t000000", "t000001"])], 0.1),
+        BoostingQuery(t[0], rng, 0.5),
+        BooleanQuery.build([], [BooleanQuery.build([ExistsQuery("lang")],
+                                                   [t[2]], [], []), t[3]],
+                           [], []),
+    ]
+
+
+@pytest.mark.parametrize("i", range(4), ids=["range_filter", "dismax_range",
+                                             "boosting_range", "nested"])
+def test_docmeta_tree_shuffles_once(searcher, i):
+    """A tree with a docmeta-backed leaf — a range filter, a dismax over
+    a range and a phrase, a BoostingQuery with a range negative, a
+    boolean nesting an ExistsQuery must — reads postings in one scan
+    and shuffles once by (seg, doc) whatever its depth."""
+    plan = _physical_plan(searcher.search(_docmeta_trees()[i], 10))
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert _postings_scans(plan) == 1, plan
+
+
+def test_search_many_mixed_batch_reads_postings_twice(searcher):
+    """A search_many batch mixing postings-only and docmeta-backed
+    queries reads postings at most twice: one plan scan for the
+    postings-only queries, one for the others' postings subtrees."""
+    queries = [TermQuery("text", "t000000"),
+               QueryStringQueryBuilder("t000001 +t000002",
+                                       [("text", 1.0)]).build(),
+               *_docmeta_trees()]
+    plan = _physical_plan(searcher.search_many(queries, 10))
+    assert _postings_scans(plan) <= 2, plan
 
 
 def test_blockmax_scan_pushes_in_filter(searcher):
