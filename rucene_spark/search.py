@@ -987,34 +987,23 @@ def _postings_only(q: Query) -> bool:
 
 
 class _Plan:
-    """What compiling query trees (IndexSearcher._compile) collects: for
-    the one postings scan, the term-leaf clauses ``(field, term,
+    """What compiling postings-only query trees (IndexSearcher._compile)
+    collects for their one scan: the term-leaf clauses ``(field, term,
     boost)``, the number of each term-leaf (field, term) key, the keys
     of the phrase/span leaves, and every key the scan reads (insertion
-    ordered, so a plan's scan filter is deterministic); in ``rows``, the
-    source of each ``("rows", lid)`` leaf — a postings-only subtree
-    ``(query, boost)`` or a ``(seg, doc, score)`` DataFrame, or its
-    Explanation in an explain plan (``at`` = the one (seg, doc))."""
+    ordered, so a plan's scan filter is deterministic)."""
 
-    def __init__(self, stats: dict | None = None, rows: bool = False,
-                 at: tuple[int, int] | None = None):
+    def __init__(self, stats: dict | None = None):
         self.stats = stats
         self.clauses: list[tuple] = []
         self.kid_of: dict[tuple[str, str], int] = {}
         self.pos_keys: set = set()
         self.scan_keys: dict = {}
-        self.rows: list | None = [] if rows or at is not None else None
-        self.at = at
 
     def add_positional(self, keys) -> None:
         self.pos_keys.update(keys)
         for key in keys:
             self.scan_keys.setdefault(key)
-
-    def rows_leaf(self, src):
-        """A ``("rows", lid)`` leaf node for ``src``."""
-        self.rows.append(src)
-        return ("rows", len(self.rows) - 1)
 
 
 def _no_match(description: str, details=()) -> dict:
@@ -1765,29 +1754,41 @@ class IndexSearcher:
             return self._explain_phrase(query, boost, seg, doc)
         if isinstance(query, _SpanQueryT):
             return self._explain_span(query, boost, seg, doc)
-        # a node: its children explained as the leaves of an explain plan
-        # (_compile), its value from _eval_node over their one-doc values;
-        # a docmeta-backed leaf explains from its frame at the doc
-        plan = _Plan(at=(seg, doc))
-        node = self._compile(query, boost, plan)
-        ex = plan.rows
+        # a node: its children explained as rows leaves (_compile), its
+        # value from _eval_node over their one-doc values; a
+        # docmeta-backed leaf explains from its frame's row at the doc
+        ex: list[dict] = []
+
+        def child(x, b, s):
+            ex.append(self._explain(x, b, seg, doc))
+            return ("rows", len(ex) - 1)
+
+        def leaf(x, b, s):
+            row = self._leaf_frame(x, b, s).filter(
+                (F.col("seg") == seg) & (F.col("doc") == doc)).head()
+            name = type(x).__name__
+            ex.append({"match": True, "value": float(row["score"]),
+                       "description": f"{name}, score:", "details": []}
+                      if row is not None else _no_match(f"no match ({name})"))
+            return ("rows", len(ex) - 1)
+
+        node = self._compile(query, boost, None, True, child, leaf)
         if node[0] == "rows":
             return ex[0]
+
         def one_doc(leaf):
-            e = ex[leaf[1]]
-            return (np.asarray([doc] if e["match"] else [], dtype=np.int64),
-                    np.asarray([e["value"]] if e["match"] else [],
-                               dtype=np.float64))
+            n = int(ex[leaf[1]]["match"])
+            return (np.full(n, doc, dtype=np.int64),
+                    np.full(n, ex[leaf[1]]["value"], dtype=np.float64))
 
         d, v = _eval_node(node, one_doc, self.scoring == "lucene")
-        value = float(v[0]) if len(d) else None
         name = type(query).__name__
         if node[0] == "bool":
             # BooleanWeight::explain semantics: a failed must/filter, a
             # matching must_not, or unmet min_should_match all make the
             # doc a NON-match, even if other clauses would contribute score
-            nm, ns, nf = (len(query.musts), len(query.shoulds),
-                          len(query.filters))
+            nm, ns, nf = map(len, (query.musts, query.shoulds,
+                                   query.filters))
             desc = "sum of:"
             kept = ex[:nm] + [e for e in ex[nm:nm + ns] if e["match"]]
             why = next(reason for failed, reason in (
@@ -1811,9 +1812,9 @@ class IndexSearcher:
             why = "No matching clause"
         else:
             desc, kept, why = f"{name}, score:", ex, f"no match ({name})"
-        if value is None:
+        if not len(d):
             return _no_match(why, ex)
-        return {"match": True, "value": value, "description": desc,
+        return {"match": True, "value": float(v[0]), "description": desc,
                 "details": kept}
 
     def _explain_term(self, q: TermQuery, boost: np.float32,
@@ -2143,9 +2144,10 @@ class IndexSearcher:
         ``k=None`` every match. Postings-only trees are outputs of one plan
         scan (_postings_frame). The others compile into nodes over rows
         leaves (_compile) — their postings-only subtrees from one more
-        plan scan, docmeta leaves (_leaf_frame), unscored children's
-        _frame — hash-partitioned ONCE by (seg, doc) and evaluated per
-        segment by _eval_node; a bare docmeta-backed leaf is its frame."""
+        plan scan, docmeta leaves (_leaf_frame) and, with a query cache,
+        unscored children's _frame — hash-partitioned ONCE by (seg, doc)
+        and evaluated per segment by _eval_node; a bare docmeta-backed
+        leaf is its frame."""
         if k is not None and self._deleted is not None and (
                 not self._bcast_deleted):
             return self._live(self._query_frame(trees, None))
@@ -2154,27 +2156,43 @@ class IndexSearcher:
         parts = [self._postings_frame(post, k)] if post else []
         self._stats_for([key for q, _ in rest.values()
                          for key in self._collect_terms(q)])
-        plan = _Plan(rows=True)
+        # rows leaves: postings-only subtrees (outputs of one more plan
+        # scan) and (seg, doc, score) frames, numbered in one id space
+        subtrees, frames = {}, []
+
+        def frame_leaf(frame):
+            lid = len(subtrees) + len(frames)
+            frames.append(frame.select(F.lit(lid).alias("_q"), "seg", "doc",
+                                       "score"))
+            return ("rows", lid)
+
+        def child(x, b, s):
+            if _postings_only(x):
+                lid = len(subtrees) + len(frames)
+                subtrees[lid] = (x, b)
+                return ("rows", lid)
+            if not s and self._query_cache is not None:
+                # the cache lookup of an unscored child (_frame)
+                return frame_leaf(self._frame(x, b, False))
+            return None  # compiled into this tree
+
+        def leaf(x, b, s):
+            return frame_leaf(self._leaf_frame(x, b, s))
+
         nodes = []
         for oid, (q, boost) in rest.items():
-            node = self._compile(q, boost, plan, scored)
+            node = self._compile(q, boost, None, scored, child, leaf)
             if node[0] != "rows":
                 nodes.append((oid, node))
                 continue
             # a bare docmeta-backed leaf: its frame is the output
-            frame, plan.rows[node[1]] = plan.rows[node[1]], None
-            parts.append((frame if k is None else self._live(frame)).select(
-                F.lit(oid).alias("_q"), "seg", "doc", "score"))
+            frame = frames.pop().withColumn("_q", F.lit(oid))
+            parts.append(frame if k is None else self._live(frame))
         if nodes:
-            leaves = [src.select(F.lit(lid).alias("_q"), "seg", "doc",
-                                 "score")
-                      for lid, src in enumerate(plan.rows)
-                      if isinstance(src, DataFrame)]
-            subtrees = {lid: src for lid, src in enumerate(plan.rows)
-                        if isinstance(src, tuple)}
-            if subtrees:
-                leaves.append(self._postings_frame(subtrees, None))
-            n_leaves, lucene = len(plan.rows), self.scoring == "lucene"
+            leaves = frames + ([self._postings_frame(subtrees, None)]
+                               if subtrees else [])
+            n_leaves = len(subtrees) + len(frames)
+            lucene = self.scoring == "lucene"
 
             def seg_fn(sub, tomb):
                 doc = sub["doc"].to_numpy(np.int64)
@@ -2274,16 +2292,17 @@ class IndexSearcher:
         return self._seg_map(self._coalesced(self._postings.filter(
             self._terms_cond(plan.scan_keys)).select(*cols)), seg_fn, k)
 
-    def _compile(self, q: Query, boost: np.float32, plan: "_Plan",
-                 scored: bool = True):
-        """A query tree as a plan node for _eval_node, recording in
-        ``plan`` what its evaluation reads. Boosts fold into each leaf's
-        weight the way the oracle passes them down; filter, must-not,
-        constant-score and boosting-negative children compile with boost
-        1 and ``scored=False`` (their scores are never used). A postings
-        plan takes postings-only trees; in a rows or explain plan
-        children (``sub``) and docmeta-backed leaves become rows
-        leaves."""
+    def _compile(self, q: Query, boost: np.float32, plan: "_Plan | None",
+                 scored: bool = True, child=lambda x, b, s: None,
+                 leaf=None):
+        """A query tree as a plan node for _eval_node. Boosts fold into
+        each leaf's weight the way the oracle passes them down; filter,
+        must-not, constant-score and boosting-negative children compile
+        with boost 1 and ``scored=False`` (their scores are never used).
+        Postings-only trees record in ``plan`` what their one scan reads.
+        Other callers pass ``child(x, boost, scored)`` — a child's node,
+        or None to compile it here — and ``leaf(x, boost, scored)`` for
+        the docmeta-backed leaves."""
         q, boost = self._fold_boost(q, boost)
         one = np.float32(1.0)
         if isinstance(q, TermQuery):
@@ -2300,17 +2319,7 @@ class IndexSearcher:
             return self._compile_span(q, boost, plan)
 
         def sub(x, b, s=scored):
-            # a child: in an explain plan a rows leaf holding its
-            # Explanation; in a rows plan a postings-only child is a rows
-            # leaf of the plan scan, an unscored child a rows leaf of its
-            # _frame (the query-cache protocol); otherwise it compiles
-            if plan.at is not None:
-                return plan.rows_leaf(self._explain(x, b, *plan.at))
-            if plan.rows is not None and _postings_only(x):
-                return plan.rows_leaf((x, b))
-            if plan.rows is not None and not s:
-                return plan.rows_leaf(self._frame(x, one, False))
-            return self._compile(x, b, plan, s)
+            return child(x, b, s) or self._compile(x, b, plan, s, child, leaf)
 
         if isinstance(q, BooleanQuery):
             return ("bool", [sub(x, boost) for x in q.musts],
@@ -2329,18 +2338,9 @@ class IndexSearcher:
         if isinstance(q, BoostingQuery):
             return ("boosting", sub(q.positive, boost),
                     sub(q.negative, one, False), float(q.negative_boost))
-        if plan.rows is None:
+        if leaf is None:
             raise TypeError(f"not a postings-only query: {type(q)}")
-        frame = self._leaf_frame(q, boost, scored)
-        if plan.at is not None:  # explain: the frame's row at the one doc
-            seg, doc = plan.at
-            row = frame.filter((F.col("seg") == seg)
-                               & (F.col("doc") == doc)).limit(1).collect()
-            name = type(q).__name__
-            frame = ({"match": True, "value": float(row[0]["score"]),
-                      "description": f"{name}, score:", "details": []}
-                     if row else _no_match(f"no match ({name})"))
-        return plan.rows_leaf(frame)
+        return leaf(q, boost, scored)
 
     # -- leaves ---------------------------------------------------------
 

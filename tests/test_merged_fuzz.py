@@ -197,6 +197,36 @@ def test_docmeta_trees_match_oracle(spark, corpus, victims, fresh,
     assert not failures, "\n".join(failures)
 
 
+def test_boosted_min_score_count_and_sorted_match_oracle(
+        spark, corpus, fresh, full_oracle):
+    """count() and search_sorted() evaluate their trees unscored, but a
+    MinScoreQuery inside still compares its cutoff with the scores the
+    boosts above it scale: under a 2x boost a doc whose unboosted score
+    lies in (c/2, c] passes a cutoff c. Both must match the oracle's
+    match set."""
+    from pyspark.sql import functions as F
+    from rucene_spark.query import (BooleanQuery, BoostQuery,
+                                    MinScoreQuery, RangeQuery, TermQuery)
+
+    vocab, _ = corpus_query_material(corpus)
+    for term in vocab:
+        inner = BooleanQuery(musts=[TermQuery("text", term)],
+                             filters=[RangeQuery("lang", "de", "en")])
+        scores = sorted({float(sc) for _, sc, _ in
+                         full_oracle.search(inner, N_DOCS)})
+        if len(scores) >= 6:
+            break
+    cut = scores[len(scores) // 2]
+    q = BoostQuery(BooleanQuery(musts=[MinScoreQuery(inner, cut)]), 2.0)
+    want = sorted(u for u, _, _ in full_oracle.search(q, N_DOCS))
+    assert len(want) > full_oracle.count(MinScoreQuery(inner, cut))
+    s = IndexSearcher(spark, fresh)
+    assert s.count(q) == len(want)
+    got = [r["url"] for r in
+           s.search_sorted(q, [F.col("url")], N_DOCS).collect()]
+    assert got == want
+
+
 def test_merged_search_many_matches_per_query(spark, corpus, merged):
     """The micro-batch serving executor over the sharded merged layout:
     one job for the whole fuzz batch, rank/score-identical per qid to

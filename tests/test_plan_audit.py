@@ -154,16 +154,21 @@ def _docmeta_trees():
         BooleanQuery.build([], [BooleanQuery.build([ExistsQuery("lang")],
                                                    [t[2]], [], []), t[3]],
                            [], []),
+        BooleanQuery.build([t[0]], [], [BooleanQuery.build([rng], [t[1]],
+                                                           [], [])], []),
     ]
 
 
-@pytest.mark.parametrize("i", range(4), ids=["range_filter", "dismax_range",
-                                             "boosting_range", "nested"])
+@pytest.mark.parametrize("i", range(5), ids=[
+    "range_filter", "dismax_range", "boosting_range", "nested",
+    "nested_filter"])
 def test_docmeta_tree_shuffles_once(searcher, i):
     """A tree with a docmeta-backed leaf — a range filter, a dismax over
     a range and a phrase, a BoostingQuery with a range negative, a
-    boolean nesting an ExistsQuery must — reads postings in one scan
-    and shuffles once by (seg, doc) whatever its depth."""
+    boolean nesting an ExistsQuery must, a boolean whose filter is a
+    boolean with a range must — reads postings in one scan and shuffles
+    once by (seg, doc) whatever its depth (with no query cache, an
+    unscored child compiles into the tree)."""
     plan = _physical_plan(searcher.search(_docmeta_trees()[i], 10))
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert _postings_scans(plan) == 1, plan
