@@ -974,6 +974,12 @@ def _children(q: Query) -> list:
     return []
 
 
+def _holds_min_score(q: Query) -> bool:
+    """Whether a ``MinScoreQuery`` is anywhere in the tree ``q``."""
+    return isinstance(q, MinScoreQuery) or any(
+        _holds_min_score(s) for s in _children(q))
+
+
 def _postings_only(q: Query) -> bool:
     """Whether every leaf of ``q`` is a term, phrase or span query under
     boolean, dismax, boost, constant-score, min-score and boosting nodes
@@ -1375,6 +1381,12 @@ class IndexSearcher:
     def search(self, query: Query, k: int = 10) -> DataFrame:
         """Top-k by (score desc, seg asc, doc asc) joined back to doc keys.
 
+        A query whose term stats are cached runs two Spark jobs: the plan
+        scan with its top-k under the broadcast exchange, and the
+        docmeta scan and join under one ``TakeOrderedAndProject``
+        (_topk_hits) — no sort job. A term not seen before adds one stats
+        lookup job (_stats_for).
+
         The planned DataFrame is memoized per (query value, k): Catalyst
         analysis/optimization is a fixed DRIVER cost that does not shrink
         with executor count, so a serving tier replaying a query mix
@@ -1400,10 +1412,17 @@ class IndexSearcher:
 
     def _topk_hits(self, frame: DataFrame, k: int) -> DataFrame:
         """The (score desc, seg, doc) top-k rows of a ``(seg, doc,
-        score)`` frame, joined back to docmeta (top-k side broadcast)."""
+        score)`` frame, joined back to docmeta (top-k side broadcast).
+
+        The join yields at most k rows, since ``(seg, doc)`` is unique in
+        docmeta, so the final sort is a ``limit(k)`` too: Catalyst plans
+        it as ``TakeOrderedAndProject`` over the join — no range-partition
+        sample job, no shuffle of the docmeta scan, which stays parallel
+        (``coalesce(1)`` would also drop the sample, but run the whole
+        docmeta scan in one task)."""
         topk = frame.orderBy(F.desc("score"), "seg", "doc").limit(k)
         return (self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
-                .orderBy(F.desc("score"), "seg", "doc"))
+                .orderBy(F.desc("score"), "seg", "doc").limit(k))
 
     @staticmethod
     def _fold_boost(q: Query, boost: np.float32):
@@ -1438,6 +1457,9 @@ class IndexSearcher:
         (_query_frame): one scan for their postings-only subtrees and one
         (seg, doc) shuffle. Tombstones are handled as in search()
         (_query_frame), and a per-query window keeps each query's top-k.
+        The docmeta join then yields at most ``k * len(queries)`` rows,
+        so the final (qid, score desc, seg, doc) sort is a limit of that
+        many — a ``TakeOrderedAndProject``, as in _topk_hits.
         Rank/score identity vs per-query search() is asserted by
         tests/test_search_many.py."""
         return self._memo_plan((tuple(repr(q) for q in queries), k, "many"),
@@ -1451,7 +1473,8 @@ class IndexSearcher:
                 .filter(F.col("_rn") <= k).drop("_rn")
                 .select(F.col("_q").alias("qid"), "seg", "doc", "score"))
         return (self._docmeta.join(F.broadcast(topk), ["seg", "doc"])
-                .orderBy("qid", F.desc("score"), "seg", "doc"))
+                .orderBy("qid", F.desc("score"), "seg", "doc")
+                .limit(k * len(queries)))
 
     def search_with_timeout(self, query: Query, k: int = 10,
                             timeout_s: float = 30.0) -> list:
@@ -2113,13 +2136,22 @@ class IndexSearcher:
         scored nor postings-only reach here (_compile); postings-only
         ones ride the tree's one-scan plan (_postings_frame), which beats
         a per-clause cached set — the same economics behind the policy's
-        min-frequency 20 for cheap term filters."""
+        min-frequency 20 for cheap term filters.
+
+        A ``MinScoreQuery`` inside compares its cutoff with the scores
+        the folded boost scales, so such a subtree's set is computed at
+        that boost and the boost joins its key; every other set is
+        computed at boost 1 under the bare query key."""
         from .cache import query_cache_key
         if isinstance(q, ConstantScoreQuery):
             return None
         key = query_cache_key(q)
         if key is None:
             return None
+        at = np.float32(1.0)
+        if _holds_min_score(q):
+            at = boost
+            key = f"{key}^{float(boost)!r}"
         qc, policy = self._query_cache, self._caching_policy
         policy.on_use(q, key)
         if self.doc_count < qc.min_size:
@@ -2128,7 +2160,7 @@ class IndexSearcher:
         if hit is None:
             if not policy.should_cache(q, key):
                 return None
-            frame = self._query_frame({0: (q, np.float32(1.0))}, None, False)
+            frame = self._query_frame({0: (q, at)}, None, False)
             hit = qc.put(self._gen_key, key, frame.select("seg", "doc"))
         s = float(np.float32(boost))
         return hit.select(

@@ -197,14 +197,10 @@ def test_docmeta_trees_match_oracle(spark, corpus, victims, fresh,
     assert not failures, "\n".join(failures)
 
 
-def test_boosted_min_score_count_and_sorted_match_oracle(
-        spark, corpus, fresh, full_oracle):
-    """count() and search_sorted() evaluate their trees unscored, but a
-    MinScoreQuery inside still compares its cutoff with the scores the
-    boosts above it scale: under a 2x boost a doc whose unboosted score
-    lies in (c/2, c] passes a cutoff c. Both must match the oracle's
-    match set."""
-    from pyspark.sql import functions as F
+def _boosted_min_score_case(corpus, full_oracle):
+    """A 2x-boosted boolean whose must is a MinScoreQuery over a
+    term + range-filter boolean, with the cutoff at the median of the
+    inner scores, and the oracle's sorted match set of it."""
     from rucene_spark.query import (BooleanQuery, BoostQuery,
                                     MinScoreQuery, RangeQuery, TermQuery)
 
@@ -220,11 +216,47 @@ def test_boosted_min_score_count_and_sorted_match_oracle(
     q = BoostQuery(BooleanQuery(musts=[MinScoreQuery(inner, cut)]), 2.0)
     want = sorted(u for u, _, _ in full_oracle.search(q, N_DOCS))
     assert len(want) > full_oracle.count(MinScoreQuery(inner, cut))
-    s = IndexSearcher(spark, fresh)
+    return q, want
+
+
+def _assert_count_and_sorted(s, q, want):
+    from pyspark.sql import functions as F
+
     assert s.count(q) == len(want)
     got = [r["url"] for r in
            s.search_sorted(q, [F.col("url")], N_DOCS).collect()]
     assert got == want
+
+
+def test_boosted_min_score_count_and_sorted_match_oracle(
+        spark, corpus, fresh, full_oracle):
+    """count() and search_sorted() evaluate their trees unscored, but a
+    MinScoreQuery inside still compares its cutoff with the scores the
+    boosts above it scale: under a 2x boost a doc whose unboosted score
+    lies in (c/2, c] passes a cutoff c. Both must match the oracle's
+    match set."""
+    q, want = _boosted_min_score_case(corpus, full_oracle)
+    _assert_count_and_sorted(IndexSearcher(spark, fresh), q, want)
+
+
+def test_boosted_min_score_cached_count_and_sorted_match_oracle(
+        spark, corpus, fresh, full_oracle):
+    """The same shape through a query cache that stores every subtree:
+    the unscored MinScoreQuery child becomes a cached match set, which
+    must be taken at the boost its cutoff sees. The boosted set is keyed
+    apart from the unboosted one, so a later count() of the bare child
+    reads its own (smaller) set."""
+    from rucene_spark.cache import (AlwaysCacheQueryCachingPolicy,
+                                    LRUQueryCache)
+
+    q, want = _boosted_min_score_case(corpus, full_oracle)
+    qc = LRUQueryCache(max_size=8, min_size=0)
+    s = IndexSearcher(spark, fresh, query_cache=qc,
+                      caching_policy=AlwaysCacheQueryCachingPolicy())
+    for _ in range(2):  # the second pass reads the stored set
+        _assert_count_and_sorted(s, q, want)
+    bare = q.query.musts[0]
+    assert s.count(bare) == full_oracle.count(bare) < len(want)
 
 
 def test_merged_search_many_matches_per_query(spark, corpus, merged):

@@ -5,7 +5,9 @@
   (the blocktree-seek analogue — row-group pruning on the sorted term
   column does the seeking);
 * scans prune columns (a top-k search must not read position bytes);
-* the final hit join broadcasts the tiny top-k side;
+* the final hit join broadcasts the tiny top-k side, and its sort is a
+  ``TakeOrderedAndProject`` (no range-partition sample job, no
+  single-partition docmeta scan), so a warm term search runs ≤3 jobs;
 * a nested phrase shuffles no position arrays;
 * a nested boolean of terms reduces in its scan task (no (seg, doc)
   shuffle);
@@ -79,6 +81,50 @@ def test_topk_join_is_broadcast(searcher):
     out = searcher.search(TermQuery("text", "t000000"), 10)
     plan = _physical_plan(out)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def _tail_cases(searcher):
+    from rucene_spark.query import BooleanQuery, RangeQuery
+
+    term = TermQuery("text", "t000000")
+    filtered = BooleanQuery.build([TermQuery("text", "t000001")], [],
+                                  [RangeQuery("lang", "en", "en")], [])
+    return [searcher.search(term, 10), searcher.search(filtered, 10),
+            searcher.search_many([term], 10),
+            searcher.search_many([term, filtered], 10)]
+
+
+@pytest.mark.parametrize("i", range(4), ids=[
+    "search_term", "search_range_filter", "many_term", "many_mixed"])
+def test_topk_tail_needs_no_sort_exchange(searcher, i):
+    """The hits of search() and search_many() — a term query and a
+    boolean with a RangeQuery filter — are sorted by a
+    TakeOrderedAndProject over the broadcast docmeta join: no
+    range-partition exchange (a sample job plus a shuffle of the whole
+    docmeta scan) and no single-partition coalesce of that scan."""
+    plan = _physical_plan(_tail_cases(searcher)[i])
+    assert "Exchange rangepartitioning" not in plan, plan
+    assert "Coalesce 1" not in plan, plan
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
+
+
+def test_warm_term_search_runs_at_most_three_jobs(spark, searcher):
+    """A term search whose stats are cached (a k=3 search first — a
+    distinct plan, so nothing of it is reused but the stats) runs the
+    plan scan under the broadcast and the docmeta join: ≤3 jobs. (k=7:
+    the executed plan is memoized, and no other test plans this key.)"""
+    q = TermQuery("text", "t000003")
+    searcher.search(q, 3).collect()
+    sc = spark.sparkContext
+    group = "plan_audit_warm_term"
+    sc.setJobGroup(group, "warm term search")
+    try:
+        rows = searcher.search(q, 7).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
 def test_nested_phrase_shuffles_no_positions(searcher):
