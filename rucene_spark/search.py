@@ -67,7 +67,7 @@ the tombstone broadcast gate it runs that exhaustive disjunction.
 from __future__ import annotations
 
 import os
-from functools import reduce
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
@@ -113,6 +113,7 @@ from .query import (
     span_terms,
 )
 from .query import SpanQuery as _SpanQueryT
+from .spans import ordered_near_freq_nclause_flat, span_freq
 
 K1 = np.float32(1.2)
 B = np.float32(0.75)
@@ -211,8 +212,8 @@ def _union(results):
 def _eval_node(node, leaf, lucene: bool):
     """Evaluate one compiled plan node (IndexSearcher._compile) on one
     segment → ``(docs, scores)``: sorted unique doc ids and float64
-    scores. ``leaf(node)`` evaluates the term, phrase, span, none and
-    rows leaves.
+    scores. ``leaf(node)`` evaluates the term, positional, none and rows
+    leaves.
 
     Nodes combine with the oracle's arithmetic (oracle.OracleSearcher):
     a boolean sums its must scores, then its matched should scores, in
@@ -272,10 +273,10 @@ def _seg_outputs(outputs, leaf, tomb, k, lucene: bool):
     """``(output_id, docs, scores)`` of one segment for each
     ``(output_id, node)`` plan. With ``k`` (a root) tombstones are
     masked and each output keeps its top-k by (score desc, doc asc); a
-    phrase or span root runs its leaf kernel's impact-ordered top-k.
+    positional root runs its leaf kernel's impact-ordered top-k.
     With ``k=None`` every matching doc is returned."""
     for oid, node in outputs:
-        if k is not None and node[0] in ("phrase", "span"):
+        if k is not None and node[0] == "positional":
             d, v = leaf(node, tomb, k)
         else:
             d, v = _eval_node(node, leaf, lucene)
@@ -291,9 +292,9 @@ class _SegPostings:
     """One segment's scan rows as the plan leaves' input, decoded on
     first use: the rows of every term-leaf key in one FOR decode
     (_decode_term_rows), grouped by key and doc-sorted; the rows of
-    every positional key into the per-term dicts of the phrase/span
-    kernels (_decode_seg_tds). Calling it evaluates one leaf node; with
-    ``k`` a phrase/span leaf masks ``tomb`` and keeps its top-k."""
+    every positional key into the per-term dicts of _positional_topk
+    (_decode_seg_tds). Calling it evaluates one leaf node; with ``k`` a
+    positional leaf masks ``tomb`` and keeps its top-k."""
 
     def __init__(self, sub, kid_of, pos_keys, tw, chunk0):
         self.sub = sub
@@ -325,26 +326,17 @@ class _SegPostings:
             lo, hi = bounds[kid], bounds[kid + 1]
             return docs[lo:hi], _term_scores(ci, tfs[lo:hi], aux[lo:hi],
                                              self.tw)
-        e = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
         if kind == "none":
-            return e
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
         if self._tds is None:
             m = np.fromiter((key in self.pos_keys for key in self.keys),
                             dtype=bool, count=len(self.keys))
             self._tds = _decode_seg_tds(self.sub[m])
-        keys = node[1]
+        _, keys, group_tis, bm, bound, freqs = node
         tds = {ti: self._tds[key] for ti, key in enumerate(keys)
                if key in self._tds}
-        if kind == "phrase":
-            if len(tds) < len(keys):
-                return e
-            _, _, slots, offsets, bm, slop, terms = node
-            d, v = _phrase_seg_topk(tds, slots, offsets, tomb, k,
-                                    self.chunk0, *bm, slop=slop, terms=terms)
-        else:
-            _, _, spec, group_tis, bm, fast = node
-            d, v = _span_seg_topk(tds, spec, group_tis, tomb, k,
-                                  self.chunk0, *bm, *fast)
+        d, v = _positional_topk(tds, group_tis, tomb, k, self.chunk0, bm,
+                                bound, freqs)
         o = np.argsort(d)
         return d[o], v[o]
 
@@ -406,178 +398,171 @@ class _LazyPositions:
         return self.flat[idx], tfe
 
 
-def _phrase_seg_topk(tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
-                     cache, coef64, k1_, b_, avgdl64, slop=0, terms=None):
-    """Segment-local phrase top-k with impact-ordered verification; with
-    ``k=None`` every candidate is verified and every hit returned.
+def _positional_topk(tds, group_tis, tomb, k, chunk0, bm, bound, freqs):
+    """Segment-local top-k of a phrase or span leaf with impact-ordered
+    verification; with ``k=None`` every candidate is verified and every
+    hit returned. The reference's two-phase iteration
+    (search/mod.rs:127-155): a doc-level conjunction, then positions
+    verified on its candidates only.
 
-    ``tds[ti]`` holds one unique term's postings for THIS segment:
-    sorted ``docs``, aligned ``tfs``/``nbs``/``dls``, per-block entry
-    ``counts`` and the still-encoded ``pos_bins`` blobs.  The phrase
-    frequency of a doc is bounded by its minimum per-slot tf
-    (phrase_scorer.rs:179-229: every occurrence consumes one position of
-    every slot), and the BM25 kernel is monotone in freq, so
-    ``ub(doc) = score(min_tf)`` is a true float32 upper bound.  Docs are
-    verified in ub-descending chunks; once k docs are verified with true
-    score θ, every remaining doc has ``ub < θ`` and is skipped WITHOUT
-    its positions ever being decoded — pos_bin blocks no chunk doc lands
-    in are never varint-decoded at all (the phrase analogue of
-    search_blockmax's per-block bound; the reference has no phrase
-    impacts — phrase_query.rs:223-270 bails only via two-phase
-    match_cost — so rank identity vs the exhaustive ``k=None`` run is
-    test-asserted, tests/test_phrase_collector.py).
-
-    Verification itself is whole-chunk vectorized: each slot's positions
-    become ``doc * SHIFT + (pos - slot_offset + pad)`` keys and the
-    per-doc intersection of shifted position sets is one sorted
-    ``np.intersect1d`` chain; freq per doc falls out of a unique-count
-    over the surviving keys' doc prefixes.
-    """
-    uniq_tis = sorted({ti for ti, _ in slots})
-    conj = tds[uniq_tis[0]]["docs"]
-    for ti in uniq_tis[1:]:
-        conj = np.intersect1d(conj, tds[ti]["docs"], assume_unique=True)
+    ``tds[ti]`` holds term ``ti``'s postings for THIS segment
+    (_decode_seg_tds): sorted ``docs``, aligned ``tfs``/``nbs``/``dls``,
+    per-block entry ``counts`` and the still-encoded ``pos_bins``.
+    Candidates are the live docs holding ≥1 term of every group of
+    ``group_tis`` (a phrase has one group per term, so a missing term
+    empties it). ``bound(tf)`` maps each term's tf per candidate (0
+    where absent) to an upper bound on the doc's freq; BM25
+    (_freq_scores with the leaf's constants ``bm``) is monotone in freq,
+    so ``ub = score(bound)`` bounds the doc's score. Docs are verified
+    in ub-descending chunks by ``freqs(tf, pos)``, where ``pos(ti)`` is
+    the chunk's positions of term ``ti`` concatenated in doc order; once
+    k docs are verified with true score θ, every remaining doc has
+    ``ub < θ`` and is skipped, and pos_bin blocks no verified chunk
+    lands in are never decoded (the reference has no phrase or span
+    impacts, so rank identity with the exhaustive ``k=None`` run is
+    test-asserted: tests/test_phrase_collector.py, tests/test_spans.py).
+    The first chunk holds ``chunk0`` docs (at least 4k); each later one
+    4× more, up to 64×, so worker memory stays bounded."""
+    e = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    conj = None
+    for g in group_tis:
+        parts = [tds[ti]["docs"] for ti in g if ti in tds]
+        docs = (parts[0] if len(parts) == 1
+                else np.unique(np.concatenate(parts + [e[0]])))
+        conj = docs if conj is None else np.intersect1d(
+            conj, docs, assume_unique=True)
         if conj.size == 0:
-            break
+            return e
     conj = conj[~_dead_mask(tomb, conj)]
-    if conj.size == 0:
-        e64 = np.empty(0, dtype=np.float64)
-        return np.empty(0, dtype=np.int64), e64
-
-    ent = {ti: np.searchsorted(tds[ti]["docs"], conj) for ti in uniq_tis}
-    if slop == 0:
-        # exact: every occurrence consumes one position of every slot
-        bound = tds[uniq_tis[0]]["tfs"][ent[uniq_tis[0]]]
-        for ti in uniq_tis[1:]:
-            bound = np.minimum(bound, tds[ti]["tfs"][ent[ti]])
-    else:
-        # sloppy: every _SloppyFreq loop iteration consumes one
-        # next_position() of some slot and emits ≤1 match (+1 final
-        # emit), so matches ≤ Σ_slots tf − n_slots + 1; each match
-        # contributes ≤1 to freq (1/(1+len), len ≥ 0)
-        bound = None
-        for ti, _off in slots:
-            tf_s = tds[ti]["tfs"][ent[ti]]
-            bound = tf_s.copy() if bound is None else bound + tf_s
-        bound = bound - len(slots) + 1
-    t0 = uniq_tis[0]
-    nbs_c = tds[t0]["nbs"][ent[t0]]
-    dls_c = tds[t0]["dls"][ent[t0]]
-    bm = (lucene, wk32, cache, coef64, k1_, b_, avgdl64)
-    ub64 = _freq_scores(bound, nbs_c, dls_c, *bm)
-    if slop == 0 and len(slots) == 1:
-        # single slot — a 2-term phrase fully served by the bigram pair
-        # channel (or a degenerate 1-term phrase): the stored tf IS the
-        # phrase freq, so ub64 is already the exact score; top-k without
-        # ever touching pos_bin
-        sel = np.lexsort((conj, -ub64))[:k]
-        return conj[sel], ub64[sel]
+    n = len(conj)
+    if n == 0:
+        return e
+    tfm = {ti: np.zeros(n, dtype=np.int64) for g in group_tis for ti in g}
+    nbs, dls = np.zeros(n, dtype=np.int64), np.zeros(n, dtype=np.int64)
+    ent, stores = {}, {}
+    for ti in tfm:
+        if ti in tds:
+            td = tds[ti]
+            p, ok = _in_sorted(td["docs"], conj)
+            ent[ti], stores[ti] = p, _LazyPositions(td)
+            tfm[ti][ok] = td["tfs"][p[ok]]
+            nbs[ok], dls[ok] = td["nbs"][p[ok]], td["dls"][p[ok]]
+    ub64 = _freq_scores(bound(tfm), nbs, dls, *bm)
     order = np.lexsort((conj, -ub64))
 
-    offpad = max(offsets) if offsets else 0
-    stores = {ti: _LazyPositions(tds[ti]) for ti in uniq_tis}
-
     vd_parts, vs_parts = [], []
-    n_hits = 0
-    theta = None
-    n = len(order)
-    i = 0
+    n_hits, theta, i = 0, None, 0
     chunk = max(int(chunk0), 4 * (k or 0), 1)
     chunk_max = 64 * chunk
-    while i < n:
-        if theta is not None and ub64[order[i]] < theta:
-            break
-        sel = order[i:min(n, i + chunk)]
-        so = np.argsort(conj[sel])
-        cd = conj[sel][so]
-        nbs_k = nbs_c[sel][so]
-        dls_k = dls_c[sel][so]
-
-        # (doc-repeated array, flat positions, per-entry tf) per term,
-        # decoding only the pos_bin blocks the chunk's entries land in
+    while i < n and (theta is None or ub64[order[i]] >= theta):
+        cidx = np.sort(order[i:i + chunk])  # doc order: conj is sorted
+        tf = {ti: a[cidx] for ti, a in tfm.items()}
         gathered = {}
-        for ti, off in slots:
+
+        def pos(ti):
             if ti not in gathered:
-                flat, tfe = stores[ti].gather(ent[ti][sel][so])
-                gathered[ti] = (np.repeat(cd, tfe), flat, tfe)
-        if slop == 0:
-            acc = None
-            maxpos = 0
-            slot_keys = []
-            for ti, off in slots:
-                g = gathered[ti]
-                maxpos = max(maxpos, int(g[1].max(initial=0)))
-                slot_keys.append((g, off))
-            # key on the doc's RANK within the chunk (not the global doc
-            # id) so rank << bits can never overflow int64
-            bits = int(maxpos + offpad + 2).bit_length()
-            for (dr, pr, _tfe), off in slot_keys:
-                keys = (np.searchsorted(cd, dr) << np.int64(bits)) + (
-                    pr - off + offpad)
-                acc = keys if acc is None else np.intersect1d(
-                    acc, keys, assume_unique=True)
-                if acc.size == 0:
-                    break
-            freq = np.zeros(len(cd), dtype=np.float64)
-            if acc is not None and acc.size:
-                hr, hc = np.unique(acc >> np.int64(bits),
-                                   return_counts=True)
-                freq[hr] = hc
-        else:
-            # sloppy verify on the chunk over the gathered flat arrays
-            # (every chunk doc holds every term): the shared phrase
-            # kernels, batch-vectorized for distinct terms, per-doc heap
-            # walk for repeated terms (candidate-capped upstream by the
-            # caller)
-            two_term = (len(slots) == 2 and slots[0][0] != slots[1][0])
-            distinct = len({ti for ti, _ in slots}) == len(slots)
-            if two_term:
-                # flat fast path: the gathered arrays are already
-                # doc-ordered flats (every chunk doc holds every term) —
-                # feed the flat kernel directly, no per-doc slicing
-                _da, pra, tfa = gathered[slots[0][0]]
-                _db, prb, tfb = gathered[slots[1][0]]
-                freq = sloppy_phrase_freq_2term_flat(
-                    pra, tfa, prb, tfb,
-                    offsets[0], offsets[1], slop).astype(np.float64)
-            elif distinct:
-                # n≥3 distinct slots: lockstep heap-walk simulation
-                # across the whole chunk (round-4 verdict #2) — no
-                # per-doc Python, no candidate cap needed
-                freq = sloppy_phrase_freq_nslot_flat(
-                    [gathered[ti][1] for ti, _ in slots],
-                    [gathered[ti][2] for ti, _ in slots],
-                    offsets, slop).astype(np.float64)
-            else:
-                slices = {}
-                for ti, g in gathered.items():
-                    _dr, pr, tfe = g
-                    ends = np.cumsum(tfe)
-                    slices[ti] = [pr[ends[j] - tfe[j]:ends[j]]
-                                  for j in range(len(cd))]
-                freq = np.zeros(len(cd), dtype=np.float64)
-                for r in range(len(cd)):
-                    pls = [slices[ti][r] for ti, _ in slots]
-                    freq[r] = float(sloppy_phrase_freq(
-                        pls, offsets, terms, slop))
+                gathered[ti] = (
+                    stores[ti].gather(ent[ti][cidx][tf[ti] > 0])[0]
+                    if ti in stores else np.empty(0, dtype=np.int64))
+            return gathered[ti]
+
+        freq = freqs(tf, pos)
         hit = freq > 0
         if hit.any():
-            vd_parts.append(cd[hit])
-            vs_parts.append(_freq_scores(freq[hit], nbs_k[hit], dls_k[hit],
-                                         *bm))
+            vd_parts.append(conj[cidx][hit])
+            vs_parts.append(_freq_scores(freq[hit], nbs[cidx][hit],
+                                         dls[cidx][hit], *bm))
             n_hits += int(hit.sum())
             if k is not None and n_hits >= k:
                 allsc = np.concatenate(vs_parts)
-                theta = float(np.partition(allsc, len(allsc) - k)[len(allsc) - k])
-        i += len(sel)
+                theta = float(
+                    np.partition(allsc, len(allsc) - k)[len(allsc) - k])
+        i += len(cidx)
         chunk = min(4 * chunk, chunk_max)
-
     if not vd_parts:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+        return e
     dv = np.concatenate(vd_parts)
     sv = np.concatenate(vs_parts)
     o = np.lexsort((dv, -sv))[:k]
     return dv[o], sv[o]
+
+
+def _per_doc(flat, tf):
+    """A chunk's flat positions of one term as one list per candidate
+    (empty where the term is absent), for the per-doc walks."""
+    flat, ends = flat.tolist(), np.cumsum(tf).tolist()
+    return [flat[e - t:e] for e, t in zip(ends, tf.tolist())]
+
+
+def _phrase_bound(slots, slop, tf):
+    """Upper bound on each candidate's phrase freq (_positional_topk).
+    Exact: the minimum slot tf, since every occurrence consumes one
+    position of every slot (phrase_scorer.rs:179-229). Sloppy:
+    Σ_slots tf − n_slots + 1, since every _SloppyFreq loop iteration
+    consumes one next_position() of some slot and emits ≤1 match (+1
+    final emit), each adding ≤1 to freq (1/(1+len), len ≥ 0)."""
+    if slop == 0:
+        return reduce(np.minimum, [tf[ti] for ti, _ in slots])
+    return sum(tf[ti] for ti, _ in slots) - len(slots) + 1
+
+
+def _phrase_freqs(slots, slop, terms, tf, pos):
+    """Phrase freq of each chunk candidate (every one holds every slot's
+    term; _positional_topk). ``slots`` are ``(ti, offset)`` pairs.
+
+    Exact: one slot (a 2-term phrase fully served by the bigram pair
+    channel, or a 1-term phrase) has the stored tf as its freq, so no
+    pos_bin block is decoded; otherwise each slot's positions become
+    ``(rank << bits) + (pos - offset + pad)`` keys and the per-doc
+    intersection of the shifted position sets is one ``np.intersect1d``
+    chain, freq a count per doc rank. Sloppy: the shared phrase kernels,
+    batch-vectorized for distinct terms, a per-doc walk for repeated
+    terms (behind the verify cap, IndexSearcher._check_verify_cap)."""
+    offsets = [off for _, off in slots]
+    n = len(tf[slots[0][0]])
+    if slop == 0 and len(slots) == 1:
+        return tf[slots[0][0]].astype(np.float64)
+    if slop == 0:
+        offpad = max(offsets)
+        maxpos = max(int(pos(ti).max(initial=0)) for ti, _ in slots)
+        # key on the doc's RANK within the chunk (not the global doc id)
+        # so rank << bits can never overflow int64
+        bits = np.int64(int(maxpos + offpad + 2).bit_length())
+        acc = None
+        for ti, off in slots:
+            keys = (np.repeat(np.arange(n), tf[ti]) << bits) + (
+                pos(ti) - off + offpad)
+            acc = keys if acc is None else np.intersect1d(
+                acc, keys, assume_unique=True)
+            if acc.size == 0:
+                break
+        freq = np.zeros(n, dtype=np.float64)
+        hr, hc = np.unique(acc >> bits, return_counts=True)
+        freq[hr] = hc
+        return freq
+    if len({ti for ti, _ in slots}) < len(slots):
+        docs = [_per_doc(pos(ti), tf[ti]) for ti, _ in slots]
+        return np.array([float(sloppy_phrase_freq(
+            [d[r] for d in docs], offsets, terms, slop)) for r in range(n)],
+            dtype=np.float64)
+    if len(slots) == 2:
+        (ta, oa), (tb, ob) = slots
+        freq = sloppy_phrase_freq_2term_flat(pos(ta), tf[ta], pos(tb),
+                                             tf[tb], oa, ob, slop)
+    else:
+        freq = sloppy_phrase_freq_nslot_flat(
+            [pos(ti) for ti, _ in slots], [tf[ti] for ti, _ in slots],
+            offsets, slop)
+    return freq.astype(np.float64)
+
+
+def _span_vectorized(spec) -> bool:
+    """Whether a span spec is an ordered near over term/gap clauses led
+    by a term — the shape spans.ordered_near_freq_nclause_flat verifies
+    across a whole chunk; any other tree walks per doc."""
+    return (spec[0] == "near" and bool(spec[3])
+            and spec[1][0][0] == "term"
+            and all(s[0] in ("term", "gap") for s in spec[1]))
 
 
 def _span_count_bound(spec, tfm: dict):
@@ -603,182 +588,21 @@ def _span_count_bound(spec, tfm: dict):
     raise ValueError(f"unbounded span spec node: {spec!r}")
 
 
-def _span_seg_topk(tds, spec, group_tis, tomb, k, chunk0, lucene, wk32,
-                   cache, coef64, k1_, b_, avgdl64, fast2, ta2, tb2,
-                   slop2, fastn=False):
-    """Segment-local span top-k with impact-ordered verification — the
-    span analogue of :func:`_phrase_seg_topk` (``k=None``: every hit).
-
-    ``tds[ti]`` holds one term's postings for THIS segment. Candidates
-    are docs holding ≥1 term of EVERY required clause group. The impact
-    bound is score(_span_count_bound), so docs are verified in
-    ub-descending chunks and verification stops once the k-th verified
-    score exceeds every remaining bound; pos_bin blocks no surviving
-    chunk doc lands in are never decoded. Verification is the shared
-    span kernel — vectorized for ordered nears over term/gap clauses
-    (``fast2`` for two terms, ``fastn`` otherwise), per-doc
-    :func:`spans.span_freq` for other shapes (candidate-capped upstream
-    by the caller)."""
-    from .spans import (
-        ordered_near_freq_2term_flat,
-        ordered_near_freq_nclause_flat,
-        span_freq,
-    )
-
-    e_i = np.empty(0, dtype=np.int64)
-    if not tds:
-        return e_i, np.empty(0, dtype=np.float64)
-    if all(len(g) == 1 for g in group_tis):
-        # every clause group is one required term: the candidate set is
-        # a plain sorted intersection (the phrase kernel's shape) — no
-        # concatenate/argsort/reduceat machinery
-        conj = None
-        for (ti,) in group_tis:
-            td = tds.get(ti)
-            docs_g = td["docs"] if td is not None else e_i
-            conj = docs_g if conj is None else np.intersect1d(
-                conj, docs_g, assume_unique=True)
-            if conj.size == 0:
-                break
-        if conj is None:
-            conj = e_i
-    else:
-        doc_parts, ti_parts = [], []
-        for ti, td in tds.items():
-            doc_parts.append(td["docs"])
-            ti_parts.append(np.full(len(td["docs"]), ti, dtype=np.int64))
-        doc_el = np.concatenate(doc_parts)
-        ti_el = np.concatenate(ti_parts)
-        o = np.argsort(doc_el, kind="stable")
-        doc_el, ti_el = doc_el[o], ti_el[o]
-        nb_ = np.empty(len(doc_el), dtype=bool)
-        nb_[0] = True
-        nb_[1:] = doc_el[1:] != doc_el[:-1]
-        starts = np.flatnonzero(nb_)
-        docs_u = doc_el[starts]
-        keep = np.ones(len(docs_u), dtype=bool)
-        for g in group_tis:
-            gm = np.isin(ti_el, list(g)).astype(np.int64)
-            keep &= np.add.reduceat(gm, starts) > 0
-        conj = docs_u[keep]
-    conj = conj[~_dead_mask(tomb, conj)]
-    if conj.size == 0:
-        return e_i, np.empty(0, dtype=np.float64)
-
-    n_cand = len(conj)
-    ent, present = {}, {}
-    # every ti the spec references gets a tf vector — terms with no
-    # postings in this segment contribute 0 to the bound
-    tfm: dict[int, np.ndarray] = {
-        ti: np.zeros(n_cand, dtype=np.int64)
-        for g in group_tis for ti in g
-    }
-    nbs_c = np.zeros(n_cand, dtype=np.int64)
-    dls_c = np.zeros(n_cand, dtype=np.int64)
-    filled = np.zeros(n_cand, dtype=bool)
-    for ti, td in tds.items():
-        p = np.searchsorted(td["docs"], conj)
-        pm = (p < len(td["docs"])) & (
-            td["docs"][np.minimum(p, len(td["docs"]) - 1)] == conj)
-        ent[ti], present[ti] = p, pm
-        tf_a = np.zeros(n_cand, dtype=np.int64)
-        tf_a[pm] = td["tfs"][p[pm]]
-        tfm[ti] = tf_a
-        m = pm & ~filled
-        if m.any():
-            nbs_c[m] = td["nbs"][p[m]]
-            dls_c[m] = td["dls"][p[m]]
-            filled |= pm
-    bm = (lucene, wk32, cache, coef64, k1_, b_, avgdl64)
-    ub64 = _freq_scores(_span_count_bound(spec, tfm), nbs_c, dls_c, *bm)
-    order = np.lexsort((conj, -ub64))
-
-    stores = {ti: _LazyPositions(td) for ti, td in tds.items()}
-
-    vd_parts, vs_parts = [], []
-    n_hits = 0
-    theta = None
-    n = len(order)
-    i = 0
-    chunk = max(int(chunk0), 4 * (k or 0), 1)
-    chunk_max = 64 * chunk
-    while i < n:
-        if theta is not None and ub64[order[i]] < theta:
-            break
-        sel = order[i:min(n, i + chunk)]
-        so = np.argsort(conj[sel])
-        cidx = sel[so]
-        cd = conj[cidx]
-        nbs_k, dls_k = nbs_c[cidx], dls_c[cidx]
-        if fast2:
-            # flat fast path: both clauses are required single terms, so
-            # every conj doc holds both (present[ta2]/present[tb2] are
-            # all-True by the group-conjunction construction) — the
-            # gathered flat positions feed the flat kernel directly, no
-            # per-doc slicing
-            flat_a, tfa = stores[ta2].gather(ent[ta2][cidx])
-            if tb2 == ta2:
-                flat_b, tfb = flat_a, tfa
-            else:
-                flat_b, tfb = stores[tb2].gather(ent[tb2][cidx])
-            freqs = ordered_near_freq_2term_flat(
-                flat_a, tfa, flat_b, tfb, slop2).astype(np.float64)
-        elif fastn:
-            # n-clause ordered near over term/gap clauses: every clause
-            # term is its own required group, so every chunk doc holds
-            # every clause — the gathered flats feed the lockstep kernel
-            # directly (one gather per unique term, memoized per chunk)
-            gath: dict[int, tuple] = {}
-            clauses = []
-            for s_ in spec[1]:
-                if s_[0] == "gap":
-                    clauses.append(("gap", s_[1]))
-                    continue
-                ti = s_[1]
-                if ti not in gath:
-                    gath[ti] = stores[ti].gather(ent[ti][cidx])
-                flat, tfe = gath[ti]
-                clauses.append(("pos", flat, tfe))
-            freqs = ordered_near_freq_nclause_flat(
-                clauses, spec[2]).astype(np.float64)
-        else:
-            # per-term positions for this chunk: list-of-arrays aligned
-            # to cd
-            chunk_pos: dict[int, list] = {}
-            for ti in tds:
-                pm = present[ti][cidx]
-                lst: list = [None] * len(cd)
-                if pm.any():
-                    flat, tfe = stores[ti].gather(ent[ti][cidx][pm])
-                    ends = np.cumsum(tfe)
-                    where = np.flatnonzero(pm)
-                    for j, w in enumerate(where):
-                        lst[w] = flat[ends[j] - tfe[j]:ends[j]]
-                chunk_pos[ti] = lst
-            freqs = np.zeros(len(cd), dtype=np.float64)
-            for r in range(len(cd)):
-                pos_map = {ti: lst[r] for ti, lst in chunk_pos.items()
-                           if lst[r] is not None}
-                freqs[r] = float(span_freq(spec, pos_map))
-        hit = freqs > 0
-        if hit.any():
-            vd_parts.append(cd[hit])
-            vs_parts.append(_freq_scores(freqs[hit], nbs_k[hit],
-                                         dls_k[hit], *bm))
-            n_hits += int(hit.sum())
-            if k is not None and n_hits >= k:
-                allsc = np.concatenate(vs_parts)
-                theta = float(
-                    np.partition(allsc, len(allsc) - k)[len(allsc) - k])
-        i += len(sel)
-        chunk = min(4 * chunk, chunk_max)
-
-    if not vd_parts:
-        return e_i, np.empty(0, dtype=np.float64)
-    dv = np.concatenate(vd_parts)
-    sv = np.concatenate(vs_parts)
-    o2 = np.lexsort((dv, -sv))[:k]
-    return dv[o2], sv[o2]
+def _span_freqs(spec, tf, pos):
+    """Span freq (f32 Σ 1/(1+width) over the emitted spans) of each
+    chunk candidate (_positional_topk): ordered nears over term/gap
+    clauses through the lockstep n-clause kernel (a repeated term
+    included), every other tree per doc through spans.span_freq (behind
+    the verify cap, IndexSearcher._check_verify_cap)."""
+    if _span_vectorized(spec):
+        return ordered_near_freq_nclause_flat(
+            [s if s[0] == "gap" else ("pos", pos(s[1]), tf[s[1]])
+             for s in spec[1]], spec[2]).astype(np.float64)
+    docs = {ti: _per_doc(pos(ti), t) for ti, t in tf.items()}
+    n = len(next(iter(tf.values())))
+    return np.array([float(span_freq(spec, {ti: d[r] for ti, d in
+                                            docs.items()}))
+                     for r in range(n)], dtype=np.float64)
 
 
 def _bmw_seg_topk(sub, tomb, k, ti_of, tw, cache64, k1_, b_, avgdl64):
@@ -1060,8 +884,8 @@ class IndexSearcher:
         phrases and ordered span nears over term/gap clauses are exempt:
         their walks are batch-vectorized over flat position arrays
         (phrase.sloppy_phrase_freq_2term_flat / _nslot_flat,
-        spans.ordered_near_freq_2term_flat / _nclause_flat). Raise the
-        cap explicitly for deliberate heavy queries.
+        spans.ordered_near_freq_nclause_flat). Raise the cap explicitly
+        for deliberate heavy queries.
 
         Every postings file must hold whole docs — one file per segment,
         or the doc-range-disjoint files of a ``doc_sharded`` merge —
@@ -1391,12 +1215,14 @@ class IndexSearcher:
         analysis/optimization is a fixed DRIVER cost that does not shrink
         with executor count, so a serving tier replaying a query mix
         would otherwise pay it per request (it caps throughput-scaling
-        efficiency the way any serial fraction does). Unlike the
-        reference's LRUQueryCache — a RESULT cache, disabled there
-        (searcher.rs:696-701) — this caches only the plan: every call
-        still executes the full distributed job, so deletes visible to
-        THIS searcher (fixed at construction, like a Lucene point-in-time
-        reader) and scores are always freshly computed."""
+        efficiency the way any serial fraction does). The memoized
+        DataFrame also keeps its executed adaptive plan, broadcast
+        included, so a repeated (query, k) reruns only the docmeta join
+        over the first call's top-k: one job. That is right because a
+        searcher is point-in-time (its deletes are fixed at construction,
+        like a Lucene point-in-time reader); each of the up to
+        ``_PLAN_CACHE_MAX`` entries pins its broadcast until the searcher
+        is dropped."""
         return self._memo_plan((repr(query), k), lambda: self._topk_hits(
             self._query_frame({0: (query, np.float32(1.0))}, k).select(
                 "seg", "doc", "score"), k))
@@ -1466,6 +1292,9 @@ class IndexSearcher:
                                lambda: self._many_hits(queries, k))
 
     def _many_hits(self, queries: list[Query], k: int) -> DataFrame:
+        if not queries:
+            return self._docmeta.join(self.spark.createDataFrame(
+                [], f"qid int, {self._score_schema}"), ["seg", "doc"])
         frame = self._query_frame(
             {i: (q, np.float32(1.0)) for i, q in enumerate(queries)}, k)
         w = Window.partitionBy("_q").orderBy(F.desc("score"), "seg", "doc")
@@ -2041,8 +1870,6 @@ class IndexSearcher:
                       doc: int) -> dict:
         """SpanWeight::explain — freq = f32 Σ 1/(1+width) over the span
         kernel's emitted spans, identical to the plan's span leaf."""
-        from .spans import span_freq
-
         field = q.field
         self._check_field(field)
         self._check_positions(field)
@@ -2345,9 +2172,11 @@ class IndexSearcher:
                 (q.field, q.term, float(np.float32(boost
                                                    * np.float32(q.boost)))))
             return ("term", kid, len(plan.clauses) - 1)
-        if isinstance(q, PhraseQuery):
-            return self._compile_phrase(q, boost, plan)
-        if isinstance(q, _SpanQueryT):
+        if isinstance(q, (PhraseQuery, _SpanQueryT)):
+            self._check_field(q.field)
+            self._check_positions(q.field)
+            if isinstance(q, PhraseQuery):
+                return self._compile_phrase(q, boost, plan)
             return self._compile_span(q, boost, plan)
 
         def sub(x, b, s=scored):
@@ -2441,22 +2270,31 @@ class IndexSearcher:
 
         return rows.mapInPandas(fn, f"_q int, {self._score_schema}")
 
+    def _positional_leaf(self, field: str, idf_terms: list[str],
+                         boost: np.float32, plan: "_Plan", keys: list,
+                         group_tis: list, bound, freqs):
+        """Plan leaf of a phrase or span query over the positional
+        ``keys`` (term ``ti`` is ``keys[ti]``), verified and scored
+        inside the scan task by _positional_topk with the query type's
+        ``bound`` and ``freqs``: as a root it verifies in impact order
+        and stops once the k-th score beats every remaining bound
+        (pos_bin blocks that cannot beat θ are never decoded); nested,
+        every candidate is verified in bounded chunks. Scored with idf
+        summed over ``idf_terms`` (PhraseWeight / SpanWeight). Tests:
+        tests/test_phrase_collector.py, tests/test_spans.py,
+        tests/test_nested_positional.py."""
+        wk32, coef64 = self._bm25_weight(field, idf_terms, boost,
+                                         plan.stats)
+        bm = (self.scoring == "lucene", wk32, self.cache_f[field], coef64,
+              *self.sim_f[field], self.avgdl64_f[field])
+        plan.add_positional(keys)
+        return ("positional", keys, group_tis, bm, bound, freqs)
+
     def _compile_phrase(self, q: PhraseQuery, boost: np.float32,
                         plan: "_Plan"):
-        """Plan leaf of a phrase query (exact or sloppy), verified and
-        scored inside the scan task by _phrase_seg_topk: as a root it
-        verifies in impact order and stops once the k-th score beats
-        every remaining bound (pos_bin blocks that cannot beat θ are
-        never decoded); nested, every candidate is verified in bounded
-        chunks. Tests: tests/test_phrase_collector.py,
-        tests/test_nested_positional.py.
-
-        Sloppy phrases bound freq by Σ_slots tf − n_slots + 1 (every
-        _SloppyFreq iteration consumes one position advance and emits ≤1
-        match of weight ≤1); distinct-term shapes verify batch-vectorized,
-        repeated-term shapes walk per doc behind the candidate cap."""
-        self._check_field(q.field)
-        self._check_positions(q.field)
+        """Positional leaf of a phrase query (exact or sloppy): one
+        candidate group per term, freq bound and verify by
+        _phrase_bound / _phrase_freqs."""
         stats = plan.stats
         if any((q.field, t) not in stats for t in q.terms):
             # a missing term matches nothing; its keys stay in the scan
@@ -2468,8 +2306,6 @@ class IndexSearcher:
             self._check_verify_cap(
                 min(int(stats[(q.field, t)]["df"]) for t in q.terms),
                 f"sloppy phrase {q.terms!r}~{q.slop}")
-        wk32, coef64 = self._bm25_weight(q.field, q.terms, boost,
-                                         stats)
 
         # hot-pair rewrite (build.py bigram channel): for an exact phrase,
         # every adjacent (a@p, b@p+1) slot pair with BOTH terms in the hot
@@ -2480,7 +2316,7 @@ class IndexSearcher:
         # stopword lists to the tiny adjacency lists and the min-tf bound
         # becomes the EXACT adjacency count.  A 2-term hot phrase reduces
         # to a single slot and never decodes positions at all
-        # (_phrase_seg_topk fast path).  Rank/score identity vs the
+        # (_phrase_freqs).  Rank/score identity vs the
         # unrewritten path is asserted by tests/test_bigrams.py.
         from .build import BIGRAM_SEP, BIGRAM_SUFFIX
         hot = self._bigram_hot(q.field) if q.slop == 0 else None
@@ -2500,37 +2336,30 @@ class IndexSearcher:
                 j += 1
         base_terms = sorted({t for t, _, isp in new_slots if not isp})
         pair_terms = sorted({t for t, _, isp in new_slots if isp})
-        uniq_terms = base_terms + pair_terms
-        ti_of = {t: i for i, t in enumerate(uniq_terms)}
+        ti_of = {t: i for i, t in enumerate(base_terms + pair_terms)}
         slots = [(ti_of[t], p) for t, p, _ in new_slots]
-        offsets = [p for _, p, _ in new_slots]
-        bm = (self.scoring == "lucene", wk32, self.cache_f[q.field], coef64,
-              *self.sim_f[q.field], self.avgdl64_f[q.field])
         keys = ([(q.field, t) for t in base_terms]
                 + [(q.field + BIGRAM_SUFFIX, t) for t in pair_terms])
-        plan.add_positional(keys)
-        return ("phrase", keys, slots, offsets, bm, int(q.slop),
-                list(q.terms))
+        return self._positional_leaf(
+            q.field, q.terms, boost, plan, keys,
+            [[ti] for ti in range(len(keys))],
+            partial(_phrase_bound, slots, int(q.slop)),
+            partial(_phrase_freqs, slots, int(q.slop), list(q.terms)))
 
     def _compile_span(self, q, boost: np.float32, plan: "_Plan"):
-        """Plan leaf of a span query — the span analogue of
-        :meth:`_compile_phrase` (_span_seg_topk): candidates hold ≥1 term
-        of every required clause group, the impact bound is the
-        span-count bound, and a root keeps its top-k.
+        """Positional leaf of a span query: candidates hold ≥1 term of
+        every required clause group, freq bound and verify by
+        _span_count_bound / _span_freqs.
         Scored like a phrase: weight = f32-summed idf of the tree's terms
         in tree order, freq = f32 Σ 1/(1+width) over emitted spans.
         Top-level SpanBoostQuery layers fold into the boost (_compile's
         _fold_boost); boosts nested deeper are scoring no-ops like the
         reference's needs_scores=false sub-weights."""
         field = q.field
-        self._check_field(field)
-        self._check_positions(field)
         terms = span_terms(q)
         uniq_terms = sorted(set(terms))
         ti_of = {t: i for i, t in enumerate(uniq_terms)}
         spec = span_spec(q, ti_of)
-        stats = plan.stats
-        wk32, coef64 = self._bm25_weight(field, terms, boost, stats)
 
         # required-clause groups: a doc qualifies only with >=1 term of
         # EVERY top-level near clause (nested trees fold into their
@@ -2540,30 +2369,16 @@ class IndexSearcher:
                       if not isinstance(c, SpanGapQuery)]
         else:
             groups = [terms]
-        group_tis = [sorted({ti_of[t] for t in g}) for g in groups]
-        fast2 = (spec[0] == "near" and bool(spec[3]) and len(spec[1]) == 2
-                 and all(s[0] == "term" for s in spec[1]))
-        # ordered nears over term/gap clauses of any length verify
-        # lockstep-vectorized, exempt from the per-doc-verify cap
-        fastn = (not fast2 and spec[0] == "near" and bool(spec[3])
-                 and all(s[0] in ("term", "gap") for s in spec[1])
-                 and spec[1][0][0] == "term")
-        if not (fast2 or fastn):
+        if not _span_vectorized(spec):
             # a doc needs >=1 term of every required group, so the
             # smallest group's summed df bounds the candidate set
             def _df(t: str) -> int:
-                row = stats.get((field, t))
+                row = plan.stats.get((field, t))
                 return int(row["df"]) if row else 0
-            bound = min((sum(_df(t) for t in g) for g in groups),
-                        default=0)
             self._check_verify_cap(
-                bound, f"span query over {sorted(set(terms))!r}")
-        ta2 = spec[1][0][1] if fast2 else -1
-        tb2 = spec[1][1][1] if fast2 else -1
-        slop2 = spec[2] if fast2 else 0
-        bm = (self.scoring == "lucene", wk32, self.cache_f[field], coef64,
-              *self.sim_f[field], self.avgdl64_f[field])
-        keys = [(field, t) for t in uniq_terms]
-        plan.add_positional(keys)
-        return ("span", keys, spec, group_tis, bm,
-                (fast2, ta2, tb2, slop2, fastn))
+                min((sum(_df(t) for t in g) for g in groups), default=0),
+                f"span query over {uniq_terms!r}")
+        return self._positional_leaf(
+            field, terms, boost, plan, [(field, t) for t in uniq_terms],
+            [sorted({ti_of[t] for t in g}) for g in groups],
+            partial(_span_count_bound, spec), partial(_span_freqs, spec))

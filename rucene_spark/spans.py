@@ -251,59 +251,11 @@ def ordered_near_freq_2term_flat(
     lb: np.ndarray,
     slop: int,
 ) -> np.ndarray:
-    """Vectorized ordered-near freq for the 2-TERM-clause span shape
-    ("a before b within n" — the common serving query) over a whole
-    batch of candidate docs at once. ``flat_a`` is every candidate doc's
-    positions for the first clause concatenated in doc order and
-    ``la[i]`` the count belonging to doc ``i`` (same for b).
-
-    For term spans the ordered walk (span_near.rs:725-821,
-    ``NearSpansOrdered``) is stateless: the clause pointers are monotone
-    (module docstring), so each first-clause position ``a``
-    independently matches the FIRST second-clause position
-    ``b >= a + 1`` with ``width = b - a - 1``, emitted iff
-    ``width <= slop``. When the second clause exhausts
-    (``one_exhausted_in_current_doc``), every later ``a`` is larger and
-    cannot match either — the scalar walk's early return equals the
-    masked vector form. With tf capped at 10 per term, at most 10
-    vectorized rounds (one per first-clause column) replace the per-doc
-    Python walk. Accumulation is float32 in ascending-``a`` emission
-    order — bit-identical to :func:`span_freq` on the same spec
-    (fuzz-asserted in tests/test_spans.py).
-    """
-    n = len(la)
-    freq = np.zeros(n, dtype=np.float32)
-    if n == 0:
-        return freq
-    ma = int(la.max())
-    mb = int(lb.max())
-    if ma == 0 or mb == 0:
-        return freq
-    SENT = np.int64(2**62)
-    A = np.full((n, ma), SENT, dtype=np.int64)
-    B = np.full((n, mb), SENT, dtype=np.int64)
-    A[np.arange(ma) < la[:, None]] = flat_a
-    B[np.arange(mb) < lb[:, None]] = flat_b
-    slop_ = np.int64(slop)
-    one32 = np.float32(1.0)
-    rows = np.arange(n)
-    for j in range(ma):
-        a = A[:, j]
-        # first B strictly above a (term spans: b >= a+1  <=>  b > a);
-        # SENT padding compares above every real position on both sides
-        idx = (B <= a[:, None]).sum(axis=1)
-        valid = (a != SENT) & (idx < lb)
-        b = B[rows, np.minimum(idx, mb - 1)]
-        width = b - a - np.int64(1)
-        # invalid rows can hold a nonsense (even negative) width; clamp
-        # before the division — they are masked out of the result anyway
-        wsafe = np.maximum(width, 0).astype(np.float32)
-        contrib = np.where(
-            valid & (width <= slop_),
-            one32 / (wsafe + one32),
-            np.float32(0.0),
-        ).astype(np.float32)
-        # adding +0.0f is exact in IEEE f32, so skipped rows/columns do
-        # not perturb the scalar kernel's accumulation order
-        freq = (freq + contrib).astype(np.float32)
-    return freq
+    """Vectorized ordered-near freq of the 2-term-clause span shape ("a
+    before b within n") over a batch of candidate docs: ``flat_a`` is
+    every doc's positions of the first clause concatenated in doc order
+    and ``la[i]`` the count belonging to doc ``i`` (same for b). One
+    call of :func:`ordered_near_freq_nclause_flat`, which serves every
+    ordered near over term/gap clauses."""
+    return ordered_near_freq_nclause_flat(
+        [("pos", flat_a, la), ("pos", flat_b, lb)], slop)

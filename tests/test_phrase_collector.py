@@ -1,12 +1,13 @@
 """The root phrase leaf (impact-ordered verification with a per-segment
-top-k, search.py _phrase_leaf) must be rank- AND score-identical to the
-exhaustive nested leaf (every candidate verified) — pruning is
+top-k, search.py _positional_topk) must be rank- AND score-identical to
+the exhaustive nested leaf (every candidate verified) — pruning is
 correctness-neutral by construction, and unlike block-max WAND the
 reference has no phrase-impacts analogue to diff against
 (phrase_query.rs:223-270 bails only via two-phase match_cost), so this
 suite IS the gate that keeps it so."""
 
 import collections
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -17,7 +18,12 @@ from rucene_spark.build import IndexWriter
 from rucene_spark.codec import pack_positions
 from rucene_spark.merge import delete_by_keys
 from rucene_spark.query import BoostQuery, PhraseQuery
-from rucene_spark.search import IndexSearcher, _phrase_seg_topk
+from rucene_spark.search import (
+    IndexSearcher,
+    _phrase_bound,
+    _phrase_freqs,
+    _positional_topk,
+)
 from rucene_spark.webtext import make_corpus
 
 K1, B = 1.2, 0.75
@@ -25,7 +31,7 @@ K1, B = 1.2, 0.75
 
 def _make_tds(n_docs, n_terms, block=128, tfcap=10, seed=0):
     """Synthetic one-segment postings in the exact per-term structure
-    _phrase_leaf's worker builds (block-packed pos_bin via the
+    the plan's positional leaf decodes (block-packed pos_bin via the
     real codec), plus the uncompressed truth for the brute oracle."""
     r = np.random.default_rng(seed)
     texts = [list(r.integers(0, n_terms + 3, size=r.integers(3, 40)))
@@ -111,9 +117,11 @@ def test_phrase_seg_topk_property():
         want = _brute(truth, texts, slots, tomb, k, lucene, wk32, cache,
                       coef64, avgdl64)
         for chunk0 in (1, 7, 4096):
-            dv, sv = _phrase_seg_topk(
-                tds, slots, offsets, tomb, k, chunk0, lucene, wk32,
-                cache, coef64, K1, B, avgdl64)
+            dv, sv = _positional_topk(
+                tds, [[ti] for ti in sorted(set(term_seq))], tomb, k,
+                chunk0, (lucene, wk32, cache, coef64, K1, B, avgdl64),
+                partial(_phrase_bound, slots, 0),
+                partial(_phrase_freqs, slots, 0, None))
             got = [(d, round(s, 9)) for d, s in
                    zip(dv.tolist(), sv.tolist())]
             assert got == want, (trial, slots, k, chunk0, lucene)

@@ -7,7 +7,8 @@
 * scans prune columns (a top-k search must not read position bytes);
 * the final hit join broadcasts the tiny top-k side, and its sort is a
   ``TakeOrderedAndProject`` (no range-partition sample job, no
-  single-partition docmeta scan), so a warm term search runs ≤3 jobs;
+  single-partition docmeta scan), so a warm term search runs ≤3 jobs
+  and a repeated one ≤1;
 * a nested phrase shuffles no position arrays;
 * a nested boolean of terms reduces in its scan task (no (seg, doc)
   shuffle);
@@ -125,6 +126,24 @@ def test_warm_term_search_runs_at_most_three_jobs(spark, searcher):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert rows
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_repeated_search_runs_at_most_one_job(spark, searcher):
+    """A repeated search(q, k) on one searcher gets the memoized
+    DataFrame, which keeps its executed adaptive plan (broadcast
+    included): the second call reruns only the docmeta join over the
+    first call's top-k, ≤1 job. (k=6: no other test plans this key.)"""
+    q = TermQuery("text", "t000003")
+    first = searcher.search(q, 6).collect()
+    sc = spark.sparkContext
+    group = "plan_audit_repeated_search"
+    sc.setJobGroup(group, "repeated search")
+    try:
+        rows = searcher.search(q, 6).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows and rows == first
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
 
 
 def test_nested_phrase_shuffles_no_positions(searcher):

@@ -120,6 +120,16 @@ def test_search_many_plan_cached(spark, idx):
     assert df1.count() == 10
 
 
+def test_search_many_empty_batch(spark, idx):
+    """An empty batch returns no rows, with the columns of a non-empty
+    batch's result."""
+    s = IndexSearcher(spark, idx)
+    empty = s.search_many([], 5)
+    assert empty.collect() == []
+    assert empty.columns == s.search_many(
+        [TermQuery("text", "table")], 5).columns
+
+
 def test_search_many_with_deletes(spark, idx, tmp_path):
     """Collector kernel must mask tombstones in-worker BEFORE per-segment
     ranks are assigned — a deleted doc may not occupy a top-k slot (same

@@ -85,6 +85,106 @@ def test_or_union_and_nested_near():
     assert float(out_freq) == 1.0
 
 
+def _random_spec(rng, n_terms, depth=0):
+    """A random span spec over term ids ``0..n_terms-1``: terms, ors and
+    ordered/unordered nears nested up to two deep; gaps only inside
+    ordered nears, never first."""
+    r = rng.random()
+    if depth == 2 or r < 0.35:
+        return ("term", int(rng.integers(0, n_terms)))
+    if r < 0.5:
+        return ("or", [_random_spec(rng, n_terms, depth + 1)
+                       for _ in range(int(rng.integers(1, 4)))])
+    ordered = bool(rng.random() < 0.6)
+    subs = [_random_spec(rng, n_terms, depth + 1)
+            for _ in range(int(rng.integers(2, 5)))]
+    if ordered and rng.random() < 0.3:
+        subs.insert(int(rng.integers(1, len(subs) + 1)),
+                    ("gap", int(rng.integers(0, 3))))
+    return ("near", subs, int(rng.integers(0, 6)), ordered)
+
+
+def _spec_terms(spec) -> list:
+    if spec[0] == "term":
+        return [spec[1]]
+    return [] if spec[0] == "gap" else [
+        t for s in spec[1] for t in _spec_terms(s)]
+
+
+def test_span_positional_topk_property():
+    """Randomized kernel-level parity of the span leaf, the span
+    analogue of test_phrase_seg_topk_property: term/or/gap/ordered/
+    unordered/nested specs (ordered nears over one term twice among
+    them), terms absent from the segment, tombstones, both scoring
+    modes, k in {None, 1..11} and chunk sizes that force many θ-stop
+    rounds — the pruned top-k must equal a brute force that scores
+    every live doc's span_freq."""
+    from functools import partial
+
+    from test_phrase_collector import _make_tds
+
+    from rucene_spark.search import (
+        _positional_topk,
+        _span_count_bound,
+        _span_freqs,
+    )
+
+    K1, B = 1.2, 0.75
+    rng = np.random.default_rng(7)
+    cache = rng.random(256).astype(np.float32) * 3 + 0.2
+    wk32, coef64, avgdl64 = np.float32(1.7), 2.5, 15.0
+    for trial in range(80):
+        n_docs = int(rng.integers(5, 300))
+        n_terms = int(rng.integers(1, 4))
+        tds, truth, texts = _make_tds(n_docs, n_terms, seed=100 + trial)
+        if trial % 4 == 0:
+            t0 = int(rng.integers(0, n_terms))
+            spec = ("near", [("term", t0), ("gap", 1), ("term", t0),
+                             ("term", int(rng.integers(0, n_terms)))],
+                    int(rng.integers(0, 6)), True)
+        else:
+            spec = _random_spec(rng, n_terms)
+        terms = sorted(set(_spec_terms(spec)))
+        if spec[0] == "near":
+            groups = [sorted(set(_spec_terms(c))) for c in spec[1]
+                      if c[0] != "gap"]
+        else:
+            groups = [terms]
+        # a term can be absent from the segment
+        seg_tds = {ti: tds[ti] for ti in terms
+                   if len(tds[ti]["docs"]) and rng.random() < 0.9}
+        tomb = None
+        if trial % 3 == 0:
+            tomb = np.sort(rng.choice(n_docs, size=min(5, n_docs),
+                                      replace=False)).astype(np.int64)
+        lucene = bool(trial % 2)
+        want = {}
+        for d in range(n_docs):
+            if tomb is not None and d in tomb:
+                continue
+            fr = span_freq(spec, {ti: truth[ti][d] for ti in seg_tds
+                                  if d in truth[ti]})
+            if fr <= 0:
+                continue
+            if lucene:
+                want[d] = float((wk32 * fr)
+                                / (fr + cache[(d * 37) % 256]))
+            else:
+                want[d] = coef64 * float(fr) / (float(fr) + K1 * (
+                    (1.0 - B) + B * len(texts[d]) / avgdl64))
+        ranked = sorted(want, key=lambda d: (-want[d], d))
+        for k in [None] + list(range(1, 12)):
+            for chunk0 in (1, 7, 4096):
+                dv, sv = _positional_topk(
+                    seg_tds, groups, tomb, k, chunk0,
+                    (lucene, wk32, cache, coef64, K1, B, avgdl64),
+                    partial(_span_count_bound, spec),
+                    partial(_span_freqs, spec))
+                assert list(zip(dv.tolist(), sv.tolist())) == [
+                    (d, want[d]) for d in ranked[:k]], (
+                    trial, spec, k, chunk0, lucene)
+
+
 # ---------------------------------------------------------------------------
 # engine ↔ oracle parity
 # ---------------------------------------------------------------------------
