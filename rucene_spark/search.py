@@ -421,7 +421,7 @@ def _positional_topk(tds, group_tis, tomb, k, chunk0, bm, bound, freqs):
     lands in are never decoded (the reference has no phrase or span
     impacts, so rank identity with the exhaustive ``k=None`` run is
     test-asserted: tests/test_phrase_collector.py, tests/test_spans.py).
-    The first chunk holds ``chunk0`` docs (at least 4k); each later one
+    The first chunk holds ``chunk0`` docs (at least 4·k); each later one
     4× more, up to 64×, so worker memory stays bounded."""
     e = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     conj = None
