@@ -174,28 +174,16 @@ def apply_dv_overlay(spark: SparkSession, index_dir: str, df,
     (the gen snapshot when its fold ran), NOT its commit gen, so a
     raced, never-folded file is never collected early. A re-added key's
     doc keeps its (higher) delta gen, so older updates cannot touch
-    it."""
+    it. The overlay join carries no broadcast hint: Spark's size rule
+    picks broadcast or shuffle from the overlay's size."""
     dv_dir = os.path.join(index_dir, DV_UPDATES)
     if not storage.is_dir(dv_dir):
         return df
     dv_files = [f for f in storage.listdir(dv_dir) if f.endswith(".parquet")]
     if not dv_files:
         return df
-    # broadcast the overlay only while it is small; a bulk
-    # update_doc_values run (10^8 keys) must shuffle-join instead of
-    # flooding every executor — same footer-metadata-count + cap rule as
-    # the tombstone anti-join (round-3 VERDICT #3). The count is raw
-    # overlay rows (pre max-seq dedup): free to read and conservative.
-    # The cap (RUCENE_DV_BCAST_CAP) mirrors the searcher's
-    # RUCENE_TOMB_BCAST_CAP (see the sizing note there) and is read per
-    # call, like it, so a process can retune it between searcher opens.
-    n_ov = sum(storage.parquet_num_rows(os.path.join(dv_dir, f))
-               for f in dv_files)
-    bcast = n_ov <= int(os.environ.get("RUCENE_DV_BCAST_CAP", "4000000"))
     from pyspark.sql import Window
     ov = spark.read.parquet(dv_dir)
-    if "gen" not in ov.columns:
-        ov = ov.withColumn("gen", F.lit(1 << 62))
     latest = Window.partitionBy("key", "col").orderBy(F.desc("seq"))
     ov = (ov.withColumn("_rn", F.row_number().over(latest))
           .filter(F.col("_rn") == 1).drop("_rn", "seq"))
@@ -210,7 +198,7 @@ def apply_dv_overlay(spark: SparkSession, index_dir: str, df,
                        F.col("val").alias("_ovv"),
                        F.col("gen").alias("_ovg")))
         df = (df.join(
-                F.broadcast(ovc) if bcast else ovc,
+                ovc,
                 (F.col(key_col).cast("string") == F.col("_ovk"))
                 & (add_gen <= F.col("_ovg")), "left")
               .withColumn(c, F.coalesce(
@@ -289,6 +277,26 @@ def gen_scope_expr(segments: list[dict], seg_col="seg", doc_col="doc"):
         expr = F.when(F.col(seg_col).cast("long")
                       == int(s["segment_id"]), e).otherwise(expr)
     return expr
+
+
+def resolve_tombstones(tomb, docmeta, key_col: str, segments: list[dict]):
+    """The ``(seg, doc)`` rows of ``docmeta`` (over ``segments``) that the
+    key tombstones ``tomb`` (``key``, ``gen``) hide — the one resolver
+    of the searcher's live docs and the merger's squeeze.
+
+    A doc is hidden iff its add-gen (gen_scope_expr) is <= the gen of
+    some tombstone of its key, i.e. <= the key's largest tombstone gen,
+    so the tombstones reduce to one row per key first: the result has at
+    most one row per doc however many times a key was deleted. No
+    broadcast hint: Spark's size rule (and AQE's runtime statistics)
+    picks the join."""
+    last = tomb.groupBy(F.col("key").alias("_tk")).agg(
+        F.max("gen").alias("_tg"))
+    return docmeta.join(
+        last,
+        (F.col(key_col).cast("string") == F.col("_tk"))
+        & (gen_scope_expr(segments) <= F.col("_tg")),
+    ).select("seg", "doc")
 
 
 def _compose_gen_ranges(run: list[int], seg_rows: dict, offsets: dict,
@@ -520,21 +528,12 @@ class SegmentMerger:
                  if f.endswith(".parquet")]
                 if storage.is_dir(tomb_dir_p) else [])
             if tomb_files_before:
-                tomb = self.spark.read.parquet(tomb_dir_p)
-                if "gen" not in tomb.columns:
-                    tomb = tomb.withColumn("gen", F.lit(1 << 62))
-                tomb_k = tomb.select(F.col("key").alias("_tk"),
-                                     F.col("gen").alias("_tg")).distinct()
                 # a tombstone applies only to docs ADDED at or before
                 # the delete (doc add-gen <= tomb.gen, per-doc across
                 # merged segments via gen_ranges)
-                hit = (
-                    dm_run.join(
-                        F.broadcast(tomb_k),
-                        (F.col(key_col).cast("string") == F.col("_tk"))
-                        & (gen_scope_expr(run_rows) <= F.col("_tg")))
-                    .select("seg", "doc").distinct()
-                )
+                hit = resolve_tombstones(
+                    self.spark.read.parquet(tomb_dir_p), dm_run, key_col,
+                    run_rows)
                 del_counts = {
                     int(r["seg"]): int(r["n"])
                     for r in hit.groupBy("seg").agg(
@@ -934,8 +933,6 @@ class SegmentMerger:
                 if storage.is_dir(tomb_dir_p) else [])
             if tomb_files_now:
                 tomb_all = self.spark.read.parquet(tomb_dir_p)
-                if "gen" not in tomb_all.columns:
-                    tomb_all = tomb_all.withColumn("gen", F.lit(1 << 62))
                 post_rows = [s for s in m2["segments"]
                              if s["segment_id"] not in run]
                 post_rows.append({"segment_id": new_seg, "dir": new_dir,

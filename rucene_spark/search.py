@@ -60,8 +60,8 @@ stored ``(max_tf, max_norm_byte, min_dl)`` metadata prune block decodes
 against a θ lower bound obtained by exactly scoring the segment's
 highest-impact term. Pruning is provably rank-preserving (any doc in a
 pruned block has total score < θ ≤ the true k-th score), which
-``tests/test_blockmax.py`` asserts against the exhaustive scorer. Above
-the tombstone broadcast gate it runs that exhaustive disjunction.
+``tests/test_blockmax.py`` asserts against the exhaustive scorer. Like
+every root kernel it masks tombstones in the worker, at any delete count.
 """
 
 from __future__ import annotations
@@ -758,6 +758,13 @@ def _iter_seg_chunks(batches):
                     else pd.concat(buf, ignore_index=True))
 
 
+def _count_rows(batches):
+    """warmup()'s scan task. Module-level so cloudpickle ships it by
+    reference: the worker imports this module (and its numpy / codec
+    imports) during warmup instead of on the first query."""
+    yield pd.DataFrame({"n": [sum(len(b) for b in batches)]})
+
+
 def _decode_seg_tds(sub: "pd.DataFrame") -> dict:
     """One segment's positional postings rows → per-(field, term) decode
     dict for the phrase/span kernels: sorted docs, aligned
@@ -976,60 +983,20 @@ class IndexSearcher:
             spark, index_dir, self._docmeta, self.key_col, m["segments"])
         self._term_stats = spark.read.parquet(
             os.path.join(index_dir, m.get("term_stats_dir", "term_stats")))
-        # live docs: tombstones resolved to (seg, doc) once, anti-joined onto
-        # every match frame (live_docs.rs analogue; stats stay stale until
-        # merge squeezes deletes out, exactly like Lucene). A tombstone
-        # applies only to docs ADDED at or before the delete (per-doc
-        # add-gen <= tombstone.gen — the DocumentsWriterDeleteQueue
-        # sequence-number rule, doc-precise across merges via the
-        # manifest's gen_ranges), so delete-then-reindex never hides the
-        # re-added doc, and a delete racing a merge still hides its
-        # victims after the merge commits.
+        # live docs: tombstones resolved to (seg, doc) once
+        # (merge.resolve_tombstones, at most one row per doc), masked in
+        # the worker by every root's per-segment kernel (_tomb_by_seg)
+        # and anti-joined onto the k=None frames (_live) — the
+        # live_docs.rs analogue; stats stay stale until merge squeezes
+        # deletes out, exactly like Lucene.
         self._deleted = None
-        self._bcast_deleted = True
         tomb_dir = os.path.join(index_dir, "tombstones")
         if storage.is_dir(tomb_dir) and any(
                 f.endswith(".parquet") for f in storage.listdir(tomb_dir)):
-            # broadcast only while the tombstone set is small; above the
-            # cap fall back to a shuffle anti-join (tombstones accumulate
-            # unboundedly between merges — a broadcast would not); the
-            # count is footer-metadata only, through the storage seam.
-            # Cap sizing (RUCENE_TOMB_BCAST_CAP): the cap counts rows,
-            # not bytes. Two tables are broadcast at the cap: the
-            # resolved (seg, doc) table, ~64 MiB at 4M rows (two int64
-            # columns; _tomb_by_seg's driver copy is as large again),
-            # and the (key string, gen) tombstone table the resolving
-            # join uses, ~(key bytes + ~40) per row as Spark rows plus
-            # hash index, so 4M URL-sized keys (~60 B) are ~400 MiB
-            # replicated to the driver and every executor. Lower the cap
-            # for long keys or small executors. The original 500k cap
-            # was the 30M-doc probe's one cliff (BENCH_30M.json: 2%
-            # deletes = 600k tombstones tripped the shuffle path,
-            # post-merge term query 1.1s → 20.5s warm); above the cap,
-            # sustained delete-heavy workloads should merge (which folds
-            # tombstones) rather than serve through the anti-join
-            # forever.
-            n_tomb = sum(
-                storage.parquet_num_rows(os.path.join(tomb_dir, f))
-                for f in storage.listdir(tomb_dir) if f.endswith(".parquet"))
-            self._bcast_deleted = n_tomb <= int(
-                os.environ.get("RUCENE_TOMB_BCAST_CAP", "4000000"))
-            tomb = spark.read.parquet(tomb_dir)
-            if "gen" not in tomb.columns:
-                tomb = tomb.withColumn("gen", F.lit(1 << 62))
-            tomb = tomb.select(F.col("key").alias("_tk"),
-                               F.col("gen").alias("_tg")).distinct()
-            if self._bcast_deleted:
-                tomb = F.broadcast(tomb)
-            # per-doc add-gen scope (merge.gen_scope_expr): merged
-            # segments carry gen_ranges, so a delete issued while a
-            # merge was in flight still hides its victims afterwards
-            from .merge import gen_scope_expr
-            self._deleted = self._docmeta.join(
-                tomb,
-                (F.col(self.key_col).cast("string") == F.col("_tk"))
-                & (gen_scope_expr(m["segments"]) <= F.col("_tg")),
-            ).select("seg", "doc")
+            from .merge import resolve_tombstones
+            self._deleted = resolve_tombstones(
+                spark.read.parquet(tomb_dir), self._docmeta, self.key_col,
+                m["segments"])
         self._score_t = "float" if scoring == "lucene" else "double"
         self._score_schema = f"seg int, doc long, score {self._score_t}"
         self._stats_cache: dict[tuple[str, str], dict | None] = {}
@@ -1097,16 +1064,15 @@ class IndexSearcher:
 
     def _tomb_by_seg(self) -> dict[int, np.ndarray]:
         """Resolved tombstones as per-segment sorted doc-id arrays, for the
-        kernels' in-worker live-docs mask.  Only called when the
-        broadcast gate held (RUCENE_TOMB_BCAST_CAP, default 4M
-        tombstones), so the driver materializes at most that many
-        (seg, doc) pairs — the same bound the broadcast anti-join
-        already implies."""
+        kernels' in-worker live-docs mask. The resolved set holds at most
+        one row per doc (resolve_tombstones), so the index size bounds
+        the driver copy: 8 bytes per deleted doc, at any number of
+        delete calls."""
         if self._deleted is None:
             return {}
         if self._tomb_cache is None:
-            # Arrow-batched transfer: at the 4M-row cap a py4j
-            # row-at-a-time collect costs tens of seconds; toArrow moves
+            # Arrow-batched transfer: a py4j row-at-a-time collect of
+            # millions of rows costs tens of seconds; toArrow moves
             # the two int columns in columnar batches and, unlike
             # toPandas, does not depend on (or touch) the session's
             # spark.sql.execution.arrow.pyspark.enabled, so concurrent
@@ -1118,7 +1084,7 @@ class IndexSearcher:
             segs, docs = segs[order], docs[order]
             bounds = np.flatnonzero(np.diff(segs)) + 1
             self._tomb_cache = {
-                int(chunk_segs[0]): np.unique(chunk_docs)
+                int(chunk_segs[0]): chunk_docs
                 for chunk_segs, chunk_docs in zip(
                     np.split(segs, bounds), np.split(docs, bounds))
                 if chunk_segs.size}
@@ -1126,7 +1092,8 @@ class IndexSearcher:
 
     def warmup(self) -> "IndexSearcher":
         """Absorb the session's first-query fixed costs before serving
-        traffic: spawn the Python worker pool on every scan slot, read
+        traffic: spawn the Python worker pool on every scan slot, import
+        this module in each worker (_count_rows), read
         each postings segment file's parquet footer, prime the
         term-stats footer, and materialize the tombstone memo. The work
         is metadata-plus-one-int-column only — no postings bytes are
@@ -1137,17 +1104,10 @@ class IndexSearcher:
         SearcherFactory; Lucene warms new NRT searchers the same way);
         streaming.SearcherManager calls it before swapping a refreshed
         searcher in."""
-        def fn(it):
-            n = 0
-            for b in it:
-                n += len(b)
-            yield pd.DataFrame({"n": [n]})
-
         self._coalesced(self._postings.select("seg")).mapInPandas(
-            fn, "n long").collect()
+            _count_rows, "n long").collect()
         self._term_stats.select("term").limit(1).collect()
-        if self._bcast_deleted:
-            self._tomb_by_seg()
+        self._tomb_by_seg()
         return self
 
     def _check_field(self, field: str) -> None:
@@ -1191,14 +1151,13 @@ class IndexSearcher:
     # ------------------------------------------------------------------
 
     def _live(self, frame: DataFrame) -> DataFrame:
-        """Skip deleted docs (BulkScorer's live_docs check, bulk_scorer.rs).
-        Broadcast only below the tombstone cap; large delete sets anti-join
-        by shuffle instead of flooding every executor."""
+        """Skip deleted docs (BulkScorer's live_docs check, bulk_scorer.rs)
+        in a frame of every match (``k=None``): a broadcast anti-join with
+        the resolved set, which holds at most one row per doc."""
         if self._deleted is None:
             return frame
-        deleted = (F.broadcast(self._deleted) if self._bcast_deleted
-                   else self._deleted)
-        return frame.join(deleted, ["seg", "doc"], "left_anti")
+        return frame.join(F.broadcast(self._deleted), ["seg", "doc"],
+                          "left_anti")
 
     _PLAN_CACHE_MAX = 1024
 
@@ -1362,17 +1321,16 @@ class IndexSearcher:
     def count(self, query: Query) -> int:
         # count fast paths (searcher.rs:632-654); under deletes the live
         # count per leaf is maxDoc - numDeletedDocs, a metadata fold
-        if self._deleted is None or self._bcast_deleted:
-            if isinstance(query, MatchAllDocsQuery):
-                return self.doc_count - sum(
-                    len(v) for v in self._tomb_by_seg().values())
-            if isinstance(query, TermQuery):
-                self._check_field(query.field)
-                if self._deleted is not None:
-                    return self._term_count_live(query)
-                row = self._stats_for([(query.field, query.term)]).get(
-                    (query.field, query.term))
-                return int(row["df"]) if row else 0
+        if isinstance(query, MatchAllDocsQuery):
+            return self.doc_count - sum(
+                len(v) for v in self._tomb_by_seg().values())
+        if isinstance(query, TermQuery):
+            self._check_field(query.field)
+            if self._deleted is not None:
+                return self._term_count_live(query)
+            row = self._stats_for([(query.field, query.term)]).get(
+                (query.field, query.term))
+            return int(row["df"]) if row else 0
         return self._live(
             self._frame(query, np.float32(1.0), needs_scores=False)).count()
 
@@ -1381,7 +1339,7 @@ class IndexSearcher:
         tombstone-aware analogue of the df fast path. The exhaustive
         route (`_live(_frame(...)).count()`) materializes every matching
         (seg, doc) row out of the scan workers just to anti-join away
-        ≤cap tombstones (measured 5.2s warm at 10M docs / 293 segments).
+        the tombstones (measured 5.2s warm at 10M docs / 293 segments).
         Here segments with no tombstones contribute ``sum(num_docs)``
         from block metadata alone — their ``docs_bin`` is never decoded —
         and tombstoned segments decode docs batched and subtract
@@ -1533,12 +1491,10 @@ class IndexSearcher:
         reference (SURVEY.md §4.3: rucene stores skip pointers,
         skip_writer.rs:36-56, but no impact bounds and no WAND operator).
 
-        Under the tombstone broadcast gate it runs the per-segment BMW
-        collector (_blockmax_collector_topk / _bmw_seg_topk). Above the
-        gate the kernel cannot mask tombstones before it takes θ, so it
-        could not prune safely: the exhaustive disjunction runs instead,
-        which gives the same answer. Duplicate terms, or ``boosts`` of
-        another length than ``terms``, raise ValueError.
+        It runs the per-segment BMW collector (_blockmax_collector_topk /
+        _bmw_seg_topk), which masks tombstones in the worker before it
+        takes θ. Duplicate terms, or ``boosts`` of another length than
+        ``terms``, raise ValueError.
         """
         if len(set(terms)) != len(terms):
             raise ValueError(f"search_blockmax: duplicate terms in {terms!r}")
@@ -1556,10 +1512,7 @@ class IndexSearcher:
         if not infos:
             return self._docmeta.join(
                 self.spark.createDataFrame([], self._score_schema), ["seg", "doc"])
-        if self._deleted is None or self._bcast_deleted:
-            return self._blockmax_collector_topk(infos, field, stats, k)
-        return self.search(BooleanQuery.build(
-            [], [TermQuery(field, t, b) for t, b in infos], [], []), k)
+        return self._blockmax_collector_topk(infos, field, stats, k)
 
     def _blockmax_collector_topk(self, infos: list[tuple], field: str,
                                  stats: dict, k: int) -> DataFrame:
@@ -1997,19 +1950,15 @@ class IndexSearcher:
                      scored: bool = True) -> DataFrame:
         """``(_q, seg, doc, score)`` rows of query trees
         ``trees[output_id] = (query, boost)``: with ``k``, live rows
-        whose per-``_q`` top-k is each tree's (under the tombstone gate
-        the workers mask tombstones and keep per-segment top-k rows;
-        above it every match leaves them and ``_live`` anti-joins); with
-        ``k=None`` every match. Postings-only trees are outputs of one plan
+        whose per-``_q`` top-k is each tree's (the workers mask
+        tombstones and keep per-segment top-k rows); with ``k=None``
+        every match. Postings-only trees are outputs of one plan
         scan (_postings_frame). The others compile into nodes over rows
         leaves (_compile) — their postings-only subtrees from one more
         plan scan, docmeta leaves (_leaf_frame) and, with a query cache,
         unscored children's _frame — hash-partitioned ONCE by (seg, doc)
         and evaluated per segment by _eval_node; a bare docmeta-backed
         leaf is its frame."""
-        if k is not None and self._deleted is not None and (
-                not self._bcast_deleted):
-            return self._live(self._query_frame(trees, None))
         post = {o: t for o, t in trees.items() if _postings_only(t[0])}
         rest = {o: t for o, t in trees.items() if o not in post}
         parts = [self._postings_frame(post, k)] if post else []
@@ -2127,10 +2076,9 @@ class IndexSearcher:
         ``pos_bin`` only for phrase/span leaves: term rows decode once,
         phrase/span leaves run their kernels, nodes combine in numpy
         (_eval_node). Tasks hold whole segments (_iter_seg_chunks), so no
-        (seg, doc) shuffle exists. With ``k`` (a root, only under the
-        tombstone broadcast gate) the worker masks tombstones and keeps
-        each output's per-segment top-k; with ``k=None`` every match is
-        emitted and the caller live-masks."""
+        (seg, doc) shuffle exists. With ``k`` (a root) the worker masks
+        tombstones and keeps each output's per-segment top-k; with
+        ``k=None`` every match is emitted and the caller live-masks."""
         stats = self._stats_for([key for q, _ in trees.values()
                                  for key in self._collect_terms(q)])
         plan = _Plan(stats)
@@ -2245,8 +2193,8 @@ class IndexSearcher:
         """``rows`` (a postings scan, or a seg-sorted shuffle) streamed
         per segment (_iter_seg_chunks) through ``seg_fn(rows, tomb)`` →
         iterable of ``(output_id, docs, scores)``, as ``(_q, seg, doc,
-        score)`` rows. ``tomb`` is the segment's tombstones with ``k``
-        (roots run only under the broadcast gate), else None."""
+        score)`` rows. ``tomb`` is the segment's sorted tombstoned docs
+        with ``k`` (a root), else None."""
         tomb = self._tomb_by_seg() if k is not None else {}
         ftype = np.float32 if self.scoring == "lucene" else np.float64
 

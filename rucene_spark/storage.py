@@ -120,6 +120,6 @@ def read_parquet(path: str, columns: list[str] | None = None):
 
 def parquet_num_rows(path: str) -> int:
     """Row count from parquet FOOTER metadata only — no data pages read.
-    S3: one ranged GET of the footer. Used by the searcher to size the
-    tombstone set before choosing broadcast vs shuffle anti-join."""
+    S3: one ranged GET of the footer. The package no longer calls it;
+    ``perfbench/workloads.py`` counts tombstone rows with it."""
     return pq.ParquetFile(path).metadata.num_rows

@@ -120,7 +120,7 @@ def test_blockmax_rejects_boosts_length_mismatch(spark, corpus, index_dir):
         s.search_blockmax([a, b], 3, boosts=[2.0])
 
 
-def _check_tombstones(spark, corpus, d, monkeypatch, cap):
+def _check_tombstones(spark, corpus, d):
     from rucene_spark.merge import delete_by_keys
 
     IndexWriter(spark, d, n_segments=4).build(
@@ -132,10 +132,7 @@ def _check_tombstones(spark, corpus, d, monkeypatch, cap):
     s0 = IndexSearcher(spark, d, scoring="lucene")
     top = s0.search_blockmax(terms, 3).collect()
     delete_by_keys(d, [r["url"] for r in top])
-    if cap is not None:
-        monkeypatch.setenv("RUCENE_TOMB_BCAST_CAP", cap)
     s = IndexSearcher(spark, d, scoring="lucene")
-    assert s._bcast_deleted == (cap is None)
     gone = {(r.seg, r.doc) for r in top}
     kernel = s.search_blockmax(terms, 10).select(
         "seg", "doc", "score").collect()
@@ -150,16 +147,7 @@ def _check_tombstones(spark, corpus, d, monkeypatch, cap):
         [r.score for r in exhaustive], rel=1e-6)
 
 
-def test_blockmax_collector_with_tombstones(spark, corpus, tmp_path,
-                                            monkeypatch):
+def test_blockmax_collector_with_tombstones(spark, corpus, tmp_path):
     """Deleted docs must neither inflate the collector's segment-local θ
     nor appear in its results."""
-    _check_tombstones(spark, corpus, str(tmp_path / "bmw_tomb"),
-                      monkeypatch, None)
-
-
-def test_blockmax_above_tomb_cap(spark, corpus, tmp_path, monkeypatch):
-    """Above the tombstone broadcast cap (RUCENE_TOMB_BCAST_CAP=0) the
-    exhaustive disjunction serves the same top-k, without deleted docs."""
-    _check_tombstones(spark, corpus, str(tmp_path / "bmw_tomb"),
-                      monkeypatch, "0")
+    _check_tombstones(spark, corpus, str(tmp_path / "bmw_tomb"))

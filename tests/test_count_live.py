@@ -4,8 +4,7 @@ behind a live-docs check; the per-segment fold is Lucene's
 maxDoc - numDeletedDocs metadata count applied per leaf, so it must be
 value-identical under deletes, after merges, and across routes)."""
 
-import os
-
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -32,33 +31,23 @@ def index_dir(spark, corpus, tmp_path_factory):
     return d
 
 
-# the exhaustive route: tombstones above the broadcast cap disable every
-# count fast path, so each count is the live-masked frame's row count
-SLOW = {"RUCENE_TOMB_BCAST_CAP": "0"}
-
-
-def _counts(spark, index_dir, terms, env):
-    old = {k: os.environ.get(k) for k in env}
-    os.environ.update(env)
-    try:
-        s = IndexSearcher(spark, index_dir)
-        got = {t: s.count(TermQuery("text", t)) for t in terms}
-        got["__all__"] = s.count(MatchAllDocsQuery())
-        return got
-    finally:
-        for k, v in old.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
+def _counts(spark, index_dir, terms):
+    """(fast path, exhaustive route) counts: each count fast path beside
+    the live-masked frame's row count of the same query."""
+    s = IndexSearcher(spark, index_dir)
+    qs = {t: TermQuery("text", t) for t in terms}
+    qs["__all__"] = MatchAllDocsQuery()
+    fast = {t: s.count(q) for t, q in qs.items()}
+    slow = {t: s._live(s._frame(q, np.float32(1.0), needs_scores=False))
+            .count() for t, q in qs.items()}
+    return fast, slow
 
 
 def test_count_live_cross_route(spark, corpus, index_dir):
     dfs = term_df_spectrum(corpus)
     plain = [t for t in dfs.index if t.startswith("t0")]
     terms = [plain[0], plain[len(plain) // 3], plain[-1], "tzzzzzz"]
-    fast = _counts(spark, index_dir, terms, {})
-    slow = _counts(spark, index_dir, terms, SLOW)
+    fast, slow = _counts(spark, index_dir, terms)
     assert fast == slow
     # deletes actually bite: match-all under tombstones < corpus size
     assert fast["__all__"] == len(corpus) - 80
@@ -72,7 +61,6 @@ def test_count_live_after_merge(spark, corpus, index_dir):
     # fresh deletes on the merged index exercise the fold on the
     # single-file merged layout
     delete_by_keys(index_dir, corpus["url"].iloc[100:120].tolist())
-    fast = _counts(spark, index_dir, [hi], {})
-    slow = _counts(spark, index_dir, [hi], SLOW)
+    fast, slow = _counts(spark, index_dir, [hi])
     assert fast == slow
     assert fast["__all__"] == len(corpus) - 100

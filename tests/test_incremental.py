@@ -371,10 +371,12 @@ def test_explain_value_equals_search_score(spark, corpus, hi_mid, tmp_index,
                 q, r["url"], e["value"], r["score"])
 
 
-def test_dv_overlay_broadcast_capped(spark, tmp_path_factory, monkeypatch):
-    """Above RUCENE_DV_BCAST_CAP the overlay joins by shuffle, not broadcast
-    (round-3 VERDICT #3): a bulk update touching 10^8 keys must not
-    flood every executor. Values stay identical either way."""
+def test_dv_overlay_join_follows_size_rule(spark, tmp_path_factory):
+    """The overlay join carries no broadcast hint: Spark's size rule
+    picks the join (round-3 VERDICT #3: a bulk update touching 10^8 keys
+    must not flood every executor). With auto-broadcast off it is a
+    shuffle join, with the default threshold a small overlay broadcasts,
+    and the values are identical either way."""
     from rucene_spark.build import IndexWriter
     from rucene_spark.merge import update_doc_values
     from rucene_spark.query import TermQuery
@@ -391,25 +393,20 @@ def test_dv_overlay_broadcast_capped(spark, tmp_path_factory, monkeypatch):
     def plan_of(searcher):
         return searcher._docmeta._jdf.queryExecution().executedPlan().toString()
 
-    # disable Catalyst's size-based auto-broadcast so the presence or
-    # absence of OUR broadcast hint is what decides the join strategy
-    # (at real scale the auto threshold never fires for a 10^8-row
-    # overlay anyway — the hint forcing it is exactly the bug)
+    def ranks(searcher):
+        return [(r["doc_id"], r["rank"]) for r in
+                searcher.search_sorted(TermQuery("text", "common"),
+                                       [F.desc("rank")], 6).collect()]
+
+    want = [(0, 999), (4, 104), (3, 103), (2, 102), (1, 101), (5, 1)]
+    s = IndexSearcher(spark, d)
+    assert "BroadcastHashJoin" in plan_of(s)
+    assert ranks(s) == want
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        # small overlay -> hinted broadcast join even with auto off
-        assert "BroadcastHashJoin" in plan_of(IndexSearcher(spark, d))
-        # cap below the overlay size -> no hint -> shuffle join
-        # the cap is read when the overlay is applied (searcher open),
-        # so an env change takes effect on the next open
-        monkeypatch.setenv("RUCENE_DV_BCAST_CAP", "1")
         s = IndexSearcher(spark, d)
         assert "BroadcastHashJoin" not in plan_of(s)
-        got = [(r["doc_id"], r["rank"]) for r in
-               s.search_sorted(TermQuery("text", "common"),
-                               [F.desc("rank")], 6).collect()]
-        assert got == [(0, 999), (4, 104), (3, 103), (2, 102), (1, 101),
-                       (5, 1)]
+        assert ranks(s) == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

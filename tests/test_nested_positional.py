@@ -13,10 +13,11 @@ the docmeta ``lang`` column) and a float64 "precise" mode with the
 engine's precise formula and op order. Precise booleans here never sum
 more than two scored clauses, so the float64 sum is order-independent.
 
-With tombstones the oracle cannot be consulted (deleted docs stay in the
-stats until merge), so the two tombstone routes — the broadcast
-in-worker mask and the ``RUCENE_TOMB_BCAST_CAP=0`` shuffle anti-join —
-must agree with each other and never return a deleted key.
+With tombstones the oracle's scores cannot be consulted (deleted docs
+stay in the stats until merge), so the roots' in-worker tombstone mask
+must agree with the exhaustive witness (``conftest.exhaustive_topk``, the
+live-masked frame) and never return a deleted key, and each leaf's count
+must be the oracle's match set less the deleted keys.
 """
 
 import collections
@@ -25,6 +26,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import exhaustive_topk
 from rucene_spark.build import IndexWriter
 from rucene_spark.merge import delete_by_keys
 from rucene_spark.oracle import (OracleSearcher, _Matches,
@@ -281,28 +283,25 @@ def tombstoned(spark, corpus, index_dir, tmp_path_factory):
 
 
 def test_nested_positional_tombstone_routes_agree(spark, corpus, tombstoned,
-                                                  monkeypatch):
+                                                  oracle_index):
     d, victims = tombstoned
     leaves = list(_leaves(corpus).values())
     qs = list(_queries(corpus).values()) + leaves
-    s_bcast = IndexSearcher(spark, d)
-    assert s_bcast._bcast_deleted
-    monkeypatch.setenv("RUCENE_TOMB_BCAST_CAP", "0")
-    s_shuf = IndexSearcher(spark, d)
-    assert not s_shuf._bcast_deleted
-
-    def topk(s):
-        # one batch job per route: search_many routes every non-flat
-        # query through the same root routing as search()
-        by_q = {}
-        for r in s.search_many(qs, K).collect():
-            by_q.setdefault(r["qid"], []).append((r["url"], r["score"]))
-        return by_q
-
-    got_b, got_s = topk(s_bcast), topk(s_shuf)
+    s = IndexSearcher(spark, d)
+    # one batch job: search_many routes every non-flat query through
+    # the same root routing as search()
+    got = {}
+    for r in s.search_many(qs, K).collect():
+        got.setdefault(r["qid"], []).append(r)
     for i, q in enumerate(qs):
-        assert got_b.get(i) == got_s.get(i), repr(q)
-        assert not victims & {u for u, _ in got_b.get(i, [])}, repr(q)
-    assert sum(map(bool, got_b.values())) >= 30
+        rows = got.get(i, [])
+        assert ([(r["seg"], r["doc"], r["score"]) for r in rows]
+                == [(r["seg"], r["doc"], r["score"])
+                    for r in exhaustive_topk(s, q, K)]), repr(q)
+        assert not victims & {r["url"] for r in rows}, repr(q)
+    assert sum(map(bool, got.values())) >= 30
+    orc = OracleSearcher(oracle_index)
     for leaf in leaves:
-        assert s_bcast.count(leaf) == s_shuf.count(leaf), repr(leaf)
+        keys = {orc.idx.key_of[d_] for d_ in
+                orc._eval(leaf, np.float32(1.0), False).scores}
+        assert s.count(leaf) == len(keys - victims), repr(leaf)

@@ -225,7 +225,7 @@ def test_collector_masks_tombstones(spark, corpus, index_dir, tmp_path):
     key_col = s0.key_col
     delete_by_keys(d, [r[key_col] for r in before[:3]])
     s = IndexSearcher(spark, d)
-    assert s._deleted is not None and s._bcast_deleted
+    assert s._deleted is not None
     got, want = _both_paths(s, q, 5)
     gone = {r[key_col] for r in before[:3]}
     assert not gone & {r[key_col] for r in s.search(q, 5).collect()}

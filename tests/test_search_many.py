@@ -275,26 +275,21 @@ def test_dismax_collector_routing(spark, idx):
                 == _seg_rows(exhaustive_topk(s, q, 10))), repr(q)
 
 
-def test_search_many_above_tomb_cap(spark, idx, tmp_path, monkeypatch):
-    """Above the tombstone broadcast cap the batch collector emits every
-    satisfied row and the shuffle anti-join removes deleted docs; each
-    query's top-k must equal per-query search() under the broadcast
-    route, with no deleted doc returned."""
+def test_search_many_tombstoned_equals_exhaustive(spark, idx, tmp_path):
+    """On a tombstoned index every root masks the deleted docs in the
+    worker: each query's batched top-k must equal the exhaustive witness
+    (the live-masked frame), with no deleted doc returned."""
     import shutil
 
     from rucene_spark.merge import delete_by_keys
 
-    d = str(tmp_path / "many_cap_idx")
+    d = str(tmp_path / "many_tomb_idx")
     shutil.copytree(idx, d)
     top = IndexSearcher(spark, d).search(
         TermQuery("text", "table"), 3).collect()
     deleted = {r["doc_id"] for r in top}
     delete_by_keys(d, sorted(deleted))
-    bcast = IndexSearcher(spark, d)
-    assert bcast._bcast_deleted
-    monkeypatch.setenv("RUCENE_TOMB_BCAST_CAP", "0")
-    shuf = IndexSearcher(spark, d)
-    assert not shuf._bcast_deleted
+    s = IndexSearcher(spark, d)
     queries = [
         TermQuery("text", "table"),
         QueryStringQueryBuilder("table +query", [("text", 1.0)]).build(),
@@ -308,14 +303,13 @@ def test_search_many_above_tomb_cap(spark, idx, tmp_path, monkeypatch):
         PhraseQuery.build("text", ["key", "agg"], slop=0),
     ]
     by_qid = {}
-    for r in shuf.search_many(queries, 10).collect():
-        by_qid.setdefault(r["qid"], []).append(
-            (r["doc_id"], float(r["score"])))
+    for r in s.search_many(queries, 10).collect():
+        by_qid.setdefault(r["qid"], []).append(r)
     for i, q in enumerate(queries):
-        want = [(r["doc_id"], float(r["score"]))
-                for r in bcast.search(q, 10).collect()]
-        assert by_qid.get(i, []) == want, f"qid {i}: {q!r}"
-        assert not deleted & {d_ for d_, _ in want}
+        got = by_qid.get(i, [])
+        assert _seg_rows(got) == _seg_rows(exhaustive_topk(s, q, 10)), \
+            f"qid {i}: {q!r}"
+        assert not deleted & {r["doc_id"] for r in got}
 
 
 def test_collector_seg_reduce_all_groups_unsatisfied():
